@@ -507,7 +507,8 @@ object Bench {
     // previously-printed number disappears.
     val qsLine = results
       .map { case (k, v) =>
-        "\"" + k + "\":" + (if (v < 0) "-1.0" else f"$v%.4f") }
+        "\"" + k + "\":" + (if (v < 0) "-1.0"
+          else "%.4f".formatLocal(java.util.Locale.ROOT, v)) }
       .mkString("{", ",", "}")
     println(s"""{"metric":"total_all_queries","value":$total,"unit":"sec","n_queries":${ok.size},"calibration":$calibration,"x2d_fixed_point_rounds":$x2dRounds,"ingest":$ingest,"udp_ingest":$udpIngest,"udp_listeners":$udpListeners,"queries":$qsLine,"queries_headline":$headline,"full":"${fullPath.toAbsolutePath}","sf":"$sfDir"}""")
     spark.stop()

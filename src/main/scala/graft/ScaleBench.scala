@@ -46,6 +46,11 @@ import org.apache.spark.sql.functions._
   */
 object ScaleBench {
 
+  /** Generated scale fixtures and index artifacts, under the checkout's
+    * `target/` (sbt runs at the repo root).
+    */
+  private val SfGen = new java.io.File("target/sfgen").getAbsolutePath
+
   /** (queries, data scale) tiers — see scaladoc. */
   private val tiers: Seq[(Int, Seq[String])] = Seq(
     30 -> Seq(
@@ -481,7 +486,7 @@ object ScaleBench {
       // near-dup documents joined the embedding plants): planted rows are
       // part of the fixture, so a prior-vintage cached fixture must not be
       // reused
-      val out = s"/root/repo/target/sfgen/sfx${scale}q"
+      val out = s"$SfGen/sfx${scale}q"
       if (!Files.exists(Paths.get(s"$out/documents.parquet"))) {
         System.err.println(s"[scale] generating ${scale}x fixture at $out")
         generate(spark, base, out, scale)
@@ -661,7 +666,7 @@ object ScaleBench {
 
     val (incrSec, incrFullSec, incrEqual) = {
       val dir = fixture(tiers.head._1)
-      val art = materializedArtifacts("/root/repo/target/sfgen/x2h_idx30p",
+      val art = materializedArtifacts(s"$SfGen/x2h_idx30p",
         fixtureFingerprint(s"$dir/documents.parquet")) {
         ext.DedupQueries.x2hIndexArtifacts(spark, dir)
       }
@@ -704,7 +709,7 @@ object ScaleBench {
         .filter(pmod(col("doc_id") * 2654435761L, lit(100L)) < 80)
         .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
       def scaledArt(k: Int): String =
-        materializedArtifacts(s"/root/repo/target/sfgen/x2h_idxscale_$k",
+        materializedArtifacts(s"$SfGen/x2h_idxscale_$k",
           s"$baseFp:k=$k") {
           val frame = (0 until k).map { j =>
             if (j == 0) baseIdxDocs
@@ -934,7 +939,7 @@ object ScaleBench {
       def dirAt(k: Int): String = if (k == 1) base else fixture(k)
       def corpusAt(k: Int): DataFrame = sq.quantFrame(spark, dirAt(k))
       def art(k: Int): String =
-        materializedPqIndex(s"/root/repo/target/sfgen/x3l_idx_$k",
+        materializedPqIndex(s"$SfGen/x3l_idx_$k",
           fixtureFingerprint(s"${dirAt(k)}/embeddings.parquet")) {
           sq.pqBuildFrom(corpusAt(k))
         }
@@ -1734,7 +1739,7 @@ object ScaleBench {
         f""""fsync_sec":$fsyncSec%.3f},""" +
         s""""x6g_partition_invariant":$invariant,"queries":$qs}"""
     }
-    Files.write(Paths.get("/root/repo/BENCH_SCALE.json"),
+    Files.write(Paths.get("BENCH_SCALE.json"),
       json.getBytes(StandardCharsets.UTF_8))
     println(json)
     spark.stop()

@@ -110,19 +110,6 @@ object TextQueries {
       .select(carried :+ col("z.w1").as("w1") :+ col("z.w2").as("w2"): _*)
   }
 
-  /** Train the stupid-backoff bigram LM from `docs`' reference split and
-    * hand the PINNED LM tables to `build`, releasing every pin after.
-    *
-    * Lifecycle (r19, guide §5): cb/cu both fold the reference BIGRAM
-    * explode and uni/tot both fold the reference TOKEN explode — handed
-    * out lazily (the r18 shape), every downstream consumer re-ran the
-    * corpus-wide explode per LM table (profiled in q52s: four 8–14
-    * s-task-time stages, two bigram + two token re-explosions; x4t's
-    * score plan embedded the same subtrees). The two explodes are now
-    * checkpointed ONCE, the four LM tables fold off them eagerly, and
-    * `build` — which must return an eagerly materialized result — runs
-    * against checkpoint-rooted LM frames; all six pins release on exit.
-    */
   /** Lazy LM tables — the right shape for a ONE-SHOT consumer (x4t):
     * the score plan embeds the reference explodes redundantly, but they
     * run CONCURRENTLY inside the single score job on otherwise-idle
@@ -145,6 +132,18 @@ object TextQueries {
     RefLm(cb, cu, uni, tot)
   }
 
+  /** Train the stupid-backoff bigram LM from `docs`' reference split and
+    * hand the PINNED LM tables to `build`, releasing every pin after.
+    *
+    * Lifecycle: cb/cu both fold the reference BIGRAM explode and
+    * uni/tot both fold the reference TOKEN explode — handed out lazily,
+    * every downstream consumer re-runs the corpus-wide explode per LM
+    * table (profiled in q52s: four 8–14 s-task-time stages, two bigram +
+    * two token re-explosions). The two explodes are therefore
+    * checkpointed ONCE, the four LM tables fold off them eagerly, and
+    * `build` — which must return an eagerly materialized result — runs
+    * against checkpoint-rooted LM frames; all six pins release on exit.
+    */
   private[graft] def withRefLm[T](docs0: DataFrame)(build: RefLm => T): T = {
     val docs = graft.Tables.fanOut(docs0, col("doc_id")) // guide §2.5
     Caching.withLocalCheckpointed(

@@ -224,7 +224,11 @@ object Aggregators {
     private def trim(m: Map[String, Long]): Map[String, Long] =
       if (m.size <= capacity) m
       else {
-        val cut = m.valuesIterator.toArray.sortBy(-_).apply(capacity)
+        // the (capacity+1)-th largest value: a reduce step overflows by
+        // one key, and then that is the minimum — no sort per new key
+        val cut =
+          if (m.size == capacity + 1) m.valuesIterator.min
+          else m.valuesIterator.toArray.sortBy(-_).apply(capacity)
         m.view.mapValues(_ - cut).filter(_._2 > 0L).toMap
       }
     override def zero: Map[String, Long] = Map.empty

@@ -3,12 +3,11 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Driver-local parquet writer for the cadence writers' tiny artifacts
-  * (r19, VERDICT r18 #3 "cheaper commit protocol for the tiny ledger
-  * files", guide §6/§5): the per-batch sketch generation, the cum
-  * generation and the hh artifact are CAPACITY-BOUNDED maps (≤ 64–1024
-  * rows) that already live on the driver when they are written — the
-  * previous `toDF.coalesce(1).write.parquet(dir)` paid a full Spark job
+/** Driver-local parquet writer for the cadence writer's tiny artifacts:
+  * the per-batch sketch generation, the cum generation and the hh
+  * artifact are CAPACITY-BOUNDED maps (≤ 64–8192 rows) that already live
+  * on the driver when they are written — the previous
+  * `toDF.coalesce(1).write.parquet(dir)` paid a full Spark job
   * (scheduling + one task + the Hadoop commit protocol's temp-dir,
   * rename and marker churn) per micro-batch for a couple of KB. This
   * writes the identical on-disk layout — `dir/part-00000-*.parquet` +
@@ -35,9 +34,15 @@ private[graft] object DriverParquet {
     * longCols…: Long) + `_SUCCESS` — the exact schema shape all four
     * cadence artifacts share (fields `optional`, matching what the
     * replaced Spark write produced for these frames' read-back surface).
+    * Every row must carry exactly one value per `longCols` entry; a
+    * mismatch fails before the dir is touched.
     */
   def overwrite(s: SparkSession, dir: String, strCol: String,
       longCols: Seq[String], rows: Iterable[(String, Seq[Long])]): Unit = {
+    rows.foreach { case (k, vs) =>
+      require(vs.size == longCols.size, s"$dir: row $k has ${vs.size} " +
+        s"values for ${longCols.size} columns (${longCols.mkString(",")})")
+    }
     val conf = s.sessionState.newHadoopConf()
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)

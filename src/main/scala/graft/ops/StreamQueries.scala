@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -422,113 +422,81 @@ object StreamQueries {
       graft.ext.SimilarityQueries.maintainPqStore(batch.sparkSession, store, id)
   }
 
-  /** q52t cross-batch sketch fold: the batch's Misra–Gries sketch merges
-    * into the persisted running sketch — the ONLY state that crosses
-    * batches, capacity-bounded by construction (≤ HhCapacity (gram, cnt)
-    * rows; ~200 KB at 8192). That bound is the point: a distinct-key
-    * state store grows with the stream's vocabulary (billions of n-grams
-    * at 100 TB), the sketch never does, and the mergeable-summaries rule
-    * (Agarwal et al. 2012) preserves the superset guarantee under this
-    * batch-by-batch fold exactly as under Spark's partial-agg tree. The
-    * driver-side merge of two capacity-bounded maps is the certificate
-    * device BPE's vocab-sized collects use — bounded by a constant, not
-    * by data. One generation dir per batch (`sketch/batch=<id>`,
-    * `_SUCCESS`-gated via the Hadoop FileSystem): a crash-replay of batch
-    * id rebuilds from the newest generation STRICTLY BELOW id (the
-    * maintainPqStore replay device), so a torn write is overwritten whole
-    * and the fold order — hence the final sketch — is deterministic under
-    * whole-batch replay. Generation count is bounded by the drain; an
-    * always-on deployment expires old generations like any artifact
-    * (q52y's tiered store is the general machinery).
-    *
-    * Periodic recount cadence (r15, VERDICT r14 #4; refolded mergeable
-    * r16, VERDICT r15 #1; firing-granularity fold r17, VERDICT r16 #2):
-    * an always-on stream never drains, so without a mid-stream recount
-    * the monitor would serve sketch CANDIDATES (a superset with
-    * under-estimated counts) until shutdown. With `rowsDir`/`hhDir`/
-    * `cumDir`/`recountEvery` set, each batch additionally lands whole in
-    * `rowsDir/batch=<id>` (per-batch OVERWRITE, q52g's effectively-once
-    * device), and every `recountEvery`-th batch the writer folds the cum
-    * store forward ONE WINDOW: exact cumulative counts through the
-    * firing batch for every POSSIBLY-θ-HEAVY candidate (sketch count ≥
-    * the safe floor of n/θinv − n/(cap+1) — a proven superset of the
-    * θ-heavy set; the cut drops the sketch's churny boundary tail, which
-    * on a vocabulary ≫ capacity would otherwise trigger catch-ups
-    * forever), computed as prev-cum + ONE capacity-bounded semi-join
-    * over the rows dirs written since the durable generation being
-    * folded from — ≤ `recountEvery` dirs crash-free, bounded by
-    * 2·recountEvery−1 when a crash lands between a firing's rows write
-    * and its cum-gen write (the next firing folds from the older
-    * generation; still bounded, still exact — ADVICE r17 wording) —
-    * never the full history. Candidates that ENTERED the pruned
-    * set since the last firing pay a one-time residual catch-up over the
-    * rows-so-far glob (the only unbounded history read — it decays to
-    * zero as the sketch converges, and the `ledger` records it so the
-    * 30× tier can gate flatness). The hh artifact is a pure θ-filter of
-    * the fold, overwriting `hhDir/batch=<id>` (`_SUCCESS`-gated), and
-    * the cum generation (candidates + a running-total sentinel row —
-    * [[CumTotalKey]] contains no space, so it can never collide with a
-    * trigram) is durable ONLY at firings: r16 wrote it every batch and
-    * read the previous generation back every batch — 2 jobs + 1 small
-    * file per micro-batch of pure happy-path overhead, ~60% of q52t's
-    * fixture wall (VERDICT r16 finding #2).
-    *
-    * The happy path reads NOTHING back from disk: the returned closure
-    * carries the running sketch, the exact gram total, and the cum fold
-    * in memory ([[HhCadenceState]]), used only when the incoming batch
-    * id is exactly lastId + 1. Steady-state cost per micro-batch is 2
-    * Spark jobs (rows write, fused sketch+total agg) + one DRIVER-side
-    * parquet write of the capacity-bounded sketch gen ([[DriverParquet]],
-    * r19 — the r17 shape ran the sketch/cum/hh writes as single-task
-    * Spark jobs, one scheduling + commit-protocol round trip each for a
-    * couple of KB), with 1 more job at firings (window semi-join) plus
-    * two driver-side writes (cum gen, hh artifact); the ledger's `jobs`
-    * column is the measured evidence. A restart or
-    * whole-batch replay misses the cache and rebuilds exactly: the
-    * sketch from the per-batch generation strictly below id, the cum +
-    * total from the newest durable cum generation plus a re-fold of the
-    * ≤ recountEvery rows dirs above it (bounded, crash-path only). The
-    * fold is exact by induction (entrants catch up from history,
-    * survivors accumulate window counts), so replay re-derives identical
-    * artifacts: θ-heavy ⊆ candidates (the sketch guarantee) and
-    * candidate counts are exact at the watermark. Batches before a
-    * replayed id completed their writes before the stream advanced, so
-    * the window and glob reads never see a torn dir other than the one
-    * being overwritten. The drain-end answer is unchanged — the cadence
-    * only adds the always-on serving artifact.
-    *
-    * Production churn assumption (ADVICE r16): the entrant catch-up is
-    * O(full history) per firing WHILE candidates keep entering the
-    * pruned set — fine for converging vocabularies (the sketch settles,
-    * the ledger goes flat), pathological under adversarial or unbounded
-    * key growth above the prune floor. The writer self-reports: after
-    * [[ChurnAlertFirings]] consecutive entrant-bearing firings it prints
-    * one stderr alert naming the glob it keeps re-reading, so an
-    * operator sees the regression long before the O(T²) lifetime cost
-    * accrues; a deployment with genuinely unbounded churn should tier
-    * the history (q52y's store machinery) so catch-up folds over
-    * generation summaries instead of raw rows.
+  /** q52u flows-domain geometry: θ = 1/50 of total BYTES (a talker owning
+    * ≥ 2% of traffic is "top"), capacity 64 — capacity + 1 > θ⁻¹ makes
+    * the weighted sketch's candidate set a guaranteed superset of the
+    * θ-heavy talkers (under-estimate ≤ W/65 < W/50).
     */
-  private[graft] final class HhCadenceState {
+  private[graft] val FlowHhCapacity = 64
+  private[graft] val FlowHhThetaInv = 50L
+
+  /** What a [[cadenceWriter]] folds: `keyed` turns a batch (or rows-dir
+    * read) into a frame with the `key` column; the sketch weighs each row
+    * by `weight`, and the fold keeps, per key, the named `sums` — the
+    * weight sum first (the θ and prune-floor statistic), then for
+    * [[Talkers]] the row count. `sketchCol` names the sketch generation's
+    * weight column. Two instances: [[Grams]] and [[Talkers]].
+    */
+  private[graft] final case class CadenceDomain(key: String,
+      keyed: DataFrame => DataFrame, weight: Column,
+      sums: Seq[(String, Column)], sketchCol: String,
+      capacity: Int, thetaInv: Long) {
+    def sumCols: Seq[String] = sums.map(_._1)
+
+    /** Per-key sums over raw rows. */
+    def rowSums(df: DataFrame): DataFrame = {
+      val cs = sums.map { case (n, c) => c.as(n) }
+      df.groupBy(key).agg(cs.head, cs.tail: _*)
+    }
+
+    /** Per-key sums over stored sum rows (summary store fragments/gens). */
+    def storeSums(df: DataFrame): DataFrame = {
+      val cs = sumCols.map(n => sum(col(n)).as(n))
+      df.groupBy(key).agg(cs.head, cs.tail: _*)
+    }
+
+    /** Whole-frame `sums`, coalesced: an all-duplicate UDP batch dedups
+      * to EMPTY and a sum over zero rows is NULL.
+      */
+    def totalCols: Seq[Column] =
+      sums.map { case (_, c) => coalesce(c, lit(0L)) }
+  }
+
+  /** x4s/q52t trigram counts (unit weight, x4s geometry). */
+  private[graft] val Grams = CadenceDomain("gram",
+    graft.ext.TextQueries.heavyHitterGrams, lit(1L),
+    Seq("cnt" -> count(lit(1))), "cnt",
+    graft.ext.TextQueries.HhCapacity, graft.ext.TextQueries.HhThetaInv)
+
+  /** q52u bytes per `src_addr` over normalized flows rows. */
+  private[graft] val Talkers = CadenceDomain("src_addr", identity[DataFrame],
+    col("bytes"),
+    Seq("sum_bytes" -> sum(col("bytes")), "n_flows" -> count(lit(1))),
+    "w", FlowHhCapacity, FlowHhThetaInv)
+
+  /** The writer's in-memory fold between batches (see [[cadenceWriter]]):
+    * valid only for the batch id right after `lastId`.
+    */
+  private[graft] final class CadenceState(arity: Int) {
     var lastId: Long = -1L
     var sketch: Map[String, Long] = Map.empty
-    var total: Long = 0L
-    var cum: Map[String, Long] = Map.empty
+    var totals: Vector[Long] = Vector.fill(arity)(0L)
+    var cum: Map[String, Vector[Long]] = Map.empty
     var cumGenId: Long = -1L
     var consecEntrantFirings: Int = 0
     var churnWarned: Boolean = false
   }
 
   /** Consecutive entrant-bearing firings before a cadence writer prints
-    * its one-shot churn alert (see the cadence doc above).
+    * its one-shot churn alert (see [[cadenceWriter]]).
     */
   private[graft] val ChurnAlertFirings = 8
 
   /** Cadence churn alerts fired, across all writers in this JVM — the
-    * Prometheus face of the one-shot stderr alert (VERDICT r17 #6: an
-    * operator of an always-on monitor scrapes `/metrics`, not executor
-    * stderr). One increment per writer lifetime, mirroring the one-shot
-    * print; [[graft.streaming.MetricsServer]] exposes it as
+    * Prometheus face of the one-shot stderr alert (an operator of an
+    * always-on monitor scrapes `/metrics`, not executor stderr). One
+    * increment per writer lifetime, mirroring the one-shot print;
+    * [[graft.streaming.MetricsServer]] exposes it as
     * `graft_cadence_churn_alerts_total`.
     */
   private[graft] val cadenceChurnAlerts = new java.util.concurrent.atomic.LongAdder
@@ -540,12 +508,9 @@ object StreamQueries {
     * strictly inside (prevGenId, firingId): its window is re-covered by
     * this firing's wider window, so folding it would double-count, and a
     * fragment ≤ prevGenId belongs to a COMMITTED firing (its cum gen is
-    * durable) so it is never touched. ONE definition shared by the
-    * unweighted and weighted tiered writers (r18 review — the sweep
-    * boundaries are crash-safety critical, and two hand-maintained
-    * copies were the r15 withRocksDbStateStore mistake over again);
-    * lists through [[graft.ext.SimilarityQueries.fragDirs]], the same
-    * listing the store reader uses. Idempotent.
+    * durable) so it is never touched. Lists through
+    * [[graft.ext.SimilarityQueries.fragDirs]], the same listing the store
+    * reader uses. Idempotent.
     */
   private def sweepOrphanFragments(s: SparkSession, tierDir: String,
       prevGenId: Long, firingId: Long): Unit = {
@@ -556,49 +521,98 @@ object StreamQueries {
     }
   }
 
-  private[graft] def heavyHitterSketchWriter(skDir: String,
-      rowsDir: String = null, hhDir: String = null, recountEvery: Int = 0,
-      cumDir: String = null, ledger: CumLedger = null,
-      // capacity/θ parametrized so HhCadencePropertySpec can force
-      // candidate churn + pruning (capacity ≪ vocabulary) while keeping
-      // the superset precondition capacity + 1 > θinv; registrations use
-      // the x4s geometry via the defaults
-      capacity: Int = graft.ext.TextQueries.HhCapacity,
-      thetaInv: Long = graft.ext.TextQueries.HhThetaInv,
-      // Opt-in TIERED entrant catch-up (r18, VERDICT r17 #4): with a
-      // tierDir, each firing also writes its window's full per-gram
-      // counts as a summary FRAGMENT and runs q52y's generational
-      // maintenance ([[graft.ext.SimilarityQueries.maintainPqStore]]
-      // with an additive gram fold), and the entrant catch-up folds the
-      // SUMMARY STORE — O(vocabulary · log firings) aggregated rows
-      // behind an `isin` pushdown on gram-sorted parquet — instead of
-      // the raw `rowsDir/batch=*` glob (O(all rows ever ingested)).
-      // This is the deployment shape for UNBOUNDED candidate churn; the
-      // registered converging-vocabulary queries keep the untiered path
-      // (catch-up decays to zero there, and the tier would add ~3 jobs
-      // per firing for nothing). Costs at firings: +1 window-summary
-      // agg/write, +1 L0 fold, +amortized merges; steady-state non-
-      // firing batches are untouched. The weighted (bytes-sum) writer
-      // carries the same device since r18 ([[topTalkerSketchWriter]]'s
-      // tierDir: summaries hold (src_addr, sum_bytes, n_flows) and the
-      // fold re-aggregates both sums on merge).
-      tierDir: String = null)
-      : (DataFrame, Long) => Unit = {
+  /** The heavy-hitter cadence device behind q52t (trigram counts over a
+    * corpus stream) and q52u (bytes per `src_addr` at live UDP ingest): a
+    * `foreachBatch` sink folding one weighted Misra–Gries sketch per
+    * micro-batch over a [[CadenceDomain]]. At unit weights the weighted
+    * trim is exactly classic decrement-all, so grams and talkers share it.
+    *
+    * Sketch fold. The batch's sketch merges into the running sketch — the
+    * only state that crosses batches, ≤ capacity rows whatever the key
+    * space (a distinct-key state store grows with it). The mergeable-
+    * summaries rule (Agarwal et al. 2012) keeps the superset guarantee
+    * under this batch-by-batch fold as under Spark's partial-agg tree.
+    * One `_SUCCESS`-gated generation per batch (`skDir/batch=<id>`).
+    *
+    * Recount cadence (`rowsDir`, `hhDir`, `cumDir`, `recountEvery` > 0).
+    * Each batch also lands whole in `rowsDir/batch=<id>` (per-batch
+    * overwrite), and every `recountEvery`-th batch — a firing — folds
+    * exact per-key sums forward one window for every candidate whose
+    * sketch weight is ≥ W/θinv − ⌈W/(cap+1)⌉, W the total weight so far.
+    * Precondition `capacity + 1 > θinv`: a θ-heavy key's sketch weight is
+    * under-estimated by at most W/(cap+1), so that pruned set is a
+    * SUPERSET of the θ-heavy keys; the cut drops the sketch's churny
+    * boundary tail. Survivors add one semi-join over the rows dirs since
+    * the generation folded from; entrants catch up once over every rows
+    * dir so far. The fold is exact by induction. The hh artifact
+    * (`hhDir/batch=<id>`: key, sums, ppm of W) is a pure θ-filter of the
+    * fold; the cum generation (candidates plus a [[CumTotalKey]] row with
+    * the totals) is durable only at firings.
+    *
+    * Crash contract. The happy path reads nothing back: [[CadenceState]]
+    * carries sketch, totals and cum while each id is lastId + 1. Any other
+    * id (restart, whole-batch replay) rebuilds the sketch from the
+    * generation strictly below id and cum + totals from the newest durable
+    * cum generation plus a total recount over the ≤ recountEvery rows dirs
+    * above it — so a torn write is overwritten whole and replay
+    * re-derives identical artifacts. A firing's window is ≤ recountEvery
+    * dirs crash-free and ≤ 2·recountEvery − 1 when a crash lands between
+    * a firing's rows write and its cum write. The capacity-bounded
+    * artifacts are written from the driver ([[DriverParquet]], marker
+    * last).
+    *
+    * Job budget, recorded per batch in `ledger`: 2 Spark jobs per steady
+    * batch (rows write, fused sketch + totals agg), 3 at an untiered
+    * firing (+ window semi-join), +1 when entrants catch up, +1 per
+    * generation or mid-dir recount read on the crash path.
+    *
+    * Catch-up bound. Untiered, an entrant catch-up reads all raw history
+    * (`rowsDir/batch=*`): fine for converging key spaces (the ledger goes
+    * flat), O(T²) over the stream's life under unbounded churn — after
+    * [[ChurnAlertFirings]] consecutive entrant-bearing firings the writer
+    * prints one stderr alert and bumps [[cadenceChurnAlerts]]. With
+    * `tierDir`, each firing also writes its window's per-key sums as a
+    * summary fragment of q52y's generational store, the catch-up reads
+    * that store behind an `isin` pushdown — O(key space · log firings)
+    * rows, never raw history — and `maintainPqStore` runs last, with an
+    * additive fold, once the cum gen is durable; orphans of a crashed
+    * firing are swept first ([[sweepOrphanFragments]]).
+    */
+  private[graft] def cadenceWriter(dom: CadenceDomain, skDir: String,
+      rowsDir: String, hhDir: String, recountEvery: Int, cumDir: String,
+      ledger: CumLedger, tierDir: String): (DataFrame, Long) => Unit = {
     require(recountEvery <= 0 ||
       (rowsDir != null && hhDir != null && cumDir != null),
       "recountEvery > 0 needs rowsDir, hhDir and cumDir — the cadence " +
         "folds firing-window candidate partials and writes the hh artifact")
     require(tierDir == null || recountEvery > 0,
       "tierDir tiers the cadence catch-up — it needs the cadence on")
-    require(capacity + 1 > thetaInv,
+    require(dom.capacity + 1 > dom.thetaInv,
       "capacity + 1 must exceed thetaInv or the sketch candidate set is " +
-        "not a guaranteed superset of the θ-heavy grams")
-    val st = new HhCadenceState
+        s"not a guaranteed superset of the θ-heavy ${dom.key}s")
+    val key = dom.key
+    val arity = dom.sumCols.size
+    val zero = Vector.fill(arity)(0L)
+    def add(a: Vector[Long], b: Vector[Long]) = a.lazyZip(b).map(_ + _)
+    // (key, sums…) rows → map
+    def sumsOf(df: DataFrame): Map[String, Vector[Long]] =
+      df.collect().map(r =>
+        r.getString(0) -> Vector.tabulate(arity)(i => r.getLong(i + 1))).toMap
+    val agg = new graft.functions.Aggregators.WeightedMisraGriesAgg(
+      dom.capacity)
+    val st = new CadenceState(arity)
     (batch: DataFrame, id: Long) => {
       val s = batch.sparkSession
       import s.implicits._
-      val agg = new graft.functions.Aggregators.MisraGriesAgg(capacity)
+      def rows(ids: Seq[Long]) =
+        dom.keyed(s.read.parquet(ids.map(k => s"$rowsDir/batch=$k"): _*))
+      def semi(df: DataFrame, keys: Set[String]) =
+        df.join(broadcast(keys.toSeq.toDF(key)), Seq(key), "left_semi")
       var jobs = 0L
+      // per-key sums for `keys`: one Spark job, none when `keys` is empty
+      def sumsFor(keys: Set[String])(read: => Map[String, Vector[Long]]) =
+        if (keys.isEmpty) Map.empty[String, Vector[Long]]
+        else { jobs += 1; read }
       // with the cadence on, the batch has two consumers (rows sink +
       // sketch agg) — persist so each doesn't re-run the micro-batch plan
       val b = if (rowsDir != null) batch.persist() else batch
@@ -610,7 +624,6 @@ object StreamQueries {
         val hit = st.lastId == id - 1
         // prev sketch: cache on the happy path; the per-batch generation
         // strictly below id on restart/replay — identical by construction
-        // (sequential fold order is preserved either way)
         val prev: Map[String, Long] =
           if (hit) st.sketch
           else latestSketchGen(s, skDir, below = id)
@@ -618,44 +631,41 @@ object StreamQueries {
               jobs += 1
               s.read.parquet(p).as[(String, Long)].collect().toMap
             }.getOrElse(Map.empty[String, Long])
-        // prev cum + exact gram total through id − 1: cached, or rebuilt
-        // from the newest durable cum generation plus a re-count over the
-        // ≤ recountEvery rows dirs above it (bounded; crash-path only)
-        val (prevCum, prevTotal, prevGenId) =
-          if (recountEvery <= 0) (Map.empty[String, Long], 0L, -1L)
-          else if (hit) (st.cum, st.total, st.cumGenId)
+        // prev cum + exact totals through id − 1: cached, or rebuilt from
+        // the newest durable cum generation plus a recount over the ≤
+        // recountEvery rows dirs above it (bounded; crash-path only)
+        val (prevCum, prevTotals, prevGenId) =
+          if (recountEvery <= 0) (Map.empty[String, Vector[Long]], zero, -1L)
+          else if (hit) (st.cum, st.totals, st.cumGenId)
           else {
-            val (cumJ, totalJ, j) = latestSketchGen(s, cumDir, below = id)
+            val (cumJ, totJ, j) = latestSketchGen(s, cumDir, below = id)
               .map { p =>
                 jobs += 1
-                val m = s.read.parquet(p).as[(String, Long)].collect().toMap
-                (m - CumTotalKey, m.getOrElse(CumTotalKey, 0L), genIdOf(p))
-              }.getOrElse((Map.empty[String, Long], 0L, -1L))
-            val mid = ((j + 1) until id).map(k => s"$rowsDir/batch=$k")
-            val total =
-              if (mid.isEmpty) totalJ
-              else {
-                jobs += 1
-                totalJ + graft.ext.TextQueries
-                  .heavyHitterGrams(s.read.parquet(mid: _*)).count()
-              }
-            (cumJ, total, j)
+                val m = sumsOf(s.read.parquet(p))
+                (m - CumTotalKey, m.getOrElse(CumTotalKey, zero), genIdOf(p))
+              }.getOrElse((Map.empty[String, Vector[Long]], zero, -1L))
+            val mid = (j + 1) until id
+            if (mid.isEmpty) (cumJ, totJ, j)
+            else {
+              jobs += 1
+              val r = rows(mid).agg(dom.totalCols.head, dom.totalCols.tail: _*)
+                .head()
+              (cumJ, add(totJ, Vector.tabulate(arity)(r.getLong)), j)
+            }
           }
-        // ONE fused aggregation job yields sketch + batch gram total
-        // (these writers are job-count-bound: tiny jobs per micro-batch
-        // dominate at fixture scale, so every fused/skipped job counts)
-        val skRow = graft.ext.TextQueries.heavyHitterGrams(b)
-          .agg(graft.functions.Aggregators.misra_gries(capacity)(
-            col("gram")).as("sk"), count(lit(1)).as("n"))
+        // ONE fused aggregation job yields sketch + batch totals (the
+        // writer is job-count-bound: tiny jobs per micro-batch dominate at
+        // fixture scale, so every fused/skipped job counts)
+        val skRow = dom.keyed(b)
+          .agg(graft.functions.Aggregators.weighted_misra_gries(dom.capacity)(
+            col(key), dom.weight).as("sk"), dom.totalCols: _*)
           .head()
         jobs += 1
-        val sk = skRow.getMap[String, Long](0).toMap
-        val batchTotal = skRow.getLong(1)
-        val merged = agg.merge(prev, sk)
-        val newTotal = prevTotal + batchTotal
-        // capacity-bounded driver map → driver-side parquet (r19, VERDICT
-        // r18 #3): no Spark job, no commit protocol — see [[DriverParquet]]
-        DriverParquet.overwriteKV(s, s"$skDir/batch=$id", "gram", "cnt",
+        val merged = agg.merge(prev, skRow.getMap[String, Long](0).toMap)
+        val totals = add(prevTotals,
+          Vector.tabulate(arity)(i => skRow.getLong(i + 1)))
+        val w = totals.head
+        DriverParquet.overwriteKV(s, s"$skDir/batch=$id", key, dom.sketchCol,
           merged.toSeq)
         var newCum = prevCum
         var newGenId = prevGenId
@@ -665,150 +675,93 @@ object StreamQueries {
         var catchupBytes = -1L
         val fired = recountEvery > 0 && (id + 1) % recountEvery == 0
         if (fired) {
-          // maintain exact cums ONLY for candidates that could possibly
-          // be θ-heavy: a θ-heavy gram's sketch count is ≥ n/θinv −
-          // n/(cap+1) (the MG under-estimate bound), so cutting below
-          // the safe integer floor of that threshold keeps a SUPERSET
-          // of the θ-heavy set while dropping the sketch's churny
-          // boundary tail — without this cut, top-capacity boundary
-          // keys rotate every firing on a vocabulary ≫ capacity and the
-          // entrant catch-up would scan history indefinitely
-          val cap1 = capacity + 1L
-          val floorThresh = math.max(0L,
-            newTotal / thetaInv - (newTotal + cap1 - 1L) / cap1)
-          val pruned = merged.filter { case (_, w) => w >= floorThresh }
+          val cap1 = dom.capacity + 1L
+          val floorThresh =
+            math.max(0L, w / dom.thetaInv - (w + cap1 - 1L) / cap1)
+          val pruned = merged.filter { case (_, c) => c >= floorThresh }
           val entrants = pruned.keySet -- prevCum.keySet
           val survivors = pruned.keySet & prevCum.keySet
-          // window fold: exact counts for surviving candidates over the
-          // rows dirs written since the generation being folded from —
-          // ≤ recountEvery dirs, never the full history
-          val windowDirs = ((prevGenId + 1) to id)
-            .map(k => s"$rowsDir/batch=$k")
-          val (survCnt, catchup): (Map[String, Long], Map[String, Long]) =
+          val window = (prevGenId + 1) to id
+          val (survSums, catchup) =
             if (tierDir == null) {
               // 0 when no window job runs (entrant-only firing): the
               // ledger records READS performed, not dirs in scope
-              // (ADVICE r17)
-              windowRead = if (survivors.isEmpty) 0 else windowDirs.size
-              val sc: Map[String, Long] =
-                if (survivors.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  graft.ext.TextQueries
-                    .heavyHitterGrams(s.read.parquet(windowDirs: _*))
-                    .join(broadcast(survivors.toSeq.toDF("gram")),
-                      Seq("gram"), "left_semi")
-                    .groupBy("gram").agg(count(lit(1)).as("cnt"))
-                    .as[(String, Long)].collect().toMap
-                }
-              // one-time residual catch-up for candidates that newly
-              // entered the pruned set: their exact count over ALL rows
-              // through batch id (the glob includes the just-written
-              // batch dir)
-              val cu: Map[String, Long] =
-                if (entrants.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  graft.ext.TextQueries
-                    .heavyHitterGrams(s.read.parquet(s"$rowsDir/batch=*"))
-                    .join(broadcast(entrants.toSeq.toDF("gram")),
-                      Seq("gram"), "left_semi")
-                    .groupBy("gram").agg(count(lit(1)).as("cnt"))
-                    .as[(String, Long)].collect().toMap
-                }
+              windowRead = if (survivors.isEmpty) 0 else window.size
+              val sc = sumsFor(survivors) {
+                sumsOf(dom.rowSums(semi(rows(window), survivors)))
+              }
+              // the glob includes the just-written batch dir
+              val cu = sumsFor(entrants) {
+                sumsOf(dom.rowSums(semi(
+                  dom.keyed(s.read.parquet(s"$rowsDir/batch=*")), entrants)))
+              }
               (sc, cu)
             } else {
-              // TIERED path (r18, VERDICT r17 #4). Orphan sweep first —
-              // see [[sweepOrphanFragments]] for the crash window.
               sweepOrphanFragments(s, tierDir, prevGenId, id)
-              // the window's FULL per-gram counts become a summary
-              // fragment — gram-sorted single shard, so later isin
-              // probes prune row groups on min/max stats
+              // the window's FULL per-key sums become a summary fragment —
+              // key-sorted single shard, so later isin probes prune row
+              // groups on min/max stats
+              val frag = s"$tierDir/frag/batch=$id"
               jobs += 1
-              windowRead = windowDirs.size
-              graft.ext.TextQueries
-                .heavyHitterGrams(s.read.parquet(windowDirs: _*))
-                .groupBy("gram").agg(count(lit(1)).as("cnt"))
-                .coalesce(1).sortWithinPartitions("gram")
-                .write.mode("overwrite")
-                .parquet(s"$tierDir/frag/batch=$id")
-              val sc: Map[String, Long] =
-                if (survivors.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  s.read.parquet(s"$tierDir/frag/batch=$id")
-                    .filter(col("gram").isin(survivors.toSeq: _*))
-                    .as[(String, Long)].collect().toMap
-                }
-              // entrant catch-up folds the SUMMARY STORE — live gens +
-              // unfolded fragments tile batches 0..id exactly, counts
-              // are additive across tiles, and the isin filter reaches
-              // the parquet scan (entrants ≤ capacity values) — never
-              // the raw rowsDir glob
-              val cu: Map[String, Long] =
-                if (entrants.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  val (m, bytes) =
-                    org.apache.spark.sql.graftshim.Shim.bytesRead(s) {
+              windowRead = window.size
+              dom.rowSums(rows(window))
+                .coalesce(1).sortWithinPartitions(key)
+                .write.mode("overwrite").parquet(frag)
+              val sc = sumsFor(survivors) {
+                sumsOf(s.read.parquet(frag)
+                  .filter(col(key).isin(survivors.toSeq: _*)))
+              }
+              // live gens + unfolded fragments tile batches 0..id exactly
+              // and sums are additive across tiles
+              val cu = sumsFor(entrants) {
+                val (m, bytes) =
+                  org.apache.spark.sql.graftshim.Shim.bytesRead(s) {
+                    sumsOf(dom.storeSums(
                       graft.ext.SimilarityQueries.readPqStore(s, tierDir)
-                        .filter(col("gram").isin(entrants.toSeq: _*))
-                        .groupBy("gram").agg(sum(col("cnt")).as("cnt"))
-                        .as[(String, Long)].collect().toMap
-                    }
-                  catchupBytes = bytes
-                  m
-                }
+                        .filter(col(key).isin(entrants.toSeq: _*))))
+                  }
+                catchupBytes = bytes
+                m
+              }
               (sc, cu)
             }
-          newCum = pruned.keysIterator.map { g =>
-            g -> (if (entrants(g)) catchup.getOrElse(g, 0L)
-                  else prevCum(g) + survCnt.getOrElse(g, 0L))
+          newCum = pruned.keysIterator.map { k =>
+            k -> (if (entrants(k)) catchup.getOrElse(k, zero)
+                  else add(prevCum(k), survSums.getOrElse(k, zero)))
           }.toMap
           newGenId = id
           entrantsN = entrants.size
           // raw history dirs read — the statistic the tier eliminates
-          histRead =
-            if (entrants.isEmpty || tierDir != null) 0L else id + 1
-          // driver-resident fold → driver-side parquet writes (r19): the
-          // cum generation and the θ-filtered hh artifact are ≤
-          // capacity+1 rows already in memory — two Spark jobs per firing
-          // replaced by two local file writes (see [[DriverParquet]])
-          DriverParquet.overwriteKV(s, s"$cumDir/batch=$id", "gram", "cnt",
-            newCum.toSeq :+ (CumTotalKey -> newTotal))
-          // the artifact is a pure θ-filter of the fold
-          DriverParquet.overwrite(s, s"$hhDir/batch=$id", "gram",
-            Seq("cnt", "ppm"),
+          histRead = if (entrants.isEmpty || tierDir != null) 0L else id + 1
+          DriverParquet.overwrite(s, s"$cumDir/batch=$id", key, dom.sumCols,
+            newCum.toSeq :+ (CumTotalKey -> totals))
+          DriverParquet.overwrite(s, s"$hhDir/batch=$id", key,
+            dom.sumCols :+ "ppm",
             newCum.toSeq
-              .filter { case (_, c) => c * thetaInv >= newTotal }
-              .map { case (g, c) => (g, Seq(c, c * 1000000L / newTotal)) })
-          // tier maintenance LAST — the cum gen is durable, so a crash
-          // anywhere in here leaves no orphan fragment (the sweep above
-          // only fires for crashes BEFORE the cum write), and maintain's
-          // own replay contract covers torn gens/expiry
+              .filter { case (_, v) => v.head * dom.thetaInv >= w }
+              .map { case (k, v) => (k, v :+ v.head * 1000000L / w) })
+          // tier maintenance LAST — the cum gen is durable, so a crash in
+          // here leaves no orphan fragment, and maintain's own replay
+          // contract covers torn gens/expiry
           if (tierDir != null) {
             val stats = graft.ext.SimilarityQueries.maintainPqStore(
               s, tierDir, id,
               foldWith = Some((df: DataFrame, n: Int) =>
-                df.groupBy("gram").agg(sum(col("cnt")).as("cnt"))
-                  .repartitionByRange(n, col("gram"))
-                  .sortWithinPartitions("gram")))
+                dom.storeSums(df).repartitionByRange(n, col(key))
+                  .sortWithinPartitions(key)))
             jobs += 1 + stats.mergesFired
           }
-          // churn self-report (ADVICE r16): persistent entrants mean the
-          // catch-up keeps paying O(full history) per firing (untiered)
-          // or O(summary store) (tiered)
           if (entrants.nonEmpty) st.consecEntrantFirings += 1
           else st.consecEntrantFirings = 0
           if (st.consecEntrantFirings >= ChurnAlertFirings && !st.churnWarned) {
             st.churnWarned = true
             cadenceChurnAlerts.increment()
             System.err.println(s"[cadence] $hhDir: entrants on " +
-              s"${st.consecEntrantFirings} consecutive firings — candidate " +
+              s"${st.consecEntrantFirings} consecutive firings — $key " +
               s"churn above the prune floor keeps re-reading " +
               (if (tierDir == null) s"$rowsDir/batch=*; set tierDir to " +
-                "fold the generational summary store instead if the " +
-                "vocabulary genuinely grows without bound"
+                "fold the generational summary store instead if the key " +
+                "space genuinely grows without bound"
                else s"the $tierDir summary store (bounded, but nonzero " +
                 "per firing)"))
           }
@@ -817,31 +770,47 @@ object StreamQueries {
           ledger.rows += CumLedgerRow(id, entrantsN, histRead, fired,
             windowBatchesRead = windowRead, jobs = jobs,
             catchupBytes = catchupBytes)
-        st.sketch = merged; st.total = newTotal
+        st.sketch = merged; st.totals = totals
         st.cum = newCum; st.cumGenId = newGenId
         st.lastId = id
       } finally if (rowsDir != null) b.unpersist()
     }
   }
 
-  /** Sentinel key carrying the running total inside a cumulative-partial
-    * generation: contains no space (a word trigram always has two) and is
-    * not a renderable IP address, so it cannot collide with either key
-    * space.
+  /** q52t's [[cadenceWriter]] over [[Grams]]; capacity/θ default to the
+    * x4s geometry (HhCadencePropertySpec shrinks them to force churn).
+    */
+  private[graft] def heavyHitterSketchWriter(skDir: String,
+      rowsDir: String = null, hhDir: String = null, recountEvery: Int = 0,
+      cumDir: String = null, ledger: CumLedger = null,
+      capacity: Int = Grams.capacity, thetaInv: Long = Grams.thetaInv,
+      tierDir: String = null): (DataFrame, Long) => Unit =
+    cadenceWriter(Grams.copy(capacity = capacity, thetaInv = thetaInv),
+      skDir, rowsDir, hhDir, recountEvery, cumDir, ledger, tierDir)
+
+  /** q52u's [[cadenceWriter]] over [[Talkers]]; `outDir` is the rows dir
+    * the drain-end exact recount reads — over UDP the stream IS the corpus.
+    */
+  private[graft] def topTalkerSketchWriter(skDir: String, outDir: String,
+      hhDir: String = null, recountEvery: Int = 0, cumDir: String = null,
+      ledger: CumLedger = null,
+      tierDir: String = null): (DataFrame, Long) => Unit =
+    cadenceWriter(Talkers, skDir, outDir, hhDir, recountEvery, cumDir,
+      ledger, tierDir)
+
+  /** Sentinel key carrying the running totals inside a cum generation:
+    * contains no space (a word trigram always has two) and is not a
+    * renderable IP address, so it cannot collide with either key space.
     */
   private[graft] val CumTotalKey = "\u0000TOTAL"
 
-  /** Per-batch cadence accounting for the 30× tier: how many candidates
-    * entered the pruned set at this batch's firing, how many history
-    * batch dirs the residual catch-up had to read (0 in steady state —
-    * the flatness claim the scale gate measures), how many WINDOW dirs
-    * the firing fold read (≤ recountEvery crash-free, ≤ 2·recountEvery−1
-    * on the crash path — the gate only observes crash-free runs; ADVICE
-    * r17 wording), and how many Spark jobs the batch cost end to end
-    * (the r19 happy-path budget: 2 steady, 3 at firings — the
-    * capacity-bounded artifact writes moved to the driver-side
-    * [[DriverParquet]] path and cost no job at all; r17 ran 3/6, r16 ran
-    * 6–7 every batch).
+  /** Per-batch cadence accounting: how many candidates entered the
+    * pruned set at this batch's firing, how many history batch dirs the
+    * untiered catch-up read (0 in steady state — the flatness the 30×
+    * tier gates), how many WINDOW dirs the firing fold read (≤
+    * recountEvery crash-free, ≤ 2·recountEvery−1 on the crash path), and
+    * how many Spark jobs the batch cost end to end (see [[cadenceWriter]]'s
+    * job budget).
     */
   private[graft] final case class CumLedgerRow(batchId: Long, entrants: Long,
       histBatchesRead: Long, fired: Boolean,
@@ -849,287 +818,10 @@ object StreamQueries {
       // bytes the TIERED entrant catch-up actually read from the summary
       // store (task inputMetrics, so parquet row-group pruning shows);
       // −1 = untiered path or no catch-up ran — the flatness statistic
-      // hh_churn_tiered_30x gates (r18, VERDICT r17 #4)
+      // hh_churn_tiered_30x gates
       catchupBytes: Long = -1L)
   private[graft] final class CumLedger {
     val rows = scala.collection.mutable.Buffer.empty[CumLedgerRow]
-  }
-
-  /** q52u flows-domain geometry: θ = 1/50 of total BYTES (a talker owning
-    * ≥ 2% of traffic is "top"), capacity 64 — capacity + 1 > θ⁻¹ makes
-    * the weighted sketch's candidate set a guaranteed superset of the
-    * θ-heavy talkers (under-estimate ≤ W/65 < W/50).
-    */
-  private[graft] val FlowHhCapacity = 64
-  private[graft] val FlowHhThetaInv = 50L
-
-  /** q52u cross-batch WEIGHTED sketch fold (VERDICT r14 #3): the batch's
-    * bytes-weighted Misra–Gries sketch over `src_addr` merges into the
-    * persisted running sketch — q52t's fold device verbatim (strictly-
-    * below generation replay, `_SUCCESS` gating, capacity-bounded state),
-    * with weights replacing unit increments (the decrement algebra change
-    * lives in [[graft.functions.Aggregators.WeightedMisraGriesAgg]]). The
-    * batch additionally lands whole in `outDir/batch=<id>` (per-batch
-    * OVERWRITE — q52g's effectively-once device) because the drain-end
-    * exact recount needs the ingested corpus: over UDP there is no
-    * standing source table to recount against, the stream IS the corpus.
-    */
-  private[graft] final class TalkerCadenceState {
-    var lastId: Long = -1L
-    var sketch: Map[String, Long] = Map.empty
-    var totBytes: Long = 0L
-    var totFlows: Long = 0L
-    var cum: Map[String, (Long, Long)] = Map.empty
-    var cumGenId: Long = -1L
-    var consecEntrantFirings: Int = 0
-    var churnWarned: Boolean = false
-  }
-
-  private[graft] def topTalkerSketchWriter(skDir: String, outDir: String,
-      hhDir: String = null, recountEvery: Int = 0, cumDir: String = null,
-      ledger: CumLedger = null,
-      // Opt-in TIERED entrant catch-up (r18) — [[heavyHitterSketchWriter]]'s
-      // device with weights: summary fragments carry the window's full
-      // per-src (sum_bytes, n_flows), the additive maintenance fold
-      // re-aggregates BOTH sums on merge, and entrant catch-up folds the
-      // generational store instead of the raw `outDir/batch=*` glob.
-      tierDir: String = null): (DataFrame, Long) => Unit = {
-    require(recountEvery <= 0 || (hhDir != null && cumDir != null),
-      "recountEvery > 0 needs hhDir and cumDir — the cadence folds " +
-        "firing-window candidate partials and writes the hh artifact")
-    require(tierDir == null || recountEvery > 0,
-      "tierDir tiers the cadence catch-up — it needs the cadence on")
-    val st = new TalkerCadenceState
-    (batch: DataFrame, id: Long) => {
-      val s = batch.sparkSession
-      import s.implicits._
-      var jobs = 0L
-      // persist: two consumers (rows sink + sketch agg) would each re-run
-      // the micro-batch plan (see pipelineBatchWriter)
-      val b = batch.persist()
-      try {
-        b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        jobs += 1
-        val agg = new graft.functions.Aggregators.WeightedMisraGriesAgg(
-          FlowHhCapacity)
-        // one fused job: sketch + batch byte/flow totals (job-count-bound —
-        // see heavyHitterSketchWriter); coalesce because an all-duplicate
-        // UDP batch dedups to EMPTY and sum over zero rows is NULL
-        val skRow = b.agg(graft.functions.Aggregators.weighted_misra_gries(
-            FlowHhCapacity)(col("src_addr"), col("bytes")).as("sk"),
-            coalesce(sum(col("bytes")), lit(0L)).as("tb"),
-            count(lit(1)).as("tf"))
-          .head()
-        jobs += 1
-        val sk = skRow.getMap[String, Long](0).toMap
-        val bt = (skRow.getLong(1), skRow.getLong(2))
-        val hit = st.lastId == id - 1
-        val prev =
-          if (hit) st.sketch
-          else latestSketchGen(s, skDir, below = id)
-            .map { p =>
-              jobs += 1
-              s.read.parquet(p).as[(String, Long)].collect().toMap
-            }.getOrElse(Map.empty[String, Long])
-        // prev cum + exact totals through id − 1: cached, or rebuilt from
-        // the newest durable cum generation plus a re-count over the ≤
-        // recountEvery rows dirs above it (bounded; crash-path only)
-        val (prevCum, prevTB, prevTF, prevGenId) =
-          if (recountEvery <= 0)
-            (Map.empty[String, (Long, Long)], 0L, 0L, -1L)
-          else if (hit) (st.cum, st.totBytes, st.totFlows, st.cumGenId)
-          else {
-            val (cumJ, tbJ, tfJ, j) = latestSketchGen(s, cumDir, below = id)
-              .map { p =>
-                jobs += 1
-                val m = s.read.parquet(p).as[(String, Long, Long)].collect()
-                  .map(t => t._1 -> (t._2, t._3)).toMap
-                val tot = m.getOrElse(CumTotalKey, (0L, 0L))
-                (m - CumTotalKey, tot._1, tot._2, genIdOf(p))
-              }.getOrElse((Map.empty[String, (Long, Long)], 0L, 0L, -1L))
-            val mid = ((j + 1) until id).map(k => s"$outDir/batch=$k")
-            if (mid.isEmpty) (cumJ, tbJ, tfJ, j)
-            else {
-              jobs += 1
-              val r = s.read.parquet(mid: _*)
-                .agg(coalesce(sum(col("bytes")), lit(0L)), count(lit(1)))
-                .head()
-              (cumJ, tbJ + r.getLong(0), tfJ + r.getLong(1), j)
-            }
-          }
-        val merged = agg.merge(prev, sk)
-        // capacity-bounded driver map → driver-side parquet (r19, VERDICT
-        // r18 #3) — see [[DriverParquet]]
-        DriverParquet.overwriteKV(s, s"$skDir/batch=$id", "src_addr", "w",
-          merged.toSeq)
-        val newTotals = (prevTB + bt._1, prevTF + bt._2)
-        // firing-granularity cadence fold, heavyHitterSketchWriter's r17
-        // device on the flows domain (weights replace unit increments):
-        // at each firing, survivors add ONE window aggregate over the ≤
-        // recountEvery rows dirs since the previous firing, entrants pay
-        // a one-time catch-up over the rows-so-far glob, and the artifact
-        // θ-filters the fold; between firings the fold lives in memory
-        // and nothing is read back (r16 paid a cum read + cum write +
-        // candidate semi-join EVERY batch)
-        var newCum = prevCum
-        var newGenId = prevGenId
-        var entrantsN = 0L
-        var histRead = 0L
-        var windowRead = 0L
-        var catchupBytes = -1L
-        val fired = recountEvery > 0 && (id + 1) % recountEvery == 0
-        if (fired) {
-          // possibly-θ-heavy cut on sketch WEIGHT: W/θinv − W/(cap+1),
-          // safe integer floor — keeps a superset of the θ-heavy talkers,
-          // drops the sketch's churny boundary tail
-          val cap1 = FlowHhCapacity + 1L
-          val floorThresh = math.max(0L,
-            newTotals._1 / FlowHhThetaInv - (newTotals._1 + cap1 - 1L) / cap1)
-          val pruned = merged.filter { case (_, w) => w >= floorThresh }
-          val entrants = pruned.keySet -- prevCum.keySet
-          val survivors = pruned.keySet & prevCum.keySet
-          val windowDirs = ((prevGenId + 1) to id)
-            .map(k => s"$outDir/batch=$k")
-          val (survAgg, catchup): (Map[String, (Long, Long)],
-              Map[String, (Long, Long)]) =
-            if (tierDir == null) {
-              // 0 when no window job runs (entrant-only firing): the
-              // ledger records READS performed, not dirs in scope
-              // (ADVICE r17)
-              windowRead = if (survivors.isEmpty) 0 else windowDirs.size
-              val sa: Map[String, (Long, Long)] =
-                if (survivors.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  s.read.parquet(windowDirs: _*)
-                    .select(col("src_addr"), col("bytes"))
-                    .join(broadcast(survivors.toSeq.toDF("src_addr")),
-                      Seq("src_addr"), "left_semi")
-                    .groupBy("src_addr")
-                    .agg(sum(col("bytes")).as("sb"), count(lit(1)).as("nf"))
-                    .as[(String, Long, Long)].collect()
-                    .map(t => t._1 -> (t._2, t._3)).toMap
-                }
-              val cu: Map[String, (Long, Long)] =
-                if (entrants.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  s.read.parquet(s"$outDir/batch=*")
-                    .select(col("src_addr"), col("bytes"))
-                    .join(broadcast(entrants.toSeq.toDF("src_addr")),
-                      Seq("src_addr"), "left_semi")
-                    .groupBy("src_addr")
-                    .agg(sum(col("bytes")).as("sb"), count(lit(1)).as("nf"))
-                    .as[(String, Long, Long)].collect()
-                    .map(t => t._1 -> (t._2, t._3)).toMap
-                }
-              (sa, cu)
-            } else {
-              // TIERED path — heavyHitterSketchWriter's r18 device with
-              // weights; shared orphan sweep (see [[sweepOrphanFragments]])
-              sweepOrphanFragments(s, tierDir, prevGenId, id)
-              jobs += 1
-              windowRead = windowDirs.size
-              s.read.parquet(windowDirs: _*)
-                .groupBy("src_addr")
-                .agg(sum(col("bytes")).as("sum_bytes"),
-                  count(lit(1)).as("n_flows"))
-                .coalesce(1).sortWithinPartitions("src_addr")
-                .write.mode("overwrite")
-                .parquet(s"$tierDir/frag/batch=$id")
-              val sa: Map[String, (Long, Long)] =
-                if (survivors.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  s.read.parquet(s"$tierDir/frag/batch=$id")
-                    .filter(col("src_addr").isin(survivors.toSeq: _*))
-                    .as[(String, Long, Long)].collect()
-                    .map(t => t._1 -> (t._2, t._3)).toMap
-                }
-              val cu: Map[String, (Long, Long)] =
-                if (entrants.isEmpty) Map.empty
-                else {
-                  jobs += 1
-                  val (m, bytes) =
-                    org.apache.spark.sql.graftshim.Shim.bytesRead(s) {
-                      graft.ext.SimilarityQueries.readPqStore(s, tierDir)
-                        .filter(col("src_addr").isin(entrants.toSeq: _*))
-                        .groupBy("src_addr")
-                        .agg(sum(col("sum_bytes")).as("sb"),
-                          sum(col("n_flows")).as("nf"))
-                        .as[(String, Long, Long)].collect()
-                        .map(t => t._1 -> (t._2, t._3)).toMap
-                    }
-                  catchupBytes = bytes
-                  m
-                }
-              (sa, cu)
-            }
-          newCum = pruned.keysIterator.map { a =>
-            a -> (if (entrants(a)) catchup.getOrElse(a, (0L, 0L))
-                  else {
-                    val p = prevCum(a); val c = survAgg.getOrElse(a, (0L, 0L))
-                    (p._1 + c._1, p._2 + c._2)
-                  })
-          }.toMap
-          newGenId = id
-          entrantsN = entrants.size
-          // raw history dirs read — the statistic the tier eliminates
-          histRead =
-            if (entrants.isEmpty || tierDir != null) 0L else id + 1
-          // driver-resident fold → driver-side parquet writes (r19) —
-          // see [[DriverParquet]]
-          DriverParquet.overwrite(s, s"$cumDir/batch=$id", "src_addr",
-            Seq("sum_bytes", "n_flows"),
-            newCum.toSeq.map { case (a, (sb, nf)) => (a, Seq(sb, nf)) } :+
-              ((CumTotalKey, Seq(newTotals._1, newTotals._2))))
-          DriverParquet.overwrite(s, s"$hhDir/batch=$id", "src_addr",
-            Seq("sum_bytes", "n_flows", "ppm"),
-            newCum.toSeq
-              .filter { case (_, (sb, _)) =>
-                sb * FlowHhThetaInv >= newTotals._1 }
-              .map { case (a, (sb, nf)) =>
-                (a, Seq(sb, nf, sb * 1000000L / newTotals._1)) })
-          // tier maintenance LAST — the cum gen is durable, so a crash
-          // in here leaves no orphan fragment (the sweep only fires for
-          // crashes BEFORE the cum write); the fold re-aggregates BOTH
-          // additive sums per src
-          if (tierDir != null) {
-            val stats = graft.ext.SimilarityQueries.maintainPqStore(
-              s, tierDir, id,
-              foldWith = Some((df: DataFrame, n: Int) =>
-                df.groupBy("src_addr")
-                  .agg(sum(col("sum_bytes")).as("sum_bytes"),
-                    sum(col("n_flows")).as("n_flows"))
-                  .repartitionByRange(n, col("src_addr"))
-                  .sortWithinPartitions("src_addr")))
-            jobs += 1 + stats.mergesFired
-          }
-          if (entrants.nonEmpty) st.consecEntrantFirings += 1
-          else st.consecEntrantFirings = 0
-          if (st.consecEntrantFirings >= ChurnAlertFirings && !st.churnWarned) {
-            st.churnWarned = true
-            cadenceChurnAlerts.increment()
-            System.err.println(s"[cadence] $hhDir: entrants on " +
-              s"${st.consecEntrantFirings} consecutive firings — talker " +
-              s"churn above the prune floor keeps re-reading " +
-              (if (tierDir == null) s"$outDir/batch=*; set tierDir to " +
-                "fold the generational summary store instead if the " +
-                "talker space genuinely grows without bound"
-               else s"the $tierDir summary store (bounded, but nonzero " +
-                "per firing)"))
-          }
-        }
-        if (ledger != null)
-          ledger.rows += CumLedgerRow(id, entrantsN, histRead, fired,
-            windowBatchesRead = windowRead, jobs = jobs,
-            catchupBytes = catchupBytes)
-        st.sketch = merged
-        st.totBytes = newTotals._1; st.totFlows = newTotals._2
-        st.cum = newCum; st.cumGenId = newGenId
-        st.lastId = id
-      } finally b.unpersist()
-    }
   }
 
   /** The exact tail shared by q52u's drain answer and its mid-stream
@@ -2510,7 +2202,7 @@ object StreamQueries {
     // shape: per micro-batch ONE Misra–Gries sketch aggregation (map-side
     // buffers capacity-bounded like the batch form), folded into a
     // persisted capacity-bounded sketch artifact — the only state that
-    // crosses batches; see [[heavyHitterSketchWriter]] for the bound, the
+    // crosses batches; see [[cadenceWriter]] for the bound, the
     // crash-replay fold, and why a distinct-key state store is the thing
     // this exists to avoid. At drain end the final sketch's candidate set
     // recounts EXACTLY over the standing corpus (the streamed corpus IS

@@ -37,8 +37,8 @@ class LayoutSpec extends SparkSpec {
       .withColumn("sx", expr("(l_suppkey * 256) DIV ms"))
       .withColumn("zv", Kernels.interleave_bits(col("px"), col("sx")))
       .select(col("l_partkey"), col("l_suppkey"), col("zv"))
-    val zdir = "/root/repo/target/graft-tmp/layout-z"
-    val ldir = "/root/repo/target/graft-tmp/layout-linear"
+    val zdir = s"${graft.Tmp.root}/layout-z"
+    val ldir = s"${graft.Tmp.root}/layout-linear"
     z.repartitionByRange(files, col("zv")).sortWithinPartitions("zv")
       .drop("zv").write.mode("overwrite").parquet(zdir)
     li.repartitionByRange(files, col("l_partkey")).sortWithinPartitions("l_partkey")

@@ -84,7 +84,7 @@ class PlanSpec extends SparkSpec {
 
   test("CidrPushdown rewrites aligned literal CIDRs into pushed prefix filters") {
     // materialize a flows parquet so there is a real scan to push into
-    val out = "/root/repo/target/graft-tmp/flows_pushdown"
+    val out = s"${graft.Tmp.root}/flows_pushdown"
     ops.FlowQueries.flows(spark, sf).write.mode("overwrite").parquet(out)
     val flows = spark.read.parquet(out)
 
@@ -181,7 +181,7 @@ class PlanSpec extends SparkSpec {
       Seq("orders_bkt", "lineitem_bkt").foreach { t =>
         spark.sql(s"DROP TABLE IF EXISTS $t")
         org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"/root/repo/target/graft-tmp/warehouse/$t"))
+          new java.io.File(s"${graft.Tmp.root}/warehouse/$t"))
       }
       Tables.orders(spark, sf).write.mode("overwrite")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -200,7 +200,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partitioned writes prune partitions at the scan") {
-    val out = "/root/repo/target/graft-tmp/flows_part"
+    val out = s"${graft.Tmp.root}/flows_part"
     ops.FlowQueries.flows(spark, sf).write.mode("overwrite")
       .partitionBy("proto").parquet(out)
     val df = spark.read.parquet(out).filter(col("proto") === 6)
@@ -329,7 +329,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partition pruning reaches the scan of a partitioned table") {
-    val dir = "/root/repo/target/graft-tmp/plan-partitioned"
+    val dir = s"${graft.Tmp.root}/plan-partitioned"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     Tables.lineitem(spark, sf)
       .write.partitionBy("l_returnflag").mode("overwrite").parquet(dir)
@@ -479,7 +479,7 @@ class PlanSpec extends SparkSpec {
     // non-codegen ScalaUDF/"UDF(" node and break the span. A parquet
     // scan (not a LocalRelation, which the optimizer would collapse the
     // Project into) makes the plan the real file-backed one.
-    val out = "/root/repo/target/graft-tmp/raw_flows_planspec"
+    val out = s"${graft.Tmp.root}/raw_flows_planspec"
     spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       FlowSchema.rawSchema).write.mode("overwrite").parquet(out)

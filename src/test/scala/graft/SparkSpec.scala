@@ -13,7 +13,7 @@ object TestSpark {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/graft-tmp/warehouse")
+      .config("spark.sql.warehouse.dir", s"${graft.Tmp.root}/warehouse")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

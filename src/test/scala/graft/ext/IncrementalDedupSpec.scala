@@ -58,7 +58,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val uniq = (0 until 3).map(k =>
       (200 to 240).map(i => s"uniq${k}w${i * (k + 7)}").mkString(" "))
 
-    val corpus = writeDocs("/root/repo/target/graft-tmp/incdedup-corpus",
+    val corpus = writeDocs(s"${graft.Tmp.root}/incdedup-corpus",
       Seq(
         i0 -> mega, i1 -> mega, // index copies of the spanning group
         i2 -> nearIdxA, // index side of the cross-split near pair
@@ -100,7 +100,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val doc3 = (t.init :+ "tok2").mkString(" ") // 59 types
     val same = (301 to 360).map(i => s"same$i").mkString(" ")
     val lone = (401 to 460).map(i => s"lone$i").mkString(" ")
-    val corpus = writeDocs("/root/repo/target/graft-tmp/clusterbest-corpus",
+    val corpus = writeDocs(s"${graft.Tmp.root}/clusterbest-corpus",
       Seq(1L -> doc1, 2L -> doc2, 3L -> doc3, 4L -> same, 5L -> same, 6L -> lone))
 
     val got = Registry.queries("x2i_cluster_best")(spark, corpus)

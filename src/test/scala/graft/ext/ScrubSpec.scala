@@ -15,7 +15,7 @@ import graft.{Registry, SparkSpec}
   */
 class ScrubSpec extends SparkSpec {
 
-  private val dir = "/root/repo/target/graft-tmp/scrub-corpus"
+  private val dir = s"${graft.Tmp.root}/scrub-corpus"
 
   private val B = (1 to 8).map(i => s"b$i").mkString(" ") // shared 8-run
   private val C9 = (1 to 9).map(i => s"c$i").mkString(" ") // shared 9-run

@@ -20,7 +20,7 @@ import graft.{Registry, SparkSpec}
   */
 class SkewDedupSpec extends SparkSpec {
 
-  private val dir = "/root/repo/target/graft-tmp/skew-corpus"
+  private val dir = s"${graft.Tmp.root}/skew-corpus"
   private val nDocs = 600
   private val clusterSize = 480 // 80%
   private val expectedPairs = clusterSize.toLong * (clusterSize - 1) / 2 // 114,960
@@ -135,7 +135,7 @@ class SkewDedupSpec extends SparkSpec {
 
   // ---- x2e: the same mega-duplicate shape over EMBEDDINGS (r09) ----
 
-  private val embDir = "/root/repo/target/graft-tmp/skew-emb"
+  private val embDir = s"${graft.Tmp.root}/skew-emb"
   private val nVecs = 540
   private val embCluster = 480
   private val embScaled = 10 // 1.5× copies: SAME signature, DIFFERENT vector

@@ -24,7 +24,7 @@ import graft.{Registry, SparkSpec}
   */
 class SkewJoinSpec extends SparkSpec {
 
-  private val dir = "/root/repo/target/graft-tmp/skew-flows"
+  private val dir = s"${graft.Tmp.root}/skew-flows"
   private val n = 2000
 
   /** Synthetic events whose derived flows are ALL (proto=1, dst_port=53):

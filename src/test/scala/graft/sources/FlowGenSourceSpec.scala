@@ -14,7 +14,7 @@ import graft.streaming.FlowPipeline
   */
 class FlowGenSourceSpec extends SparkSpec {
 
-  private val tmp = "/root/repo/target/graft-tmp/flowgen-spec"
+  private val tmp = s"${graft.Tmp.root}/flowgen-spec"
 
   private def readGen(total: Long, perBatch: Long) =
     spark.readStream.format("flowgen") // short name via DataSourceRegister

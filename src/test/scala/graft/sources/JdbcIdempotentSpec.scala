@@ -14,7 +14,7 @@ import graft.SparkSpec
 class JdbcIdempotentSpec extends SparkSpec {
 
   test("replayed and overlapping batches insert no duplicate rows") {
-    val db = "/root/repo/target/graft-tmp/idem-derby"
+    val db = s"${graft.Tmp.root}/idem-derby"
     FileUtils.deleteQuietly(new java.io.File(db))
     val url = JdbcSink.derbyUrl(db)
     val table = "flows_idem"
@@ -59,7 +59,7 @@ class JdbcIdempotentSpec extends SparkSpec {
     // anti-join would see the half-written packet's key present and
     // silently drop its never-written siblings. The multiset-difference
     // append must recover them, including a genuinely duplicated record.
-    val db = "/root/repo/target/graft-tmp/idem-derby-partial"
+    val db = s"${graft.Tmp.root}/idem-derby-partial"
     FileUtils.deleteQuietly(new java.io.File(db))
     val url = JdbcSink.derbyUrl(db)
     val table = "flows_partial"
@@ -94,7 +94,7 @@ class JdbcIdempotentSpec extends SparkSpec {
     // plain column joins compile to EqualTo, under which NULL never equals
     // NULL — a null-bearing row would be re-inserted on every replay; the
     // multiset diff must use null-safe equality
-    val db = "/root/repo/target/graft-tmp/idem-derby-null"
+    val db = s"${graft.Tmp.root}/idem-derby-null"
     FileUtils.deleteQuietly(new java.io.File(db))
     val url = JdbcSink.derbyUrl(db)
     val table = "flows_null"

@@ -21,8 +21,8 @@ import graft.SparkSpec
 class StreamRestartSpec extends SparkSpec {
 
   test("crash mid-insert, restart from checkpoint: sink holds exactly-once rows") {
-    val db = "/root/repo/target/graft-tmp/restart-derby"
-    val cp = "/root/repo/target/graft-tmp/cp/restart"
+    val db = s"${graft.Tmp.root}/restart-derby"
+    val cp = s"${graft.Tmp.root}/cp/restart"
     FileUtils.deleteQuietly(new java.io.File(db))
     FileUtils.deleteQuietly(new java.io.File(cp))
     val url = JdbcSink.derbyUrl(db)

@@ -81,7 +81,7 @@ class UdpIngestSpec extends SparkSpec {
   }
 
   test("UDP datagrams stream-decode end to end and normalize to the flows shape") {
-    val cp = "/root/repo/target/graft-tmp/udp-spec/cp"
+    val cp = s"${graft.Tmp.root}/udp-spec/cp"
     FileUtils.deleteQuietly(Paths.get(cp).toFile)
     val raw = spark.readStream.format("nflv5-udp")
       .option("name", "udp-spec").option("port", 0)
@@ -132,7 +132,7 @@ class UdpIngestSpec extends SparkSpec {
   }
 
   test("restart from checkpoint resumes at the committed offset without skipping new packets") {
-    val tmp = "/root/repo/target/graft-tmp/udp-restart"
+    val tmp = s"${graft.Tmp.root}/udp-restart"
     val cp = s"$tmp/cp"; val out = s"$tmp/out"
     Seq(cp, out).foreach(p => FileUtils.deleteQuietly(Paths.get(p).toFile))
 
@@ -317,7 +317,7 @@ class UdpIngestSpec extends SparkSpec {
 
   test("v5, v9 and IPFIX datagrams decode side by side on one port") {
     import graft.sources.{NetFlowV9 => V9}
-    val cp = "/root/repo/target/graft-tmp/udp-spec/cp9"
+    val cp = s"${graft.Tmp.root}/udp-spec/cp9"
     FileUtils.deleteQuietly(Paths.get(cp).toFile)
     val raw = spark.readStream.format("nflv5-udp")
       .option("name", "udp-spec9").option("port", 0)
@@ -426,7 +426,7 @@ class UdpIngestSpec extends SparkSpec {
     //   2. nothing reaches the sink for them (refused ≠ decoded-empty);
     //   3. once the template is re-announced, the re-sent data decodes.
     import graft.sources.{NetFlowV9 => V9}
-    val tmp = "/root/repo/target/graft-tmp/udp-tmpl-restart"
+    val tmp = s"${graft.Tmp.root}/udp-tmpl-restart"
     val cp = s"$tmp/cp"; val out = s"$tmp/out"
     Seq(cp, out).foreach(p => FileUtils.deleteQuietly(Paths.get(p).toFile))
 
@@ -507,7 +507,7 @@ class UdpIngestSpec extends SparkSpec {
     // optimization, never a correctness dependency — unparseable state
     // must leave an EMPTY registry (refusal + re-learn), not a crash loop
     import graft.sources.{NetFlowV9 => V9}
-    val dir = "/root/repo/target/graft-tmp/udp-tmpl-corrupt"
+    val dir = s"${graft.Tmp.root}/udp-tmpl-corrupt"
     FileUtils.deleteQuietly(Paths.get(dir).toFile)
     java.nio.file.Files.createDirectories(Paths.get(dir))
     java.nio.file.Files.write(Paths.get(dir, "graft_nfv9_templates"),
@@ -554,7 +554,7 @@ class UdpIngestSpec extends SparkSpec {
     // prevents; simulated by truncating), the declared degradation is a
     // cold start + re-learn, not a crash or a half-parsed registry.
     import graft.sources.{NetFlowV9 => V9}
-    val dir = "/root/repo/target/graft-tmp/udp-tmpl-torn"
+    val dir = s"${graft.Tmp.root}/udp-tmpl-torn"
     FileUtils.deleteQuietly(Paths.get(dir).toFile)
     java.nio.file.Files.createDirectories(Paths.get(dir))
     val oldState = "T|127.0.0.1|3|700|0|8:4,12:4,1:4\n"
@@ -674,7 +674,7 @@ class UdpIngestSpec extends SparkSpec {
     // records sent BEFORE any re-announcement — zero template misses, no
     // wait for the exporter's periodic re-export.
     import graft.sources.{NetFlowV9 => V9}
-    val tmp = "/root/repo/target/graft-tmp/udp-tmpl-persist"
+    val tmp = s"${graft.Tmp.root}/udp-tmpl-persist"
     val cp = s"$tmp/cp"; val out = s"$tmp/out"
     Seq(cp, out).foreach(p => FileUtils.deleteQuietly(Paths.get(p).toFile))
 

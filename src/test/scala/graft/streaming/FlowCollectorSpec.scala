@@ -15,7 +15,7 @@ import graft.sources.{NetFlowV5 => V5, SFlowV5 => SF}
 class FlowCollectorSpec extends SparkSpec {
 
   test("collector ingests UDP flows to parquet and serves metrics") {
-    val tmp = "/root/repo/target/graft-tmp/collector-spec"
+    val tmp = s"${graft.Tmp.root}/collector-spec"
     val out = s"$tmp/out"; val cp = s"$tmp/cp"
     Seq(out, cp).foreach(p => FileUtils.deleteQuietly(Paths.get(p).toFile))
 
@@ -68,7 +68,7 @@ class FlowCollectorSpec extends SparkSpec {
     // the reference's CLI default shape: -listen sflow://:6343,netflow://:2055
     // (main.go:31) — here with nfl for a deterministic v5 payload and
     // ephemeral ports
-    val tmp = "/root/repo/target/graft-tmp/collector-urls"
+    val tmp = s"${graft.Tmp.root}/collector-urls"
     val out = s"$tmp/out"; val cp = s"$tmp/cp"
     Seq(out, cp).foreach(p => FileUtils.deleteQuietly(Paths.get(p).toFile))
 
@@ -168,7 +168,7 @@ class FlowCollectorSpec extends SparkSpec {
     probe.close()
 
     intercept[Exception] {
-      FlowCollector.start(spark, outDir = "/root/repo/target/graft-tmp/fc-fail",
+      FlowCollector.start(spark, outDir = s"${graft.Tmp.root}/fc-fail",
         checkpoint = "/proc/nonexistent/cp", name = "collector-fail",
         metricsPort = port)
     }

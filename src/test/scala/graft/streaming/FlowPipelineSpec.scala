@@ -15,7 +15,7 @@ import graft.{FlowRecord, FlowSchema, SparkSpec}
   */
 class FlowPipelineSpec extends SparkSpec {
 
-  private val tmp = "/root/repo/target/graft-tmp/pipeline-spec"
+  private val tmp = s"${graft.Tmp.root}/pipeline-spec"
 
   private def mkRaw(n: Int) = {
     import spark.implicits._

@@ -32,7 +32,7 @@ class MetricsServerSpec extends SparkSpec {
     val listener = new FlowPipeline.MetricsListener
     val server = new MetricsServer(listener)
     spark.streams.addListener(listener)
-    val cp = "/root/repo/target/graft-tmp/metrics-spec/cp"
+    val cp = s"${graft.Tmp.root}/metrics-spec/cp"
     FileUtils.deleteQuietly(Paths.get(cp).toFile)
     try {
       val before = scrape(server.boundPort)

@@ -63,7 +63,7 @@ class RocksDbStateSpec extends SparkSpec {
           s"(${base.size} vs ${rocks.size} rows)")
       // the RocksDB run was the LAST one against this checkpoint (drain
       // recreates the dir per run), so its artifacts must be RocksDB's
-      val state = s"/root/repo/target/graft-tmp/cp/${name.split('_').head}_sink/state"
+      val state = s"${graft.Tmp.root}/cp/${name.split('_').head}_sink/state"
       assert(rocksArtifacts(state).nonEmpty,
         s"no RocksDB snapshot/changelog under $state — provider never engaged")
     }
@@ -71,7 +71,7 @@ class RocksDbStateSpec extends SparkSpec {
 
   test("RocksDB state survives a checkpoint restart (running counts resume)") {
     withRocksDb {
-      val cp = "/root/repo/target/graft-tmp/cp/rocksdb-restart"
+      val cp = s"${graft.Tmp.root}/cp/rocksdb-restart"
       FileUtils.deleteQuietly(new java.io.File(cp))
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

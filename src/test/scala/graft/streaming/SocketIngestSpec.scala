@@ -45,7 +45,7 @@ class SocketIngestSpec extends SparkSpec {
     writer.setDaemon(true)
     writer.start()
 
-    val cp = "/root/repo/target/graft-tmp/socket-spec/cp"
+    val cp = s"${graft.Tmp.root}/socket-spec/cp"
     FileUtils.deleteQuietly(Paths.get(cp).toFile)
     val schema = "type INT, time_received BIGINT, sequence_num BIGINT, " +
       "sampling_rate BIGINT, flow_direction INT, src_addr STRING, " +

@@ -19,7 +19,7 @@ import graft.SparkSpec
   */
 class StreamingPlanSpec extends SparkSpec {
 
-  private val tmp = "/root/repo/target/graft-tmp/streaming-plan-spec"
+  private val tmp = s"${graft.Tmp.root}/streaming-plan-spec"
 
   private def freshCp(name: String): String = {
     val cp = s"$tmp/$name"

@@ -21,7 +21,7 @@ class TransformWithStateSpec extends SparkSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val cp = "/root/repo/target/graft-tmp/tws-spec/cp"
+    val cp = s"${graft.Tmp.root}/tws-spec/cp"
     FileUtils.deleteQuietly(Paths.get(cp).toFile)
     try {
       val input = MemoryStream[(String, Int)]
