@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.UdpFlowSource
@@ -22,6 +22,18 @@ import graft.sources.UdpFlowSource
   * [[FlowPipeline.start]] / [[graft.sources.JdbcSink]]) for the ClickHouse
   * JDBC URL in production — `JdbcSink.idempotentAppend` upgrades the
   * reference's at-most-once to effectively-once.
+  *
+  * Commit path: each micro-batch writes one part file per core and forks
+  * no child process. Hadoop's local file system, without libhadoop, forks
+  * `chmod` for every file and dir it creates and `readlink` twice per
+  * checkpoint rename, about 60 processes per batch; the sink and the
+  * checkpoint of THIS query use [[graft.sources.LocalFs]], which makes the
+  * same calls in-process, so part files, `.crc`s, `_SUCCESS` and the
+  * offsets/commits files are what stock Hadoop writes. How the install is
+  * kept to this query (a write option, and a session key held only while
+  * the query starts) is on [[FlowPipeline.start]]. `/metrics` counts this
+  * query only, and exports its batch time per phase
+  * (`graft_flows_batch_phase_seconds_total`).
   *
   * Restart semantics for v9/IPFIX templates: the template registry is
   * in-memory per stream (RFC 3954 §5 — templates are receiver state the
@@ -47,11 +59,12 @@ object FlowCollector {
       udpPort: Int,
       listeners: Seq[Listener] = Seq.empty) {
     def metricsPort: Int = metrics.boundPort
-    def stop(spark: SparkSession): Unit = {
-      query.stop()
-      spark.streams.removeListener(listener)
-      metrics.stop()
-    }
+    /** Stops the query, then releases the listener and the metrics port
+      * even when the stop throws (a stop timeout, say).
+      */
+    def stop(spark: SparkSession): Unit =
+      try query.stop()
+      finally try spark.streams.removeListener(listener) finally metrics.stop()
   }
 
   /** Parsed `scheme://host:port` listen URL (reference `main.go:207-213` —
@@ -139,13 +152,8 @@ object FlowCollector {
     val named = urls.zipWithIndex.map { case (u, i) =>
       (u, s"$name-${u.scheme}-$i")
     }
-    val listener = new FlowPipeline.MetricsListener
-    spark.streams.addListener(listener)
-    var server: MetricsServer = null
-    var q: StreamingQuery = null
-    try {
-      server = new MetricsServer(listener, metricsPort)
-      val raw = named.map { case (u, n) =>
+    launch(spark, metricsPort, outDir, checkpoint, batchMaxTime) {
+      named.map { case (u, n) =>
         spark.readStream.format("nflv5-udp")
           .option("host", u.host).option("port", u.port)
           .option("name", n).option("scheme", u.scheme)
@@ -155,17 +163,9 @@ object FlowCollector {
           .option("persistTemplates", persistTemplates)
           .load()
       }.reduce(_ unionByName _)
-      q = FlowPipeline.start(FlowPipeline.normalize(raw), outDir, checkpoint,
-        batchMaxTime)
+    } { q =>
       val ports = awaitBound(q, named.map(_._2))
-      val bound = named.map { case (u, n) => Listener(n, u.scheme, u.host, ports(n)) }
-      Running(q, listener, server, bound.head.port, bound)
-    } catch {
-      case e: Throwable =>
-        if (q != null) { try q.stop() catch { case _: Exception => () } }
-        spark.streams.removeListener(listener)
-        if (server != null) { try server.stop() catch { case _: Exception => () } }
-        throw e
+      named.map { case (u, n) => Listener(n, u.scheme, u.host, ports(n)) }
     }
   }
 
@@ -175,27 +175,39 @@ object FlowCollector {
       batchMaxTime: String = "10 seconds", maxPacketsPerBatch: Long = 1000L,
       numPartitions: Int = 4, extended: Boolean = false,
       persistTemplates: Boolean = false): Running = {
-    val listener = new FlowPipeline.MetricsListener
-    spark.streams.addListener(listener)
-    var server: MetricsServer = null
-    var q: StreamingQuery = null
-    // every failure past a resource acquisition must release what exists —
-    // a bind-wait timeout would otherwise leak the query, the listener and
-    // the metrics HTTP port with no handle left to stop them
-    try {
-      server = new MetricsServer(listener, metricsPort)
-      val raw = spark.readStream.format("nflv5-udp")
+    launch(spark, metricsPort, outDir, checkpoint, batchMaxTime) {
+      spark.readStream.format("nflv5-udp")
         .option("port", udpPort).option("name", name)
         .option("maxPacketsPerBatch", maxPacketsPerBatch)
         .option("numPartitions", numPartitions)
         .option("extended", extended)
         .option("persistTemplates", persistTemplates)
         .load()
+    } { q =>
+      Seq(Listener(name, "any", "127.0.0.1", awaitBound(q, Seq(name))(name)))
+    }
+  }
+
+  /** Metrics listener (scoped to this collector's query) and server, the
+    * query over `raw`, then `listeners` waits until the sockets are bound.
+    * Every failure past a resource acquisition releases what exists: a
+    * bind-wait timeout would otherwise leak the query, the listener and
+    * the metrics HTTP port with no handle left to stop them.
+    */
+  private def launch(spark: SparkSession, metricsPort: Int, outDir: String,
+      checkpoint: String, batchMaxTime: String)(raw: => DataFrame)(
+      listeners: StreamingQuery => Seq[Listener]): Running = {
+    val listener = new FlowPipeline.MetricsListener(scoped = true)
+    spark.streams.addListener(listener)
+    var server: MetricsServer = null
+    var q: StreamingQuery = null
+    try {
+      server = new MetricsServer(listener, metricsPort)
       q = FlowPipeline.start(FlowPipeline.normalize(raw), outDir, checkpoint,
         batchMaxTime)
-      val port = awaitBound(q, Seq(name))(name)
-      Running(q, listener, server, port,
-        Seq(Listener(name, "any", "127.0.0.1", port)))
+      listener.bind(q.id)
+      val bound = listeners(q)
+      Running(q, listener, server, bound.head.port, bound)
     } catch {
       case e: Throwable =>
         if (q != null) { try q.stop() catch { case _: Exception => () } }

@@ -1,13 +1,17 @@
 package graft.streaming
 
+import java.util.UUID
 import java.util.concurrent.atomic.LongAdder
+
+import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress, Trigger}
 
 import graft.FlowSchema
 import graft.functions.IpFunctions
+import graft.sources.LocalFs
 
 /** The reference's ingest pipeline (SURVEY §2.1 R1–R6), Spark-native.
   *
@@ -26,12 +30,14 @@ import graft.functions.IpFunctions
   *     `maxOffsetsPerTrigger`). Spark has no count-OR-time trigger; the
   *     time-trigger + admission-cap pair is the idiomatic equivalent and
   *     strictly bounds both batch size and latency;
-  *   - R5 sink: `foreachBatch` → `df.write.jdbc` (ClickHouse) or parquet.
+  *   - R5 sink: `foreachBatch` → `df.write.jdbc` (ClickHouse) or parquet,
+  *     one part file per core per batch and no forked child processes on
+  *     the commit path ([[start]]).
   *     Spark gives at-least-once vs the reference's at-most-once (errors
   *     logged + batch dropped, `main.go:158-172`); exact parity downstream
   *     is restored by the natural idempotency key
   *     (sequence_num, sampler_address, time_received);
-  *   - R6 metrics: [[MetricsListener]] (rows/batches/rates), the
+  *   - R6 metrics: [[MetricsListener]] (rows/batches/rates/phase times), the
   *     `StreamingQueryProgress` counterpart of goflow's Prometheus counters.
   */
 object FlowPipeline {
@@ -99,31 +105,72 @@ object FlowPipeline {
     * `foreachBatch` for `batch.write.mode("append").jdbc(url, "flows",
     * props)` against ClickHouse — same plan, different writer; no JDBC
     * endpoint exists in this environment).
+    *
+    * The commit path is the batch's sink write plus its offsets and commits
+    * entries (the micro-batch protocol's unit of progress), and its fixed
+    * cost is set by how many files a batch creates and how each is made:
+    *
+    *   - one part file per core: the batch is coalesced to
+    *     `defaultParallelism` (a coalesce never splits, so a batch with
+    *     fewer partitions keeps them). Three listeners × four partitions
+    *     had written 12 part files per batch, each with its `.crc`,
+    *     attempt dirs and rename;
+    *   - no child processes: without libhadoop, Hadoop's local file system
+    *     forks `chmod` per file and dir it creates and `readlink` twice per
+    *     FileContext rename (about 60 forks per collector batch, measured
+    *     with JFR). The sink write and the checkpoint go through
+    *     [[graft.sources.LocalFs]] instead, which makes the same calls
+    *     in-process. Part files, `.crc`s, `_SUCCESS`, the offsets/commits
+    *     files and their permissions are what stock Hadoop writes.
+    *
+    * Scope of the install: the sink write carries `fs.file.impl` as a
+    * write option with the `file:` FileSystem cache off for that write (the
+    * JVM-wide cache is keyed on scheme and user, not on the conf, and
+    * already holds a stock instance). The checkpoint's
+    * `fs.AbstractFileSystem.file.impl` is set on the session only while
+    * `start()` builds the query, which clones the session for its logs,
+    * and the caller's value is restored after. Other streams, reads and
+    * writes of the session keep stock Hadoop; non-`file:` paths never see
+    * either key.
     */
   def start(normalized: DataFrame, outDir: String, checkpoint: String,
-      batchMaxTime: String = "10 seconds", availableNow: Boolean = false,
-      sinkPartitions: Int = 0): StreamingQuery = {
+      batchMaxTime: String = "10 seconds", availableNow: Boolean = false): StreamingQuery = {
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(batchMaxTime)
-    normalized.writeStream
+    val spark = normalized.sparkSession
+    val cores = spark.sparkContext.defaultParallelism
+    val fcImpl = "fs.AbstractFileSystem.file.impl"
+    val callerFc = spark.conf.getOption(fcImpl)
+    spark.conf.set(fcImpl, classOf[LocalFs.Context].getName)
+    try normalized.writeStream
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // reference writes one block per batch from a single writer
-        // (`main.go:258-262`); parallel partition writers are strictly more
-        // capable — coalesce only if the target needs politeness.
-        val out = if (sinkPartitions > 0) batch.coalesce(sinkPartitions) else batch
-        out.write.mode("append").parquet(outDir)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.coalesce(cores).write.mode("append")
+          .option("fs.file.impl", classOf[LocalFs.Checksummed].getName)
+          .option("fs.file.impl.disable.cache", "true")
+          .parquet(outDir)
       }
       .start()
+    finally callerFc match {
+      case Some(v) => spark.conf.set(fcImpl, v)
+      case None => spark.conf.unset(fcImpl)
+    }
   }
 
   /** R6: rows/batches counters over StreamingQueryProgress — the Spark
     * counterpart of the reference's Prometheus `/metrics`
     * (`main.go:177-180`); expose via Spark's PrometheusServlet in a real
     * deployment.
+    *
+    * Unscoped (the default) it counts every streaming query of the session.
+    * A `scoped` listener counts only the query passed to [[bind]], so a
+    * collector's `/metrics` never absorbs an unrelated stream's rows. It
+    * must be registered before its query starts and the listener bus is
+    * asynchronous, so progress that reaches it before [[bind]] is held and
+    * replayed for the bound id.
     */
-  final class MetricsListener extends StreamingQueryListener {
+  final class MetricsListener(scoped: Boolean = false) extends StreamingQueryListener {
     val rowsIn = new LongAdder
     val batches = new LongAdder
     @volatile var lastRowsPerSecond: Double = 0.0
@@ -132,14 +179,49 @@ object FlowPipeline {
       * `maxBatchRows ≤ admission cap`.
       */
     @volatile var maxBatchRows: Long = 0L
+    /** Milliseconds summed per [[MetricsListener.Phases]] entry of
+      * `progress.durationMs`: where batch time goes (planning, sink,
+      * offsets WAL, commit).
+      */
+    val phaseMs: Map[String, LongAdder] =
+      MetricsListener.Phases.map(_ -> new LongAdder).toMap
+
+    private var queryId: Option[UUID] = None
+    private val early = ArrayBuffer.empty[StreamingQueryProgress]
+
+    /** Count only `id`'s progress from now on, including any already held. */
+    def bind(id: UUID): Unit = synchronized {
+      queryId = Some(id)
+      early.filter(_.id == id).foreach(record)
+      early.clear()
+    }
+
+    private def record(p: StreamingQueryProgress): Unit = {
+      rowsIn.add(p.numInputRows)
+      batches.increment()
+      lastRowsPerSecond = p.inputRowsPerSecond
+      if (p.numInputRows > maxBatchRows) maxBatchRows = p.numInputRows
+      phaseMs.foreach { case (k, ms) =>
+        val v = p.durationMs.get(k)
+        if (v != null) ms.add(v)
+      }
+    }
 
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      rowsIn.add(e.progress.numInputRows)
-      batches.increment()
-      lastRowsPerSecond = e.progress.inputRowsPerSecond
-      if (e.progress.numInputRows > maxBatchRows) maxBatchRows = e.progress.numInputRows
-    }
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      synchronized {
+        val p = e.progress
+        if (!scoped || queryId.contains(p.id)) record(p)
+        else if (queryId.isEmpty) early += p
+      }
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+  }
+
+  object MetricsListener {
+    /** The `durationMs` phases exported as
+      * `graft_flows_batch_phase_seconds_total{phase=…}`.
+      */
+    val Phases: Seq[String] = Seq("addBatch", "walCommit", "commitOffsets",
+      "queryPlanning", "latestOffset", "triggerExecution")
   }
 }

@@ -22,7 +22,7 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
   private def body: String =
-    s"""# HELP graft_flows_rows_total Rows ingested across streaming queries.
+    s"""# HELP graft_flows_rows_total Rows ingested by the listener's streaming query (every query when unscoped).
        |# TYPE graft_flows_rows_total counter
        |graft_flows_rows_total ${listener.rowsIn.sum()}
        |# HELP graft_flows_batches_total Micro-batches completed.
@@ -43,7 +43,20 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
        |# HELP graft_flows_max_batch_rows Largest single micro-batch admitted (R4 invariant).
        |# TYPE graft_flows_max_batch_rows gauge
        |graft_flows_max_batch_rows ${listener.maxBatchRows}
-       |$listenerBody$ifCounterBody$ethVlanProcBody""".stripMargin
+       |$phaseBody$listenerBody$ifCounterBody$ethVlanProcBody""".stripMargin
+
+  /** Batch time per `durationMs` phase, summed over progress events: an
+    * operator sees the commit share (`walCommit` + `commitOffsets`) next to
+    * the sink (`addBatch`) and the whole trigger.
+    */
+  private def phaseBody: String = {
+    val name = "graft_flows_batch_phase_seconds_total"
+    s"# HELP $name Micro-batch time per StreamingQueryProgress.durationMs phase.\n" +
+      s"# TYPE $name counter\n" +
+      FlowPipeline.MetricsListener.Phases.map { p =>
+        s"""$name{phase="$p"} ${listener.phaseMs(p).sum() / 1000.0}"""
+      }.mkString("", "\n", "\n")
+  }
 
   /** Per-listener counter attribution — the reference runs one goflow
     * FlowRoutine per listen URL, so a two-socket deployment

@@ -1,10 +1,16 @@
 package graft.streaming
 
 import java.net.{DatagramPacket, DatagramSocket, HttpURLConnection, InetAddress, URI}
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeoutException
 
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.SparkSpec
 import graft.sources.{NetFlowV5 => V5, SFlowV5 => SF}
@@ -177,5 +183,118 @@ class FlowCollectorSpec extends SparkSpec {
     // the metrics port must be bindable again
     val rebind = new java.net.ServerSocket(port)
     rebind.close()
+  }
+
+  private val v5 = V5.encode(1000L, 1700000700L, 0L, 1L, 100,
+    (0 until 5).map(i => V5.Rec(Array[Byte](10, 0, 1, i.toByte),
+      Array[Byte](10, 0, 2, 1), pkts = 1, octets = 500 + i,
+      firstMs = 0, lastMs = 0, srcPort = 1000 + i, dstPort = 443,
+      tcpFlags = 18, proto = 6)))
+
+  /** Send 5-row v5 datagrams, `perRound` to each of `ports` every 50 ms,
+    * until `done` or `seconds` pass.
+    */
+  private def sendUntil(ports: Seq[Int], perRound: Int, seconds: Int)(done: => Boolean): Unit = {
+    val sock = new DatagramSocket()
+    val addr = InetAddress.getByName("127.0.0.1")
+    val deadline = System.nanoTime() + seconds * 1000000000L
+    try while (!done && System.nanoTime() < deadline) {
+      for (port <- ports; _ <- 0 until perRound)
+        sock.send(new DatagramPacket(v5, v5.length, addr, port))
+      Thread.sleep(50)
+    } finally sock.close()
+  }
+
+  private def scrape(port: Int): String = {
+    val conn = new URI(s"http://127.0.0.1:$port/metrics").toURL
+      .openConnection().asInstanceOf[HttpURLConnection]
+    try new String(conn.getInputStream.readAllBytes(), "UTF-8") finally conn.disconnect()
+  }
+
+  test("the commit path forks no process and writes one part file per core per batch") {
+    // without libhadoop, Hadoop's local file system forks chmod per created
+    // file/dir and readlink per checkpoint rename: ~60 processes per batch
+    val tmp = s"${graft.Tmp.root}/collector-forks"
+    val out = s"$tmp/out"; val cp = s"$tmp/cp"
+    FileUtils.deleteQuietly(Paths.get(tmp).toFile)
+    // Shell's class init forks one setsid probe per JVM: pay it first
+    Class.forName("org.apache.hadoop.util.Shell")
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    rec.start()
+    val dump = Files.createTempFile("collector-forks", ".jfr")
+    try {
+      val c = FlowCollector.startUrls(spark, "nfl://:0,nfl://:0",
+        outDir = out, checkpoint = cp, name = "collector-forks",
+        batchMaxTime = "200 milliseconds")
+      def live = c.query.recentProgress.count(_.numInputRows > 0)
+      // 16 datagrams a round fill all 4 partitions of each listener: 8 per
+      // batch, coalesced to one part file per core
+      try sendUntil(c.listeners.map(_.port), perRound = 16, seconds = 15)(live >= 5)
+      finally c.stop(spark)
+      rec.stop()
+      assert(live >= 5, s"only $live batches committed")
+      rec.dump(dump)
+
+      val forks = RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
+          _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))))
+      assert(forks.isEmpty, forks.take(3).map(_.getString("command")).mkString("\n"))
+
+      // on-disk layout is stock Hadoop's; at most one part file per core per
+      // batch (the write job's uuid is in each part file's name)
+      val sink = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSet
+      val parts = sink.filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+      assert(parts.nonEmpty && parts.forall(f => sink.contains(s".$f.crc")), sink)
+      assert(sink.contains("_SUCCESS") && sink.contains("._SUCCESS.crc"), sink)
+      val perBatch = parts.groupBy(_.split('-').slice(2, 7).mkString("-")).values.map(_.size)
+      assert(perBatch.size >= 5 && perBatch.forall(_ <= spark.sparkContext.defaultParallelism),
+        perBatch)
+      Seq("offsets", "commits").foreach { d =>
+        val f = Files.list(Paths.get(cp, d)).iterator().asScala.map(_.getFileName.toString).toSet
+        assert(f.contains("0") && f.contains(".0.crc"), s"$d: $f")
+      }
+    } finally { rec.close(); Files.deleteIfExists(dump) }
+  }
+
+  test("/metrics counts only the collector's query while another stream runs") {
+    val tmp = s"${graft.Tmp.root}/collector-scoped"
+    val out = s"$tmp/out"
+    FileUtils.deleteQuietly(Paths.get(tmp).toFile)
+    val other = spark.readStream.format("flowgen")
+      .option("totalRows", 1000000000L).option("maxRowsPerBatch", 500L).load()
+      .writeStream.format("noop").option("checkpointLocation", s"$tmp/other-cp")
+      .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
+    try {
+      val c = FlowCollector.start(spark, outDir = out, checkpoint = s"$tmp/cp",
+        name = "collector-scoped", batchMaxTime = "200 milliseconds")
+      try {
+        def sunk = try spark.read.parquet(out).count() catch { case _: Exception => 0L }
+        sendUntil(Seq(c.udpPort), perRound = 2, seconds = 30)(sunk >= 50)
+        assert(other.isActive && other.recentProgress.exists(_.numInputRows > 0))
+        // progress is delivered asynchronously: wait until the scrape settles
+        def rows = scrape(c.metricsPort).linesIterator
+          .find(_.startsWith("graft_flows_rows_total ")).get.split(' ')(1).toDouble
+        val deadline = System.nanoTime() + 10_000_000_000L
+        while (rows != sunk && System.nanoTime() < deadline) Thread.sleep(100)
+        assert(sunk >= 50 && rows == sunk, s"scraped $rows rows, sink holds $sunk")
+      } finally c.stop(spark)
+    } finally other.stop()
+  }
+
+  test("stop releases the listener and the metrics port when the query's stop throws") {
+    val listener = new FlowPipeline.MetricsListener(scoped = true)
+    spark.streams.addListener(listener)
+    val server = new MetricsServer(listener)
+    val port = server.boundPort
+    val stuck = java.lang.reflect.Proxy.newProxyInstance(getClass.getClassLoader,
+      Array(classOf[StreamingQuery]), (_: Any, m: java.lang.reflect.Method, _: Array[AnyRef]) =>
+        if (m.getName == "stop") throw new TimeoutException("stop timed out")
+        else throw new UnsupportedOperationException(m.getName))
+      .asInstanceOf[StreamingQuery]
+    intercept[TimeoutException](FlowCollector.Running(stuck, listener, server, 0).stop(spark))
+    assert(!spark.streams.listListeners().contains(listener), "listener leaked")
+    new java.net.ServerSocket(port).close() // the metrics port is free again
   }
 }

@@ -57,6 +57,15 @@ class MetricsServerSpec extends SparkSpec {
       assert(after("graft_flows_batches_total") > before("graft_flows_batches_total"))
       // R4 admission invariant, observable at the scrape surface
       assert(after("graft_flows_max_batch_rows") <= 1000)
+      // batch time per durationMs phase: every phase exported, the ones each
+      // batch runs advanced, and no part outgrows the whole trigger
+      def phase(m: Map[String, Double], p: String) =
+        m(s"""graft_flows_batch_phase_seconds_total{phase="$p"}""")
+      FlowPipeline.MetricsListener.Phases.foreach(p => assert(phase(before, p) >= 0.0, p))
+      Seq("triggerExecution", "addBatch", "walCommit", "commitOffsets").foreach(p =>
+        assert(phase(after, p) > phase(before, p), p))
+      Seq("addBatch", "walCommit", "commitOffsets", "queryPlanning", "latestOffset")
+        .foreach(p => assert(phase(after, p) <= phase(after, "triggerExecution"), p))
     } finally {
       spark.streams.removeListener(listener)
       server.stop()
