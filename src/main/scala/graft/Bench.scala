@@ -276,6 +276,7 @@ object Bench {
         .writeStream.format("noop").option("checkpointLocation", ucp)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
         .start()
+      listener.bind(q.id)
       try {
         var port = 0
         val bindDeadline = System.nanoTime() + 30_000_000_000L
@@ -348,6 +349,7 @@ object Bench {
         .writeStream.format("noop").option("checkpointLocation", lcp)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
         .start()
+      listener.bind(q.id)
       try {
         val bindDeadline = System.nanoTime() + 30_000_000_000L
         var ports = Map.empty[String, Int]

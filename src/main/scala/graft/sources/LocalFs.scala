@@ -16,9 +16,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `getFileLinkStatus` forks `readlink`, twice per FileContext rename. A
   * collector micro-batch creates dozens of files (part files, `.crc`
   * siblings, `_temporary` attempt dirs, offsets and commits entries), so
-  * measured with JFR `jdk.ProcessStart` a 48 s collector run forked 2,460
-  * children, about 60 per batch. [[Raw]] does the same two things through
-  * `java.nio.file`, in-process:
+  * it forks dozens of children per batch (JFR `jdk.ProcessStart` shows
+  * them). [[Raw]] does the same two things through `java.nio.file`,
+  * in-process:
   *
   *   - `setPermission` sets the same rwx bits with
   *     `Files.setPosixFilePermissions`; a non-POSIX default file system or

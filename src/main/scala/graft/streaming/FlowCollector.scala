@@ -23,17 +23,9 @@ import graft.sources.UdpFlowSource
   * JDBC URL in production — `JdbcSink.idempotentAppend` upgrades the
   * reference's at-most-once to effectively-once.
   *
-  * Commit path: each micro-batch writes one part file per core and forks
-  * no child process. Hadoop's local file system, without libhadoop, forks
-  * `chmod` for every file and dir it creates and `readlink` twice per
-  * checkpoint rename, about 60 processes per batch; the sink and the
-  * checkpoint of THIS query use [[graft.sources.LocalFs]], which makes the
-  * same calls in-process, so part files, `.crc`s, `_SUCCESS` and the
-  * offsets/commits files are what stock Hadoop writes. How the install is
-  * kept to this query (a write option, and a session key held only while
-  * the query starts) is on [[FlowPipeline.start]]. `/metrics` counts this
-  * query only, and exports its batch time per phase
-  * (`graft_flows_batch_phase_seconds_total`).
+  * Each micro-batch commits through [[graft.sources.LocalFs]] (see
+  * [[FlowPipeline.start]]). `/metrics` counts this query only, and exports
+  * its batch time per phase (`graft_flows_batch_phase_seconds_total`).
   *
   * Restart semantics for v9/IPFIX templates: the template registry is
   * in-memory per stream (RFC 3954 §5 — templates are receiver state the
@@ -197,7 +189,7 @@ object FlowCollector {
   private def launch(spark: SparkSession, metricsPort: Int, outDir: String,
       checkpoint: String, batchMaxTime: String)(raw: => DataFrame)(
       listeners: StreamingQuery => Seq[Listener]): Running = {
-    val listener = new FlowPipeline.MetricsListener(scoped = true)
+    val listener = new FlowPipeline.MetricsListener
     spark.streams.addListener(listener)
     var server: MetricsServer = null
     var q: StreamingQuery = null

@@ -106,32 +106,22 @@ object FlowPipeline {
     * props)` against ClickHouse — same plan, different writer; no JDBC
     * endpoint exists in this environment).
     *
-    * The commit path is the batch's sink write plus its offsets and commits
-    * entries (the micro-batch protocol's unit of progress), and its fixed
-    * cost is set by how many files a batch creates and how each is made:
+    * Each batch is coalesced to `defaultParallelism`: one part file per
+    * core (a coalesce never splits, so a batch with fewer partitions keeps
+    * them). The sink write and the offsets/commits logs go through
+    * [[graft.sources.LocalFs]], which keeps the on-disk layout of stock
+    * Hadoop and forks no child process.
     *
-    *   - one part file per core: the batch is coalesced to
-    *     `defaultParallelism` (a coalesce never splits, so a batch with
-    *     fewer partitions keeps them). Three listeners × four partitions
-    *     had written 12 part files per batch, each with its `.crc`,
-    *     attempt dirs and rename;
-    *   - no child processes: without libhadoop, Hadoop's local file system
-    *     forks `chmod` per file and dir it creates and `readlink` twice per
-    *     FileContext rename (about 60 forks per collector batch, measured
-    *     with JFR). The sink write and the checkpoint go through
-    *     [[graft.sources.LocalFs]] instead, which makes the same calls
-    *     in-process. Part files, `.crc`s, `_SUCCESS`, the offsets/commits
-    *     files and their permissions are what stock Hadoop writes.
-    *
-    * Scope of the install: the sink write carries `fs.file.impl` as a
-    * write option with the `file:` FileSystem cache off for that write (the
-    * JVM-wide cache is keyed on scheme and user, not on the conf, and
-    * already holds a stock instance). The checkpoint's
-    * `fs.AbstractFileSystem.file.impl` is set on the session only while
-    * `start()` builds the query, which clones the session for its logs,
-    * and the caller's value is restored after. Other streams, reads and
-    * writes of the session keep stock Hadoop; non-`file:` paths never see
-    * either key.
+    * Install scope: `fs.file.impl` (with the `file:` FileSystem cache off,
+    * since the JVM-wide cache is keyed on scheme and user and already holds
+    * a stock instance) and `fs.AbstractFileSystem.file.impl` are set on the
+    * session only while the query starts, under a lock, and the caller's
+    * values are restored after. The query builds its logs and clones the
+    * session for its batches inside that window, so both keep the keys;
+    * the session does not. Starts are serialised by the lock, but another
+    * thread using the session during the window also sees the keys; the
+    * scope therefore holds for sessions whose streams start from one
+    * thread. Non-`file:` paths never read these keys.
     */
   def start(normalized: DataFrame, outDir: String, checkpoint: String,
       batchMaxTime: String = "10 seconds", availableNow: Boolean = false): StreamingQuery = {
@@ -139,22 +129,24 @@ object FlowPipeline {
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(batchMaxTime)
     val spark = normalized.sparkSession
     val cores = spark.sparkContext.defaultParallelism
-    val fcImpl = "fs.AbstractFileSystem.file.impl"
-    val callerFc = spark.conf.getOption(fcImpl)
-    spark.conf.set(fcImpl, classOf[LocalFs.Context].getName)
-    try normalized.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.coalesce(cores).write.mode("append")
-          .option("fs.file.impl", classOf[LocalFs.Checksummed].getName)
-          .option("fs.file.impl.disable.cache", "true")
-          .parquet(outDir)
+    val keys = Seq(
+      "fs.file.impl" -> classOf[LocalFs.Checksummed].getName,
+      "fs.file.impl.disable.cache" -> "true",
+      "fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
+    FlowPipeline.synchronized {
+      val caller = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+      keys.foreach { case (k, v) => spark.conf.set(k, v) }
+      try normalized.writeStream
+        .trigger(trigger)
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.coalesce(cores).write.mode("append").parquet(outDir)
+        }
+        .start()
+      finally caller.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
-      .start()
-    finally callerFc match {
-      case Some(v) => spark.conf.set(fcImpl, v)
-      case None => spark.conf.unset(fcImpl)
     }
   }
 
@@ -163,14 +155,12 @@ object FlowPipeline {
     * (`main.go:177-180`); expose via Spark's PrometheusServlet in a real
     * deployment.
     *
-    * Unscoped (the default) it counts every streaming query of the session.
-    * A `scoped` listener counts only the query passed to [[bind]], so a
-    * collector's `/metrics` never absorbs an unrelated stream's rows. It
-    * must be registered before its query starts and the listener bus is
-    * asynchronous, so progress that reaches it before [[bind]] is held and
-    * replayed for the bound id.
+    * Counts only the query passed to [[bind]], so `/metrics` never absorbs
+    * another stream of the session. The listener is registered before its
+    * query starts and the bus is asynchronous, so progress that arrives
+    * before [[bind]] is held and replayed for the bound id.
     */
-  final class MetricsListener(scoped: Boolean = false) extends StreamingQueryListener {
+  final class MetricsListener extends StreamingQueryListener {
     val rowsIn = new LongAdder
     val batches = new LongAdder
     @volatile var lastRowsPerSecond: Double = 0.0
@@ -211,7 +201,7 @@ object FlowPipeline {
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
       synchronized {
         val p = e.progress
-        if (!scoped || queryId.contains(p.id)) record(p)
+        if (queryId.contains(p.id)) record(p)
         else if (queryId.isEmpty) early += p
       }
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()

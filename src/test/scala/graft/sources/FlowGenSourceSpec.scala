@@ -35,6 +35,7 @@ class FlowGenSourceSpec extends SparkSpec {
         .queryName("flowgen_sink").outputMode("append")
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow()).start()
+      listener.bind(q.id)
       q.awaitTermination()
       val n = spark.table("flowgen_sink").count()
       assert(n == 1000)

@@ -213,7 +213,7 @@ class FlowCollectorSpec extends SparkSpec {
 
   test("the commit path forks no process and writes one part file per core per batch") {
     // without libhadoop, Hadoop's local file system forks chmod per created
-    // file/dir and readlink per checkpoint rename: ~60 processes per batch
+    // file/dir and readlink per checkpoint rename: dozens of processes per batch
     val tmp = s"${graft.Tmp.root}/collector-forks"
     val out = s"$tmp/out"; val cp = s"$tmp/cp"
     FileUtils.deleteQuietly(Paths.get(tmp).toFile)
@@ -234,6 +234,9 @@ class FlowCollectorSpec extends SparkSpec {
       finally c.stop(spark)
       rec.stop()
       assert(live >= 5, s"only $live batches committed")
+      // the install is held by the stream only, not left on the session
+      Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl")
+        .foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
       rec.dump(dump)
 
       val forks = RecordingFile.readAllEvents(dump).asScala
@@ -284,7 +287,7 @@ class FlowCollectorSpec extends SparkSpec {
   }
 
   test("stop releases the listener and the metrics port when the query's stop throws") {
-    val listener = new FlowPipeline.MetricsListener(scoped = true)
+    val listener = new FlowPipeline.MetricsListener
     spark.streams.addListener(listener)
     val server = new MetricsServer(listener)
     val port = server.boundPort

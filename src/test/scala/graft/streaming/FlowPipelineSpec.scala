@@ -64,6 +64,7 @@ class FlowPipelineSpec extends SparkSpec {
       val q = FlowPipeline.start(
         FlowPipeline.normalize(FlowPipeline.fileSource(spark, srcDir)),
         outDir, cp, availableNow = true)
+      listener.bind(q.id)
       q.awaitTermination()
       // listener events are async; wait bounded
       val deadline = System.nanoTime() + 10_000_000_000L

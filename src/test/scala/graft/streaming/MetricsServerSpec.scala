@@ -44,6 +44,7 @@ class MetricsServerSpec extends SparkSpec {
         .writeStream.format("noop")
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow()).start()
+      listener.bind(q.id)
       q.awaitTermination()
 
       // progress events are delivered async; poll the scrape until they land
