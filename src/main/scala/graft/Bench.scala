@@ -239,15 +239,13 @@ object Bench {
     val cp = s"${Tmp.root}/bench-ingest-cp"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(cp))
     val t0 = System.nanoTime()
-    val q = streaming.FlowPipeline.normalize(
+    streaming.Streams.start(streaming.FlowPipeline.normalize(
       spark.readStream.format("flowgen")
         .option("totalRows", ingestRows)
         .option("maxRowsPerBatch", 500000)
-        .option("numPartitions", cpus.toInt).load())
-      .writeStream.format("noop")
-      .option("checkpointLocation", cp)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        .option("numPartitions", cpus.toInt).load()), cp)(
+      _.format("noop").trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+      .awaitTermination()
     val ingestSec = (System.nanoTime() - t0) / 1e9
     val ingest = s"""{"rows":$ingestRows,"sec":$ingestSec,"rows_per_sec":${ingestRows / ingestSec}}"""
 
@@ -272,19 +270,12 @@ object Bench {
         .option("name", "bench-udp").option("port", 0)
         .option("maxPacketsPerBatch", 5000)
         .option("numPartitions", cpus.toInt).load()
-      val q = streaming.FlowPipeline.normalize(raw)
-        .writeStream.format("noop").option("checkpointLocation", ucp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-        .start()
+      val q = streaming.Streams.start(streaming.FlowPipeline.normalize(raw), ucp)(
+        _.format("noop")
+          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds")))
       listener.bind(q.id)
       try {
-        var port = 0
-        val bindDeadline = System.nanoTime() + 30_000_000_000L
-        while (port == 0 && System.nanoTime() < bindDeadline) {
-          port = sources.UdpFlowSource.boundPort("bench-udp").getOrElse(0)
-          if (port == 0) Thread.sleep(10)
-        }
-        require(port > 0, "bench UDP source never bound")
+        val port = sources.UdpFlowSource.awaitBound(q, Seq("bench-udp"))("bench-udp")
         val recs = (0 until 30).map(i => sources.NetFlowV5.Rec(
           Array[Byte](10, 0, 0, i.toByte), Array[Byte](10, 0, 1, 1),
           pkts = 1, octets = 500, firstMs = 0, lastMs = 0,
@@ -345,20 +336,13 @@ object Bench {
           .option("maxPacketsPerBatch", 5000)
           .option("numPartitions", cpus.toInt).load()
       }.reduce(_ unionByName _)
-      val q = streaming.FlowPipeline.normalize(raw)
-        .writeStream.format("noop").option("checkpointLocation", lcp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
-        .start()
+      val q = streaming.Streams.start(streaming.FlowPipeline.normalize(raw), lcp)(
+        _.format("noop")
+          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds")))
       listener.bind(q.id)
       try {
-        val bindDeadline = System.nanoTime() + 30_000_000_000L
-        var ports = Map.empty[String, Int]
-        while (ports.size < schemes.size && System.nanoTime() < bindDeadline) {
-          ports = schemes.flatMap(s =>
-            sources.UdpFlowSource.boundPort(lnames(s)).map(s -> _)).toMap
-          if (ports.size < schemes.size) Thread.sleep(10)
-        }
-        require(ports.size == schemes.size, "per-listener bench sources never bound")
+        val bound = sources.UdpFlowSource.awaitBound(q, schemes.map(lnames))
+        val ports = schemes.map(s => s -> bound(lnames(s))).toMap
 
         // one packet shape per scheme; rows/packet: v5 30, v9 data 20, sFlow 5
         val v5recs = (0 until 30).map(i => sources.NetFlowV5.Rec(

@@ -1135,14 +1135,12 @@ object ScaleBench {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       emb.repartition(36).write.mode("overwrite").parquet(src)
       val cb = sq.pqBuildFrom(sq.quantFrame(spark, dir))._3.localCheckpoint()
-      val q = spark.readStream.schema(emb.schema)
+      val arrivals = spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-        .writeStream
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch(ops.StreamQueries.annMaintainBatchWriter(cb, store, 2) _)
-        .start()
-      q.awaitTermination()
+      streaming.Streams.start(arrivals, cp)(
+        _.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch(ops.StreamQueries.annMaintainBatchWriter(cb, store, 2) _))
+        .awaitTermination()
       val ledger = Option(sq.maintainLedger.get(store))
         .map(l => scala.jdk.CollectionConverters.ListHasAsScala(l).asScala.toSeq)
         .getOrElse(Seq.empty)

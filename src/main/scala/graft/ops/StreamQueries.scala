@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
+import graft.streaming.Streams
 
 /** SURVEY §2.2 Q45–Q53: the Structured Streaming surface, drained with
   * `Trigger.AvailableNow` into a memory sink so each result is a plain
@@ -27,9 +28,6 @@ object StreamQueries {
 
   private val tmpRoot = graft.Tmp.root
 
-  /** events as a µs-timestamp stream (same nanos handling as
-    * [[graft.Tables.events]]).
-    */
   /** Stage a fixture parquet into a monitored directory for a file-stream
     * source (idempotent per scale factor and table) and return
     * (directory to monitor, path to read the schema from). A fixture that
@@ -75,26 +73,21 @@ object StreamQueries {
     (dir, staged)
   }
 
-  private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (dir, schemaPath) = stageFixture(d, "events")
+  /** A fixture table as a file stream over its staged directory. */
+  private def fixtureStream(s: SparkSession, d: String, table: String): DataFrame = {
+    val (dir, schemaPath) = stageFixture(d, table)
     // driver-side footer read only
     val raw = s.read.parquet(schemaPath.toString).schema
-    Tables.normalizeEventsTs(s.readStream.schema(raw).parquet(dir.toString))
+    s.readStream.schema(raw).parquet(dir.toString)
+  }
+
+  /** events as a µs-timestamp stream (same nanos handling as
+    * [[graft.Tables.events]]).
+    */
+  private def eventsStream(s: SparkSession, d: String): DataFrame = {
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.normalizeEventsTs(fixtureStream(s, d, "events"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
-  }
-
-  /** documents as a file stream — the ingest face of the corpus. */
-  private def documentsStream(s: SparkSession, d: String): DataFrame = {
-    val (dir, schemaPath) = stageFixture(d, "documents")
-    val raw = s.read.parquet(schemaPath.toString).schema
-    s.readStream.schema(raw).parquet(dir.toString)
-  }
-
-  private def embeddingsStream(s: SparkSession, d: String): DataFrame = {
-    val (dir, schemaPath) = stageFixture(d, "embeddings")
-    val raw = s.read.parquet(schemaPath.toString).schema
-    s.readStream.schema(raw).parquet(dir.toString)
   }
 
   /** Live-UDP drain harness shared by the q45c/d/e ingest oracles: start
@@ -111,18 +104,12 @@ object StreamQueries {
       .option("name", name).option("port", 0)
       .option("maxPacketsPerBatch", 5).option("numPartitions", 4)
       .option("dedupSequence", true).option("extended", extended).load()
-    val q = graft.streaming.FlowPipeline.normalize(raw)
-      .writeStream.format("memory").queryName(s"${name}_sink")
-      .outputMode("append").option("checkpointLocation", cp).start()
+    val q = Streams.start(graft.streaming.FlowPipeline.normalize(raw), cp)(
+      _.format("memory").queryName(s"${name}_sink").outputMode("append"))
     val sock = new java.net.DatagramSocket()
     try {
+      val port = graft.sources.UdpFlowSource.awaitBound(q, Seq(name))(name)
       val deadline = System.nanoTime() + 90_000_000_000L
-      var port = 0
-      while (port == 0 && System.nanoTime() < deadline) {
-        port = graft.sources.UdpFlowSource.boundPort(name).getOrElse(0)
-        if (port == 0) Thread.sleep(20)
-      }
-      require(port > 0, "UDP source never bound")
       val addr = java.net.InetAddress.getByName("127.0.0.1")
       while (s.table(s"${name}_sink").count() < expectedRows &&
           System.nanoTime() < deadline) {
@@ -134,28 +121,27 @@ object StreamQueries {
     s.table(s"${name}_sink")
   }
 
-  /** Drain a streaming DataFrame to completion and return the result.
-    *
-    * Stateful operators allocate one state store PER shuffle partition PER
-    * stateful sub-operator (a stream-stream join holds four per partition),
-    * and every micro-batch commits every store to the checkpoint — so the
-    * partition count is a sizing knob for state, not just for shuffle
-    * width. It is pinned at first run by the checkpoint, which is exactly
-    * how production sizes it: choose the state parallelism for the
-    * workload's key cardinality (here: user_id/event_type scale keys —
-    * 8 covers the fixture; a 1000-executor deployment would set it to the
-    * cluster's core count when creating the checkpoint). The session-wide
-    * setting is restored before returning.
+  /** The state parallelism of every drain. Stateful operators allocate
+    * one state store PER shuffle partition PER stateful sub-operator (a
+    * stream-stream join holds four per partition), and every micro-batch
+    * commits every store to the checkpoint — so the partition count is a
+    * sizing knob for state, not just for shuffle width. It is pinned at
+    * first run by the checkpoint, which is exactly how production sizes
+    * it: choose the state parallelism for the workload's key cardinality
+    * (here: user_id/event_type scale keys — 8 covers the fixture; a
+    * 1000-executor deployment would set it to the cluster's core count
+    * when creating the checkpoint).
+    */
+  private val StatePartitions = "spark.sql.shuffle.partitions" -> "8"
+
+  /** Drain a streaming DataFrame to completion into a memory sink and
+    * return the result. `stateStore` selects the state store provider
+    * ([[Streams.RocksDbState]]); empty keeps the session's.
     */
   private def drain(df: DataFrame, name: String, mode: String,
-      statePartitions: Int = 8, noDataBatch: Boolean = true): DataFrame = {
-    val spark = df.sparkSession
+      stateStore: Seq[(String, String)] = Nil, noDataBatch: Boolean = true): DataFrame = {
     val cp = s"$tmpRoot/cp/$name"
     org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = spark.conf.get(ndKey)
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
     // noDataBatch = false skips the trailing WATERMARK-ADVANCE micro-batch
     // AvailableNow otherwise schedules after the data is drained (r18,
     // profiled: that empty batch costs 1.3–1.5 s — a full state-store
@@ -166,16 +152,11 @@ object StreamQueries {
     // inner stream-stream joins emit every row during data batches and
     // use the final batch solely to evict state a stopped drain never
     // reads again.
-    spark.conf.set(ndKey, noDataBatch.toString)
-    try {
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      spark.conf.set(ndKey, prevNd)
-    }
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString
+    Streams.start(df, cp, Seq(StatePartitions, noData) ++ stateStore: _*)(
+      _.format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.AvailableNow()))
+      .awaitTermination()
     df.sparkSession.table(name)
   }
 
@@ -195,24 +176,19 @@ object StreamQueries {
     * terminate.
     */
   private def drainUntilQuiescent(df: DataFrame, name: String, mode: String,
-      statePartitions: Int = 8): DataFrame = {
-    val spark = df.sparkSession
+      stateStore: Seq[(String, String)] = Nil): DataFrame = {
     val cp = s"$tmpRoot/cp/$name"
     org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try {
-      // 50 ms: the trigger interval is pure drain latency here — the data
-      // is finite, so every boundary the engine waits out (plus the two
-      // empty batches quiescence needs) is idle wall-clock the bench pays
-      // (VERDICT r16 #6: q52p spent ~2 s of its 3.85 s waiting). The TTL
-      // readback no longer cares about batch wall-clock spacing (emit_seq
-      // is the order key), so a tight trigger cannot flake correctness.
-      val q = df.writeStream.format("memory").queryName(name)
-        .outputMode(mode).option("checkpointLocation", cp)
-        .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-      awaitQuiescence(q, name)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // 50 ms: the trigger interval is pure drain latency here — the data
+    // is finite, so every boundary the engine waits out (plus the two
+    // empty batches quiescence needs) is idle wall-clock the bench pays
+    // (VERDICT r16 #6: q52p spent ~2 s of its 3.85 s waiting). The TTL
+    // readback no longer cares about batch wall-clock spacing (emit_seq
+    // is the order key), so a tight trigger cannot flake correctness.
+    val q = Streams.start(df, cp, StatePartitions +: stateStore: _*)(
+      _.format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.ProcessingTime("50 milliseconds")))
+    awaitQuiescence(q, name)
     df.sparkSession.table(name)
   }
 
@@ -265,73 +241,36 @@ object StreamQueries {
     * TimeMode.ProcessingTime) — one body so the two registrations cannot
     * drift. See the q52d registration scaladoc for the full design.
     */
-  /** Run `body` with the RocksDB state store provider pinned on the
-    * session, restoring the previous setting after — ONE definition for
-    * every stateful registration (r15 review: this was four
-    * hand-maintained copies of session-global config mutation).
-    */
-  private[graft] def withRocksDbStateStore[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    // Changelog checkpointing (r18, guide §1/§5: the q52x/q52p profiles
-    // attributed 1.9–2.1 s PER MICRO-BATCH to state commits — RocksDB's
-    // default commit uploads a full SST snapshot per store per batch;
-    // with the changelog, a commit appends only the batch's changed keys
-    // and snapshots move to background maintenance). This is the
-    // documented production posture for RocksDB state stores at ANY
-    // scale — commit cost tracks change volume, not state size — not a
-    // local-mode trick. Fresh checkpoints every run, so no
-    // compatibility-with-old-checkpoint concern.
-    val clKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prev = s.conf.getOption(key)
-    val prevCl = s.conf.getOption(clKey)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set(clKey, "true")
-    try body finally {
-      prev match {
-        case Some(p) => s.conf.set(key, p)
-        case None => s.conf.unset(key)
-      }
-      prevCl match {
-        case Some(p) => s.conf.set(clKey, p)
-        case None => s.conf.unset(clKey)
-      }
-    }
-  }
-
   private def dedupIngestPlan(s: SparkSession, d: String, sink: String,
       proc: graft.streaming.DedupIngestProcessor,
       timeMode: org.apache.spark.sql.streaming.TimeMode): DataFrame = {
     val spark = s
     import spark.implicits._
-    withRocksDbStateStore(s) {
-      val bucket = pmod(col("doc_id") * 2654435761L, lit(100L))
-      val idx = Tables.documents(s, d).filter(bucket < 80)
-        .select(md5(col("text")).as("dig")).distinct()
-        .withColumn("in_index", lit(true))
-      val typed = documentsStream(s, d)
-        .filter(bucket >= 80)
-        .select(col("doc_id"), md5(col("text")).as("dig"))
-        .join(broadcast(idx), Seq("dig"), "left")
-        .select(col("dig"), col("doc_id"),
-          coalesce(col("in_index"), lit(false)).as("in_index"))
-        .as[(String, Long, Boolean)]
-      val tracked = typed.groupByKey(_._1)
-        .transformWithState(proc, timeMode,
-          org.apache.spark.sql.streaming.OutputMode.Update())
-        .toDF("dig", "n_copies", "first_doc", "dup_of_index")
-      // ProcessingTime (the TTL clock) defeats AvailableNow termination —
-      // see [[drainUntilQuiescent]]
-      val drained =
-        if (timeMode == org.apache.spark.sql.streaming.TimeMode.ProcessingTime())
-          drainUntilQuiescent(tracked, sink, "update")
-        else drain(tracked, sink, "update")
-      drained
-        .groupBy("dig").agg(max(col("n_copies")).as("n_copies"),
-          min(col("first_doc")).as("first_doc"),
-          max(col("dup_of_index")).as("dup_of_index"))
-    }
+    val bucket = pmod(col("doc_id") * 2654435761L, lit(100L))
+    val idx = Tables.documents(s, d).filter(bucket < 80)
+      .select(md5(col("text")).as("dig")).distinct()
+      .withColumn("in_index", lit(true))
+    val typed = fixtureStream(s, d, "documents")
+      .filter(bucket >= 80)
+      .select(col("doc_id"), md5(col("text")).as("dig"))
+      .join(broadcast(idx), Seq("dig"), "left")
+      .select(col("dig"), col("doc_id"),
+        coalesce(col("in_index"), lit(false)).as("in_index"))
+      .as[(String, Long, Boolean)]
+    val tracked = typed.groupByKey(_._1)
+      .transformWithState(proc, timeMode,
+        org.apache.spark.sql.streaming.OutputMode.Update())
+      .toDF("dig", "n_copies", "first_doc", "dup_of_index")
+    // ProcessingTime (the TTL clock) defeats AvailableNow termination —
+    // see [[drainUntilQuiescent]]
+    val drained =
+      if (timeMode == org.apache.spark.sql.streaming.TimeMode.ProcessingTime())
+        drainUntilQuiescent(tracked, sink, "update", Streams.RocksDbState)
+      else drain(tracked, sink, "update", Streams.RocksDbState)
+    drained
+      .groupBy("dig").agg(max(col("n_copies")).as("n_copies"),
+        min(col("first_doc")).as("first_doc"),
+        max(col("dup_of_index")).as("dup_of_index"))
   }
 
   /** Shared by q52d and q52f (a 7-day TTL expires nothing within an
@@ -379,7 +318,10 @@ object StreamQueries {
       try {
         val clean = verdict.filter(!col("contaminated"))
           .select(col("doc_id").as("vec_id"))
-        val vecs = emb.join(broadcast(clean), Seq("vec_id"))
+        // `clean` leads: a join plans in its left side's session, and
+        // this write must plan in the batch's (the stream's clone, with
+        // its LocalFs keys and state parallelism), not in `emb`'s
+        val vecs = broadcast(clean).join(emb, Seq("vec_id"))
         // TOKENIZE stage (r14): per-doc subword count against the frozen
         // vocab, folded within the row — q52z's form by construction
         // (one shared definition, TextQueries.subwordCountCol)
@@ -946,40 +888,36 @@ object StreamQueries {
     // production these are the on-disk artifacts of the x2h story and
     // the pin is their in-memory equivalent
     try graft.ext.Caching.withLocalCheckpointed(eBucketsL, shEvalL) {
-      case Seq(eBuckets, shEval) => withRocksDbStateStore(s) {
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", 8)
-        try {
-          val spark = s
-          import spark.implicits._
-          // TWO data batches at any fixture scale (maxFilesPerTrigger =
-          // half the staged file count): batch ids 0 and 1, so the K = 2
-          // cadence fires maintenance exactly once INSIDE the running
-          // stream — the flagship drives the maintained-store readback
-          // without the per-batch fold cost cadence 1 paid (r14)
-          val (srcDir, schemaPath) = stageFixture(d, "documents")
-          val nFiles = Option(srcDir.toFile.listFiles())
-            .getOrElse(Array.empty[java.io.File])
-            .count(_.getName.endsWith(".parquet"))
-          val docs = s.readStream
-            .schema(s.read.parquet(schemaPath.toString).schema)
-            .option("maxFilesPerTrigger", math.max(1, (nFiles + 1) / 2))
-            .parquet(srcDir.toString)
-          val admitted = graft.ext.TextQueries.withFunnelVerdict(
-              docs.filter(bucket < 80))
-            .filter(col("drop_rule") === "kept")
-            .select(md5(col("text")).as("dig"), col("doc_id"), col("text"))
-            .as[(String, Long, String)]
-            .groupByKey(_._1)
-            .transformWithState(
-              new graft.streaming.AdmitFirstProcessor(
-                TTLConfig(java.time.Duration.ofMillis(7L * 24 * 3600 * 1000))),
-              TimeMode.ProcessingTime(),
-              OutputMode.Update())
-            .toDF("dig", "doc_id", "text")
-          val q = admitted.writeStream
-            .outputMode("update")
-            .option("checkpointLocation", cp)
+      case Seq(eBuckets, shEval) =>
+        val spark = s
+        import spark.implicits._
+        // TWO data batches at any fixture scale (maxFilesPerTrigger =
+        // half the staged file count): batch ids 0 and 1, so the K = 2
+        // cadence fires maintenance exactly once INSIDE the running
+        // stream — the flagship drives the maintained-store readback
+        // without the per-batch fold cost cadence 1 paid (r14)
+        val (srcDir, schemaPath) = stageFixture(d, "documents")
+        val nFiles = Option(srcDir.toFile.listFiles())
+          .getOrElse(Array.empty[java.io.File])
+          .count(_.getName.endsWith(".parquet"))
+        val docs = s.readStream
+          .schema(s.read.parquet(schemaPath.toString).schema)
+          .option("maxFilesPerTrigger", math.max(1, (nFiles + 1) / 2))
+          .parquet(srcDir.toString)
+        val admitted = graft.ext.TextQueries.withFunnelVerdict(
+            docs.filter(bucket < 80))
+          .filter(col("drop_rule") === "kept")
+          .select(md5(col("text")).as("dig"), col("doc_id"), col("text"))
+          .as[(String, Long, String)]
+          .groupByKey(_._1)
+          .transformWithState(
+            new graft.streaming.AdmitFirstProcessor(
+              TTLConfig(java.time.Duration.ofMillis(7L * 24 * 3600 * 1000))),
+            TimeMode.ProcessingTime(),
+            OutputMode.Update())
+          .toDF("dig", "doc_id", "text")
+        val q = Streams.start(admitted, cp, StatePartitions +: Streams.RocksDbState: _*)(
+          _.outputMode("update")
             // 50 ms, like drainUntilQuiescent (VERDICT r16 #6): trigger
             // boundaries + the two-empty-batch quiescence window are pure
             // idle wall-clock on finite input, and the pipeline's
@@ -988,11 +926,8 @@ object StreamQueries {
             // cannot change the answer
             .trigger(Trigger.ProcessingTime("50 milliseconds"))
             .foreachBatch(
-              pipelineBatchWriter(eBuckets, shEval, emb, cb, merges, out) _)
-            .start()
-          awaitQuiescence(q, "q52x")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+              pipelineBatchWriter(eBuckets, shEval, emb, cb, merges, out) _))
+        awaitQuiescence(q, "q52x")
     } finally idxCaches.foreach(_.unpersist())
     val st = graft.ext.SimilarityQueries.readPqStore(s, out)
       .select("dig", "vec_id", "n_subword", "s", "code")
@@ -1165,27 +1100,25 @@ object StreamQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        withRocksDbStateStore(s) {
-          // flows synthesis over the streamed events (same arithmetic as
-          // FlowQueries.flows, restricted to the two columns needed)
-          val eid = col("event_id")
-          val typed = eventsStream(s, d)
-            .select(
-              concat(lit("10."), pmod(col("user_id") * 7919L, lit(200L)).cast(StringType))
-                .as("src"),
-              pmod(eid * 5L, lit(64L)).cast(IntegerType).as("tcp_flags"))
-            .as[(String, Int)]
-          val tracked = typed.groupByKey(_._1)
-            .transformWithState(new graft.streaming.SynTrackerProcessor,
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-            .toDF("src", "syn_only")
-          // update-mode sink = one row per emission; syn_only is a running
-          // count (monotonic), so max per key = last emission (multi-batch
-          // safe, same reasoning as q51)
-          drain(tracked, "q51b_sink", "update")
-            .groupBy("src").agg(max(col("syn_only")).as("syn_only"))
-        }
+        // flows synthesis over the streamed events (same arithmetic as
+        // FlowQueries.flows, restricted to the two columns needed)
+        val eid = col("event_id")
+        val typed = eventsStream(s, d)
+          .select(
+            concat(lit("10."), pmod(col("user_id") * 7919L, lit(200L)).cast(StringType))
+              .as("src"),
+            pmod(eid * 5L, lit(64L)).cast(IntegerType).as("tcp_flags"))
+          .as[(String, Int)]
+        val tracked = typed.groupByKey(_._1)
+          .transformWithState(new graft.streaming.SynTrackerProcessor,
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+          .toDF("src", "syn_only")
+        // update-mode sink = one row per emission; syn_only is a running
+        // count (monotonic), so max per key = last emission (multi-batch
+        // safe, same reasoning as q51)
+        drain(tracked, "q51b_sink", "update", Streams.RocksDbState)
+          .groupBy("src").agg(max(col("syn_only")).as("syn_only"))
       },
       Some("""SELECT '10.' || CAST((user_id * 7919) % 200 AS VARCHAR) AS src,
         CAST(SUM(CASE WHEN ((event_id * 5) % 64 & 2) <> 0 AND ((event_id * 5) % 64 & 16) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS syn_only
@@ -1750,13 +1683,11 @@ object StreamQueries {
         val pur = Tables.events(s, d).filter(col("event_type") === "purchase")
           .select(col("event_id").as("pur_id"), col("user_id").as("pu"),
             col("ts").as("pur_ts"))
-        val q = eventsStream(s, d)
+        val errors = eventsStream(s, d)
           .filter(col("event_type") === "error")
           .select(col("event_id").as("err_id"), col("user_id").as("u"),
             col("ts").as("err_ts"))
-          .writeStream
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
+        Streams.start(errors, cp)(_.trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
             // per-batch OVERWRITE dir (q52g's effectively-once device,
             // r14 review finding): a replayed batch rewrites its own dir
@@ -1765,9 +1696,7 @@ object StreamQueries {
                 "u", "pu", "err_ts", "pur_ts", "pur_id")
               .select(col("err_id"), col("pur_id").as("asof_purchase_id"))
               .write.mode("overwrite").parquet(s"$out/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+          }).awaitTermination()
         // partition discovery surfaces `batch` as a column; project it away
         s.read.parquet(out).select("err_id", "asof_purchase_id")
       },
@@ -1853,20 +1782,16 @@ object StreamQueries {
         val cb = graft.ext.SimilarityQueries
           .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3
           .localCheckpoint() // 128 rows, computed once outside the stream
-        val q = embeddingsStream(s, d)
-          .writeStream
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val qb = batch.select(col("vec_id"),
-              graft.functions.Kernels.float_vec_quant(col("embedding")).as("qe"),
-              col("label"))
-            graft.ext.SimilarityQueries.pqEncode(qb, cb)
-              .select(col("vec_id"), col("s"), col("code"))
-              .write.mode("overwrite").parquet(s"$out/batch=$id")
-          }
-          .start()
-        q.awaitTermination()
+        Streams.start(fixtureStream(s, d, "embeddings"), cp)(
+          _.trigger(Trigger.AvailableNow())
+            .foreachBatch { (batch: DataFrame, id: Long) =>
+              val qb = batch.select(col("vec_id"),
+                graft.functions.Kernels.float_vec_quant(col("embedding")).as("qe"),
+                col("label"))
+              graft.ext.SimilarityQueries.pqEncode(qb, cb)
+                .select(col("vec_id"), col("s"), col("code"))
+                .write.mode("overwrite").parquet(s"$out/batch=$id")
+            }).awaitTermination()
         // partition discovery surfaces `batch` as a column; project it away
         s.read.parquet(out).select("vec_id", "s", "code")
       },
@@ -1912,14 +1837,10 @@ object StreamQueries {
         val cb = graft.ext.SimilarityQueries
           .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3
           .localCheckpoint() // 128 rows, frozen outside the stream
-        val q = s.readStream.schema(emb.schema)
+        val arrivals = s.readStream.schema(emb.schema)
           .option("maxFilesPerTrigger", 1).parquet(src)
-          .writeStream
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch(annMaintainBatchWriter(cb, store, 2) _)
-          .start()
-        q.awaitTermination()
+        Streams.start(arrivals, cp)(_.trigger(Trigger.AvailableNow())
+          .foreachBatch(annMaintainBatchWriter(cb, store, 2) _)).awaitTermination()
         graft.ext.SimilarityQueries.readPqStore(s, store)
           .select("vec_id", "s", "code")
       },
@@ -1939,7 +1860,7 @@ object StreamQueries {
     // single document's attribution under any micro-batch split.
     Q("q52h_stream_quality_ingest",
       (s, d) => drain(
-        graft.ext.TextQueries.filterFunnelVerdict(documentsStream(s, d)),
+        graft.ext.TextQueries.filterFunnelVerdict(fixtureStream(s, d, "documents")),
         "q52h_sink", "append"),
       Some(s"""${graft.ext.TextQueries.FilterFunnelVerdictCte}
         SELECT doc_id, lang, n_tok, drop_rule FROM v""".stripMargin)),
@@ -1974,7 +1895,7 @@ object StreamQueries {
     Q("q52z_stream_tokenize_ingest",
       (s, d) => {
         val merges = graft.ext.TextQueries.loadOrTrainMerges(s, d)
-        drain(documentsStream(s, d)
+        drain(fixtureStream(s, d, "documents")
           .select(col("doc_id"),
             graft.ext.TextQueries.subwordCountCol(merges).as("n_subword"),
             size(filter(split(col("text"), " "), w => length(w) > 0))
@@ -2000,7 +1921,7 @@ object StreamQueries {
     // stream-redact ≡ batch-redact under any micro-batch split.
     Q("q52w_stream_redact_ingest",
       (s, d) => drain(
-        graft.ext.DecontamQueries.piiRedactVerdict(documentsStream(s, d)),
+        graft.ext.DecontamQueries.piiRedactVerdict(fixtureStream(s, d, "documents")),
         "q52w_sink", "append"),
       Some(graft.ext.DecontamQueries.PiiRedactOracle)),
 
@@ -2029,11 +1950,9 @@ object StreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
         graft.ext.Caching.withLocalCheckpointed(hotL) { case Seq(hot) =>
-          val q = documentsStream(s, d)
+          val docs = fixtureStream(s, d, "documents")
             .select(col("doc_id"), split(col("text"), " ").as("tok"))
-            .writeStream
-            .option("checkpointLocation", cp)
-            .trigger(Trigger.AvailableNow())
+          Streams.start(docs, cp)(_.trigger(Trigger.AvailableNow())
             .foreachBatch { (batch: DataFrame, id: Long) =>
               // persist: the scrub consumes the batch twice (window
               // explode + rebuild join) and each action would re-run the
@@ -2048,9 +1967,7 @@ object StreamQueries {
                 graft.ext.DedupQueries.scrubAgainst(b, wins, hot)
                   .write.mode("overwrite").parquet(s"$out/batch=$id")
               } finally b.unpersist()
-            }
-            .start()
-          q.awaitTermination()
+            }).awaitTermination()
         }
         s.read.parquet(out)
           .select("doc_id", "n_tokens", "n_removed", "scrubbed_md5")
@@ -2076,27 +1993,25 @@ object StreamQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        withRocksDbStateStore(s) {
-          val typed = eventsStream(s, d)
-            .select(col("user_id"), unix_micros(col("ts")).as("t"),
-              col("event_id"), col("value"))
-            .as[(Long, Long, Long, Double)]
-          val assembled = typed.groupByKey(_._1)
-            .transformWithState(
-              // the SHARED series length — retuning SeriesQueries.N moves
-              // batch build, oracle, and this state cap together
-              new graft.streaming.SeriesAssemblerProcessor(graft.ext.SeriesQueries.N),
-              org.apache.spark.sql.streaming.TimeMode.None(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-          val sunk = drain(assembled.toDF(), "q52r_sink", "update")
-          val last = sunk.withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("user_id")).orderBy(col("seen").desc)))
-            .where(col("rn") === 1 && col("complete"))
-            .select(col("user_id"), col("vals"))
-          graft.ext.SeriesQueries.seriesKnn(
-            graft.ext.SeriesQueries.zPaaFrame(last))
-        }
+        val typed = eventsStream(s, d)
+          .select(col("user_id"), unix_micros(col("ts")).as("t"),
+            col("event_id"), col("value"))
+          .as[(Long, Long, Long, Double)]
+        val assembled = typed.groupByKey(_._1)
+          .transformWithState(
+            // the SHARED series length — retuning SeriesQueries.N moves
+            // batch build, oracle, and this state cap together
+            new graft.streaming.SeriesAssemblerProcessor(graft.ext.SeriesQueries.N),
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+        val sunk = drain(assembled.toDF(), "q52r_sink", "update", Streams.RocksDbState)
+        val last = sunk.withColumn("rn", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("user_id")).orderBy(col("seen").desc)))
+          .where(col("rn") === 1 && col("complete"))
+          .select(col("user_id"), col("vals"))
+        graft.ext.SeriesQueries.seriesKnn(
+          graft.ext.SeriesQueries.zPaaFrame(last))
       },
       Some(graft.ext.SeriesQueries.KnnOracle)),
 
@@ -2120,34 +2035,33 @@ object StreamQueries {
       (s, d) => {
         val spark = s
         import spark.implicits._
-        withRocksDbStateStore(s) {
-          val typed = eventsStream(s, d)
-            .select(col("user_id"), unix_micros(col("ts")).as("t"),
-              col("event_id"), col("value"))
-            .as[(Long, Long, Long, Double)]
-          val assembled = typed.groupByKey(_._1)
-            .transformWithState(
-              new graft.streaming.RecentSeriesAssemblerProcessor(
-                graft.ext.SeriesQueries.N,
-                org.apache.spark.sql.streaming.TTLConfig(
-                  java.time.Duration.ofDays(7))),
-              org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-              org.apache.spark.sql.streaming.OutputMode.Update())
-          val sunk = drainUntilQuiescent(assembled.toDF(), "q52p_sink", "update")
-          // latest-per-key by the STRICTLY MONOTONE emission counter
-          // (ADVICE r16): after a TTL expiry `seen` restarts smaller, and
-          // the r16 (as_of, seen) order silently depended on distinct
-          // batches never sharing a millisecond; emit_seq is TTL-free
-          // state, so it is unconditionally the last emission
-          val last = sunk.withColumn("rn", row_number().over(
-              org.apache.spark.sql.expressions.Window
-                .partitionBy(col("user_id"))
-                .orderBy(col("emit_seq").desc)))
-            .where(col("rn") === 1 && col("complete"))
-            .select(col("user_id"), col("vals"))
-          graft.ext.SeriesQueries.seriesKnn(
-            graft.ext.SeriesQueries.zPaaFrame(last))
-        }
+        val typed = eventsStream(s, d)
+          .select(col("user_id"), unix_micros(col("ts")).as("t"),
+            col("event_id"), col("value"))
+          .as[(Long, Long, Long, Double)]
+        val assembled = typed.groupByKey(_._1)
+          .transformWithState(
+            new graft.streaming.RecentSeriesAssemblerProcessor(
+              graft.ext.SeriesQueries.N,
+              org.apache.spark.sql.streaming.TTLConfig(
+                java.time.Duration.ofDays(7))),
+            org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
+            org.apache.spark.sql.streaming.OutputMode.Update())
+        val sunk = drainUntilQuiescent(assembled.toDF(), "q52p_sink", "update",
+          Streams.RocksDbState)
+        // latest-per-key by the STRICTLY MONOTONE emission counter
+        // (ADVICE r16): after a TTL expiry `seen` restarts smaller, and
+        // the r16 (as_of, seen) order silently depended on distinct
+        // batches never sharing a millisecond; emit_seq is TTL-free
+        // state, so it is unconditionally the last emission
+        val last = sunk.withColumn("rn", row_number().over(
+            org.apache.spark.sql.expressions.Window
+              .partitionBy(col("user_id"))
+              .orderBy(col("emit_seq").desc)))
+          .where(col("rn") === 1 && col("complete"))
+          .select(col("user_id"), col("vals"))
+        graft.ext.SeriesQueries.seriesKnn(
+          graft.ext.SeriesQueries.zPaaFrame(last))
       },
       Some(graft.ext.SeriesQueries.KnnOracleRecent)),
 
@@ -2179,17 +2093,13 @@ object StreamQueries {
         // training no longer re-runs the reference explodes per LM table)
         graft.ext.TextQueries.withRefLm(Tables.documents(s, d)) {
           pinned =>
-            val q = documentsStream(s, d)
+            val docs = fixtureStream(s, d, "documents")
               .select(col("doc_id"), col("text"))
-              .writeStream
-              .option("checkpointLocation", cp)
-              .trigger(Trigger.AvailableNow())
+            Streams.start(docs, cp)(_.trigger(Trigger.AvailableNow())
               .foreachBatch { (batch: DataFrame, id: Long) =>
                 graft.ext.TextQueries.lmScore(batch, pinned)
                   .write.mode("overwrite").parquet(s"$out/batch=$id")
-              }
-              .start()
-            q.awaitTermination()
+              }).awaitTermination()
             s.read.parquet(out)
               .select("doc_id", "n_bigrams", "bits_e4", "keep")
               .localCheckpoint()
@@ -2223,20 +2133,17 @@ object StreamQueries {
           org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(p).toFile))
         val docs = Tables.documents(s, d)
         docs.repartition(6).write.mode("overwrite").parquet(src)
-        val q = s.readStream.schema(docs.schema)
+        val arrivals = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(src)
-          .writeStream
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
+        Streams.start(arrivals, cp)(_.trigger(Trigger.AvailableNow())
           // recountEvery = 2: the always-on serving cadence (VERDICT r14
           // #4, refolded to mergeable per-batch partials r16) runs
           // INSIDE the registered query — 3 mid-stream hh artifacts over
           // the 6-batch split; the drain-end answer below is unchanged,
           // so the oracle text is untouched
           .foreachBatch(
-            heavyHitterSketchWriter(skDir, rowsDir, hhDir, 2, cumDir))
-          .start()
-        q.awaitTermination()
+            heavyHitterSketchWriter(skDir, rowsDir, hhDir, 2, cumDir)))
+          .awaitTermination()
         val fin = latestSketchGen(s, skDir, below = Long.MaxValue)
           .getOrElse(sys.error(s"no sketch generation at $skDir"))
         val cand = s.read.parquet(fin).select(col("gram"))
@@ -2301,24 +2208,16 @@ object StreamQueries {
           .option("name", "q52u").option("port", 0)
           .option("maxPacketsPerBatch", 5).option("numPartitions", 4)
           .option("dedupSequence", true).load()
-        val q = graft.streaming.FlowPipeline.normalize(raw)
-          .writeStream
-          .option("checkpointLocation", cp)
+        val q = Streams.start(graft.streaming.FlowPipeline.normalize(raw), cp)(
           // recountEvery = 2: the always-on serving cadence (mergeable
           // per-batch partials, r16) runs inside the registered query,
           // q52t's contract on the flows domain; the drain answer below
           // is unchanged
-          .foreachBatch(topTalkerSketchWriter(skDir, out, hhDir, 2, cumDir))
-          .start()
+          _.foreachBatch(topTalkerSketchWriter(skDir, out, hhDir, 2, cumDir)))
         val sock = new java.net.DatagramSocket()
         try {
+          val port = UdpFlowSource.awaitBound(q, Seq("q52u"))("q52u")
           val deadline = System.nanoTime() + 90_000_000_000L
-          var port = 0
-          while (port == 0 && System.nanoTime() < deadline) {
-            port = UdpFlowSource.boundPort("q52u").getOrElse(0)
-            if (port == 0) Thread.sleep(20)
-          }
-          require(port > 0, "UDP source never bound")
           val addr = java.net.InetAddress.getByName("127.0.0.1")
           def landed(): Long =
             scala.util.Try(s.read.parquet(s"$out/batch=*").count()).getOrElse(0L)
@@ -2378,12 +2277,10 @@ object StreamQueries {
         val cp = s"$tmpRoot/cp/q52e_sink"
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-        val q = documentsStream(s, d)
+        val train = fixtureStream(s, d, "documents")
           .filter(bucket < 80)
           .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-          .writeStream
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
+        val q = Streams.start(train, cp)(_.trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, id: Long) =>
             // persist: the decontam plan consumes the batch twice (group
             // + verdict join) and each action would re-run the micro-
@@ -2398,8 +2295,7 @@ object StreamQueries {
               try v.write.mode("overwrite").parquet(s"$out/batch=$id")
               finally caches.foreach(_.unpersist())
             } finally b.unpersist()
-          }
-          .start()
+          })
         try q.awaitTermination()
         finally idxCaches.foreach(_.unpersist())
         s.read.parquet(out).select("doc_id", "contaminated")
@@ -2426,16 +2322,11 @@ object StreamQueries {
         val cp = s"$tmpRoot/cp/q53_sink"
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-        val q = eventsStream(s, d)
-          .select("event_id", "user_id", "event_type")
-          .writeStream
-          .option("checkpointLocation", cp)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .start()
-        q.awaitTermination()
+        Streams.start(eventsStream(s, d).select("event_id", "user_id", "event_type"), cp)(
+          _.trigger(Trigger.AvailableNow())
+            .foreachBatch { (batch: DataFrame, _: Long) =>
+              batch.write.mode("append").parquet(out)
+            }).awaitTermination()
         s.read.parquet(out)
       },
       Some("SELECT event_id, user_id, event_type FROM events"))

@@ -119,12 +119,9 @@ object JdbcSink {
       availableNow: Boolean = false): StreamingQuery = {
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(batchMaxTime)
-    normalized.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
+    graft.streaming.Streams.start(normalized, checkpoint)(_.trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         writeBatch(batch, url, table)
-      }
-      .start()
+      })
   }
 }

@@ -32,6 +32,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * (LocalFsSpec compares both under umasks 022 and 077). [[Checksummed]]
   * is the `FileSystem` (`fs.file.impl`), [[Context]] the
   * `AbstractFileSystem` behind FileContext (`fs.AbstractFileSystem.file.impl`).
+  * Every stream installs both for its own session when it starts, see
+  * [[graft.streaming.Streams.start]].
   */
 object LocalFs {
 

@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -101,6 +102,25 @@ object UdpFlowSource {
   def boundPort(name: String): Option[Int] = Option(bound.get(name)).filter(_ > 0)
   private[sources] def register(name: String, port: Int): Unit = bound.put(name, port)
   private[sources] def unregister(name: String): Unit = bound.remove(name)
+
+  /** Wait until every named source of `q` reports a bound port; a query
+    * that dies during startup surfaces ITS error at once instead of a
+    * misleading bind timeout after 30 s.
+    */
+  def awaitBound(q: StreamingQuery, names: Seq[String]): Map[String, Int] = {
+    val deadline = System.nanoTime() + 30_000_000_000L
+    var ports = Map.empty[String, Int]
+    while (ports.size < names.size && System.nanoTime() < deadline) {
+      if (!q.isActive) throw q.exception
+        .map(e => new IllegalStateException("query failed during startup", e))
+        .getOrElse(new IllegalStateException("query stopped during startup"))
+      ports = names.flatMap(n => boundPort(n).map(n -> _)).toMap
+      if (ports.size < names.size) Thread.sleep(20)
+    }
+    require(ports.size == names.size,
+      s"UDP listeners failed to bind: ${names.filterNot(ports.contains).mkString(",")}")
+    ports
+  }
 
   /** Malformed-datagram counter (decoder error path, kept process-wide like
     * the reference's Prometheus error counter).

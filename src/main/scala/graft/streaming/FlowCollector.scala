@@ -24,7 +24,7 @@ import graft.sources.UdpFlowSource
   * reference's at-most-once to effectively-once.
   *
   * Each micro-batch commits through [[graft.sources.LocalFs]] (see
-  * [[FlowPipeline.start]]). `/metrics` counts this query only, and exports
+  * [[Streams.start]]). `/metrics` counts this query only, and exports
   * its batch time per phase (`graft_flows_batch_phase_seconds_total`).
   *
   * Restart semantics for v9/IPFIX templates: the template registry is
@@ -94,28 +94,6 @@ object FlowCollector {
     }
   }
 
-  /** Wait until every named UDP source of `q` reports a bound port; a
-    * query that dies during startup surfaces ITS error immediately
-    * instead of a misleading bind-timeout after 30 s.
-    */
-  private def awaitBound(q: StreamingQuery, names: Seq[String]): Map[String, Int] = {
-    val deadline = System.nanoTime() + 30_000_000_000L
-    var ports = Map.empty[String, Int]
-    while (ports.size < names.size && System.nanoTime() < deadline) {
-      if (!q.isActive) throw q.exception
-        .map(e => new IllegalStateException(
-          "collector query failed during startup", e))
-        .getOrElse(new IllegalStateException(
-          "collector query stopped during startup"))
-      ports = names.flatMap(n =>
-        UdpFlowSource.boundPort(n).map(n -> _)).toMap
-      if (ports.size < names.size) Thread.sleep(20)
-    }
-    require(ports.size == names.size,
-      s"UDP listeners failed to bind: ${names.filterNot(ports.contains).mkString(",")}")
-    ports
-  }
-
   /** Reference CLI parity (`-listen sflow://:6343,netflow://:2055`,
     * `main.go:31,207-256`): one socket PER comma-separated URL, each
     * restricted to its scheme (wrong-version datagrams count as that
@@ -156,7 +134,7 @@ object FlowCollector {
           .load()
       }.reduce(_ unionByName _)
     } { q =>
-      val ports = awaitBound(q, named.map(_._2))
+      val ports = UdpFlowSource.awaitBound(q, named.map(_._2))
       named.map { case (u, n) => Listener(n, u.scheme, u.host, ports(n)) }
     }
   }
@@ -176,7 +154,7 @@ object FlowCollector {
         .option("persistTemplates", persistTemplates)
         .load()
     } { q =>
-      Seq(Listener(name, "any", "127.0.0.1", awaitBound(q, Seq(name))(name)))
+      Seq(Listener(name, "any", "127.0.0.1", UdpFlowSource.awaitBound(q, Seq(name))(name)))
     }
   }
 

@@ -11,7 +11,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, S
 
 import graft.FlowSchema
 import graft.functions.IpFunctions
-import graft.sources.LocalFs
 
 /** The reference's ingest pipeline (SURVEY §2.1 R1–R6), Spark-native.
   *
@@ -108,46 +107,20 @@ object FlowPipeline {
     *
     * Each batch is coalesced to `defaultParallelism`: one part file per
     * core (a coalesce never splits, so a batch with fewer partitions keeps
-    * them). The sink write and the offsets/commits logs go through
-    * [[graft.sources.LocalFs]], which keeps the on-disk layout of stock
-    * Hadoop and forks no child process.
-    *
-    * Install scope: `fs.file.impl` (with the `file:` FileSystem cache off,
-    * since the JVM-wide cache is keyed on scheme and user and already holds
-    * a stock instance) and `fs.AbstractFileSystem.file.impl` are set on the
-    * session only while the query starts, under a lock, and the caller's
-    * values are restored after. The query builds its logs and clones the
-    * session for its batches inside that window, so both keep the keys;
-    * the session does not. Starts are serialised by the lock, but another
-    * thread using the session during the window also sees the keys; the
-    * scope therefore holds for sessions whose streams start from one
-    * thread. Non-`file:` paths never read these keys.
+    * them). The query starts through [[Streams.start]], so the sink write
+    * and the offsets/commits logs go through [[graft.sources.LocalFs]],
+    * which keeps the on-disk layout of stock Hadoop and forks no child
+    * process.
     */
   def start(normalized: DataFrame, outDir: String, checkpoint: String,
       batchMaxTime: String = "10 seconds", availableNow: Boolean = false): StreamingQuery = {
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(batchMaxTime)
-    val spark = normalized.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val keys = Seq(
-      "fs.file.impl" -> classOf[LocalFs.Checksummed].getName,
-      "fs.file.impl.disable.cache" -> "true",
-      "fs.AbstractFileSystem.file.impl" -> classOf[LocalFs.Context].getName)
-    FlowPipeline.synchronized {
-      val caller = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-      keys.foreach { case (k, v) => spark.conf.set(k, v) }
-      try normalized.writeStream
-        .trigger(trigger)
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.coalesce(cores).write.mode("append").parquet(outDir)
-        }
-        .start()
-      finally caller.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
+    val cores = normalized.sparkSession.sparkContext.defaultParallelism
+    Streams.start(normalized, checkpoint)(_.trigger(trigger)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        batch.coalesce(cores).write.mode("append").parquet(outDir)
+      })
   }
 
   /** R6: rows/batches counters over StreamingQueryProgress — the Spark

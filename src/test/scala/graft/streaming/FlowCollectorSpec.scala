@@ -6,8 +6,6 @@ import java.util.concurrent.TimeoutException
 
 import scala.jdk.CollectionConverters._
 
-import jdk.jfr.Recording
-import jdk.jfr.consumer.RecordingFile
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -217,13 +215,7 @@ class FlowCollectorSpec extends SparkSpec {
     val tmp = s"${graft.Tmp.root}/collector-forks"
     val out = s"$tmp/out"; val cp = s"$tmp/cp"
     FileUtils.deleteQuietly(Paths.get(tmp).toFile)
-    // Shell's class init forks one setsid probe per JVM: pay it first
-    Class.forName("org.apache.hadoop.util.Shell")
-    val rec = new Recording()
-    rec.enable("jdk.ProcessStart").withStackTrace()
-    rec.start()
-    val dump = Files.createTempFile("collector-forks", ".jfr")
-    try {
+    val (live, forks) = HadoopForks.during {
       val c = FlowCollector.startUrls(spark, "nfl://:0,nfl://:0",
         outDir = out, checkpoint = cp, name = "collector-forks",
         batchMaxTime = "200 milliseconds")
@@ -232,33 +224,27 @@ class FlowCollectorSpec extends SparkSpec {
       // batch, coalesced to one part file per core
       try sendUntil(c.listeners.map(_.port), perRound = 16, seconds = 15)(live >= 5)
       finally c.stop(spark)
-      rec.stop()
-      assert(live >= 5, s"only $live batches committed")
-      // the install is held by the stream only, not left on the session
-      Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl")
-        .foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
-      rec.dump(dump)
+      live
+    }
+    assert(live >= 5, s"only $live batches committed")
+    // the install is held by the stream only, not left on the session
+    Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.AbstractFileSystem.file.impl")
+      .foreach(k => assert(spark.conf.getOption(k).isEmpty, k))
+    assert(forks.isEmpty, forks.take(3).mkString("\n"))
 
-      val forks = RecordingFile.readAllEvents(dump).asScala
-        .filter(_.getEventType.getName == "jdk.ProcessStart")
-        .filter(e => Option(e.getStackTrace).exists(_.getFrames.asScala.exists(
-          _.getMethod.getType.getName.startsWith("org.apache.hadoop.util.Shell"))))
-      assert(forks.isEmpty, forks.take(3).map(_.getString("command")).mkString("\n"))
-
-      // on-disk layout is stock Hadoop's; at most one part file per core per
-      // batch (the write job's uuid is in each part file's name)
-      val sink = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSet
-      val parts = sink.filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
-      assert(parts.nonEmpty && parts.forall(f => sink.contains(s".$f.crc")), sink)
-      assert(sink.contains("_SUCCESS") && sink.contains("._SUCCESS.crc"), sink)
-      val perBatch = parts.groupBy(_.split('-').slice(2, 7).mkString("-")).values.map(_.size)
-      assert(perBatch.size >= 5 && perBatch.forall(_ <= spark.sparkContext.defaultParallelism),
-        perBatch)
-      Seq("offsets", "commits").foreach { d =>
-        val f = Files.list(Paths.get(cp, d)).iterator().asScala.map(_.getFileName.toString).toSet
-        assert(f.contains("0") && f.contains(".0.crc"), s"$d: $f")
-      }
-    } finally { rec.close(); Files.deleteIfExists(dump) }
+    // on-disk layout is stock Hadoop's; at most one part file per core per
+    // batch (the write job's uuid is in each part file's name)
+    val sink = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString).toSet
+    val parts = sink.filter(f => f.startsWith("part-") && f.endsWith(".parquet"))
+    assert(parts.nonEmpty && parts.forall(f => sink.contains(s".$f.crc")), sink)
+    assert(sink.contains("_SUCCESS") && sink.contains("._SUCCESS.crc"), sink)
+    val perBatch = parts.groupBy(_.split('-').slice(2, 7).mkString("-")).values.map(_.size)
+    assert(perBatch.size >= 5 && perBatch.forall(_ <= spark.sparkContext.defaultParallelism),
+      perBatch)
+    Seq("offsets", "commits").foreach { d =>
+      val f = Files.list(Paths.get(cp, d)).iterator().asScala.map(_.getFileName.toString).toSet
+      assert(f.contains("0") && f.contains(".0.crc"), s"$d: $f")
+    }
   }
 
   test("/metrics counts only the collector's query while another stream runs") {

@@ -21,10 +21,6 @@ class RecentSeriesSpec extends SparkSpec {
 
   test("recent assembler evicts oldest-first under controlled batches") {
     import spark.implicits._
-    // transformWithState needs the RocksDB provider (multi-column-family
-    // state) — the one shared set/restore guard (r16 review: this spec
-    // previously duplicated it inline)
-    graft.ops.StreamQueries.withRocksDbStateStore(spark) {
     val n = 4
     val base = s"${graft.Tmp.root}/recent-series"
     FileUtils.deleteQuietly(new java.io.File(base))
@@ -53,9 +49,11 @@ class RecentSeriesSpec extends SparkSpec {
         new RecentSeriesAssemblerProcessor(n, TTLConfig.NONE),
         TimeMode.None(), OutputMode.Update())
     val cp = s"$base/cp"
-    val q = assembled.toDF().writeStream.format("memory")
-      .queryName("recent_series_sink").outputMode("update")
-      .option("checkpointLocation", cp).trigger(Trigger.AvailableNow()).start()
+    // transformWithState needs the RocksDB provider (multi-column-family
+    // state), selected for this stream only
+    val q = Streams.start(assembled.toDF(), cp, Streams.RocksDbState: _*)(
+      _.format("memory").queryName("recent_series_sink").outputMode("update")
+        .trigger(Trigger.AvailableNow()))
     q.awaitTermination()
     val emits = spark.table("recent_series_sink")
       .orderBy(col("seen"))
@@ -68,6 +66,5 @@ class RecentSeriesSpec extends SparkSpec {
     assert(emits(1) == ((10L, Seq(12.0, 13.0, 14.0, 15.0))))
     // batch 2: two newer points displace the two oldest kept
     assert(emits(2) == ((12L, Seq(14.0, 15.0, 16.0, 17.0))))
-    }
   }
 }

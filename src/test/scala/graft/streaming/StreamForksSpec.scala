@@ -1,0 +1,26 @@
+package graft.streaming
+
+import graft.{Registry, SparkSpec}
+
+/** Every stream starts through [[Streams.start]], so its checkpoint,
+  * state store and sink commit through [[graft.sources.LocalFs]] like the
+  * collector's (FlowCollectorSpec), and the caller's session keeps none of
+  * the install.
+  */
+class StreamForksSpec extends SparkSpec {
+
+  test("a state-store drain and a cadence stream commit without forking") {
+    val queries = Seq("q52d_stream_dedup_ingest", "q52t_stream_heavy_hitters")
+    val (rows, forks) = HadoopForks.during {
+      queries.map(q => Registry.queries(q)(spark, sf).count())
+    }
+    assert(rows.forall(_ > 0), queries.zip(rows))
+    // q52t stages its six arrival files with a batch write before its
+    // stream starts; writes outside a stream keep stock Hadoop
+    val staged = s"${graft.Tmp.sessionDir(spark, "q52t")}/src"
+    val streamForks = forks.filterNot(_.contains(staged))
+    assert(streamForks.isEmpty,
+      s"${streamForks.size} forks, e.g.\n${streamForks.take(3).mkString("\n")}")
+    Streams.LocalFsKeys.foreach { case (k, _) => assert(spark.conf.getOption(k).isEmpty, k) }
+  }
+}
