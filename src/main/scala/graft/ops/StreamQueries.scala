@@ -1833,7 +1833,7 @@ object StreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(store).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
         val emb = Tables.embeddings(s, d)
-        emb.repartition(6).write.mode("overwrite").parquet(src)
+        emb.repartition(6).write.options(Streams.LocalFsKeys.toMap).mode("overwrite").parquet(src)
         val cb = graft.ext.SimilarityQueries
           .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3
           .localCheckpoint() // 128 rows, frozen outside the stream
@@ -2132,7 +2132,7 @@ object StreamQueries {
         Seq(cp, skDir, rowsDir, hhDir, cumDir).foreach(p =>
           org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(p).toFile))
         val docs = Tables.documents(s, d)
-        docs.repartition(6).write.mode("overwrite").parquet(src)
+        docs.repartition(6).write.options(Streams.LocalFsKeys.toMap).mode("overwrite").parquet(src)
         val arrivals = s.readStream.schema(docs.schema)
           .option("maxFilesPerTrigger", 1).parquet(src)
         Streams.start(arrivals, cp)(_.trigger(Trigger.AvailableNow())

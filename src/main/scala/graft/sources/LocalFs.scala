@@ -15,7 +15,7 @@ import org.apache.hadoop.fs.permission.FsPermission
   * `chmod` for every file and directory it creates (`setPermission`), and
   * `getFileLinkStatus` forks `readlink`, twice per FileContext rename. A
   * collector micro-batch creates dozens of files (part files, `.crc`
-  * siblings, `_temporary` attempt dirs, offsets and commits entries), so
+  * siblings, staging dirs, offsets and commits entries), so
   * it forks dozens of children per batch (JFR `jdk.ProcessStart` shows
   * them). [[Raw]] does the same two things through `java.nio.file`,
   * in-process:

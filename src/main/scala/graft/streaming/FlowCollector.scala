@@ -18,10 +18,11 @@ import graft.sources.UdpFlowSource
   * // ... c.stop(spark)
   * }}}
   *
-  * The sink writes parquet here; swap the `foreachBatch` body (see
-  * [[FlowPipeline.start]] / [[graft.sources.JdbcSink]]) for the ClickHouse
-  * JDBC URL in production — `JdbcSink.idempotentAppend` upgrades the
-  * reference's at-most-once to effectively-once.
+  * The sink writes parquet here ([[FlowPipeline.start]]: one file per
+  * core per batch, replay-idempotent commits). For ClickHouse, run the
+  * same normalized stream into [[graft.sources.JdbcSink.stream]];
+  * `JdbcSink.idempotentAppend` upgrades the reference's at-most-once to
+  * effectively-once there.
   *
   * Each micro-batch commits through [[graft.sources.LocalFs]] (see
   * [[Streams.start]]). `/metrics` counts this query only, and exports
@@ -104,7 +105,7 @@ object FlowCollector {
     * Port 0 = ephemeral; the actual binds come back in
     * [[Running.listeners]].
     *
-    * `persistTemplates` (opt-in, r10): persist each listener's v9/IPFIX
+    * `persistTemplates` (opt-in): persist each listener's v9/IPFIX
     * template + sampling-rate registry beside the query checkpoint (via
     * the checkpoint's Hadoop FileSystem), so a RESTARTED collector decodes
     * data records arriving before the exporter's next periodic template

@@ -11,6 +11,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, S
 
 import graft.FlowSchema
 import graft.functions.IpFunctions
+import graft.sources.ParquetSink
 
 /** The reference's ingest pipeline (SURVEY §2.1 R1–R6), Spark-native.
   *
@@ -29,12 +30,18 @@ import graft.functions.IpFunctions
   *     `maxOffsetsPerTrigger`). Spark has no count-OR-time trigger; the
   *     time-trigger + admission-cap pair is the idiomatic equivalent and
   *     strictly bounds both batch size and latency;
-  *   - R5 sink: `foreachBatch` → `df.write.jdbc` (ClickHouse) or parquet,
-  *     one part file per core per batch and no forked child processes on
-  *     the commit path ([[start]]).
-  *     Spark gives at-least-once vs the reference's at-most-once (errors
-  *     logged + batch dropped, `main.go:158-172`); exact parity downstream
-  *     is restored by the natural idempotency key
+  *   - R5 sink: [[graft.sources.ParquetSink]], a streaming parquet writer
+  *     with one part file per core per batch and no forked child processes
+  *     on the commit path ([[start]]), or `df.write.jdbc` (ClickHouse,
+  *     [[graft.sources.JdbcSink.stream]]). The parquet sink prepares its
+  *     write once per query and broadcasts the Hadoop conf, so a batch
+  *     does not ship the conf to every task. Its epoch commit renames
+  *     staged files to names the query id and epoch decide, so a batch
+  *     that Spark replays after a crash between the sink commit and the
+  *     commit log replaces its own files: effectively-once on the file
+  *     sink, where the reference is at-most-once (errors logged + batch
+  *     dropped, `main.go:158-172`). The JDBC path is at-least-once;
+  *     `JdbcSink.idempotentAppend` dedups on the natural key
   *     (sequence_num, sampler_address, time_received);
   *   - R6 metrics: [[MetricsListener]] (rows/batches/rates/phase times), the
   *     `StreamingQueryProgress` counterpart of goflow's Prometheus counters.
@@ -100,27 +107,33 @@ object FlowPipeline {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(dir)
 
-  /** R4+R5: run the pipeline into a parquet sink (swap the body of
-    * `foreachBatch` for `batch.write.mode("append").jdbc(url, "flows",
-    * props)` against ClickHouse — same plan, different writer; no JDBC
-    * endpoint exists in this environment).
+  /** R4+R5: run the pipeline into a parquet sink at `outDir`
+    * ([[graft.sources.ParquetSink]]; [[graft.sources.JdbcSink.stream]] is
+    * the same pipeline into ClickHouse over JDBC).
     *
-    * Each batch is coalesced to `defaultParallelism`: one part file per
-    * core (a coalesce never splits, so a batch with fewer partitions keeps
-    * them). The query starts through [[Streams.start]], so the sink write
-    * and the offsets/commits logs go through [[graft.sources.LocalFs]],
-    * which keeps the on-disk layout of stock Hadoop and forks no child
-    * process.
+    * The stream is coalesced to `defaultParallelism`: one part file per
+    * core per batch (a coalesce never splits, so a batch with fewer
+    * partitions keeps them). The write is planned inside each micro-batch,
+    * with no second query per batch, and its Hadoop conf is prepared and
+    * broadcast once per query rather than serialized into every task of
+    * every batch. Commits are replay-idempotent: a replayed epoch
+    * overwrites the files of its first attempt. A reader listing
+    * `outDir` during a commit can see part of that batch, as during a
+    * `FileOutputCommitter` v1 job commit; `spark.sql.files
+    * .maxRecordsPerFile` is not applied. The broadcast is released by
+    * Spark's `ContextCleaner` once the query is no longer referenced.
+    *
+    * The query starts through [[Streams.start]], so the sink and the
+    * offsets/commits logs go through [[graft.sources.LocalFs]], which
+    * keeps the on-disk layout of stock Hadoop and forks no child process.
     */
   def start(normalized: DataFrame, outDir: String, checkpoint: String,
       batchMaxTime: String = "10 seconds", availableNow: Boolean = false): StreamingQuery = {
     val trigger =
       if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(batchMaxTime)
     val cores = normalized.sparkSession.sparkContext.defaultParallelism
-    Streams.start(normalized, checkpoint)(_.trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.coalesce(cores).write.mode("append").parquet(outDir)
-      })
+    Streams.start(normalized.coalesce(cores), checkpoint)(_.trigger(trigger)
+      .format(classOf[ParquetSink].getName).option("path", outDir))
   }
 
   /** R6: rows/batches counters over StreamingQueryProgress — the Spark

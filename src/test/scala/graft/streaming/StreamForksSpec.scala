@@ -15,12 +15,9 @@ class StreamForksSpec extends SparkSpec {
       queries.map(q => Registry.queries(q)(spark, sf).count())
     }
     assert(rows.forall(_ > 0), queries.zip(rows))
-    // q52t stages its six arrival files with a batch write before its
-    // stream starts; writes outside a stream keep stock Hadoop
-    val staged = s"${graft.Tmp.sessionDir(spark, "q52t")}/src"
-    val streamForks = forks.filterNot(_.contains(staged))
-    assert(streamForks.isEmpty,
-      s"${streamForks.size} forks, e.g.\n${streamForks.take(3).mkString("\n")}")
+    // q52t stages its six arrival files with a batch write that passes
+    // the LocalFs keys as writer options: the whole run forks nothing
+    assert(forks.isEmpty, s"${forks.size} forks, e.g.\n${forks.take(3).mkString("\n")}")
     Streams.LocalFsKeys.foreach { case (k, _) => assert(spark.conf.getOption(k).isEmpty, k) }
   }
 }
