@@ -266,16 +266,15 @@ object Bench {
       spark.streams.addListener(listener)
       val ucp = s"${Tmp.root}/bench-udp-cp"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ucp))
-      val raw = spark.readStream.format("nflv5-udp")
-        .option("name", "bench-udp").option("port", 0)
-        .option("maxPacketsPerBatch", 5000)
-        .option("numPartitions", cpus.toInt).load()
+      val raw = streaming.FlowCollector.udpSources(spark,
+        Seq((streaming.FlowCollector.ListenUrl("any", "127.0.0.1", 0), "bench-udp")),
+        maxPacketsPerBatch = 5000, numPartitions = cpus.toInt)
       val q = streaming.Streams.start(streaming.FlowPipeline.normalize(raw), ucp)(
         _.format("noop")
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds")))
       listener.bind(q.id)
       try {
-        val port = sources.UdpFlowSource.awaitBound(q, Seq("bench-udp"))("bench-udp")
+        val port = sources.UdpFlowSource.listeners(q).head.port
         val recs = (0 until 30).map(i => sources.NetFlowV5.Rec(
           Array[Byte](10, 0, 0, i.toByte), Array[Byte](10, 0, 1, 1),
           pkts = 1, octets = 500, firstMs = 0, lastMs = 0,
@@ -329,20 +328,15 @@ object Bench {
       val lcp = s"${Tmp.root}/bench-udpl-cp"
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(lcp))
       val schemes = Seq("sflow", "netflow", "nfl")
-      val lnames = schemes.map(s => s -> s"bench-l-$s").toMap
-      val raw = schemes.map { s =>
-        spark.readStream.format("nflv5-udp")
-          .option("port", 0).option("name", lnames(s)).option("scheme", s)
-          .option("maxPacketsPerBatch", 5000)
-          .option("numPartitions", cpus.toInt).load()
-      }.reduce(_ unionByName _)
+      val raw = streaming.FlowCollector.udpSources(spark,
+        schemes.map(s => (streaming.FlowCollector.ListenUrl(s, "127.0.0.1", 0), s"bench-l-$s")),
+        maxPacketsPerBatch = 5000, numPartitions = cpus.toInt)
       val q = streaming.Streams.start(streaming.FlowPipeline.normalize(raw), lcp)(
         _.format("noop")
           .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds")))
       listener.bind(q.id)
       try {
-        val bound = sources.UdpFlowSource.awaitBound(q, schemes.map(lnames))
-        val ports = schemes.map(s => s -> bound(lnames(s))).toMap
+        val streams = schemes.zip(sources.UdpFlowSource.listeners(q)).toMap
 
         // one packet shape per scheme; rows/packet: v5 30, v9 data 20, sFlow 5
         val v5recs = (0 until 30).map(i => sources.NetFlowV5.Rec(
@@ -382,13 +376,13 @@ object Bench {
         }
         val budgetPackets = 5000L
         def blast(scheme: String): String = {
-          val stats = sources.UdpFlowSource.listenerStats.toMap.apply(lnames(scheme))
+          val stats = streams(scheme).stats
           val (rx0, dr0, tm0) =
             (stats.received.sum(), stats.dropped.sum(), stats.templateMisses.sum())
           val rows0 = listener.rowsIn.sum()
           val sock = new java.net.DatagramSocket()
           val addr = java.net.InetAddress.getByName("127.0.0.1")
-          val port = ports(scheme)
+          val port = streams(scheme).port
           val t0 = System.nanoTime()
           try {
             var p = 0L

@@ -108,7 +108,7 @@ object StreamQueries {
       _.format("memory").queryName(s"${name}_sink").outputMode("append"))
     val sock = new java.net.DatagramSocket()
     try {
-      val port = graft.sources.UdpFlowSource.awaitBound(q, Seq(name))(name)
+      val port = graft.sources.UdpFlowSource.listeners(q).head.port
       val deadline = System.nanoTime() + 90_000_000_000L
       val addr = java.net.InetAddress.getByName("127.0.0.1")
       while (s.table(s"${name}_sink").count() < expectedRows &&
@@ -2216,7 +2216,7 @@ object StreamQueries {
           _.foreachBatch(topTalkerSketchWriter(skDir, out, hhDir, 2, cumDir)))
         val sock = new java.net.DatagramSocket()
         try {
-          val port = UdpFlowSource.awaitBound(q, Seq("q52u"))("q52u")
+          val port = UdpFlowSource.listeners(q).head.port
           val deadline = System.nanoTime() + 90_000_000_000L
           val addr = java.net.InetAddress.getByName("127.0.0.1")
           def landed(): Long =

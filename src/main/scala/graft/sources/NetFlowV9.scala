@@ -61,13 +61,20 @@ object NetFlowV9 {
   /** Templates learned from one datagram: (sourceId/obsDomain, templateId)
     * → layout. Runs on the receiver thread — templates only, cheap.
     */
-  def decodeTemplates(packet: Array[Byte]): Seq[(Long, Template)] = {
+  def decodeTemplates(packet: Array[Byte]): Seq[(Long, Template)] =
+    readTemplates(packet)._1
+
+  /** [[decodeTemplates]] plus the number of malformed template records it
+    * discarded, which the receiver counts as its listener's drops.
+    */
+  def readTemplates(packet: Array[Byte]): (Seq[(Long, Template)], Int) = {
     val bb = ByteBuffer.wrap(packet)
     val version = bb.getShort & 0xffff
-    val out = ArrayBuffer.empty[(Long, Template)]
-    if (version != 9 && version != 10) return out.toSeq
+    if (version != 9 && version != 10) return (Nil, 0)
     val headerLen = if (version == 9) 20 else 16
-    if (packet.length < headerLen) return out.toSeq
+    if (packet.length < headerLen) return (Nil, 0)
+    val out = ArrayBuffer.empty[(Long, Template)]
+    var malformed = 0
     val sourceId =
       if (version == 9) { bb.position(16); bb.getInt & 0xffffffffL }
       else { bb.position(12); bb.getInt & 0xffffffffL }
@@ -78,7 +85,7 @@ object NetFlowV9 {
       bb.position(pos)
       val setId = bb.getShort & 0xffff
       val setLen = bb.getShort & 0xffff
-      if (setLen < 4 || pos + setLen > packet.length) return out.toSeq // malformed tail
+      if (setLen < 4 || pos + setLen > packet.length) return (out.toSeq, malformed) // malformed tail
       val end = pos + setLen
       if (setId == templateSetId) {
         var scanning = true
@@ -113,7 +120,7 @@ object NetFlowV9 {
             if (overrun) {
               // malformed template record: discard it, count it, and stop
               // scanning this set (the cursor is past trustworthy bytes)
-              UdpFlowSource.dropped.increment()
+              malformed += 1
               scanning = false
             } else {
               // IPFIX variable-length fields (len 65535) are legal and
@@ -172,7 +179,7 @@ object NetFlowV9 {
       }
       pos += setLen
     }
-    out.toSeq
+    (out.toSeq, malformed)
   }
 
   /** Sampling-rate announcements carried in options DATA records

@@ -12,6 +12,8 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming._
+import org.apache.spark.sql.execution.datasources.v2.StreamingDataSourceV2ScanRelation
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -66,9 +68,10 @@ import graft.FlowSchema
   * under an already-delivered batchId, which it would silently discard.
   * New packets always enter at offsets after the replayed range.
   *
-  * Options: `port` (0 = ephemeral), `host` (default 127.0.0.1), `name`
-  * (key to look up the actually-bound port via [[UdpFlowSource.boundPort]]
-  * and the label on per-listener /metrics counters), `scheme`
+  * Options: `port` (0 = ephemeral; the bound port is the stream's
+  * [[UdpFlowStream.port]], read from the started query through
+  * [[UdpFlowSource.listeners]]), `host` (default 127.0.0.1), `name` (a
+  * label only: it names the listener's /metrics counters), `scheme`
   * (`any`/`sflow`/`netflow`/`nfl` — restrict this socket to one protocol,
   * the reference's one-decoder-state-per-listen-URL shape; mismatched
   * versions count as drops), `maxPacketsPerBatch` (admission cap, R4),
@@ -78,9 +81,10 @@ import graft.FlowSchema
   * label + TTL — beyond the reference's 23-column parity surface;
   * default false).
   *
-  * Malformed datagrams (wrong version, truncated) are counted in
-  * [[UdpFlowSource.dropped]] and skipped — the reference's decoder error
-  * path (goflow logs + drops, keeping the listener alive).
+  * Malformed datagrams (wrong version, truncated) are counted in the
+  * listener's `dropped` ([[UdpFlowSource.ListenerStats]]) and skipped — the
+  * reference's decoder error path (goflow logs + drops, keeping the
+  * listener alive).
   */
 class UdpFlowSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -95,51 +99,32 @@ class UdpFlowSource extends TableProvider
 }
 
 object UdpFlowSource {
-  /** name → actually-bound UDP port, registered when the stream starts
-    * (ephemeral ports are the only race-free way for a test/driver to bind).
+  /** The UDP listeners of `q`, in plan (union) order, once the query's own
+    * thread has built its sources and so bound their sockets. Throws the
+    * query's error if it died during startup (a taken port, say).
     */
-  private val bound = new ConcurrentHashMap[String, Int]()
-  def boundPort(name: String): Option[Int] = Option(bound.get(name)).filter(_ > 0)
-  private[sources] def register(name: String, port: Int): Unit = bound.put(name, port)
-  private[sources] def unregister(name: String): Unit = bound.remove(name)
-
-  /** Wait until every named source of `q` reports a bound port; a query
-    * that dies during startup surfaces ITS error at once instead of a
-    * misleading bind timeout after 30 s.
-    */
-  def awaitBound(q: StreamingQuery, names: Seq[String]): Map[String, Int] = {
-    val deadline = System.nanoTime() + 30_000_000_000L
-    var ports = Map.empty[String, Int]
-    while (ports.size < names.size && System.nanoTime() < deadline) {
-      if (!q.isActive) throw q.exception
-        .map(e => new IllegalStateException("query failed during startup", e))
-        .getOrElse(new IllegalStateException("query stopped during startup"))
-      ports = names.flatMap(n => boundPort(n).map(n -> _)).toMap
-      if (ports.size < names.size) Thread.sleep(20)
-    }
-    require(ports.size == names.size,
-      s"UDP listeners failed to bind: ${names.filterNot(ports.contains).mkString(",")}")
-    ports
+  def listeners(q: StreamingQuery): Seq[UdpFlowStream] = {
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    exec.awaitInitialization(60000L)
+    // a query stopped before initialization has no sources; reading its
+    // plan would build (and bind) them on this thread
+    if (!q.isActive) throw new IllegalStateException(s"query ${q.id} is not active")
+    exec.logicalPlan.collect {
+      case r: StreamingDataSourceV2ScanRelation => r.stream
+    }.collect { case u: UdpFlowStream => u }
   }
-
-  /** Malformed-datagram counter (decoder error path, kept process-wide like
-    * the reference's Prometheus error counter).
-    */
-  val dropped = new LongAdder
-
-  /** v9/IPFIX data packets refused at admission because their template has
-    * not arrived yet (the exporter's periodic template re-send resolves
-    * this — RFC 3954 §5; goflow errors these the same way).
-    */
-  val templateMisses = new LongAdder
 
   /** Per-listener counters (keyed by the source's `name` option) — the
     * reference runs one goflow FlowRoutine per listen URL and Prometheus
-    * labels its counters per listener; multi-listener collectors
-    * ([[graft.streaming.FlowCollector.startUrls]]) need the same
-    * attribution, which the process-wide adders above can't give.
-    * Registered on stream start and kept after stop (counters are
-    * process-lifetime, like the reference's).
+    * labels its counters per listener. They are the only drop/miss
+    * counters: the process-wide totals below are sums over them. Created
+    * on stream start and kept after stop (counters are process-lifetime,
+    * like the reference's).
+    *
+    * `templateMisses` counts v9/IPFIX data packets refused at admission
+    * because their template has not arrived yet (the exporter's periodic
+    * template re-send resolves this — RFC 3954 §5; goflow errors these the
+    * same way).
     */
   final class ListenerStats {
     val received = new LongAdder
@@ -155,6 +140,10 @@ object UdpFlowSource {
     perListener.entrySet().asScala.map(e => (e.getKey, e.getValue))
       .toSeq.sortBy(_._1)
   }
+  /** Dropped datagrams, summed over listeners. */
+  def dropped: Long = listenerStats.map(_._2.dropped.sum()).sum
+  /** Template misses, summed over listeners. */
+  def templateMisses: Long = listenerStats.map(_._2.templateMisses.sum()).sum
 
   /** Latest generic interface counters per (agent, ifIndex), parsed from
     * sFlow COUNTER samples on the receiver thread (flows rows never carry
@@ -237,7 +226,7 @@ final case class UdpPacketsPartition(packets: Array[(Array[Byte], Array[Byte])],
     samplingRates: Map[String, Map[Long, Long]])
   extends InputPartition
 
-final class UdpFlowStream(host: String, port: Int, name: String,
+final class UdpFlowStream(host: String, bindPort: Int, val name: String,
     maxPacketsPerBatch: Long, numParts: Int, dedupSequence: Boolean,
     maxBufferedPackets: Int = 1000000, scheme: String = "any",
     extended: Boolean = false, templateStatePath: Option[String] = None)
@@ -248,17 +237,13 @@ final class UdpFlowStream(host: String, port: Int, name: String,
       "expected sflow | netflow | nfl | any")
 
   // ---- receiver (driver side) ----
-  private val socket = new DatagramSocket(port, InetAddress.getByName(host))
+  private val socket = new DatagramSocket(bindPort, InetAddress.getByName(host))
   socket.setReceiveBufferSize(8 * 1024 * 1024)
-  UdpFlowSource.register(name, socket.getLocalPort)
-  /** Per-listener attribution of every counter this stream touches. */
-  private val stats = UdpFlowSource.statsFor(name)
-  private def drop(): Unit = {
-    UdpFlowSource.dropped.increment(); stats.dropped.increment()
-  }
-  private def templateMiss(): Unit = {
-    UdpFlowSource.templateMisses.increment(); stats.templateMisses.increment()
-  }
+  /** The bound UDP port (the actual one when `bindPort` is 0). */
+  def port: Int = socket.getLocalPort
+  /** Every counter this stream touches. */
+  val stats: UdpFlowSource.ListenerStats = UdpFlowSource.statsFor(name)
+  private def drop(): Unit = stats.dropped.increment()
 
   /** Buffered (packet, sender) pairs; `base` = offset of buffer head. */
   private val buf = new ArrayBuffer[(Array[Byte], Array[Byte])]()
@@ -300,11 +285,10 @@ final class UdpFlowStream(host: String, port: Int, name: String,
     scala.collection.mutable.Map.empty[String, Map[Long, Long]]
   @volatile private var closed = false
 
-  /** Executor-side decode counters. The static [[UdpFlowSource.dropped]] /
-    * [[UdpFlowSource.templateMisses]] adders live in the DRIVER JVM — an
-    * executor incrementing its own static would be invisible to /metrics
+  /** Executor-side decode counters. [[stats]] lives in the DRIVER JVM —
+    * an executor incrementing its own copy would be invisible to /metrics
     * on a real cluster, so the reader reports through accumulators and
-    * [[commit]] folds the deltas into the driver-side counters.
+    * [[commit]] folds the deltas into [[stats]].
     */
   private val execDropped =
     org.apache.spark.sql.SparkSession.active.sparkContext
@@ -604,7 +588,8 @@ final class UdpFlowStream(host: String, port: Int, name: String,
         Some(key(5, engine, seqAt(16)))
       case 9 | 10 =>
         try {
-          val learned = NetFlowV9.decodeTemplates(bytes)
+          val (learned, malformed) = NetFlowV9.readTemplates(bytes)
+          if (malformed > 0) stats.dropped.add(malformed)
           val (sourceId, dataIds) = NetFlowV9.dataSetIds(bytes)
           synchronized {
             val senderTmpl = {
@@ -633,7 +618,7 @@ final class UdpFlowStream(host: String, port: Int, name: String,
               }
             }
             if (!dataIds.forall(id => senderTmpl.contains((sourceId, id)))) {
-              templateMiss()
+              stats.templateMisses.increment()
               None // refuse: the re-send (post-template) will be admitted
             } else if (dataIds.isEmpty) {
               Some(None) // template-only packet: idempotent, never deduped
@@ -743,8 +728,8 @@ final class UdpFlowStream(host: String, port: Int, name: String,
   /** Trim committed packets: bounds driver memory to in-flight batches.
     * Clamped: a replayed batch committed right after a restart can claim
     * more packets than the fresh buffer holds. Also folds the deltas of
-    * the executor-side decode accumulators into the driver-wide counters
-    * /metrics serves (accumulator values are driver-readable here).
+    * the executor-side decode accumulators into [[stats]], which /metrics
+    * serves (accumulator values are driver-readable here).
     */
   override def commit(end: Offset): Unit = synchronized {
     val e = end.asInstanceOf[UdpOffset].count
@@ -753,13 +738,11 @@ final class UdpFlowStream(host: String, port: Int, name: String,
     if (e > base) base = e
     val d = execDropped.value
     if (d > syncedExecDropped) {
-      UdpFlowSource.dropped.add(d - syncedExecDropped)
       stats.dropped.add(d - syncedExecDropped)
       syncedExecDropped = d
     }
     val m = execMisses.value
     if (m > syncedExecMisses) {
-      UdpFlowSource.templateMisses.add(m - syncedExecMisses)
       stats.templateMisses.add(m - syncedExecMisses)
       syncedExecMisses = m
     }
@@ -773,7 +756,6 @@ final class UdpFlowStream(host: String, port: Int, name: String,
 
   override def stop(): Unit = {
     closed = true
-    UdpFlowSource.unregister(name)
     socket.close()
     // drain pending registry snapshots so a restart (or a test asserting
     // on the file) sees the last enqueued state — but BOUNDED (ADVICE r11):

@@ -40,8 +40,9 @@ import graft.sources.UdpFlowSource
   */
 object FlowCollector {
 
-  /** One bound listener of a running collector: `name` keys the
-    * per-listener /metrics labels and [[UdpFlowSource.boundPort]].
+  /** One bound listener of a running collector: `name` labels its
+    * /metrics counters, `port` is the socket's bound port, read from the
+    * started query ([[UdpFlowSource.listeners]]).
     */
   final case class Listener(name: String, scheme: String, host: String, port: Int)
 
@@ -49,8 +50,8 @@ object FlowCollector {
       query: StreamingQuery,
       listener: FlowPipeline.MetricsListener,
       metrics: MetricsServer,
-      udpPort: Int,
-      listeners: Seq[Listener] = Seq.empty) {
+      listeners: Seq[Listener]) {
+    def udpPort: Int = listeners.head.port
     def metricsPort: Int = metrics.boundPort
     /** Stops the query, then releases the listener and the metrics port
       * even when the stop throws (a stop timeout, say).
@@ -64,7 +65,7 @@ object FlowCollector {
     * url.Parse over each comma-separated element). Empty host binds
     * loopback; scheme must be one of the reference's three.
     */
-  private[streaming] final case class ListenUrl(scheme: String, host: String, port: Int)
+  private[graft] final case class ListenUrl(scheme: String, host: String, port: Int)
   private[streaming] def parseListen(listen: String): Seq[ListenUrl] = {
     require(listen.nonEmpty, "empty listen list")
     listen.split(',').toIndexedSeq.map(_.trim).map { u =>
@@ -119,66 +120,68 @@ object FlowCollector {
       batchMaxTime: String = "10 seconds", maxPacketsPerBatch: Long = 1000L,
       numPartitions: Int = 4, extended: Boolean = false,
       persistTemplates: Boolean = false): Running = {
-    val urls = parseListen(listen)
-    val named = urls.zipWithIndex.map { case (u, i) =>
+    val named = parseListen(listen).zipWithIndex.map { case (u, i) =>
       (u, s"$name-${u.scheme}-$i")
     }
-    launch(spark, metricsPort, outDir, checkpoint, batchMaxTime) {
-      named.map { case (u, n) =>
-        spark.readStream.format("nflv5-udp")
-          .option("host", u.host).option("port", u.port)
-          .option("name", n).option("scheme", u.scheme)
-          .option("maxPacketsPerBatch", maxPacketsPerBatch)
-          .option("numPartitions", numPartitions)
-          .option("extended", extended)
-          .option("persistTemplates", persistTemplates)
-          .load()
-      }.reduce(_ unionByName _)
-    } { q =>
-      val ports = UdpFlowSource.awaitBound(q, named.map(_._2))
-      named.map { case (u, n) => Listener(n, u.scheme, u.host, ports(n)) }
-    }
+    launch(spark, named, outDir, checkpoint, metricsPort, batchMaxTime,
+      maxPacketsPerBatch, numPartitions, extended, persistTemplates)
   }
 
-  /** Start the collector; blocks only until the UDP port is bound. */
+  /** Start the collector on one `any`-scheme listener (every flow protocol
+    * on one port); returns once the UDP port is bound.
+    */
   def start(spark: SparkSession, outDir: String, checkpoint: String,
       udpPort: Int = 0, name: String = "collector", metricsPort: Int = 0,
       batchMaxTime: String = "10 seconds", maxPacketsPerBatch: Long = 1000L,
       numPartitions: Int = 4, extended: Boolean = false,
       persistTemplates: Boolean = false): Running = {
-    launch(spark, metricsPort, outDir, checkpoint, batchMaxTime) {
+    launch(spark, Seq((ListenUrl("any", "127.0.0.1", udpPort), name)), outDir,
+      checkpoint, metricsPort, batchMaxTime, maxPacketsPerBatch, numPartitions,
+      extended, persistTemplates)
+  }
+
+  /** One `nflv5-udp` source per (listen URL, listener name), unioned in
+    * that order: the collector's listener assembly.
+    */
+  private[graft] def udpSources(spark: SparkSession, named: Seq[(ListenUrl, String)],
+      maxPacketsPerBatch: Long, numPartitions: Int, extended: Boolean = false,
+      persistTemplates: Boolean = false): DataFrame =
+    named.map { case (u, n) =>
       spark.readStream.format("nflv5-udp")
-        .option("port", udpPort).option("name", name)
+        .option("host", u.host).option("port", u.port)
+        .option("name", n).option("scheme", u.scheme)
         .option("maxPacketsPerBatch", maxPacketsPerBatch)
         .option("numPartitions", numPartitions)
         .option("extended", extended)
         .option("persistTemplates", persistTemplates)
         .load()
-    } { q =>
-      Seq(Listener(name, "any", "127.0.0.1", UdpFlowSource.awaitBound(q, Seq(name))(name)))
-    }
-  }
+    }.reduce(_ unionByName _)
 
-  /** Metrics listener (scoped to this collector's query) and server, the
-    * query over `raw`, then `listeners` waits until the sockets are bound.
-    * Every failure past a resource acquisition releases what exists: a
-    * bind-wait timeout would otherwise leak the query, the listener and
-    * the metrics HTTP port with no handle left to stop them.
+  /** Metrics listener (scoped to this collector's query) and server, then
+    * the query over `named`'s listeners. Every failure past a resource
+    * acquisition releases what exists: a query that dies binding its
+    * sockets would otherwise leak the query, the listener and the metrics
+    * HTTP port with no handle left to stop them.
     */
-  private def launch(spark: SparkSession, metricsPort: Int, outDir: String,
-      checkpoint: String, batchMaxTime: String)(raw: => DataFrame)(
-      listeners: StreamingQuery => Seq[Listener]): Running = {
+  private def launch(spark: SparkSession, named: Seq[(ListenUrl, String)],
+      outDir: String, checkpoint: String, metricsPort: Int, batchMaxTime: String,
+      maxPacketsPerBatch: Long, numPartitions: Int, extended: Boolean,
+      persistTemplates: Boolean): Running = {
     val listener = new FlowPipeline.MetricsListener
     spark.streams.addListener(listener)
     var server: MetricsServer = null
     var q: StreamingQuery = null
     try {
       server = new MetricsServer(listener, metricsPort)
+      val raw = udpSources(spark, named, maxPacketsPerBatch, numPartitions,
+        extended, persistTemplates)
       q = FlowPipeline.start(FlowPipeline.normalize(raw), outDir, checkpoint,
         batchMaxTime)
       listener.bind(q.id)
-      val bound = listeners(q)
-      Running(q, listener, server, bound.head.port, bound)
+      val bound = named.zip(UdpFlowSource.listeners(q)).map { case ((u, _), s) =>
+        Listener(s.name, u.scheme, u.host, s.port)
+      }
+      Running(q, listener, server, bound)
     } catch {
       case e: Throwable =>
         if (q != null) { try q.stop() catch { case _: Exception => () } }

@@ -22,18 +22,18 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
   private def body: String =
-    s"""# HELP graft_flows_rows_total Rows ingested by the listener's streaming query (every query when unscoped).
+    s"""# HELP graft_flows_rows_total Rows ingested by the collector's streaming query.
        |# TYPE graft_flows_rows_total counter
        |graft_flows_rows_total ${listener.rowsIn.sum()}
        |# HELP graft_flows_batches_total Micro-batches completed.
        |# TYPE graft_flows_batches_total counter
        |graft_flows_batches_total ${listener.batches.sum()}
-       |# HELP graft_decoder_dropped_total Malformed datagrams dropped by the flow decoders.
+       |# HELP graft_decoder_dropped_total Datagrams dropped by the flow decoders, summed over graft_udp_listener_dropped_total.
        |# TYPE graft_decoder_dropped_total counter
-       |graft_decoder_dropped_total ${graft.sources.UdpFlowSource.dropped.sum()}
-       |# HELP graft_decoder_template_misses_total v9/IPFIX data packets refused while their template was unknown.
+       |graft_decoder_dropped_total ${graft.sources.UdpFlowSource.dropped}
+       |# HELP graft_decoder_template_misses_total v9/IPFIX data packets refused while their template was unknown, summed over graft_udp_listener_template_misses_total.
        |# TYPE graft_decoder_template_misses_total counter
-       |graft_decoder_template_misses_total ${graft.sources.UdpFlowSource.templateMisses.sum()}
+       |graft_decoder_template_misses_total ${graft.sources.UdpFlowSource.templateMisses}
        |# HELP graft_cadence_churn_alerts_total Heavy-hitter cadence writers that reported sustained candidate churn (entrants on ${graft.ops.StreamQueries.ChurnAlertFirings} consecutive firings).
        |# TYPE graft_cadence_churn_alerts_total counter
        |graft_cadence_churn_alerts_total ${graft.ops.StreamQueries.cadenceChurnAlerts.sum()}

@@ -36,7 +36,7 @@ class UdpChaosSpec extends SparkSpec {
     @volatile var senderDone = false
     @volatile var senderError: Throwable = null
     try {
-      val port = UdpFlowSource.boundPort("chaos").get
+      val port = stream.port
       val addr = InetAddress.getByName("127.0.0.1")
 
       val sender = new Thread("chaos-sender") {

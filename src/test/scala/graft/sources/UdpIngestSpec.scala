@@ -93,11 +93,7 @@ class UdpIngestSpec extends SparkSpec {
     val sock = new DatagramSocket()
     try {
       val deadline = System.nanoTime() + 60_000_000_000L
-      var port = 0
-      while (port == 0 && System.nanoTime() < deadline) {
-        port = UdpFlowSource.boundPort("udp-spec").getOrElse(0)
-        if (port == 0) Thread.sleep(20)
-      }
+      val port = UdpFlowSource.listeners(q).head.port
       assert(port > 0, "source never bound a UDP port")
       val addr = InetAddress.getByName("127.0.0.1")
       def send(b: Array[Byte]): Unit = sock.send(new DatagramPacket(b, b.length, addr, port))
@@ -111,7 +107,7 @@ class UdpIngestSpec extends SparkSpec {
               srcPort = 1000 + i, dstPort = 53, tcpFlags = 0, proto = 17)
           })
       }
-      val droppedBefore = UdpFlowSource.dropped.sum()
+      val droppedBefore = UdpFlowSource.dropped
       send("not netflow at all".getBytes) // garbage: dropped, query survives
       val expected = 4 * 3
       while (spark.table("udp_spec_sink").count() < expected &&
@@ -127,7 +123,7 @@ class UdpIngestSpec extends SparkSpec {
       assert(got.filter(col("sampler_address") === "127.0.0.1").count() == expected)
       assert(got.agg(countDistinct("sequence_num")).head().getLong(0) == 4)
       assert(got.agg(sum("packets")).head().getLong(0) == (1 to 12).sum)
-      assert(UdpFlowSource.dropped.sum() > droppedBefore)
+      assert(UdpFlowSource.dropped > droppedBefore)
     } finally { sock.close(); q.stop() }
   }
 
@@ -156,11 +152,7 @@ class UdpIngestSpec extends SparkSpec {
       val sock = new DatagramSocket()
       try {
         val deadline = System.nanoTime() + 60_000_000_000L
-        var port = 0
-        while (port == 0 && System.nanoTime() < deadline) {
-          port = UdpFlowSource.boundPort(name).getOrElse(0)
-          if (port == 0) Thread.sleep(20)
-        }
+        val port = UdpFlowSource.listeners(q).head.port
         assert(port > 0)
         val addr = InetAddress.getByName("127.0.0.1")
         def sunk(): Long =
@@ -195,7 +187,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = true, maxBufferedPackets = 1)
     val sock = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("adm-buf").get
+      val port = stream.port
       val addr = InetAddress.getByName("127.0.0.1")
       def pkt(seq: Long): Array[Byte] =
         V5.encode(1000L, 1700000900L, 0L, seq, 100,
@@ -212,11 +204,11 @@ class UdpIngestSpec extends SparkSpec {
       }
 
       send(pkt(1)); awaitBuffered(1) // fills the 1-packet buffer
-      val droppedBefore = UdpFlowSource.dropped.sum()
+      val droppedBefore = UdpFlowSource.dropped
       send(pkt(2)) // buffer full: dropped — and its sequence must stay unclaimed
-      while (UdpFlowSource.dropped.sum() == droppedBefore &&
+      while (UdpFlowSource.dropped == droppedBefore &&
           System.nanoTime() < deadline) Thread.sleep(10)
-      assert(UdpFlowSource.dropped.sum() > droppedBefore)
+      assert(UdpFlowSource.dropped > droppedBefore)
       assert(buffered() == 1)
 
       stream.commit(UdpOffset(1L)) // engine consumed packet 1: buffer drains
@@ -233,7 +225,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = true, maxBufferedPackets = 100)
     val sock = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("adm-sid").get
+      val port = stream.port
       val addr = InetAddress.getByName("127.0.0.1")
       def send(b: Array[Byte]): Unit =
         sock.send(new DatagramPacket(b, b.length, addr, port))
@@ -290,7 +282,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = false, maxBufferedPackets = 100)
     val sock = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("adm-cnt").get
+      val port = stream.port
       val addr = InetAddress.getByName("127.0.0.1")
       def send(b: Array[Byte]): Unit =
         sock.send(new DatagramPacket(b, b.length, addr, port))
@@ -328,11 +320,7 @@ class UdpIngestSpec extends SparkSpec {
     val sock = new DatagramSocket()
     try {
       val deadline = System.nanoTime() + 60_000_000_000L
-      var port = 0
-      while (port == 0 && System.nanoTime() < deadline) {
-        port = UdpFlowSource.boundPort("udp-spec9").getOrElse(0)
-        if (port == 0) Thread.sleep(20)
-      }
+      val port = UdpFlowSource.listeners(q).head.port
       assert(port > 0)
       val addr = InetAddress.getByName("127.0.0.1")
       def send(b: Array[Byte]): Unit = sock.send(new DatagramPacket(b, b.length, addr, port))
@@ -381,12 +369,12 @@ class UdpIngestSpec extends SparkSpec {
       send(shortSample)
 
       // data BEFORE template: refused at admission, counted, recoverable
-      val missesBefore = UdpFlowSource.templateMisses.sum()
+      val missesBefore = UdpFlowSource.templateMisses
       send(v9Data)
       val missDeadline = System.nanoTime() + 30_000_000_000L
-      while (UdpFlowSource.templateMisses.sum() == missesBefore &&
+      while (UdpFlowSource.templateMisses == missesBefore &&
           System.nanoTime() < missDeadline) Thread.sleep(20)
-      assert(UdpFlowSource.templateMisses.sum() > missesBefore)
+      assert(UdpFlowSource.templateMisses > missesBefore)
 
       val expected = 4 + 3 + 1 + 2
       while (spark.table("udp_spec9_sink").count() < expected &&
@@ -458,12 +446,7 @@ class UdpIngestSpec extends SparkSpec {
         .start()
       val sock = new DatagramSocket()
       try {
-        val deadline = System.nanoTime() + 60_000_000_000L
-        var port = 0
-        while (port == 0 && System.nanoTime() < deadline) {
-          port = UdpFlowSource.boundPort(name).getOrElse(0)
-          if (port == 0) Thread.sleep(20)
-        }
+        val port = UdpFlowSource.listeners(q).head.port
         assert(port > 0)
         val addr = InetAddress.getByName("127.0.0.1")
         body(b => sock.send(new DatagramPacket(b, b.length, addr, port)), q)
@@ -516,7 +499,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = false, templateStatePath = Some(dir))
     val sock = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("tmpl-corrupt").get
+      val port = stream.port
       val addr = InetAddress.getByName("127.0.0.1")
       val stats = UdpFlowSource.statsFor("tmpl-corrupt")
       val misses0 = stats.templateMisses.sum()
@@ -574,7 +557,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = false, templateStatePath = Some(dir))
     val sock = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("tmpl-torn-1").get
+      val port = s1.port
       val stats = UdpFlowSource.statsFor("tmpl-torn-1")
       val misses0 = stats.templateMisses.sum()
       while (s1.reportLatestOffset().asInstanceOf[UdpOffset].count == 0 &&
@@ -596,7 +579,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = false, templateStatePath = Some(dir))
     val sock2 = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("tmpl-torn-2").get
+      val port = s2.port
       val stats = UdpFlowSource.statsFor("tmpl-torn-2")
       val misses0 = stats.templateMisses.sum()
       while (stats.templateMisses.sum() == misses0 &&
@@ -628,7 +611,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = false, templateStatePath = Some(dir))
     val sock3 = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("tmpl-torn-3").get
+      val port = s3.port
       val stats = UdpFlowSource.statsFor("tmpl-torn-3")
       val misses0 = stats.templateMisses.sum()
       while (s3.reportLatestOffset().asInstanceOf[UdpOffset].count == 0 &&
@@ -655,7 +638,7 @@ class UdpIngestSpec extends SparkSpec {
       dedupSequence = false, templateStatePath = Some(dir))
     val sock4 = new DatagramSocket()
     try {
-      val port = UdpFlowSource.boundPort("tmpl-torn-4").get
+      val port = s4.port
       val stats = UdpFlowSource.statsFor("tmpl-torn-4")
       val misses0 = stats.templateMisses.sum()
       while (stats.templateMisses.sum() == misses0 &&
@@ -716,12 +699,7 @@ class UdpIngestSpec extends SparkSpec {
         .start()
       val sock = new DatagramSocket()
       try {
-        val deadline = System.nanoTime() + 60_000_000_000L
-        var port = 0
-        while (port == 0 && System.nanoTime() < deadline) {
-          port = UdpFlowSource.boundPort(name).getOrElse(0)
-          if (port == 0) Thread.sleep(20)
-        }
+        val port = UdpFlowSource.listeners(q).head.port
         assert(port > 0)
         val addr = InetAddress.getByName("127.0.0.1")
         body(b => sock.send(new DatagramPacket(b, b.length, addr, port)), q)

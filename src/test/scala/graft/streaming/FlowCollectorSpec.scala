@@ -8,7 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 import graft.sources.{NetFlowV5 => V5, SFlowV5 => SF}
@@ -183,6 +183,65 @@ class FlowCollectorSpec extends SparkSpec {
     rebind.close()
   }
 
+  test("a start on a taken UDP port throws the bind error at once and leaks nothing") {
+    val activeBefore = spark.streams.active.length
+    val listenersBefore = spark.streams.listListeners().length
+    val probe = new java.net.ServerSocket(0)
+    val metricsPort = probe.getLocalPort
+    probe.close()
+    val tmp = s"${graft.Tmp.root}/collector-taken"
+    FileUtils.deleteQuietly(Paths.get(tmp).toFile)
+    val taken = new DatagramSocket(0, InetAddress.getByName("127.0.0.1"))
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[StreamingQueryException] {
+        FlowCollector.startUrls(spark, s"netflow://127.0.0.1:${taken.getLocalPort}",
+          outDir = s"$tmp/out", checkpoint = s"$tmp/cp", name = "collector-taken",
+          metricsPort = metricsPort)
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.net.BindException]), e)
+      assert(secs < 10, s"the bind error took $secs s to surface")
+    } finally taken.close()
+    assert(spark.streams.active.length == activeBefore, "query leaked")
+    assert(spark.streams.listListeners().length == listenersBefore, "listener leaked")
+    new java.net.ServerSocket(metricsPort).close() // the metrics port is free again
+  }
+
+  test("a malformed template record counts against its listener and in the /metrics total") {
+    val tmp = s"${graft.Tmp.root}/collector-overrun"
+    FileUtils.deleteQuietly(Paths.get(tmp).toFile)
+    val c = FlowCollector.startUrls(spark, "netflow://:0", outDir = s"$tmp/out",
+      checkpoint = s"$tmp/cp", name = "collector-overrun",
+      batchMaxTime = "200 milliseconds")
+    try {
+      // IPFIX template set of 16 bytes declaring 2 enterprise fields: the
+      // first field spec (8 bytes) uses up the set, so the record overruns
+      val overrun = java.nio.ByteBuffer.allocate(32)
+        .putShort(10).putShort(32).putInt(1700000000).putInt(1).putInt(3)
+        .putShort(2).putShort(16).putShort(701).putShort(2)
+        .putShort((0x8000 | 8).toShort).putShort(4).putInt(9999).array()
+      val stats = graft.sources.UdpFlowSource.listenerStats.toMap
+        .apply(c.listeners.head.name)
+      val before = stats.dropped.sum()
+      val sock = new DatagramSocket()
+      try (0 until 5).foreach(_ => sock.send(new DatagramPacket(overrun, overrun.length,
+        InetAddress.getByName("127.0.0.1"), c.udpPort)))
+      finally sock.close()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (stats.dropped.sum() < before + 5 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(stats.dropped.sum() == before + 5)
+
+      val m = scrape(c.metricsPort).linesIterator.filterNot(_.startsWith("#")).toSeq
+      def values(prefix: String) = m.filter(_.startsWith(prefix)).map(_.split(' ').last.toDouble)
+      val total = values("graft_decoder_dropped_total ")
+      assert(total.size == 1 && total.head >= 5)
+      assert(total.head == values("graft_udp_listener_dropped_total{").sum, m.mkString("\n"))
+    } finally c.stop(spark)
+  }
+
   private val v5 = V5.encode(1000L, 1700000700L, 0L, 1L, 100,
     (0 until 5).map(i => V5.Rec(Array[Byte](10, 0, 1, i.toByte),
       Array[Byte](10, 0, 2, 1), pkts = 1, octets = 500 + i,
@@ -282,7 +341,7 @@ class FlowCollectorSpec extends SparkSpec {
         if (m.getName == "stop") throw new TimeoutException("stop timed out")
         else throw new UnsupportedOperationException(m.getName))
       .asInstanceOf[StreamingQuery]
-    intercept[TimeoutException](FlowCollector.Running(stuck, listener, server, 0).stop(spark))
+    intercept[TimeoutException](FlowCollector.Running(stuck, listener, server, Nil).stop(spark))
     assert(!spark.streams.listListeners().contains(listener), "listener leaked")
     new java.net.ServerSocket(port).close() // the metrics port is free again
   }
