@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Shim
 
 /** Per-round benchmark: every registered capability at the bench scale
   * factor, fully materialized through the `noop` sink (`count()` would let
@@ -14,22 +15,64 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Streaming listener progress events are delivered asynchronously —
-    * `processAllAvailable()` returning does not mean the last batch's
-    * progress event has been dispatched, so a snapshot taken immediately
-    * after can miss rows that then bleed into the NEXT phase's delta
-    * (ADVICE r09). Poll until the counter is unchanged across two reads.
+  /** `l`'s row count once every progress event posted so far has been
+    * delivered: listener events are asynchronous, so a read right after
+    * `processAllAvailable()` can miss the last batch, whose rows would
+    * then bleed into the next phase's delta.
     */
-  private def stableRowsIn(l: streaming.FlowPipeline.MetricsListener): Long = {
-    var prev = l.rowsIn.sum()
-    var tries = 0
-    while (tries < 100) { // ≤ 2 s; listener dispatch is normally < 100 ms
-      Thread.sleep(20)
-      val cur = l.rowsIn.sum()
-      if (cur == prev) return cur
-      prev = cur; tries += 1
+  private def deliveredRowsIn(spark: SparkSession,
+      l: streaming.FlowPipeline.MetricsListener): Long = {
+    Shim.drainListenerBus(spark)
+    l.rowsIn.sum()
+  }
+
+  /** Profile mode's report of one run's ledger: the totals, the jobs
+    * (longest 30 first) and, when the run streamed, every micro-batch with
+    * its `durationMs` phases and state-operator times, then the phase sums.
+    */
+  private def profile(name: String, l: QueryLedger): String = {
+    val sb = new StringBuilder
+    def mb(bytes: Long): Double = bytes / 1e6
+    val jobs = l.jobs
+    sb ++= f"\n== $name wall ${l.wallS}%.3f s, ${jobs.size} jobs, " +
+      f"sum job wall ${jobs.map(_.spanMs).sum / 1e3}%.3f s, " +
+      f"driver gap ${l.driverGapS}%.3f s ==\n"
+    sb ++= f"  ${l.stages.size} stages, ${l.tasks} tasks, task ${l.taskS}%.3f s " +
+      f"(cpu ${l.taskCpuS}%.3f s), input ${mb(l.inputBytes)}%.1f MB, " +
+      f"shuffle read ${mb(l.shuffleReadBytes)}%.1f MB, " +
+      f"write ${mb(l.shuffleWriteBytes)}%.1f MB, spill ${mb(l.spillBytes)}%.1f MB\n"
+    sb ++= "  wallMs tasks taskTimeMs shufMB  site\n"
+    jobs.sortBy(-_.spanMs).take(30).foreach { j =>
+      val st = l.stagesOf(j)
+      sb ++= f"  ${j.spanMs}%6d ${st.map(_.tasks).sum}%5d ${st.map(_.runMs).sum}%10d " +
+        f"${mb(st.map(_.shuffleReadBytes).sum)}%6.1f  ${j.label.take(90)}\n"
     }
-    prev
+    val ps = l.batches.sortBy(_.timestampMs)
+    if (ps.nonEmpty) {
+      sb ++= f"-- ${ps.size} micro-batches (${ps.count(_.rows > 0)} with data) --\n"
+      sb ++= s"last-source offsets: ${l.batches.last.sources}\n"
+      val keys = ps.flatMap(_.durationMs.keys).distinct.sorted
+      sb ++= "batch  rows  " + keys.map(k => f"$k%-17s").mkString +
+        "stCommit stUpdate stRemoval stRows\n"
+      ps.foreach { p =>
+        sb ++= f"${p.batchId}%5d ${p.rows}%5d  " +
+          keys.map(k => f"${p.durationMs.getOrElse(k, -1L)}%-17d").mkString +
+          f"${p.stateCommitMs}%8d ${p.stateUpdateMs}%8d ${p.stateRemovalMs}%9d " +
+          f"${p.stateRowsTotal}%6d\n"
+      }
+      def sum(label: String, sec: Double, note: String = ""): Unit =
+        sb ++= f"  $label%-34s $sec%.3f s$note\n"
+      keys.foreach(k => sum(s"sum $k", ps.map(_.phaseMs(k)).sum / 1e3))
+      sum("sum state commitTimeMs", ps.map(_.stateCommitMs).sum / 1e3, " (inside addBatch)")
+      val trigS = ps.map(_.phaseMs("triggerExecution")).sum / 1e3
+      val spanS = (ps.last.timestampMs + ps.last.phaseMs("triggerExecution") -
+        ps.head.timestampMs) / 1e3
+      sum("stream span (first ts to last end)", spanS)
+      sum("trigger idle inside span", spanS - trigS)
+      sum("outside the stream span", l.wallS - spanS,
+        " (wall - span: startup and post-drain batch work)")
+    }
+    sb.toString
   }
 
   /** The ONE fixed-work box-calibration kernel (min-of-3 single-core
@@ -83,6 +126,23 @@ object Bench {
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
+  /** The local session the command-line mains run on:
+    * `SPARK_GRAFT_CPUS` cores (else `defaultCores`) and as many shuffle
+    * partitions, the graft extensions, UTC, no UI.
+    */
+  private[graft] def localSession(defaultCores: Int, logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCores.toString)
+    val spark = SparkSession.builder()
+      .withExtensions(plans.GraftExtensions.install)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   private val quadraticBaselines = Set(
     "x2c_dedup_ngram",    // all-pairs char-ngram verification
     "x3b_cosine_pairs")   // all-pairs cosine self-join
@@ -91,15 +151,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = localSession(32, "ERROR")
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions")
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -114,6 +167,20 @@ object Bench {
 
     // warmup: JIT + codegen + FS caches on two representative shapes
     run("q01_scan_parquet"); run("q20_agg_hash")
+
+    // Profile mode: `runMain graft.Bench <query>...` times the named
+    // queries twice each (cold + warm), prints the warm run's ledger and
+    // exits — the dev loop for one entry without the full sweep.
+    if (args.nonEmpty) {
+      args.foreach { n =>
+        println(f"[profile] $n%-30s run1 ${run(n)}%8.2f s")
+        val (sec, cost) = QueryLedger.during(spark)(run(n))
+        println(f"[profile] $n%-30s run2 $sec%8.2f s")
+        if (sec >= 0) print(profile(n, cost))
+      }
+      spark.stop()
+      return
+    }
 
     // Fixed-work box calibration (VERDICT r09 #1): round 9's 2.15× wall
     // "regression" was the sandbox VM running ~2× slower — proven only by
@@ -138,19 +205,6 @@ object Bench {
     val calibration =
       s"""{"spin_sec":$spinSec,"spark_1task_sec":$sparkCalSec,""" +
         s""""fsync_sec":$fsyncSec}"""
-
-    // Profile mode: `runMain graft.Bench <query>...` times the named
-    // queries twice each (cold + warm) and exits — the dev loop for
-    // investigating a single entry without paying for the full sweep.
-    if (args.nonEmpty) {
-      args.foreach { n =>
-        (1 to 2).foreach { i =>
-          println(f"[profile] $n%-30s run$i ${run(n)}%8.2f s")
-        }
-      }
-      spark.stop()
-      return
-    }
 
     // Two full sweeps, per-query MIN: run-to-run variance on a shared box
     // is ±40% with multi-second outliers (r05's full map showed a 7×
@@ -303,7 +357,7 @@ object Bench {
           val sendSec = (System.nanoTime() - u0) / 1e9
           q.processAllAvailable()
           val drainSec = (System.nanoTime() - u0) / 1e9 - sendSec
-          (stableRowsIn(listener) - before, sent, sendSec, drainSec)
+          (deliveredRowsIn(spark, listener) - before, sent, sendSec, drainSec)
         }
         val best = Seq(sweep(), sweep()).maxBy {
           case (rows, _, sendSec, drainSec) => rows.toDouble / (sendSec + drainSec)
@@ -404,7 +458,7 @@ object Bench {
           } finally sock.close()
           q.processAllAvailable()
           val sec = (System.nanoTime() - t0) / 1e9
-          val rows = stableRowsIn(listener) - rows0 // phases are sequential
+          val rows = deliveredRowsIn(spark, listener) - rows0 // phases are sequential
           val rx = stats.received.sum() - rx0
           val dr = stats.dropped.sum() - dr0
           val tm = stats.templateMisses.sum() - tm0

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: print the formatted physical plan of one or more
   * registered queries without executing them (streaming drains and
   * side-effecting registrations do run their build step — they execute to
@@ -17,18 +15,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Explain <sfDir> <query> [query ...]")
     val dir = args(0)
-    // same session shape as Verify (extensions install the as-of operator
-    // and parser; several registrations require them)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .appName("graft-explain")
-      .withExtensions(plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // extensions install the as-of operator and parser; several
+    // registrations require them
+    val spark = Bench.localSession(8, "WARN")
     try args.drop(1).foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       println(s"==== $name ====")

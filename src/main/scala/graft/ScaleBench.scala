@@ -450,36 +450,9 @@ object ScaleBench {
     art
   }
 
-  /** Accumulates task-level spill across the whole app; callers snapshot
-    * around each timed run. Listener-bus delivery is asynchronous, so a
-    * few tail tasks can land after the snapshot — runs here are
-    * sequential and the metric is a gate-grade magnitude, not an exact
-    * accounting.
-    */
-  private final class SpillListener extends org.apache.spark.scheduler.SparkListener {
-    val mem = new java.util.concurrent.atomic.LongAdder
-    val disk = new java.util.concurrent.atomic.LongAdder
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) { mem.add(m.memoryBytesSpilled); disk.add(m.diskBytesSpilled) }
-    }
-    def snapshot: (Long, Long) = (mem.sum(), disk.sum())
-  }
-
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(plans.GraftExtensions.install)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val spill = new SpillListener
-    spark.sparkContext.addSparkListener(spill)
+    val spark = Bench.localSession(32, "ERROR")
 
     def fixture(scale: Int): String = {
       // "q" = planted-DOC vintage (r12: the x5g recall gate's planted
@@ -496,17 +469,18 @@ object ScaleBench {
 
     // (sec, memSpill, diskSpill)
     def run(name: String, dir: String): (Double, Long, Long) = {
-      val (m0, d0) = spill.snapshot
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[scale] $name failed on $dir: ${e.getMessage}")
-        return (-1.0, 0L, 0L)
+      val (ok, cost) = QueryLedger.during(spark) {
+        try {
+          SparkEntry.queries(name)(spark, dir)
+            .write.format("noop").mode("overwrite").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[scale] $name failed on $dir: ${e.getMessage}")
+          false
+        }
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val (m1, d1) = spill.snapshot
-      (sec, m1 - m0, d1 - d0)
+      if (ok) (cost.wallS, cost.memorySpillBytes, cost.diskSpillBytes)
+      else (-1.0, 0L, 0L)
     }
     def best(name: String, dir: String): (Double, Long, Long) = {
       // min-of-2 wall time — same robust estimator as Bench; spill is

@@ -656,13 +656,12 @@ object StreamQueries {
               // live gens + unfolded fragments tile batches 0..id exactly
               // and sums are additive across tiles
               val cu = sumsFor(entrants) {
-                val (m, bytes) =
-                  org.apache.spark.sql.graftshim.Shim.bytesRead(s) {
-                    sumsOf(dom.storeSums(
-                      graft.ext.SimilarityQueries.readPqStore(s, tierDir)
-                        .filter(col(key).isin(entrants.toSeq: _*))))
-                  }
-                catchupBytes = bytes
+                val (m, cost) = graft.QueryLedger.during(s) {
+                  sumsOf(dom.storeSums(
+                    graft.ext.SimilarityQueries.readPqStore(s, tierDir)
+                      .filter(col(key).isin(entrants.toSeq: _*))))
+                }
+                catchupBytes = cost.inputBytes
                 m
               }
               (sc, cu)

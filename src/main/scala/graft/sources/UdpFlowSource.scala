@@ -114,6 +114,34 @@ object UdpFlowSource {
     }.collect { case u: UdpFlowStream => u }
   }
 
+  /** The streams the current query thread has built. Spark builds a
+    * query's sources one at a time (`MicroBatchExecution.logicalPlan`);
+    * when a later one throws (a taken port, say), the earlier ones never
+    * reach the query's source list, so the query's stop never closes
+    * their sockets and receiver threads. [[built]] stops them instead.
+    * Only query threads record: each runs exactly one query, so the
+    * streams stopped are always the failing query's own.
+    */
+  private val builtOnQueryThread = new ThreadLocal[List[UdpFlowStream]] {
+    override def initialValue(): List[UdpFlowStream] = Nil
+  }
+
+  private[sources] def built(stream: => UdpFlowStream): UdpFlowStream =
+    if (!Thread.currentThread().isInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.QueryExecutionThread]) stream
+    else {
+      val s = try stream catch {
+        case e: Throwable =>
+          builtOnQueryThread.get.foreach { b =>
+            try b.stop() catch { case x: Exception => e.addSuppressed(x) }
+          }
+          builtOnQueryThread.remove()
+          throw e
+      }
+      builtOnQueryThread.set(s :: builtOnQueryThread.get)
+      s
+    }
+
   /** Per-listener counters (keyed by the source's `name` option) — the
     * reference runs one goflow FlowRoutine per listen URL and Prometheus
     * labels its counters per listener. They are the only drop/miss
@@ -189,7 +217,7 @@ final class UdpFlowTable(extended: Boolean = false) extends Table with SupportsR
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = tableSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new UdpFlowStream(
+          UdpFlowSource.built(new UdpFlowStream(
             options.getOrDefault("host", "127.0.0.1"),
             options.getInt("port", 0),
             options.getOrDefault("name", "default"),
@@ -205,7 +233,7 @@ final class UdpFlowTable(extended: Boolean = false) extends Table with SupportsR
             // (default OFF = RFC 3954 §5 wait-for-re-export, goflow parity)
             if (options.getBoolean("persistTemplates", false))
               Some(checkpointLocation)
-            else None)
+            else None))
       }
     }
 }

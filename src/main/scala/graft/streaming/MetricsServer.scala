@@ -91,30 +91,16 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
     * next to the flows themselves.
     */
   private def ifCounterBody: String = {
-    val entries = {
-      val m = graft.sources.UdpFlowSource.ifCounters
-      m.synchronized { // LinkedHashMap iteration needs the map's own lock
-        import scala.jdk.CollectionConverters._
-        m.entrySet().asScala.map(e => (e.getKey, e.getValue)).toVector
-      }
-    }
-    if (entries.isEmpty) ""
-    else {
-      val sorted = entries.sortBy { case ((agent, idx), _) => (agent, idx) }
-      val gauges = Seq[(String, String, graft.sources.SFlowV5.IfCounters => Long)](
+    import graft.sources.{SFlowV5 => SF}
+    gaugeSection(snapshot(graft.sources.UdpFlowSource.ifCounters),
+      Seq[(String, String, SF.IfCounters => Long)](
         ("graft_sflow_if_in_octets", "Input octets on the interface.", _.ifInOctets),
         ("graft_sflow_if_out_octets", "Output octets on the interface.", _.ifOutOctets),
         ("graft_sflow_if_in_ucast_pkts", "Input unicast packets.", _.ifInUcastPkts),
         ("graft_sflow_if_out_ucast_pkts", "Output unicast packets.", _.ifOutUcastPkts),
         ("graft_sflow_if_in_errors", "Input errors.", _.ifInErrors),
-        ("graft_sflow_if_out_errors", "Output errors.", _.ifOutErrors))
-      gauges.map { case (name, help, get) =>
-        s"# HELP $name $help\n# TYPE $name gauge\n" +
-          sorted.map { case ((agent, idx), c) =>
-            s"""$name{agent="$agent",ifindex="$idx"} ${get(c)}"""
-          }.mkString("", "\n", "\n")
-      }.mkString
-    }
+        ("graft_sflow_if_out_errors", "Output errors.", _.ifOutErrors)),
+      (k: (String, Long)) => s"""agent="${k._1}",ifindex="${k._2}"""")
   }
 
   /** Snapshot a synchronized LRU registry (iteration needs the map's own

@@ -37,26 +37,10 @@ object Shim {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
     }
 
-  /** Measure the bytes the jobs inside `body` actually READ from their
-    * inputs (task `inputMetrics.bytesRead` summed over completed tasks) —
-    * the evidence statistic for pushdown-pruned scans, where planned file
-    * sizes overstate what a min/max-pruned parquet read touches. Uses the
-    * `private[spark]` listener-bus drain so the count is complete when
-    * this returns; callers run `body` sequentially on the driver (a
-    * concurrent job's tasks would pollute the sum).
+  /** Returns once every event posted so far has reached every listener
+    * (Spark delivers listener events asynchronously; the drain is
+    * `private[spark]`).
     */
-  def bytesRead[T](spark: SparkSession)(body: => T): (T, Long) = {
-    val acc = new java.util.concurrent.atomic.LongAdder
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) acc.add(e.taskMetrics.inputMetrics.bytesRead)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      spark.sparkContext.listenerBus.waitUntilEmpty()
-      (r, acc.sum())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -1,0 +1,75 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.graftshim.Listeners
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** [[QueryLedger]] is complete when `during` returns: job counts are
+  * stable, every completed stage's tasks are in, a stream's progress
+  * events are all recorded, and the listener leaves the bus however the
+  * body ends.
+  */
+class QueryLedgerSpec extends SparkSpec {
+
+  private def noop(name: String): Unit =
+    Registry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
+
+  /** A warm run's ledger: the first run pays one-off reads and codegen. */
+  private def warmLedger(name: String): QueryLedger = {
+    noop(name)
+    QueryLedger.during(spark)(noop(name))._2
+  }
+
+  test("warm job counts of five flows ops") {
+    // the counts a listener that waited out the bus saw for the same warm
+    // runs on a 4-core local session at this scale. qf13's varies from run
+    // to run: adaptive execution submits one job per query stage, and its
+    // rounds ran 46 to 48 jobs in repeated runs
+    val exact = Seq("qf1_top_talkers" -> 3, "qf6_salted_join" -> 7,
+      "q22_count_distinct" -> 5, "q54b_cidr_filter" -> 4)
+    assert(exact.map { case (n, _) => n -> warmLedger(n).jobs.size } == exact)
+    val qf13 = warmLedger("qf13_pagerank").jobs.size
+    assert(qf13 >= 46 && qf13 <= 48, qf13)
+  }
+
+  test("on return every completed stage's tasks are in") {
+    val l = warmLedger("qf6_salted_join")
+    assert(l.tasks > 0)
+    assert(l.tasks == l.stages.map(_.numTasks).sum, l.stages)
+    // every stage ran under a recorded job
+    assert(l.jobs.flatMap(l.stagesOf).map(_.stageId).sorted ==
+      l.stages.map(_.stageId).sorted)
+    assert(l.driverGapS >= 0 && l.driverGapS <= l.wallS)
+  }
+
+  test("a q52d drain records one batch per progress event") {
+    val events = new AtomicInteger
+    val counter = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        events.incrementAndGet()
+    }
+    spark.streams.addListener(counter)
+    val l = try QueryLedger.during(spark)(noop("q52d_stream_dedup_ingest"))._2
+      finally spark.streams.removeListener(counter)
+    assert(l.batches.nonEmpty)
+    assert(l.batches.size == events.get)
+    assert(l.batches.map(_.rows).sum > 0)
+    assert(l.batches.forall(_.durationMs.contains("triggerExecution")))
+  }
+
+  test("the ledger leaves the bus when the body throws") {
+    val before = Listeners.count[QueryLedger](spark)
+    val e = intercept[IllegalStateException] {
+      QueryLedger.during(spark) {
+        assert(Listeners.count[QueryLedger](spark) == before + 1)
+        spark.range(10).collect()
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage == "body failed")
+    assert(Listeners.count[QueryLedger](spark) == before)
+  }
+}

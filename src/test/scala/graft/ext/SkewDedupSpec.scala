@@ -3,10 +3,9 @@ package graft.ext
 import java.nio.file.Paths
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-import graft.{Registry, SparkSpec}
+import graft.{Registry, ShuffleReads, SparkSpec}
 
 /** Skew-adversarial dedup (VERDICT r07 #3): the real shape of crawl dedup
   * is ONE mega-duplicate cluster holding most of the corpus — here 80%
@@ -46,26 +45,6 @@ class SkewDedupSpec extends SparkSpec {
     dir
   }
 
-  /** Collect per-task shuffle-read record counts while `body` runs.
-    * Listener events are async: poll until the count stabilizes.
-    */
-  private def withTaskMetrics[T](body: => T): (T, Seq[Long]) = {
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          reads.add(t.taskMetrics.shuffleReadMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      var prev = -1
-      while (reads.size != prev) { prev = reads.size; Thread.sleep(300) }
-      import scala.jdk.CollectionConverters._
-      (r, reads.asScala.map(_.longValue).toSeq)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("x1 exact dedup: the 80% cluster collapses to one group") {
     val got = Registry.queries("x1_dedup_exact")(spark, corpus)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -75,7 +54,7 @@ class SkewDedupSpec extends SparkSpec {
   }
 
   test("x2 minhash: full clique found, no task reads a quadratic input") {
-    val (rows, reads) = withTaskMetrics {
+    val (rows, reads) = ShuffleReads.during(spark) {
       Registry.queries("x2_dedup_minhash")(spark, corpus).collect()
     }
     assert(rows.length == expectedPairs,
@@ -95,7 +74,7 @@ class SkewDedupSpec extends SparkSpec {
   }
 
   test("x2b simhash: covers the duplicate cluster, signatures priced per distinct text") {
-    val (rows, reads) = withTaskMetrics {
+    val (rows, reads) = ShuffleReads.during(spark) {
       Registry.queries("x2b_dedup_simhash")(spark, corpus).collect()
     }
     assert(rows.length == 1)
@@ -111,7 +90,7 @@ class SkewDedupSpec extends SparkSpec {
 
   for (name <- Seq("x2d_dedup_components", "x2f_cc_star")) {
     test(s"$name: one 480-doc component plus 120 singletons, no hot read") {
-      val (rows, reads) = withTaskMetrics {
+      val (rows, reads) = ShuffleReads.during(spark) {
         Registry.queries(name)(spark, corpus).collect()
       }
       assert(rows.length == nDocs)
@@ -170,7 +149,7 @@ class SkewDedupSpec extends SparkSpec {
   }
 
   test("x2e embedding LSH: full cluster clique, no task reads a quadratic input") {
-    val (rows, reads) = withTaskMetrics {
+    val (rows, reads) = ShuffleReads.during(spark) {
       Registry.queries("x2e_dedup_embed")(spark, embCorpus).collect()
     }
     assert(rows.length == expectedEmbPairs,

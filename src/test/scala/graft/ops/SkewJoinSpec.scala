@@ -3,10 +3,9 @@ package graft.ops
 import java.nio.file.Paths
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
-import graft.{Registry, SparkSpec}
+import graft.{Registry, ShuffleReads, SparkSpec}
 
 /** qf6's salting exists to bound per-reducer work on a hot join key; this
   * spec proves it does (VERDICT r08 #3), SkewDedupSpec-style, on a corpus
@@ -46,23 +45,6 @@ class SkewJoinSpec extends SparkSpec {
     dir
   }
 
-  private def withTaskMetrics[T](body: => T): (T, Seq[Long]) = {
-    val reads = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          reads.add(t.taskMetrics.shuffleReadMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val r = body
-      var prev = -1
-      while (reads.size != prev) { prev = reads.size; Thread.sleep(300) }
-      import scala.jdk.CollectionConverters._
-      (r, reads.asScala.map(_.longValue).toSeq)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
   test("qf6 salting equals the unsalted join and spreads the hot key over ~16 reducers") {
     val conf = spark.conf
     val oldParts = conf.get("spark.sql.shuffle.partitions")
@@ -78,12 +60,12 @@ class SkewJoinSpec extends SparkSpec {
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
     try {
-      val (salted, saltedReads) = withTaskMetrics {
+      val (salted, saltedReads) = ShuffleReads.during(spark) {
         Registry.queries("qf6_salted_join")(spark, corpus)
           .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
       }
       val f = FlowQueries.flows(spark, corpus).filter(col("proto") === 1)
-      val (unsalted, unsaltedReads) = withTaskMetrics {
+      val (unsalted, unsaltedReads) = ShuffleReads.during(spark) {
         f.select(col("dst_port"), col("bytes"))
           .join(f.select(col("dst_port").as("r_port"), col("packets")),
             col("dst_port") === col("r_port"))

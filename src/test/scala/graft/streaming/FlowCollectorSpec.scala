@@ -209,6 +209,28 @@ class FlowCollectorSpec extends SparkSpec {
     new java.net.ServerSocket(metricsPort).close() // the metrics port is free again
   }
 
+  test("a listener that fails to bind releases the listeners bound before it") {
+    val lo = InetAddress.getByName("127.0.0.1")
+    val probe = new DatagramSocket(0, lo)
+    val free = probe.getLocalPort
+    probe.close()
+    val name = "collector-half-bound"
+    val tmp = s"${graft.Tmp.root}/$name"
+    FileUtils.deleteQuietly(Paths.get(tmp).toFile)
+    val taken = new DatagramSocket(0, lo)
+    try intercept[StreamingQueryException] {
+      FlowCollector.startUrls(spark,
+        s"nfl://127.0.0.1:$free,netflow://127.0.0.1:${taken.getLocalPort}",
+        outDir = s"$tmp/out", checkpoint = s"$tmp/cp", name = name)
+    } finally taken.close()
+    new DatagramSocket(free, lo).close() // the first listener's port is free again
+    def receivers = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith(s"nflv5-udp-receiver-$name"))
+    val deadline = System.nanoTime() + 5000000000L
+    while (receivers.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(receivers.isEmpty, receivers.map(_.getName))
+  }
+
   test("a malformed template record counts against its listener and in the /metrics total") {
     val tmp = s"${graft.Tmp.root}/collector-overrun"
     FileUtils.deleteQuietly(Paths.get(tmp).toFile)
