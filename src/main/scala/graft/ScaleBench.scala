@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.Caching
+
 /** Scale-stress gate (VERDICT r07 #1, widened per r08 #4): every 100 TB
   * claim in SURVEY §2.3 was architecture-verified but measured only at
   * sf0.1 — this main synthesizes DETERMINISTIC replicated fixtures
@@ -412,18 +414,19 @@ object ScaleBench {
     * reasoning as stageFixture's copy+atomic-move).
     */
   private def materializedArtifacts(art: String, key: String)(
-      build: => (DataFrame, DataFrame, DataFrame, Seq[DataFrame])): String = {
+      build: Caching.Pins => (DataFrame, DataFrame, DataFrame)): String = {
     val marker = Paths.get(s"$art/FIXTURE_KEY")
     val fresh = Files.exists(marker) &&
       new String(Files.readAllBytes(marker), StandardCharsets.UTF_8) == key
     if (!fresh) {
       System.err.println(s"[scale] materializing index artifacts at $art")
       org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(art).toFile)
-      val (indexDigs, iBuckets, shIdx, caches) = build
-      indexDigs.write.mode("overwrite").parquet(s"$art/digs.parquet")
-      iBuckets.write.mode("overwrite").parquet(s"$art/buckets.parquet")
-      shIdx.write.mode("overwrite").parquet(s"$art/shingles.parquet")
-      caches.foreach(_.unpersist())
+      Caching.pinned { pins =>
+        val (indexDigs, iBuckets, shIdx) = build(pins)
+        indexDigs.write.mode("overwrite").parquet(s"$art/digs.parquet")
+        iBuckets.write.mode("overwrite").parquet(s"$art/buckets.parquet")
+        shIdx.write.mode("overwrite").parquet(s"$art/shingles.parquet")
+      }
       Files.write(marker, key.getBytes(StandardCharsets.UTF_8))
     }
     art
@@ -561,9 +564,8 @@ object ScaleBench {
     // timing noise. Informational, not gated.
     val x2eCandidates = {
       val dir = fixture(tiers.head._1)
-      val (_, cand, caches) =
-        ext.SimilarityQueries.embedLshPairsPlanFull(spark, dir)
-      ext.Caching.withPersistedAll(caches)(cand.count())
+      Caching.pinned(pins =>
+        ext.SimilarityQueries.embedLshPairsPlanFull(pins, spark, dir)._2.count())
     }
     System.err.println(s"[scale] x2e verify-stage candidates at 30x: $x2eCandidates")
 
@@ -576,15 +578,13 @@ object ScaleBench {
     // registered geometry cuts candidates ≥ 5× and holds recall ≥ 0.8 —
     // the boundary-recall trade this buys is declared at the geometry
     // constants' scaladoc.
-    val (x2eAb, x2eAbOk) = {
+    val (x2eAb, x2eAbOk) = Caching.pinned { pins =>
       val dir = fixture(tiers.head._1)
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = pins.checkpoint(spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"),
           transform(col("embedding"),
             x => round(x.cast(org.apache.spark.sql.types.DoubleType) * 1048576d)
-              .cast(org.apache.spark.sql.types.LongType)).as("qe"))
-        .localCheckpoint()
-      try {
+              .cast(org.apache.spark.sql.types.LongType)).as("qe")))
         def measure(nb: Int, bits: Int): (Long, Int, Int) = {
           val planes = ext.SimilarityQueries.lshPlanesFor(nb * bits)
             .flatMap(_.map(_.toByte)).toArray
@@ -615,7 +615,6 @@ object ScaleBench {
           f"recall $h88/$t88; 8x12 $c812 cand recall $h812/$t812 " +
           f"(reduction $reduction%.1fx) ok=$ok")
         ((c88, h88, t88, c812, h812, t812, reduction), ok)
-      } finally e.unpersist()
     }
 
     // x2h REAL-increment measurement (r10): the registered query (and the
@@ -625,24 +624,23 @@ object ScaleBench {
     // artifacts once, then time increments that merely LOAD them — and
     // assert the precomputed path emits the IDENTICAL verdict row set, so
     // the speedup is measured on a proven-equivalent plan.
-    def timedIncrement(batch: DataFrame, art: String): (Double, DataFrame) = {
-      val (out, caches) = ext.DedupQueries.incrementVerdictPlan(
-        batch,
-        spark.read.parquet(s"$art/digs.parquet"),
-        spark.read.parquet(s"$art/buckets.parquet"),
-        spark.read.parquet(s"$art/shingles.parquet"))
-      val t0 = System.nanoTime()
-      val ckpt =
-        try out.localCheckpoint()
-        finally caches.foreach(_.unpersist())
-      ((System.nanoTime() - t0) / 1e9, ckpt)
-    }
+    def timedIncrement(batch: DataFrame, art: String): (Double, DataFrame) =
+      Caching.pinned { pins =>
+        val out = ext.DedupQueries.incrementVerdictPlan(pins,
+          batch,
+          spark.read.parquet(s"$art/digs.parquet"),
+          spark.read.parquet(s"$art/buckets.parquet"),
+          spark.read.parquet(s"$art/shingles.parquet"))
+        val t0 = System.nanoTime()
+        val ckpt = out.localCheckpoint()
+        ((System.nanoTime() - t0) / 1e9, ckpt)
+      }
 
     val (incrSec, incrFullSec, incrEqual) = {
       val dir = fixture(tiers.head._1)
       val art = materializedArtifacts(s"$SfGen/x2h_idx30p",
         fixtureFingerprint(s"$dir/documents.parquet")) {
-        ext.DedupQueries.x2hIndexArtifacts(spark, dir)
+        pins => ext.DedupQueries.x2hIndexArtifacts(pins, spark, dir)
       }
       def increment() = timedIncrement(ext.DedupQueries.x2hBatch(spark, dir), art)
       val (tA, outA) = increment()
@@ -684,7 +682,7 @@ object ScaleBench {
         .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
       def scaledArt(k: Int): String =
         materializedArtifacts(s"$SfGen/x2h_idxscale_$k",
-          s"$baseFp:k=$k") {
+          s"$baseFp:k=$k") { pins =>
           val frame = (0 until k).map { j =>
             if (j == 0) baseIdxDocs
             else baseIdxDocs.select(
@@ -693,7 +691,7 @@ object ScaleBench {
                 md5(concat(col("dig"), lit(s":$j:$w")))): _*).as("text"))
               .withColumn("dig", md5(col("text")))
           }.reduce(_ unionByName _)
-          ext.DedupQueries.indexArtifactsFrom(frame)
+          ext.DedupQueries.indexArtifactsFrom(pins, frame)
         }
       val batch = ext.DedupQueries.x2hBatch(spark, base)
       val series = Seq(1, 10, 30).map { k =>
@@ -823,14 +821,10 @@ object ScaleBench {
       val pairs = plantedPairs
       val involved = pairs.flatMap(p => Seq(p._1, p._2))
       val frame = SparkEntry.queries("x2j_semantic_dedup")(spark, dir)
-      val v = try frame
+      val v = frame
         .filter(col("vec_id").isin(involved: _*))
         .select(col("vec_id"), col("cluster"), col("keep")).collect()
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(2)))).toMap
-      // the plan ends in a corpus-sized localCheckpoint — release the
-      // pinned blocks once the ~100 involved rows are out
-      finally org.apache.spark.sql.graftshim.Shim.backingRdds(frame)
-        .foreach(_.unpersist(blocking = false))
       val same = pairs.filter { case (a, b) =>
         v.contains(a) && v.contains(b) && v(a)._1 == v(b)._1 }
       val prunedGivenSame =
@@ -857,12 +851,10 @@ object ScaleBench {
       val involved = pairs.flatMap(p => Seq(p._1, p._2))
       val frame = ext.SimilarityQueries
         .semanticDedupPlan(spark, dir, trainRounds = 0)
-      val v = try frame
+      val v = frame
         .filter(col("vec_id").isin(involved: _*))
         .select(col("vec_id"), col("cluster")).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      finally org.apache.spark.sql.graftshim.Shim.backingRdds(frame)
-        .foreach(_.unpersist(blocking = false))
       pairs.count { case (a, b) =>
         v.contains(a) && v.contains(b) && v(a) == v(b)
       }.toDouble / pairs.size
@@ -1096,7 +1088,8 @@ object ScaleBench {
     // shape at two levels. End state: 3 live gens (L2[0,31] + two L0) +
     // the last cycle's 2 grace-retained fragments — LOGARITHMIC in the
     // 18 cycles — and serving parity against a direct batch encode.
-    val (q52yLedger, q52yGens, q52yFrags, q52yServeEqual, q52yL2Bytes, q52yOk) = {
+    val (q52yLedger, q52yGens, q52yFrags, q52yServeEqual, q52yL2Bytes, q52yOk) =
+        Caching.pinned { pins =>
       val sq = ext.SimilarityQueries
       val dir = fixture(tiers.head._1)
       val base = graft.Tmp.sessionDir(spark, "q52y_tiered")
@@ -1108,7 +1101,7 @@ object ScaleBench {
       sq.maintainLedger.remove(store)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       emb.repartition(36).write.mode("overwrite").parquet(src)
-      val cb = sq.pqBuildFrom(sq.quantFrame(spark, dir))._3.localCheckpoint()
+      val cb = pins.checkpoint(sq.pqBuildFrom(sq.quantFrame(spark, dir))._3)
       val arrivals = spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
       streaming.Streams.start(arrivals, cp)(
@@ -1201,7 +1194,8 @@ object ScaleBench {
       val served = spark.read.parquet(s"$base/hh/batch=${nB - 1}").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val grams = ext.TextQueries.heavyHitterGrams(docs)
-      val truth = ext.Caching.withPersisted(grams) {
+      val truth = Caching.pinned { pins =>
+        pins.persist(grams)
         val cnt = grams.groupBy("gram").agg(count(lit(1)).as("cnt"))
         val tot = grams.agg(count(lit(1)).as("total"))
         cnt.crossJoin(broadcast(tot))
@@ -1308,7 +1302,8 @@ object ScaleBench {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val grams = ext.TextQueries.heavyHitterGrams(
         churned.select("doc_id", "text"))
-      val truth = ext.Caching.withPersisted(grams) {
+      val truth = Caching.pinned { pins =>
+        pins.persist(grams)
         val cnt = grams.groupBy("gram").agg(count(lit(1)).as("cnt"))
         val tot = grams.agg(count(lit(1)).as("total"))
         cnt.crossJoin(broadcast(tot))
@@ -1391,27 +1386,23 @@ object ScaleBench {
       // well under the nominal width on a morpheme-sharing vocabulary
       // (measured ~21 disjoint picks max per round at width 48).
       // The conf set, the wf build AND both trainers sit inside the
-      // try (ADVICE r17: a throw between set and the old try's entry
-      // leaked the 4-partition conf to the rest of the run), and wf's
-      // pinned checkpoint blocks are released once both trainers finish.
-      val (m, mRec) = try {
+      // try (a throw between set and the try's entry would leak the
+      // 4-partition conf to the rest of the run), and wf's pin is
+      // released once both trainers finish.
+      val (m, mRec) = try Caching.pinned { pins =>
         spark.conf.set("spark.sql.shuffle.partitions", 4)
-        val wf = wordCnt.toDF("word", "cnt")
+        val wf = pins.checkpoint(wordCnt.toDF("word", "cnt") // two trainers consume it
           .select(ext.TextQueries.wordToSym.as("sym"), col("cnt"))
-          .repartition(4)
-          .localCheckpoint() // two trainers consume it; pin once
-        try {
-          val a = ext.TextQueries.bpeTrain(spark, wf,
-              rounds = 48, picksPerRound = 16, candLimit = 384,
-            ledger = Some(ledger))
-            .collect().sortBy(_.getInt(0))
-          val b = ext.TextQueries.bpeTrain(spark, wf,
-              rounds = 48, picksPerRound = 16, candLimit = 384,
-            incremental = false)
-            .collect().sortBy(_.getInt(0))
-          (a, b)
-        } finally org.apache.spark.sql.graftshim.Shim.backingRdds(wf)
-          .foreach(_.unpersist(blocking = false))
+          .repartition(4))
+        val a = ext.TextQueries.bpeTrain(spark, wf,
+            rounds = 48, picksPerRound = 16, candLimit = 384,
+          ledger = Some(ledger))
+          .collect().sortBy(_.getInt(0))
+        val b = ext.TextQueries.bpeTrain(spark, wf,
+            rounds = 48, picksPerRound = 16, candLimit = 384,
+          incremental = false)
+          .collect().sortBy(_.getInt(0))
+        (a, b)
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       def key(rs: Array[org.apache.spark.sql.Row]) =
         rs.map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -1475,15 +1466,15 @@ object ScaleBench {
       // later count re-derives, or the window build runs ~5x and the
       // index join ~3x (r16 review)
       val (reps, windows, prefWindows, candPairs, verified) =
-        ext.Caching.withPersisted(st.sets) {
-          ext.Caching.withPersisted(st.cand) {
-            // coalesce: sum over an EMPTY sets frame is NULL — a
-            // degenerate fixture must fail the gate cleanly (ok=false),
-            // not crash the whole ScaleBench run on getLong (ADVICE r16)
-            (st.sets.count(),
-              st.sets.agg(coalesce(sum(col("na")), lit(0L))).head().getLong(0),
-              st.pref.count(), st.cand.count(), st.pairs.count())
-          }
+        Caching.pinned { pins =>
+          pins.persist(st.sets)
+          pins.persist(st.cand)
+          // coalesce: sum over an EMPTY sets frame is NULL — a degenerate
+          // fixture must fail the gate cleanly (ok=false), not crash the
+          // whole ScaleBench run on getLong
+          (st.sets.count(),
+            st.sets.agg(coalesce(sum(col("na")), lit(0L))).head().getLong(0),
+            st.pref.count(), st.cand.count(), st.pairs.count())
         }
       val brute = reps * (reps - 1) / 2
       val ok = windows > 0 && prefWindows * 4 <= windows &&
@@ -1521,17 +1512,18 @@ object ScaleBench {
       }
       def flows() = ops.FlowQueries.flows(spark, dir)
       // warm listing/footer caches so the depth-1 baseline isn't inflated
-      ops.FlowQueries.releaseRanks(ops.FlowQueries.pageRank(flows(), iters = 1))
-      val shallow = fsBytes {
-        ops.FlowQueries.releaseRanks(ops.FlowQueries.pageRank(flows(), iters = 1))
-      }
+      def depth1(): Unit =
+        Caching.pinned { pins => ops.FlowQueries.pageRank(pins, flows(), iters = 1); () }
+      depth1()
+      val shallow = fsBytes(depth1())
       var iters = 0
       var delta = Long.MaxValue
       val deep = fsBytes {
-        val (r, it, d) = ops.FlowQueries.pageRankFixedPoint(flows(),
-          maxIters = 40, stallRounds = 3)
-        iters = it; delta = d
-        ops.FlowQueries.releaseRanks(r)
+        Caching.pinned { pins =>
+          val (_, it, d) = ops.FlowQueries.pageRankFixedPoint(pins, flows(),
+            maxIters = 40, stallRounds = 3)
+          iters = it; delta = d
+        }
       }
       val ok = shallow > 0 && iters > 1 && iters < 40 &&
         deep < shallow * 3 / 2 &&

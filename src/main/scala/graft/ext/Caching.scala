@@ -1,65 +1,80 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
 
-/** Audited persist lifecycle (VERDICT r08 #7). Registered queries cache
-  * intermediates (shingle frames, membership, centroid tables) for the
-  * duration of ONE query and must release them before returning — in a
-  * long-lived session a leaked cache block degrades every later query
-  * (r02 bench). Hand-rolled persist/…/unpersist triples release only on
-  * the happy path; this wrapper guarantees release on EVERY exit,
-  * including a failing action, and RegistrySpec asserts the invariant
-  * (zero live non-checkpoint cached RDDs after each registered query).
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.Shim
+
+/** The one pin lifecycle for query intermediates. Registered queries pin
+  * frames (shingle sets, memberships, centroid tables, iteration rounds)
+  * for the duration of ONE query and must free them before returning: in
+  * a long-lived session a leaked block set degrades every later query.
+  *
+  * Contract of [[Caching.pinned]]:
+  *   - `pins.persist(df)` marks `df` cached (lazy, filled by its first
+  *     action); `pins.checkpoint(df)` materializes `df` into executor
+  *     storage NOW and returns the truncated-lineage frame.
+  *   - every pin is recorded the moment it is made, so a body or plan
+  *     builder that throws halfway leaks nothing;
+  *   - `pins.release(df)` frees one pin early — loops that carry a pin
+  *     from round to round (PageRank ranks, KMeans centroids, BPE
+  *     rounds) release the previous round once the next is materialized;
+  *   - on exit, by any path, every pin still held is freed: cached frames
+  *     are unpersisted, checkpointed frames get their backing blocks
+  *     removed (Spark has no public unpersist for localCheckpoint
+  *     storage; the blocks would otherwise sit until RDD GC);
+  *   - the body's result must no longer read its pins: a collected value
+  *     or the query's own final `localCheckpoint()`.
+  *
+  * Release is `blocking = false`: nothing re-reads the blocks, so their
+  * removal is async cleanup. RegistrySpec asserts the invariant: after
+  * each registered query no cached RDD is live, and no checkpoint made
+  * during the query survives unless the returned frame reads it.
   */
 object Caching {
 
-  /** Mark `frames` persisted, evaluate `build` — which must EAGERLY
-    * materialize anything that reads them (typically ending in
-    * `localCheckpoint()`) — then unpersist in a finally. Persisting an
-    * already-marked frame is a no-op, so plan builders may pre-mark the
-    * frames they hand back for auditing.
-    */
-  def withPersisted[T](frames: DataFrame*)(build: => T): T =
-    withPersistedAll(frames)(build)
+  final class Pins private[Caching] () {
+    private val held = ArrayBuffer.empty[(DataFrame, () => Unit)]
 
-  def withPersistedAll[T](frames: Seq[DataFrame])(build: => T): T = {
-    frames.foreach(_.persist())
-    try build finally frames.foreach(_.unpersist())
+    private def hold(df: DataFrame)(free: => Unit): Unit =
+      held += ((df, () => free))
+
+    /** Mark `df` cached for the rest of the scope. */
+    def persist(df: DataFrame): DataFrame = {
+      hold(df)(df.unpersist())
+      df.persist()
+    }
+
+    /** Materialize `df` into executor storage and return the
+      * checkpointed frame. The pin is recorded before the materializing
+      * job runs, so a failing job frees what it had stored.
+      */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val cp = df.localCheckpoint(eager = false)
+      val rdds = Shim.backingRdds(cp)
+      hold(cp)(rdds.foreach(_.unpersist(blocking = false)))
+      rdds.foreach(_.count())
+      cp
+    }
+
+    /** Free the pin `df` (a frame returned by [[persist]] or
+      * [[checkpoint]]) before the scope ends; any other frame — a loop's
+      * unpinned seed, a reliable checkpoint — is left alone.
+      */
+    def release(df: DataFrame): Unit = {
+      val i = held.indexWhere(_._1 eq df)
+      if (i >= 0) held.remove(i)._2()
+    }
+
+    private[Caching] def releaseAll(): Unit =
+      while (held.nonEmpty) held.remove(held.size - 1)._2()
   }
 
-  /** Persist `df` and materialize the cache NOW (r19, guide §5): a
-    * LAZILY persisted kernel frame whose first action is a self-join (the
-    * LSH candidate shape — buckets.as("x") ⋈ buckets.as("y")) populates
-    * the cache from BOTH join stages concurrently, and InMemoryRelation's
-    * get-or-compute has no cross-task dedup — each side's task recomputes
-    * any partition the other side hasn't finished, so the expensive
-    * signature kernel runs ~twice (profiled on x2b/x2e: duplicated
-    * 8–15 s-task-time kernel passes inside the band-join job). One cheap
-    * count() materializes every partition exactly once with full
-    * parallelism; the join stages then only read. Release stays the
-    * caller's withPersisted/unpersist responsibility.
+  /** Run `body` with a fresh [[Pins]] scope; free every pin still held
+    * when it exits, normally or by an exception.
     */
-  def eager(df: DataFrame): DataFrame = {
-    df.persist()
-    df.count()
-    df
-  }
-
-  /** The same lifecycle discipline for `localCheckpoint` pins (ADVICE
-    * r12): checkpoint `frames` eagerly, hand the pinned frames to
-    * `build` — which must return an EAGERLY materialized result that no
-    * longer references them (typically its own small `localCheckpoint`)
-    * — then release the pinned blocks, which otherwise sit in executor
-    * storage until RDD GC. Release goes through the shim's
-    * [[org.apache.spark.sql.graftshim.Shim.backingRdds]] because Spark
-    * has no public unpersist for localCheckpoint storage. Blocking=false:
-    * the removal is async cleanup, nothing re-reads the blocks.
-    */
-  def withLocalCheckpointed[T](frames: DataFrame*)(build: Seq[DataFrame] => T): T = {
-    val cps = frames.map(_.localCheckpoint())
-    try build(cps)
-    finally cps.foreach(df =>
-      org.apache.spark.sql.graftshim.Shim.backingRdds(df)
-        .foreach(_.unpersist(blocking = false)))
+  def pinned[T](body: Pins => T): T = {
+    val pins = new Pins
+    try body(pins) finally pins.releaseAll()
   }
 }

@@ -19,17 +19,17 @@ object DecontamQueries {
     */
   private def bucket = PipelineQueries.splitBucket
 
-  /** The LAZY x7c train×eval fuzzy-contamination plan plus its persisted
-    * shingle frame (caller unpersists after materializing) — exposed
+  /** The LAZY x7c train×eval fuzzy-contamination plan over a shingle
+    * frame pinned in the caller's `pins` — exposed
     * package-private so PlanSpec can audit the un-checkpointed plan shape
     * (broadcast band join, no cartesian), same pattern as
     * [[DedupQueries.minhashPairsPlan]]. sigsOf passes bucket through (the
     * signature kernel is per-row ⇒ a pure select), so the broadcast band
     * join is the plan's first exchange after the persisted shingling.
     */
-  private[graft] def fuzzyPairsPlan(s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val sh = Tables.documents(s, d)
+  private[graft] def fuzzyPairsPlan(pins: Caching.Pins,
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
+    val sh = pins.persist(Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
       // tokens aliased in their own projection so the shingle lambda
       // references an attribute, not an embedded re-evaluated split —
@@ -37,8 +37,7 @@ object DecontamQueries {
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .withColumn("bucket", bucket)
       .select(col("doc_id"), col("bucket"),
-        DedupQueries.shingleSet(col("w")).as("sh"))
-      .persist()
+        DedupQueries.shingleSet(col("w")).as("sh")))
     val sigs = DedupQueries.sigsOf(sh)
     val trainB = DedupQueries.lshBuckets(sigs.filter(col("bucket") < 80))
     val evalB = DedupQueries.lshBuckets(sigs.filter(col("bucket") >= 90))
@@ -48,9 +47,8 @@ object DecontamQueries {
       .agg(count(lit(1)).as("n_bands"))
       .filter(col("n_bands") >= 2)
       .select("a", "b")
-    val pairs = DedupQueries.verifyPairs(cand, sh.select("doc_id", "sh"), 0.8)
+    DedupQueries.verifyPairs(cand, sh.select("doc_id", "sh"), 0.8)
       .select(col("a").as("train_doc"), col("b").as("eval_doc"), col("j"))
-    (pairs, sh)
   }
 
   /** The x7e cross-split semantic-contamination plan
@@ -213,11 +211,8 @@ object DecontamQueries {
     // join; nothing quadratic in the corpus. Signatures come from the
     // per-row minhash_sig kernel (no signature shuffle at all).
     Q("x7c_decontam_fuzzy",
-      (s, d) => {
-        val (pairs, sh) = fuzzyPairsPlan(s, d)
-        // tiny result; eager so the shingle cache is released on return
-        Caching.withPersisted(sh)(pairs.localCheckpoint())
-      },
+      // tiny result; eager so the shingle cache is released on return
+      (s, d) => Caching.pinned(pins => fuzzyPairsPlan(pins, s, d).localCheckpoint()),
       Some("""WITH t AS (SELECT doc_id, string_split(text,' ') w, text FROM documents),
         sets AS (SELECT doc_id, CASE WHEN len(w) >= 3
           THEN list_distinct(list_transform(generate_series(1, len(w)-2),
@@ -354,7 +349,7 @@ object DecontamQueries {
     // scale shape (broadcast eval grams, broadcast eval bands, shingle
     // cache released on return).
     Q("x7f_contamination_report",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         val docs = Tables.documents(s, d).withColumn("bucket", bucket)
         val withW = docs.withColumn("w", split(col("text"), " "))
         val grams = withW.where(size(col("w")) >= 8)
@@ -365,8 +360,7 @@ object DecontamQueries {
         val verbatimDocs = grams.where(col("bucket") < 80)
           .join(broadcast(evalGrams), Seq("gram"))
           .select("doc_id").distinct()
-        val (fuzzyPairs, sh) = fuzzyPairsPlan(s, d)
-        val fuzzyDocs = fuzzyPairs
+        val fuzzyDocs = fuzzyPairsPlan(pins, s, d)
           .select(col("train_doc").as("doc_id")).distinct()
         val semDocs = semanticPairsDf(s, d)
           .select(col("train_vec").as("doc_id")).distinct()
@@ -380,7 +374,7 @@ object DecontamQueries {
             col("m").isNotNull.as("semantic"))
           .groupBy("verbatim", "fuzzy", "semantic")
           .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
-        Caching.withPersisted(sh)(out.localCheckpoint())
+        out.localCheckpoint()
       },
       Some(s"""WITH w0 AS (SELECT doc_id, (doc_id * 2654435761) % 100 AS bucket,
             string_split(text, ' ') AS words FROM documents),

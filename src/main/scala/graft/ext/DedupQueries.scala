@@ -56,11 +56,12 @@ object DedupQueries {
   /** Eager lineage truncation for iterative plans: a RELIABLE checkpoint
     * when the session has a checkpoint dir configured (survives executor
     * loss / dynamic allocation on a real cluster — the 100 TB path), else
-    * executor-local (right for local bench; non-recoverable by design).
+    * an executor-local pin of `pins` (right for local bench;
+    * non-recoverable by design).
     */
-  private def truncate(df: DataFrame): DataFrame =
+  private def truncate(pins: Caching.Pins, df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
+    else pins.checkpoint(df)
 
   /** Exact set Jaccard from two distinct-element array columns. */
   private def jaccard(a: Column, b: Column): Column = {
@@ -188,13 +189,12 @@ object DedupQueries {
 
   private def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** The LAZY MinHash+LSH verified-pair plan plus its persisted caches
-    * (caller releases via [[Caching.withPersistedAll]] after
-    * materializing). Exposed package-private so PlanSpec can audit the
+  /** The LAZY MinHash+LSH verified-pair plan over frames pinned in the
+    * caller's scope. Exposed package-private so PlanSpec can audit the
     * un-checkpointed plan shape (no cartesian product) — the registered
-    * query materializes it eagerly and releases the cache before returning.
+    * query materializes it eagerly and frees the pins before returning.
     *
-    * EXACT-DUP COLLAPSE runs in front (r08, the mega-cluster defense):
+    * EXACT-DUP COLLAPSE runs in front (the mega-cluster defense):
     * identical texts — the dominant duplicate shape in crawl corpora,
     * where ONE cluster can hold most of the corpus — all land in the same
     * LSH band bucket, and the candidate self-join then reads O(cluster²)
@@ -213,14 +213,9 @@ object DedupQueries {
     * representative shingles, and the rep-level verified near-dup pairs.
     */
   private final case class CollapsedLsh(membership: DataFrame,
-      repOf: DataFrame, shReps: DataFrame, repPairs: DataFrame) {
-    /** Frames marked persisted by [[collapsedLsh]] — release with
-      * [[Caching.withPersistedAll]] after materializing the result.
-      */
-    def caches: Seq[DataFrame] = Seq(shReps, membership)
-  }
+      repOf: DataFrame, shReps: DataFrame, repPairs: DataFrame)
 
-  private def collapsedLsh(s: SparkSession, d: String): CollapsedLsh = {
+  private def collapsedLsh(pins: Caching.Pins, s: SparkSession, d: String): CollapsedLsh = {
     val docs = Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
       // 128-bit md5 as the group identity, NOT xxhash64 (ADVICE r08): at
@@ -235,27 +230,25 @@ object DedupQueries {
     val reps = docs.groupBy("dig")
       .agg(min(struct(col("doc_id"), col("text"))).as("r"))
       .select(col("dig"), col("r.doc_id").as("doc_id"), col("r.text").as("text"))
-    // EAGER pin (r19, guide §5 / Caching.eager): the first consumer is
-    // the LSH band SELF-join — a lazy persist would populate this cache
-    // from both join stages concurrently and run the shingle kernel ~2×
-    val shReps = Caching.eager(reps
+    val shReps = pins.persist(reps
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), shingleSet(col("w")).as("sh")))
     val repPairs = verifyPairs(lshCandidates(minhashSigs(shReps)), shReps, 0.8)
     // membership ((digest, doc_id) per doc) sits on every reconstruction
     // path — clique pairs, cross expansion, star edges — and is re-joined
     // up to four times per query; persisted so the corpus scan + md5 run
-    // once (ADVICE r08). repOf reads it instead of re-scanning the corpus:
-    // the representative IS the group's min doc_id (reps take the
+    // once. repOf reads it instead of re-scanning the corpus: the
+    // representative IS the group's min doc_id (reps take the
     // min-(doc_id, text) struct), so a membership-side min-agg is
     // provably the same frame.
-    val membership = docs.select(col("dig"), col("doc_id")).persist()
+    val membership = pins.persist(docs.select(col("dig"), col("doc_id")))
     val repOf = membership.groupBy("dig").agg(min(col("doc_id")).as("rep"))
     CollapsedLsh(membership, repOf, shReps, repPairs)
   }
 
-  private[graft] def minhashPairsPlan(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    val c = collapsedLsh(s, d)
+  private[graft] def minhashPairsPlan(pins: Caching.Pins, s: SparkSession,
+      d: String): DataFrame = {
+    val c = collapsedLsh(pins, s, d)
     val membership = c.membership
     // clique pairs inside each identical-text group: j is exactly 1.0
     // (identical shingle sets), matching what the brute-force oracle
@@ -275,7 +268,7 @@ object DedupQueries {
       .join(membership.select(col("dig").as("digb"), col("doc_id").as("mb")), "digb")
       .select(least(col("ma"), col("mb")).as("a"),
         greatest(col("ma"), col("mb")).as("b"), col("j"))
-    (internal.unionByName(cross), c.caches)
+    internal.unionByName(cross)
   }
 
   /** Connectivity-equivalent near-dup edge list (u, v) — LINEAR in corpus
@@ -288,13 +281,14 @@ object DedupQueries {
     * consume this; x2, whose declared OUTPUT is the pair list itself,
     * enumerates the cliques via [[minhashPairsPlan]].
     */
-  private[graft] def minhashComponentEdges(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    val c = collapsedLsh(s, d)
+  private[graft] def minhashComponentEdges(pins: Caching.Pins, s: SparkSession,
+      d: String): DataFrame = {
+    val c = collapsedLsh(pins, s, d)
     val star = c.membership.join(c.repOf, "dig")
       .where(col("doc_id") =!= col("rep"))
       .select(col("doc_id").as("u"), col("rep").as("v"))
     val cross = c.repPairs.select(col("a").as("u"), col("b").as("v"))
-    (star.unionByName(cross), c.caches)
+    star.unionByName(cross)
   }
 
   /** The x2h corpus split: docs with their 128-bit digest and the x6/x7
@@ -313,14 +307,15 @@ object DedupQueries {
       .select(col("doc_id"), col("text"), col("dig"))
 
   /** The x2h index artifacts — `(indexDigs(dig), iBuckets(band, key,
-    * idig), shIdx(b, shb), caches)` — derived from the corpus dir. The
-    * registered query computes these inline; ScaleBench materializes them
-    * to parquet ONCE and then times increments that only load them (the
-    * production shape: the index is an on-disk asset).
+    * idig), shIdx(b, shb))`, pinned in `pins` — derived from the corpus
+    * dir. The registered query computes these inline; ScaleBench
+    * materializes them to parquet ONCE and then times increments that
+    * only load them (the production shape: the index is an on-disk
+    * asset).
     */
-  private[graft] def x2hIndexArtifacts(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) =
-    indexArtifactsFrom(x2hDocs(s, d).filter(col("in_index"))
+  private[graft] def x2hIndexArtifacts(pins: Caching.Pins, s: SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) =
+    indexArtifactsFrom(pins, x2hDocs(s, d).filter(col("in_index"))
       .select(col("doc_id"), col("text"), col("dig")))
 
   /** [[x2hIndexArtifacts]] generalized to ANY index frame
@@ -409,21 +404,18 @@ object DedupQueries {
           md5(coalesce(array_to_string(kept, ' '), '')) AS scrubbed_md5
         FROM scrub""".stripMargin
 
-  private[graft] def indexArtifactsFrom(index: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+  private[graft] def indexArtifactsFrom(pins: Caching.Pins, index: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     val indexDigs = index.select("dig").distinct()
     val iGroups = index.groupBy("dig")
       .agg(min(struct(col("doc_id"), col("text"))).as("r"))
       .select(col("dig"), col("r.text").as("text"))
-    // eager (r19, Caching.eager): iBuckets and shIdx both read this
-    // inside one verdict job — a lazy persist races them into the
-    // shingle kernel twice
-    val shI = Caching.eager(iGroups
+    val shI = pins.persist(iGroups
       .select(col("dig").as("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), shingleSet(col("w")).as("sh")))
     val iBuckets = lshBuckets(sigsOf(shI)).withColumnRenamed("doc_id", "idig")
     val shIdx = shI.select(col("doc_id").as("b"), col("sh").as("shb"))
-    (indexDigs, iBuckets, shIdx, Seq(shI))
+    (indexDigs, iBuckets, shIdx)
   }
 
   /** The x2h INCREMENT stage, parameterized on the index artifacts —
@@ -434,7 +426,7 @@ object DedupQueries {
     * PRECOMPUTED from parquet, the production deployment: yesterday's
     * index is an asset on disk, only the batch pays signature work per
     * increment) run the IDENTICAL verdict plan. Returns the lazy verdict
-    * frame plus the caches the caller must release.
+    * frame over intermediates pinned in the caller's `pins`.
     *
     * Verdict semantics (see the x2h registration scaladoc): exact dups on
     * the 128-bit digest join; near (j ≥ 0.8) via MinHash+LSH over distinct
@@ -453,14 +445,12 @@ object DedupQueries {
     * and verify at Jaccard 1.0. The eval side arrives as the precomputed
     * `(iBuckets, shIdx)` artifacts of [[indexArtifactsFrom]].
     */
-  private[graft] def streamDecontamPlan(batch: DataFrame, iBuckets: DataFrame,
-      shIdx: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def streamDecontamPlan(pins: Caching.Pins, batch: DataFrame,
+      iBuckets: DataFrame, shIdx: DataFrame): DataFrame = {
     val bGroups = batch.groupBy("dig")
       .agg(min(struct(col("doc_id"), col("text"))).as("r"))
       .select(col("dig"), col("r.text").as("text"))
-    // eager (r19, Caching.eager): the candidate join and the verify
-    // join's sha side read this in one job — lazy persist = kernel ×2
-    val shB = Caching.eager(bGroups
+    val shB = pins.persist(bGroups
       .select(col("dig").as("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), shingleSet(col("w")).as("sh")))
     val bB = lshBuckets(sigsOf(shB))
@@ -473,15 +463,14 @@ object DedupQueries {
       .join(shIdx, "b")
       .filter(jaccard(col("sha"), col("shb")) >= 0.8)
       .select(col("a").as("dig")).distinct()
-    val out = batch.select(col("doc_id"), col("dig"))
+    batch.select(col("doc_id"), col("dig"))
       .join(contaminatedDigs.withColumn("contaminated", lit(true)), Seq("dig"), "left")
       .select(col("doc_id"),
         coalesce(col("contaminated"), lit(false)).as("contaminated"))
-    (out, Seq(shB))
   }
 
-  private[graft] def incrementVerdictPlan(batch: DataFrame, indexDigs: DataFrame,
-      iBuckets: DataFrame, shIdx: DataFrame): (DataFrame, Seq[DataFrame]) = {
+  private[graft] def incrementVerdictPlan(pins: Caching.Pins, batch: DataFrame,
+      indexDigs: DataFrame, iBuckets: DataFrame, shIdx: DataFrame): DataFrame = {
     // one row per distinct batch text: group min doc_id (the
     // first-arrival representative) + the text for shingling
     val bGroups = batch.groupBy("dig")
@@ -490,16 +479,12 @@ object DedupQueries {
       .select(col("dig"), col("gmin"), col("r.text").as("text"))
     // near-dup stage: LSH over distinct texts (dig as the key; the
     // sig/bucket helpers key on a "doc_id" column, so alias)
-    val shB = Caching.eager(bGroups
+    val shB = pins.persist(bGroups
       .select(col("dig").as("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), shingleSet(col("w")).as("sh")))
-    // bB pinned (r18): the cross-index and the within-batch candidate
-    // joins BOTH consume it. LAZY on purpose (r19): the expensive kernel
-    // sits under shB — which IS eager now — so bB's own population is a
-    // cheap explode over cached shingles, and racing it across the
-    // concurrent candidate stages overlaps on idle cores, where an eager
-    // count would serialize an extra pass in front of them
-    val bB = lshBuckets(sigsOf(shB)).persist()
+    // bB pinned: the cross-index and the within-batch candidate joins
+    // BOTH consume it
+    val bB = pins.persist(lshBuckets(sigsOf(shB)))
     // batch×index candidates colliding in ≥ 2 bands (x2's cutoff),
     // verified by exact Jaccard — never an all-pairs product
     val crossCand = bB.as("x").join(iBuckets.as("y"), Seq("band", "key"))
@@ -538,7 +523,7 @@ object DedupQueries {
     // verdict assembly: left joins of per-GROUP flags onto the
     // batch members (flag frames are near-dup-group-sized — tiny
     // relative to the corpus — and every join is an equi-join)
-    val out = batch.select(col("doc_id"), col("dig"))
+    batch.select(col("doc_id"), col("dig"))
       .join(indexDigs.withColumn("exact_idx", lit(true)), Seq("dig"), "left")
       .join(crossVer.withColumn("near_idx", lit(true)), Seq("dig"), "left")
       .join(gm, "dig")
@@ -552,7 +537,6 @@ object DedupQueries {
         when(col("dup_of_index"), "dup_index")
           .when(col("dup_in_batch"), "dup_batch")
           .otherwise("new"))
-    (out, Seq(shB, bB))
   }
 
   /** SimHash pigeonhole LSH pairs at Hamming ≤ 3 over a (doc_id, sim)
@@ -582,24 +566,24 @@ object DedupQueries {
   /** [[simhash]] exposed for LshAuditSpec. */
   private[ext] def simhashFor(s: SparkSession, d: String): DataFrame = simhash(s, d)
 
-  /** Lazy SimHash LSH≡brute-force equality plan plus its persisted simhash
-    * frame (caller unpersists) — the pigeonhole-exactness proof, driven by
+  /** Lazy SimHash LSH≡brute-force equality plan over a simhash frame
+    * pinned in `pins` — the pigeonhole-exactness proof, driven by
     * LshAuditSpec (the registered x2b carries only the LSH half; benching
     * the all-pairs side would measure the oracle, not the engine).
     */
-  private[graft] def simhashEqualityPlan(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val sh = simhash(s, d).persist()
+  private[graft] def simhashEqualityPlan(pins: Caching.Pins, s: SparkSession,
+      d: String): DataFrame = {
+    val sh = pins.persist(simhash(s, d))
     val lsh = simhashLshPairs(sh)
     val bf = sh.as("p").join(sh.as("q"), col("p.doc_id") < col("q.doc_id"))
       .where(hamming(col("p.sim"), col("q.sim")) <= 3)
       .select(col("p.doc_id").as("a"), col("q.doc_id").as("b"))
     val only = lsh.exceptAll(bf).unionAll(bf.exceptAll(lsh))
-    val res = only.agg((count(lit(1)) === 0).as("lsh_equals_bruteforce"),
+    only.agg((count(lit(1)) === 0).as("lsh_equals_bruteforce"),
       lit(3).as("hamming_threshold"))
       // non-vacuity: the equality must hold over a NON-empty pair set
       // (profiled: 12 pairs ≤ Hamming 3 at sf0.01)
       .crossJoin(bf.agg((count(lit(1)) > 0).as("found_pairs")))
-    (res, sh)
   }
 
   /** Min-label propagation over the connectivity-equivalent near-dup
@@ -633,9 +617,9 @@ object DedupQueries {
   private[graft] val lastPropagationRounds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def minLabelComponents(s: SparkSession, d: String): DataFrame = {
-    val (edgePlan, caches) = minhashComponentEdges(s, d)
-    val base = Caching.withPersistedAll(caches)(truncate(edgePlan))
+  private def minLabelComponents(pins: Caching.Pins, s: SparkSession,
+      d: String): DataFrame = {
+    val base = Caching.pinned(ep => truncate(pins, minhashComponentEdges(ep, s, d)))
     val edges = base.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(base.select(col("v").as("src"), col("u").as("dst")))
     var lab = Tables.documents(s, d)
@@ -651,7 +635,7 @@ object DedupQueries {
       val viaNeighbor = edges
         .join(lab.withColumnRenamed("doc_id", "dst"), "dst")
         .select(col("src").as("doc_id"), col("label"))
-      val next = truncate(lab.unionByName(viaNeighbor)
+      val next = truncate(pins, lab.unionByName(viaNeighbor)
         .groupBy("doc_id").agg(min(col("label")).as("label")))
         // truncate lineage each round: keeps every round's plan a
         // constant-size join over materialized labels instead of a
@@ -660,6 +644,7 @@ object DedupQueries {
       val nextSum = labelSum(next)
       converged = nextSum == prevSum
       prevSum = nextSum
+      pins.release(lab) // next is materialized; round 0's lab is no pin
       lab = next
       round += 1
     }
@@ -790,14 +775,13 @@ object DedupQueries {
     Q("x2_dedup_minhash",
       (s, d) => {
         // One shingling pass feeds BOTH the signature and the verify side
-        // (r01 bench: recomputing it doubled the dominant map cost). The
-        // pair result is tiny (near-dup pairs only), so it is materialized
-        // eagerly (localCheckpoint) and the big cached shingle frame is
-        // released before returning — cached blocks must not outlive the
-        // query in a long-lived session (r02 bench: leaked storage degraded
-        // later unrelated queries).
-        val (pairs, caches) = minhashPairsPlan(s, d)
-        Caching.withPersistedAll(caches)(pairs.localCheckpoint())
+        // (recomputing it doubled the dominant map cost). The pair result
+        // is tiny (near-dup pairs only), so it is materialized eagerly
+        // (localCheckpoint) and the big cached shingle frame is released
+        // before returning — cached blocks must not outlive the query in
+        // a long-lived session (leaked storage degraded later unrelated
+        // queries).
+        Caching.pinned(pins => minhashPairsPlan(pins, s, d).localCheckpoint())
       },
       Some("""WITH t AS (SELECT doc_id, string_split(text,' ') w, text FROM documents),
         sets AS (SELECT doc_id, CASE WHEN len(w) >= 3
@@ -820,9 +804,12 @@ object DedupQueries {
     // closure with a recursive CTE, so the propagation must actually have
     // converged for the hash to match.
     Q("x2d_dedup_components",
-      (s, d) => minLabelComponents(s, d)
-        .select(col("doc_id"), col("label").as("component"),
-          (col("doc_id") === col("label")).as("keep")),
+      (s, d) => Caching.pinned { pins =>
+        minLabelComponents(pins, s, d)
+          .select(col("doc_id"), col("label").as("component"),
+            (col("doc_id") === col("label")).as("keep"))
+          .localCheckpoint() // one row per doc; eager so the pins can go
+      },
       Some(s"""$ComponentsCte
         SELECT doc_id, component, doc_id = component AS keep FROM comp""".stripMargin)),
 
@@ -847,11 +834,11 @@ object DedupQueries {
     // equality), not assumed — the loop exits early the round nothing
     // changes; localCheckpoint truncates lineage per round as in x2d.
     Q("x2f_cc_star",
-      (s, d) => {
-        // same connectivity-equivalent edges as x2d (r08 mega-cluster
+      (s, d) => Caching.pinned { pins =>
+        // same connectivity-equivalent edges as x2d (the mega-cluster
         // defense): star per identical-text group + rep-level pairs
-        val (edgePlan, caches) = minhashComponentEdges(s, d)
-        val pairs = Caching.withPersistedAll(caches)(edgePlan.transform(truncate))
+        val pairs =
+          Caching.pinned(ep => truncate(pins, minhashComponentEdges(ep, s, d)))
 
         def largeStar(e: DataFrame): DataFrame = {
           val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
@@ -890,10 +877,11 @@ object DedupQueries {
         var converged = false
         var round = 0
         while (!converged && round < 6) {
-          val next = truncate(smallStar(largeStar(edges)))
+          val next = truncate(pins, smallStar(largeStar(edges)))
           val nextSig = sig(next)
           converged = nextSig == prevSig
           prevSig = nextSig
+          pins.release(edges) // next is materialized
           edges = next
           round += 1
         }
@@ -905,6 +893,7 @@ object DedupQueries {
           .select(col("doc_id"),
             least(col("doc_id"), coalesce(col("nmin"), col("doc_id"))).as("component"))
           .withColumn("keep", col("doc_id") === col("component"))
+          .localCheckpoint() // one row per doc; eager so the pins can go
       },
       // identical ground truth to x2d: full transitive closure
       Some(s"""$ComponentsCte
@@ -925,7 +914,7 @@ object DedupQueries {
     // corpora and catches a real LSH regression on any corpus with
     // duplicates (SkewDedupSpec drives the 80 %-duplicate case).
     Q("x2b_dedup_simhash",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         // exact-dup collapse in front (r08, same defense as x2): SimHash
         // runs over DISTINCT texts only — identical texts share every
         // 16-bit chunk, so a mega-duplicate cluster would otherwise put
@@ -939,16 +928,18 @@ object DedupQueries {
         // emit exactly that (wa, wb) pair — Hamming 0, so any live band
         // must produce it; a dropped band-key column, a broken chunk
         // extraction, or a lost collapse all fail the witness.
-        val c = collapsedLsh(s, d)
-        // persisted LAZILY on purpose (r19 measured): an eager count
-        // here — meant to stop the chunk self-join's two band stages
-        // racing into the simhash kernel — regressed x2b 3.5→4.2 s
-        // across matched-calibration sweeps; the racing duplication
+        val c = collapsedLsh(pins, s, d)
+        // simReps pinned: the witness-injection branch otherwise re-runs
+        // the simhash kernel over every representative just to carry ONE
+        // row's signature (profiled: a second full 32-task kernel pass
+        // per run). Persisted lazily: an eager count here — meant to stop
+        // the chunk self-join's two band stages racing into the simhash
+        // kernel — regressed x2b 3.5→4.2 s; the racing duplication
         // overlaps on idle cores (the simhash pass over CACHED shingles
         // is only ~1 s task time), while the eager form serializes an
-        // extra job. Same one-shot-fan-in rule as x4t/x4h.
-        val simReps = c.shReps.select(col("doc_id"),
-          graft.functions.Kernels.simhash_sig(col("sh")).as("sim")).persist()
+        // extra job.
+        val simReps = pins.persist(c.shReps.select(col("doc_id"),
+          graft.functions.Kernels.simhash_sig(col("sh")).as("sim")))
         // deterministic witness group: smallest digest among duplicate
         // groups; (min, max) doc_ids form a real pair and min IS the
         // group representative (reps take the min-doc_id struct)
@@ -960,18 +951,12 @@ object DedupQueries {
         val injected = dupGroup
           .join(simReps, col("doc_id") === col("wa"))
           .select(col("wb").as("doc_id"), col("sim"))
-        // persisted (r18): consumed TWICE below (the witness semi-join
-        // and the full pair-count anchor). LAZY on purpose (r19
-        // measured): an eager count here serializes a full extra
-        // band-join pass in front of the final job, and the two
-        // consumers' concurrent cache population overlaps on idle cores
-        // — the eager variant regressed x2b 3.50→4.12 s
-        val lshPairs = simhashLshPairs(simReps.unionByName(injected))
-        // simReps pinned too (r18): the witness-injection branch otherwise
-        // re-runs the simhash kernel over every representative just to
-        // carry ONE row's signature (profiled: a second full 32-task
-        // kernel pass per run)
-        Caching.withPersistedAll(c.caches :+ simReps :+ lshPairs) {
+        // persisted: consumed TWICE below (the witness semi-join and the
+        // full pair-count anchor). Lazily: an eager count here serializes
+        // a full extra band-join pass in front of the final job, and the
+        // two consumers' concurrent cache population overlaps on idle
+        // cores — the eager variant regressed x2b 3.50→4.12 s
+        val lshPairs = pins.persist(simhashLshPairs(simReps.unionByName(injected)))
         val witnessed = lshPairs
           .join(dupGroup.select(col("wa").as("a"), col("wb").as("b")),
             Seq("a", "b"), "left_semi")
@@ -989,7 +974,6 @@ object DedupQueries {
               .as("lsh_covers_exact_dupes"),
             col("hamming_threshold"), col("n_docs_signed"))
           .localCheckpoint()
-        }
       },
       Some("SELECT true AS lsh_covers_exact_dupes, 3 AS hamming_threshold, (SELECT count(*) FROM documents) AS n_docs_signed")),
 
@@ -1084,7 +1068,8 @@ object DedupQueries {
             explode_outer(
               graft.functions.Kernels.window_md5(split(col("text"), " "), 8))
               .as("h"))
-        Caching.withPersisted(docHash) {
+        Caching.pinned { pins =>
+          pins.persist(docHash)
           val byHash = docHash.filter(col("h").isNotNull)
             .groupBy("h").agg(count(lit(1)).as("docs_with"))
           // explode_OUTER keeps sub-window docs as a null-h row, so one
@@ -1144,7 +1129,8 @@ object DedupQueries {
           .select(col("doc_id"), split(col("text"), " ").as("tok"))
         val wins = scrubWindows(docs, s.sparkContext.defaultParallelism)
         // wins feeds two consumers (hot counts + coverage join)
-        Caching.withPersisted(wins) {
+        Caching.pinned { pins =>
+          pins.persist(wins)
           scrubAgainst(docs, wins, hotWindows(wins))
             .localCheckpoint() // one row per doc; eager so the cache can go
         }
@@ -1173,15 +1159,14 @@ object DedupQueries {
     // argument as x2: at the planted-dup level j ≥ 0.97 a ≥ 2-band miss
     // has P ≈ 1e-15; background j ≤ 0.3 keeps candidates sparse).
     Q("x2h_incremental_dedup",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         // index artifacts derived inline here; ScaleBench times the same
         // verdict plan against PRECOMPUTED artifacts (see
         // [[x2hIndexArtifacts]] / [[incrementVerdictPlan]]) and asserts
         // row-set equality between the two paths
-        val (indexDigs, iBuckets, shIdx, idxCaches) = x2hIndexArtifacts(s, d)
-        val (out, caches) =
-          incrementVerdictPlan(x2hBatch(s, d), indexDigs, iBuckets, shIdx)
-        Caching.withPersistedAll(caches ++ idxCaches)(out.localCheckpoint())
+        val (indexDigs, iBuckets, shIdx) = x2hIndexArtifacts(pins, s, d)
+        incrementVerdictPlan(pins, x2hBatch(s, d), indexDigs, iBuckets, shIdx)
+          .localCheckpoint()
       },
       Some("""WITH t AS (SELECT doc_id, string_split(text,' ') w, text,
           (doc_id * 2654435761) % 100 AS bkt FROM documents),
@@ -1219,8 +1204,8 @@ object DedupQueries {
     // closure AND the argmax, so both the clustering and the selection
     // rule are gate-checked.
     Q("x2i_cluster_best",
-      (s, d) => {
-        val comp = minLabelComponents(s, d)
+      (s, d) => Caching.pinned { pins =>
+        val comp = minLabelComponents(pins, s, d)
           .select(col("doc_id"), col("label").as("component"))
         val quality = Tables.documents(s, d).select(col("doc_id"),
           size(array_distinct(split(col("text"), " "))).as("n_types"))
@@ -1231,6 +1216,7 @@ object DedupQueries {
         scored.join(best, "component")
           .select(col("doc_id"), col("component"), col("n_types"),
             col("best_doc"), (col("doc_id") === col("best_doc")).as("keep"))
+          .localCheckpoint() // one row per doc; eager so the pins can go
       },
       Some(s"""$ComponentsCte,
         q AS (SELECT doc_id, CAST(len(list_distinct(string_split(text, ' '))) AS INTEGER) AS n_types

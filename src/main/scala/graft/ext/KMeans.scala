@@ -75,17 +75,19 @@ object KMeans {
 
   /** Iterate assign/update from `init` until centroids stop moving or
     * `maxIters` rounds, whichever first. Returns (final centroids,
-    * rounds run, converged?). Each round's centroid frame is k rows —
-    * localCheckpoint truncates lineage so round N's plan does not contain
-    * rounds 1..N-1.
+    * rounds run, converged?); the centroids are a pin of `pins`. Each
+    * round's centroid frame is k rows — checkpointing truncates lineage so
+    * round N's plan does not contain rounds 1..N-1, and the previous
+    * round is released once the next is compared.
     */
-  def train(e: DataFrame, init: DataFrame, dim: Int, maxIters: Int): (DataFrame, Int, Boolean) = {
+  def train(pins: Caching.Pins, e: DataFrame, init: DataFrame, dim: Int,
+      maxIters: Int): (DataFrame, Int, Boolean) = {
     require(maxIters >= 1)
-    var cent = init.localCheckpoint()
+    var cent = pins.checkpoint(init)
     var iters = 0
     var converged = false
     while (iters < maxIters && !converged) {
-      val next = update(assign(e, cent), dim).localCheckpoint()
+      val next = pins.checkpoint(update(assign(e, cent), dim))
       // O(1) certificate: k rows joined full-outer on cid; any missing or
       // moved centroid means another round is needed
       val moved = cent.select(col("cid"), col("c").as("c_old"))
@@ -93,6 +95,7 @@ object KMeans {
         .where(col("c_old").isNull || col("c_new").isNull || col("c_old") =!= col("c_new"))
         .agg(count(lit(1)).as("n"))
         .head().getLong(0)
+      pins.release(cent)
       cent = next
       iters += 1
       converged = moved == 0L

@@ -856,39 +856,33 @@ object Multimodal {
     * so MultimodalSpec can prove it set-equal to the naive all-doc
     * [[phashPairs]] on a corpus WITH dup groups (the fixture has none, so
     * the registered oracle alone could not catch a reassembly-join bug).
-    * `membership` rides a Caching.withPersisted (consumed by repOf, the
-    * cliques and both expansion sides); the band frame is persisted too
-    * (phashPairs reads it three times with differing projections that
-    * defeat exchange reuse).
+    * `membership` is pinned (consumed by repOf, the cliques and both
+    * expansion sides); the band frame is pinned too (phashPairs reads it
+    * three times with differing projections that defeat exchange reuse).
     */
   private[graft] def phashDedupPlan(media: DataFrame,
-      maxHamming: Int = 3): DataFrame = {
+      maxHamming: Int = 3): DataFrame = Caching.pinned { pins =>
     val withDig = media.select(col("doc_id"), col("payload"),
       md5(col("payload")).as("dig"))
-    val membership = withDig.select(col("dig"), col("doc_id"))
-    Caching.withPersisted(membership) {
-      val repOf = membership.groupBy("dig").agg(min(col("doc_id")).as("rep"))
-      val reps = withDig.join(repOf, withDig("doc_id") === repOf("rep"))
-        .select(col("rep").as("doc_id"), col("payload"))
-      val hb = aHashBands(reps)
-      Caching.withPersisted(hb) {
-        val repPairs = phashPairs(hb, maxHamming)
-        // within-group cliques: identical payload ⇒ Hamming 0
-        val internal = membership.as("x").join(membership.as("y"), "dig")
-          .where(col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
-            lit(0).cast(IntegerType).as("hamming"))
-        // cross-group near pairs: every member inherits its rep's hash
-        val mRep = membership.join(repOf, "dig")
-          .select(col("rep"), col("doc_id"))
-        val cross = repPairs
-          .join(mRep.select(col("rep").as("a"), col("doc_id").as("ma")), "a")
-          .join(mRep.select(col("rep").as("b"), col("doc_id").as("mb")), "b")
-          .select(least(col("ma"), col("mb")).as("a"),
-            greatest(col("ma"), col("mb")).as("b"), col("hamming"))
-        internal.unionByName(cross).localCheckpoint()
-      }
-    }
+    val membership = pins.persist(withDig.select(col("dig"), col("doc_id")))
+    val repOf = membership.groupBy("dig").agg(min(col("doc_id")).as("rep"))
+    val reps = withDig.join(repOf, withDig("doc_id") === repOf("rep"))
+      .select(col("rep").as("doc_id"), col("payload"))
+    val repPairs = phashPairs(pins.persist(aHashBands(reps)), maxHamming)
+    // within-group cliques: identical payload ⇒ Hamming 0
+    val internal = membership.as("x").join(membership.as("y"), "dig")
+      .where(col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
+        lit(0).cast(IntegerType).as("hamming"))
+    // cross-group near pairs: every member inherits its rep's hash
+    val mRep = membership.join(repOf, "dig")
+      .select(col("rep"), col("doc_id"))
+    val cross = repPairs
+      .join(mRep.select(col("rep").as("a"), col("doc_id").as("ma")), "a")
+      .join(mRep.select(col("rep").as("b"), col("doc_id").as("mb")), "b")
+      .select(least(col("ma"), col("mb")).as("a"),
+        greatest(col("ma"), col("mb")).as("b"), col("hamming"))
+    internal.unionByName(cross).localCheckpoint()
   }
 
   /** The x5g pair plan over an aHash band frame: pigeonhole band-key

@@ -53,11 +53,11 @@ object PipelineQueries {
     // a broadcast of the (tiny) per-partition offsets — identical result,
     // every stage parallel.
     Q("x6b_pack",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         // deterministic interpolated buckets (r14 review — see
         // [[RangeBuckets]]): this frame feeds the offset table AND the
         // join side; sampled range boundaries could diverge between them
-        val toks = RangeBuckets.longKey(Tables.documents(s, d)
+        val toks = RangeBuckets.longKey(pins, Tables.documents(s, d)
           .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok")),
           "doc_id", 8)
         val wOff = Window.orderBy(col("pid"))
@@ -73,6 +73,7 @@ object PipelineQueries {
           .groupBy("pack_id")
           .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("pack_tokens"))
           .filter(col("pack_id") < 10)
+          .localCheckpoint() // ≤ 10 rows; eager so the pin can go
       },
       Some("""SELECT pack_id, count(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS pack_tokens FROM (
           SELECT doc_id, n_tok,
@@ -204,12 +205,12 @@ object PipelineQueries {
     // result is partition-count-invariant — sampling-dependent range
     // BOUNDARIES cannot change any cum value.
     Q("x6g_shard_pack",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         val budget = 10000L
         // deterministic interpolated buckets (r14 review — see
         // [[RangeBuckets]]); order-preserving, so the composition is
         // still partition-count- AND boundary-invariant
-        val parts = RangeBuckets.longKey(Tables.documents(s, d)
+        val parts = RangeBuckets.longKey(pins, Tables.documents(s, d)
           .select(col("doc_id"), col("n_chars").cast(LongType).as("sz")),
           "doc_id", 8)
         val local = parts.withColumn("local_cum",
@@ -227,6 +228,7 @@ object PipelineQueries {
           .groupBy(col("shard_id"))
           .agg(count(lit(1)).as("n_docs"), sum(col("sz")).as("shard_bytes"),
             min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
+          .localCheckpoint() // one row per shard; eager so the pin can go
       },
       Some("""SELECT CAST((cum - sz) // 10000 AS BIGINT) AS shard_id, count(*) AS n_docs,
           CAST(SUM(sz) AS BIGINT) AS shard_bytes,
@@ -451,67 +453,59 @@ object PipelineQueries {
     // membership witness: the oracle match pins the exact ASSIGNMENT,
     // not just the per-split counts.
     Q("x6m_stratified_split",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         val seed = "graft-split-7:"
         val docs = Tables.documents(s, d).select(col("doc_id"), col("lang"),
           col("source"),
           md5(concat(lit(seed), col("doc_id").cast(StringType))).as("h"))
         val parts = docs.repartitionByRange(16, col("lang"), col("source"), col("h"))
           .withColumn("pid", spark_partition_id())
-        // the ranked frame is localCheckpoint-PINNED (ADVICE r11): the
-        // offset table and the final join must read the SAME
-        // range-partitioning instance, and the previous guarantee —
-        // ReuseExchange evaluating the repartitionByRange shuffle once
-        // across both subplans — is an optimizer behavior, not an API
-        // contract (a Spark upgrade or AQE change could silently split it
-        // into two reservoir-sampled shuffles with different boundaries =
-        // duplicated/skipped ranks). localCheckpoint materializes the
-        // (pid, lrn) assignment once and TRUNCATES LINEAGE, so a lost
-        // partition fails loudly instead of recomputing under fresh
-        // sampled boundaries — which is also why plain persist() was
-        // rejected in r11: an evicted cached partition silently re-runs
-        // the nondeterministic shuffle. 100 TB posture: one corpus-sized
-        // materialization on executors, the standard barrier for pinning
-        // a nondeterministic partitioning.
-        // the pin is scoped (r13, ADVICE r12): withLocalCheckpointed
-        // releases the corpus-sized checkpoint blocks once the S×3-row
-        // manifest below is materialized — a long registry sweep no
-        // longer accumulates pinned storage until RDD GC
-        Caching.withLocalCheckpointed(
-          parts.withColumn("lrn", row_number().over(
-            Window.partitionBy(col("pid"), col("lang"), col("source"))
-              .orderBy(col("h"), col("doc_id"))))) { case Seq(local) =>
-          // per-(partition, stratum) counts feed BOTH the offset table and
-          // the stratum sizes (review r11: a separate groupBy over `docs`
-          // was a third full corpus scan for numbers this P×S-row frame
-          // already holds). localCheckpoint-pinned (r12 plan audit): the
-          // offset and size branches otherwise each re-aggregate the
-          // checkpointed corpus — two corpus-wide passes for a P×S-row
-          // frame; safe to pin now that `local` itself is pinned (the r11
-          // caution about caching between the offset table and the local
-          // ranks applied to the UNPINNED nondeterministic shuffle).
-          Caching.withLocalCheckpointed(
-            local.groupBy("pid", "lang", "source")
-              .agg(count(lit(1)).as("n"))) { case Seq(counts) =>
-            val offs = counts
-              .withColumn("offset", coalesce(sum(col("n")).over(
-                Window.partitionBy(col("lang"), col("source")).orderBy(col("pid"))
-                  .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-              .select(col("pid"), col("lang"), col("source"), col("offset"))
-            val sizes = counts.groupBy("lang", "source")
-              .agg(sum(col("n")).as("n_stratum"))
-            local.join(broadcast(offs), Seq("pid", "lang", "source"))
-              .withColumn("rk", col("offset") + col("lrn"))
-              .join(broadcast(sizes), Seq("lang", "source"))
-              .withColumn("vq", expr("(n_stratum + 9) DIV 10"))
-              .withColumn("split", when(col("rk") <= col("vq"), "val")
-                .when(col("rk") <= col("vq") * 2, "test")
-                .otherwise("train"))
-              .groupBy("lang", "source", "split")
-              .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"))
-              .localCheckpoint() // S×3 rows, materialized before release
-          }
-        }
+        // the ranked frame is checkpoint-PINNED: the offset table and the
+        // final join must read the SAME range-partitioning instance, and
+        // the previous guarantee — ReuseExchange evaluating the
+        // repartitionByRange shuffle once across both subplans — is an
+        // optimizer behavior, not an API contract (a Spark upgrade or AQE
+        // change could silently split it into two reservoir-sampled
+        // shuffles with different boundaries = duplicated/skipped ranks).
+        // The checkpoint materializes the (pid, lrn) assignment once and
+        // TRUNCATES LINEAGE, so a lost partition fails loudly instead of
+        // recomputing under fresh sampled boundaries — which is also why
+        // plain persist() was rejected: an evicted cached partition
+        // silently re-runs the nondeterministic shuffle. 100 TB posture:
+        // one corpus-sized materialization on executors, the standard
+        // barrier for pinning a nondeterministic partitioning. The scope
+        // releases the corpus-sized blocks once the S×3-row manifest below
+        // is materialized.
+        val local = pins.checkpoint(parts.withColumn("lrn", row_number().over(
+          Window.partitionBy(col("pid"), col("lang"), col("source"))
+            .orderBy(col("h"), col("doc_id")))))
+        // per-(partition, stratum) counts feed BOTH the offset table and
+        // the stratum sizes (a separate groupBy over `docs` was a third
+        // full corpus scan for numbers this P×S-row frame already holds).
+        // Pinned: the offset and size branches otherwise each
+        // re-aggregate the checkpointed corpus — two corpus-wide passes
+        // for a P×S-row frame; safe to pin because `local` itself is
+        // pinned (caching between the offset table and the local ranks is
+        // unsafe only over the UNPINNED nondeterministic shuffle).
+        val counts = pins.checkpoint(local.groupBy("pid", "lang", "source")
+          .agg(count(lit(1)).as("n")))
+        val offs = counts
+          .withColumn("offset", coalesce(sum(col("n")).over(
+            Window.partitionBy(col("lang"), col("source")).orderBy(col("pid"))
+              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+          .select(col("pid"), col("lang"), col("source"), col("offset"))
+        val sizes = counts.groupBy("lang", "source")
+          .agg(sum(col("n")).as("n_stratum"))
+        local.join(broadcast(offs), Seq("pid", "lang", "source"))
+          .withColumn("rk", col("offset") + col("lrn"))
+          .join(broadcast(sizes), Seq("lang", "source"))
+          .withColumn("vq", expr("(n_stratum + 9) DIV 10"))
+          .withColumn("split", when(col("rk") <= col("vq"), "val")
+            .when(col("rk") <= col("vq") * 2, "test")
+            .otherwise("train"))
+          .groupBy("lang", "source", "split")
+          .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"))
+          .localCheckpoint() // S×3 rows, materialized before release
       },
       Some("""WITH docs AS (SELECT doc_id, lang, source,
           md5('graft-split-7:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
@@ -555,25 +549,23 @@ object PipelineQueries {
     // membership witness: the oracle pins the exact sampled SET, not
     // just per-source counts.
     Q("x6n_temperature_mix",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         val seed = "graft-mix-11:"
         val docs = Tables.documents(s, d).select(col("doc_id"), col("source"),
           md5(concat(lit(seed), col("doc_id").cast(StringType))).as("h"))
         val parts = docs.repartitionByRange(16, col("source"), col("h"))
           .withColumn("pid", spark_partition_id())
-        // pin scoped as in x6m (r13, ADVICE r12): released after the
-        // |sources|-row manifest materializes
-        Caching.withLocalCheckpointed(
-          parts.withColumn("lrn", row_number().over(
-            Window.partitionBy(col("pid"), col("source"))
-              .orderBy(col("h"), col("doc_id"))))) { case Seq(local) =>
-        // P×S rows, localCheckpoint-pinned: offsets, per-source totals,
-        // weights, and quotas all derive from this tiny frame — without
-        // the pin each branch re-aggregates the checkpointed corpus (the
-        // r12 plan audit counted four corpus-wide passes)
-        Caching.withLocalCheckpointed(
-          local.groupBy("pid", "source")
-            .agg(count(lit(1)).as("n"))) { case Seq(counts) =>
+        // pinned as in x6m: released after the |sources|-row manifest
+        // materializes
+        val local = pins.checkpoint(parts.withColumn("lrn", row_number().over(
+          Window.partitionBy(col("pid"), col("source"))
+            .orderBy(col("h"), col("doc_id")))))
+        // P×S rows, pinned: offsets, per-source totals, weights, and
+        // quotas all derive from this tiny frame — without the pin each
+        // branch re-aggregates the checkpointed corpus (four corpus-wide
+        // passes)
+        val counts = pins.checkpoint(local.groupBy("pid", "source")
+          .agg(count(lit(1)).as("n")))
         val offs = counts
           .withColumn("offset", coalesce(sum(col("n")).over(
             Window.partitionBy(col("source")).orderBy(col("pid"))
@@ -626,7 +618,6 @@ object PipelineQueries {
             coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
             coalesce(col("sum_doc_id"), lit(0L)).as("sum_doc_id"))
           .localCheckpoint() // |sources| rows, materialized before release
-        }}
       },
       Some("""WITH docs AS (SELECT doc_id, source,
           md5('graft-mix-11:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
@@ -659,14 +650,14 @@ object PipelineQueries {
         FROM q LEFT JOIN sel ON sel.source = q.source
         GROUP BY q.source, q.n_source, q.weight, q.quota""".stripMargin)),
 
-    // X10 (r10, VERDICT r09 #8): the END-TO-END training-data pipeline as
-    // ONE composed lineage — exact dedup → verbatim-8-gram decontamination
-    // → quality filter → token-budget packing → byte-budget sharding —
-    // proving the operators COMPOSE: one pass over the corpus, the
-    // distributed two-budget prefix sum shared by pack and shard, cache
-    // hygiene via Caching.withPersistedAll (RegistrySpec's zero-leak audit
-    // covers this query like every other), and a DuckDB FULL-REPLAY oracle
-    // that re-derives every stage from scratch.
+    // X10: the END-TO-END training-data pipeline as ONE composed lineage
+    // — exact dedup → verbatim-8-gram decontamination → quality filter →
+    // token-budget packing → byte-budget sharding — proving the operators
+    // COMPOSE: one pass over the corpus, the distributed two-budget prefix
+    // sum shared by pack and shard, pin hygiene via Caching.pinned
+    // (RegistrySpec's leak audit covers this query like every other), and
+    // a DuckDB FULL-REPLAY oracle that re-derives every stage from
+    // scratch.
     //
     // Stage semantics (each inherits its standalone query's contract):
     //   1. x1-style exact dedup — one representative (min doc_id) per
@@ -681,10 +672,7 @@ object PipelineQueries {
     //      ONE distributed prefix-sum pass (range partition + P-row
     //      offset broadcast — never a global single-task window).
     Q("x10_pipeline_e2e",
-      (s, d) => {
-        val (out, caches) = pipelineE2ePlan(s, d)
-        Caching.withPersistedAll(caches)(out.localCheckpoint())
-      },
+      (s, d) => Caching.pinned(pins => pipelineE2ePlan(pins, s, d).localCheckpoint()),
       Some(x10OracleSql)),
 
     // X10b (r10 session 2): INCREMENTAL corpus rebuild — the composition a
@@ -701,7 +689,7 @@ object PipelineQueries {
     // brute-force jaccard from scratch, so both stages AND their
     // composition are hash-gated.
     Q("x10b_incremental_rebuild",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         val docs = Tables.documents(s, d)
           .repartition(s.sparkContext.defaultParallelism)
         val newS = docs.select(col("doc_id"), col("text"),
@@ -720,17 +708,15 @@ object PipelineQueries {
               .otherwise("unchanged").as("change_type"))
         val batch = classified.filter(col("change_type") =!= "unchanged")
           .select("doc_id", "text", "dig")
-        val (indexDigs, iBuckets, shIdx, idxCaches) =
-          DedupQueries.indexArtifactsFrom(
+        val (indexDigs, iBuckets, shIdx) =
+          DedupQueries.indexArtifactsFrom(pins,
             classified.filter(col("change_type") === "unchanged")
               .select("doc_id", "text", "dig"))
-        val (verdicts, caches) =
-          DedupQueries.incrementVerdictPlan(batch, indexDigs, iBuckets, shIdx)
-        val out = verdicts
+        DedupQueries.incrementVerdictPlan(pins, batch, indexDigs, iBuckets, shIdx)
           .join(classified.select("doc_id", "change_type"), "doc_id")
           .select(col("doc_id"), col("change_type"),
             col("dup_of_index"), col("dup_in_batch"), col("verdict"))
-        Caching.withPersistedAll(caches ++ idxCaches)(out.localCheckpoint())
+          .localCheckpoint()
       },
       Some("""WITH t AS (SELECT doc_id, text, md5(text) AS dig,
             string_split(text, ' ') AS w FROM documents),
@@ -793,31 +779,32 @@ object PipelineQueries {
       .withColumn("epoch_shard", expr("(shuffle_rank - 1) DIV 64"))
   }
 
-  /** The x10 LAZY plan plus its persisted caches, package-private so
-    * PlanSpec can audit the real join shapes (the registered query returns
-    * an eager localCheckpoint whose physical plan is just the checkpoint
-    * scan) — same convention as `minhashPairsPlan` / `embedLshPairsPlan`.
+  /** The x10 LAZY plan over frames pinned in the caller's `pins`,
+    * package-private so PlanSpec can audit the real join shapes (the
+    * registered query returns an eager localCheckpoint whose physical plan
+    * is just the checkpoint scan) — same convention as `minhashPairsPlan`
+    * / `embedLshPairsPlan`.
     */
-  private[graft] def pipelineE2ePlan(s: org.apache.spark.sql.SparkSession,
-      d: String): (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame]) = {
+  private[graft] def pipelineE2ePlan(pins: Caching.Pins,
+      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
         val docs = Tables.documents(s, d)
         val reps = docs
           .groupBy(md5(col("text")).as("dig"))
           .agg(min(struct(col("doc_id"), col("text"), col("n_chars"))).as("r"))
           .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"),
             col("r.n_chars").as("n_chars"))
-        val surv = reps
+        // read by grams AND the clean-side anti-join
+        val surv = pins.persist(reps
           .withColumn("bucket", splitBucket)
           .withColumn("w", split(col("text"), " "))
           .select(col("doc_id"), col("bucket"), col("w"),
-            col("n_chars").cast(LongType).as("sz"))
-          .persist() // read by grams AND the clean-side anti-join
+            col("n_chars").cast(LongType).as("sz")))
         // gram identity = window_md5 digest, the x7 design (distinct
         // strings => distinct digests; only membership leaves the stage)
-        val grams = surv.where(size(col("w")) >= 8)
+        // (read by the eval side AND the train probe)
+        val grams = pins.persist(surv.where(size(col("w")) >= 8)
           .select(col("doc_id"), col("bucket"),
-            explode(graft.functions.Kernels.window_md5(col("w"), 8)).as("gram"))
-          .persist() // read by the eval side AND the train probe
+            explode(graft.functions.Kernels.window_md5(col("w"), 8)).as("gram")))
         val evalG = grams.where(col("bucket") >= 90).select("gram").distinct()
         val contaminated = grams.where(col("bucket") < 80)
           .join(broadcast(evalG), Seq("gram"))
@@ -830,7 +817,7 @@ object PipelineQueries {
         // deterministic interpolated buckets (r14 review — see
         // [[RangeBuckets]]): this frame feeds the offset table AND the
         // join side; sampled boundaries could diverge between them
-        val parts = RangeBuckets.longKey(quality, "doc_id", 8)
+        val parts = RangeBuckets.longKey(pins, quality, "doc_id", 8)
         val wLocal = Window.partitionBy(col("pid")).orderBy(col("doc_id"))
         val local = parts
           .withColumn("ltok", sum(col("n_tok")).over(wLocal))
@@ -842,7 +829,7 @@ object PipelineQueries {
           .withColumn("otok", coalesce(sum(col("ptok")).over(wOff), lit(0L)))
           .withColumn("osz", coalesce(sum(col("psz")).over(wOff), lit(0L)))
           .select("pid", "otok", "osz") // <= #partitions rows
-        val out = local.join(broadcast(offsets), Seq("pid"))
+        local.join(broadcast(offsets), Seq("pid"))
           .withColumn("cumtok", col("ltok") + col("otok"))
           .withColumn("cumsz", col("lsz") + col("osz"))
           .withColumn("pack_id",
@@ -855,7 +842,6 @@ object PipelineQueries {
             sum(col("sz")).as("shard_bytes"),
             min(col("doc_id")).as("first_doc"),
             max(col("doc_id")).as("last_doc"))
-        (out, Seq(surv, grams))
   }
 
   private def x10OracleSql: String =

@@ -38,18 +38,16 @@ object RangeBuckets {
     * Cost shape is unchanged versus repartitionByRange, whose reservoir
     * sampler also ran one extra pass over the child.
     */
-  def longKey(df: DataFrame, key: String, n: Int): DataFrame = {
-    // Pin ONCE (r15 — the x2j/x10 bench-drift chase, VERDICT r14 #6):
-    // this helper's min/max action evaluates the caller's child, and
-    // every caller consumes the bucketed frame at least twice more
-    // (offset table + join side) — in x10 that child is the whole
-    // dedup→decontam→quality chain, re-run per consumer. The frames
-    // bucketed here are key-count-sized prefix-sum inputs (doc counts,
-    // not the corpus), and checkpoint blocks are the ContextCleaner-
-    // reclaimed class the registry's leak audit permits. The pin also
-    // makes the two-consumers-can't-disagree property STRUCTURAL rather
-    // than relying on the interpolation being a pure function.
-    val pinned = df.localCheckpoint()
+  def longKey(pins: Caching.Pins, df: DataFrame, key: String, n: Int): DataFrame = {
+    // Pin ONCE, in the caller's scope: this helper's min/max action
+    // evaluates the caller's child, and every caller consumes the
+    // bucketed frame at least twice more (offset table + join side) — in
+    // x10 that child is the whole dedup→decontam→quality chain, re-run
+    // per consumer. The frames bucketed here are key-count-sized
+    // prefix-sum inputs (doc counts, not the corpus). The pin also makes
+    // the two-consumers-can't-disagree property STRUCTURAL rather than
+    // relying on the interpolation being a pure function.
+    val pinned = pins.checkpoint(df)
     val r = pinned.agg(min(col(key)), max(col(key))).head()
     if (r.isNullAt(0)) return pinned.withColumn("pid", lit(0))
     val (lo, hi) = (r.getLong(0), r.getLong(1))

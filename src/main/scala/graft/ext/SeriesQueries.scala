@@ -129,18 +129,15 @@ object SeriesQueries {
     * frame; shared by the registration and the spec.
     */
   private[graft] def seriesKnn(sf0: DataFrame): DataFrame =
-    // pin the series frame ONCE (r18, guide §1/§5): this plan consumes it
-    // six times (query-id collect, PAA shortlist, z join-back, exact truth
-    // set), and each consumer otherwise re-executes the whole upstream
+    // pin the series frame ONCE: this plan consumes it six times
+    // (query-id collect, PAA shortlist, z join-back, exact truth set),
+    // and each consumer otherwise re-executes the whole upstream
     // pipeline — for q52p/q52r that is the drained memory sink + the
     // latest-emission window per consumer (profiled: ~1.2 s of the q52p
-    // post-drain tail was exactly these re-executions). Routed through
-    // Caching's checkpoint lifecycle (r19, ADVICE r18): the result is
+    // post-drain tail was exactly these re-executions). The result is
     // K-row and eagerly pinned, so the |users|-row series blocks release
     // on return instead of accumulating until RDD GC.
-    Caching.withLocalCheckpointed(sf0) { case Seq(sf) =>
-      seriesKnnOver(sf).localCheckpoint()
-    }
+    Caching.pinned(pins => seriesKnnOver(pins.checkpoint(sf0)).localCheckpoint())
 
   /** The lazy kNN plan over an already-pinned series frame — exposed so
     * PlanSpec can audit the join/broadcast shape (the registered query's
@@ -284,11 +281,9 @@ object SeriesQueries {
     * against the all-candidate DTW truth set.
     */
   private[ext] def dtwKnn(sf0: DataFrame): DataFrame =
-    // same six-consumer pin as seriesKnn, same r19 lifecycle: release the
-    // series blocks once the K-row result is pinned
-    Caching.withLocalCheckpointed(sf0) { case Seq(sf) =>
-      dtwKnnOver(sf).localCheckpoint()
-    }
+    // same six-consumer pin as seriesKnn: release the series blocks
+    // once the K-row result is pinned
+    Caching.pinned(pins => dtwKnnOver(pins.checkpoint(sf0)).localCheckpoint())
 
   private def dtwKnnOver(sf: DataFrame): DataFrame = {
     val q = querySide(sf)

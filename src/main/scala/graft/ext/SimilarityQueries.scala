@@ -213,15 +213,14 @@ object SimilarityQueries {
       WHERE ${sqlQcos("ea.qe", "eb.qe")} >= 0.4"""
   }
 
-  /** The x2e LAZY plan and its caches, package-private so PlanSpec can
-    * audit the real join shapes (the registered query returns an eager
-    * localCheckpoint whose physical plan is just the checkpoint scan).
-    * See the x2e registration scaladoc for the signature-collapse design.
+  /** The x2e LAZY plan over frames pinned in the caller's `pins`,
+    * package-private so PlanSpec can audit the real join shapes (the
+    * registered query returns an eager localCheckpoint whose physical
+    * plan is just the checkpoint scan). See the x2e registration
+    * scaladoc for the signature-collapse design.
     */
-  private[graft] def embedLshPairsPlan(s: SparkSession, d: String): (DataFrame, Seq[DataFrame]) = {
-    val (out, _, caches) = embedLshPairsPlanFull(s, d)
-    (out, caches)
-  }
+  private[graft] def embedLshPairsPlan(pins: Caching.Pins, s: SparkSession,
+      d: String): DataFrame = embedLshPairsPlanFull(pins, s, d)._1
 
   /** [[embedLshPairsPlan]] plus the VERIFY-STAGE candidate frame (distinct-
     * vector pairs entering the cosine check, before the τ filter) — the
@@ -229,8 +228,8 @@ object SimilarityQueries {
     * its count at 30× so a real candidate-set regression is
     * distinguishable from box/sweep timing noise.
     */
-  private[graft] def embedLshPairsPlanFull(s: SparkSession, d: String)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
+  private[graft] def embedLshPairsPlanFull(pins: Caching.Pins, s: SparkSession,
+      d: String): (DataFrame, DataFrame) = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), quant(col("embedding")).as("qe"))
     // EXACT-DUP COLLAPSE on the distinct QUANTIZED VECTOR (r10, VERDICT
     // r09 #4 — the same defense x2 applies to identical texts): cos is a
@@ -248,11 +247,8 @@ object SimilarityQueries {
     // (not xxhash64) for the same birthday-collision bound as x2/x1.
     val keyed = e.select(col("vec_id"), col("qe"),
       md5(col("qe").cast("string")).as("vkey"))
-    val membership = keyed.select(col("vkey"), col("vec_id")).persist()
-    // EAGER pin (r19, Caching.eager): the band SELF-join below reads this
-    // from both stages at once — a lazy persist runs the 64-plane
-    // signature kernel ~twice inside that job
-    val vecs = Caching.eager(keyed.groupBy(col("vkey"))
+    val membership = pins.persist(keyed.select(col("vkey"), col("vec_id")))
+    val vecs = pins.persist(keyed.groupBy(col("vkey"))
       .agg(min(struct(col("vec_id"), col("qe"))).as("r"))
       .select(col("vkey"), col("r.qe").as("qe"))
       .select(col("vkey"), col("qe"), lshSigStruct(col("qe")).as("sig")))
@@ -316,7 +312,7 @@ object SimilarityQueries {
       .where(col("m1.vec_id") < col("m2.vec_id"))
       .select(col("m1.vec_id").as("a"), col("m2.vec_id").as("b"), col("cos"))
     val out = crossMembers.unionByName(intraMembers)
-    (out, scoredCandidates, Seq(membership, vecs))
+    (out, scoredCandidates)
   }
 
   /** The quantized corpus frame `(vec_id, qe, label)` every x3 operator
@@ -827,73 +823,68 @@ object SimilarityQueries {
     * registration scaladoc for the full design.
     */
   private[graft] def semanticDedupPlan(s: SparkSession, d: String,
-      trainRounds: Int): DataFrame = {
+      trainRounds: Int): DataFrame = Caching.pinned { pins =>
     val tau = 0.4
     val e = quantFrame(s, d)
-    val reps = e.groupBy(col("qe")).agg(min(col("vec_id")).as("rep_id"))
-    Caching.withPersistedAll(Seq(reps)) {
-      // k GROWS WITH THE CORPUS — the SemDeDup device that keeps the
-      // within-cluster quadratic bounded: k = max(8, ⌈distinct/256⌉)
-      // caps the mean cluster at ~256 reps, so the pair stage reads
-      // O(distinct · 256), linear in the corpus, not distinct². The
-      // distinct count is a driver-side O(1) scalar certificate (the
-      // bucketedPair/fixed-point pattern) read off the PERSISTED rep
-      // frame — one corpus shuffle on qe serves both the count and the
-      // assignment below (r13: the second distinct() shuffle of the same
-      // corpus folded away, VERDICT r12 #4). The oracle replays the SAME
-      // rule over count(DISTINCT qe). Measured at the 30× gate: fixed
-      // k=8 over the 60k-distinct scaled corpus ran 225M pairs in 9.7 s
-      // (ratio 14.5); the rule picks k=236 there and holds the pair set
-      // at ~5M.
-      val k = math.max(8L, (reps.count() + 255L) / 256L)
-      val init = e.filter(col("vec_id") < k)
-        .select(col("vec_id").cast(IntegerType).as("cid"), col("qe").as("c"))
-      // r13 (VERDICT r12 #3): TRAINED coarse centroids — `trainRounds`
-      // k-means rounds (assign → update, [[KMeans.train]]) over the
-      // collapsed REP set replace the seed-centroid fixture
-      // simplification. Training is 2 broadcast-argmin passes + 2
-      // map-side-combined elementwise-sum updates over reps — the same
-      // shape as the assignment itself, never touching the full corpus —
-      // and the oracle unrolls the identical rounds in SQL (the x3e
-      // device), so every trained centroid element (round(avg) over
-      // exact integer sums) is bit-checked.
-      val cent =
-        if (trainRounds == 0) init
-        else KMeans.train(reps.select(col("rep_id").as("vec_id"), col("qe")),
-          init, dim = 64, maxIters = trainRounds)._1
-      // broadcast-argmin assignment = KMeans.assign (ONE definition of
-      // the strip-vector-then-rejoin device — see its scaladoc for why
-      // the 512-byte vector must not ride the min(struct) SortAggregate:
-      // the 6.5 GB spill this query hit at its 30× gate)
-      val asg = KMeans.assign(
-          reps.select(col("rep_id").as("vec_id"), col("qe")), cent)
-        .select(col("vec_id").as("rep_id"), col("qe"),
-          col("cluster"), col("d2"))
-      Caching.withPersistedAll(Seq(asg)) {
-        val o = asg.select(col("rep_id").as("o_id"), col("qe").as("o_qe"),
-          col("cluster").as("o_cl"), col("d2").as("o_d2"))
-        // τ-neighbor with better centroid priority ⇒ pruned (semi: the
-        // witness's identity doesn't matter, only its existence)
-        val pruned = asg.join(o,
-            col("cluster") === col("o_cl") && col("rep_id") =!= col("o_id") &&
-              qcos(col("qe"), col("o_qe")) >= tau &&
-              (col("o_d2") < col("d2") ||
-                (col("o_d2") === col("d2") && col("o_id") < col("rep_id"))),
-            "left_semi")
-          .select(col("rep_id"), lit(true).as("is_pruned"))
-        val repV = asg.join(pruned, Seq("rep_id"), "left")
-          .select(col("qe"), col("rep_id"), col("cluster"),
-            coalesce(col("is_pruned"), lit(false)).as("is_pruned"))
-        e.select(col("vec_id"), col("qe"))
-          .join(repV, Seq("qe"))
-          .select(col("vec_id"), col("cluster"), col("rep_id"),
-            (col("vec_id") === col("rep_id") && !col("is_pruned")).as("keep"),
-            when(col("vec_id") =!= col("rep_id"), "exact_dup")
-              .when(col("is_pruned"), "semantic_dup")
-              .otherwise("kept").as("reason"))
-          .localCheckpoint() // corpus-sized result; release the rep cache
-      }
-    }
+    val reps = pins.persist(e.groupBy(col("qe")).agg(min(col("vec_id")).as("rep_id")))
+    // k GROWS WITH THE CORPUS — the SemDeDup device that keeps the
+    // within-cluster quadratic bounded: k = max(8, ⌈distinct/256⌉)
+    // caps the mean cluster at ~256 reps, so the pair stage reads
+    // O(distinct · 256), linear in the corpus, not distinct². The
+    // distinct count is a driver-side O(1) scalar certificate (the
+    // bucketedPair/fixed-point pattern) read off the PERSISTED rep
+    // frame — one corpus shuffle on qe serves both the count and the
+    // assignment below. The oracle replays the SAME rule over
+    // count(DISTINCT qe). Measured at the 30× gate: fixed
+    // k=8 over the 60k-distinct scaled corpus ran 225M pairs in 9.7 s
+    // (ratio 14.5); the rule picks k=236 there and holds the pair set
+    // at ~5M.
+    val k = math.max(8L, (reps.count() + 255L) / 256L)
+    val init = e.filter(col("vec_id") < k)
+      .select(col("vec_id").cast(IntegerType).as("cid"), col("qe").as("c"))
+    // TRAINED coarse centroids — `trainRounds`
+    // k-means rounds (assign → update, [[KMeans.train]]) over the
+    // collapsed REP set replace the seed-centroid fixture
+    // simplification. Training is 2 broadcast-argmin passes + 2
+    // map-side-combined elementwise-sum updates over reps — the same
+    // shape as the assignment itself, never touching the full corpus —
+    // and the oracle unrolls the identical rounds in SQL (the x3e
+    // device), so every trained centroid element (round(avg) over
+    // exact integer sums) is bit-checked.
+    val cent =
+      if (trainRounds == 0) init
+      else KMeans.train(pins, reps.select(col("rep_id").as("vec_id"), col("qe")),
+        init, dim = 64, maxIters = trainRounds)._1
+    // broadcast-argmin assignment = KMeans.assign (ONE definition of
+    // the strip-vector-then-rejoin device — see its scaladoc for why
+    // the 512-byte vector must not ride the min(struct) SortAggregate:
+    // the 6.5 GB spill this query hit at its 30× gate)
+    val asg = pins.persist(KMeans.assign(
+        reps.select(col("rep_id").as("vec_id"), col("qe")), cent)
+      .select(col("vec_id").as("rep_id"), col("qe"),
+        col("cluster"), col("d2")))
+    val o = asg.select(col("rep_id").as("o_id"), col("qe").as("o_qe"),
+      col("cluster").as("o_cl"), col("d2").as("o_d2"))
+    // τ-neighbor with better centroid priority ⇒ pruned (semi: the
+    // witness's identity doesn't matter, only its existence)
+    val pruned = asg.join(o,
+        col("cluster") === col("o_cl") && col("rep_id") =!= col("o_id") &&
+          qcos(col("qe"), col("o_qe")) >= tau &&
+          (col("o_d2") < col("d2") ||
+            (col("o_d2") === col("d2") && col("o_id") < col("rep_id"))),
+        "left_semi")
+      .select(col("rep_id"), lit(true).as("is_pruned"))
+    val repV = asg.join(pruned, Seq("rep_id"), "left")
+      .select(col("qe"), col("rep_id"), col("cluster"),
+        coalesce(col("is_pruned"), lit(false)).as("is_pruned"))
+    e.select(col("vec_id"), col("qe"))
+      .join(repV, Seq("qe"))
+      .select(col("vec_id"), col("cluster"), col("rep_id"),
+        (col("vec_id") === col("rep_id") && !col("is_pruned")).as("keep"),
+        when(col("vec_id") =!= col("rep_id"), "exact_dup")
+          .when(col("is_pruned"), "semantic_dup")
+          .otherwise("kept").as("reason"))
+      .localCheckpoint() // corpus-sized result; release the rep cache
   }
 
   private def pqApproxScored(s: SparkSession, d: String): DataFrame = {
@@ -1180,10 +1171,7 @@ object SimilarityQueries {
     // plan — the 8-bit bands trade fixture-boundary recall for the
     // O(n) candidate bound that survives 100×.
     Q("x2e_dedup_embed",
-      (s, d) => {
-        val (out, caches) = embedLshPairsPlan(s, d)
-        Caching.withPersistedAll(caches)(out.localCheckpoint())
-      },
+      (s, d) => Caching.pinned(pins => embedLshPairsPlan(pins, s, d).localCheckpoint()),
       Some(x2eOracleSql)),
 
     // X2j (r12): SEMANTIC dedup — the cluster-then-prune shape of SemDeDup
@@ -1307,7 +1295,8 @@ object SimilarityQueries {
         // without it the whole probe/scan subplan runs twice (r01 bench)
         val ivfTop = cand.withColumn("rank", row_number().over(wk)).filter(col("rank") <= 10)
           .select(col("q_id"), col("c_id"))
-        Caching.withPersisted(ivfTop) {
+        Caching.pinned { pins =>
+          pins.persist(ivfTop)
           val exactAll = bruteKnn(s, d, 8, 10).select(col("q_id"), col("c_id"))
           // fully lazy: recall computed in-plan (no driver-side action at
           // query-build time)

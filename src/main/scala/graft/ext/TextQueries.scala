@@ -113,10 +113,10 @@ object TextQueries {
   /** Lazy LM tables — the right shape for a ONE-SHOT consumer (x4t):
     * the score plan embeds the reference explodes redundantly, but they
     * run CONCURRENTLY inside the single score job on otherwise-idle
-    * cores, and r19's full sweeps showed the eager [[withRefLm]] form
-    * 0.7 s SLOWER there (2.2→3.0 s — six serialized checkpoint jobs in
-    * front of one consumption). Streams that re-consume the tables per
-    * micro-batch use [[withRefLm]].
+    * cores, and the pinned [[pinnedRefLm]] form measured 0.7 s SLOWER
+    * there (2.2→3.0 s — six serialized checkpoint jobs in front of one
+    * consumption). Streams that re-consume the tables per micro-batch
+    * use [[pinnedRefLm]].
     */
   private[graft] def trainRefLm(docs0: DataFrame): RefLm = {
     val docs = graft.Tables.fanOut(docs0, col("doc_id")) // guide §2.5
@@ -132,34 +132,32 @@ object TextQueries {
     RefLm(cb, cu, uni, tot)
   }
 
-  /** Train the stupid-backoff bigram LM from `docs`' reference split and
-    * hand the PINNED LM tables to `build`, releasing every pin after.
+  /** Train the stupid-backoff bigram LM from `docs`' reference split
+    * into LM tables pinned in `pins`.
     *
     * Lifecycle: cb/cu both fold the reference BIGRAM explode and
     * uni/tot both fold the reference TOKEN explode — handed out lazily,
     * every downstream consumer re-runs the corpus-wide explode per LM
     * table (profiled in q52s: four 8–14 s-task-time stages, two bigram +
     * two token re-explosions). The two explodes are therefore
-    * checkpointed ONCE, the four LM tables fold off them eagerly, and
-    * `build` — which must return an eagerly materialized result — runs
-    * against checkpoint-rooted LM frames; all six pins release on exit.
+    * checkpointed ONCE, in a scope of their own that closes as soon as
+    * the four LM tables have folded off them eagerly.
     */
-  private[graft] def withRefLm[T](docs0: DataFrame)(build: RefLm => T): T = {
+  private[graft] def pinnedRefLm(pins: Caching.Pins, docs0: DataFrame): RefLm = {
     val docs = graft.Tables.fanOut(docs0, col("doc_id")) // guide §2.5
-    Caching.withLocalCheckpointed(
+    Caching.pinned { ep =>
+      val ref = ep.checkpoint(
         bigrams(docs.select(col("doc_id"), col("source"), col("text")))
-          .filter(col("source").isin(RefLmSources: _*)),
-        docs.filter(col("source").isin(RefLmSources: _*))
-          .select(explode(tokens).as("t"))) { case Seq(ref, refTok) =>
-      Caching.withLocalCheckpointed(
-          ref.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb")),
-          ref.groupBy(col("w1")).agg(count(lit(1)).as("cu")),
-          refTok.groupBy(col("t")).agg(count(lit(1)).as("u"))
-            .withColumnRenamed("t", "w2"),
-          refTok.agg(count(lit(1)).as("tt"),
-            countDistinct(col("t")).as("v"))) {
-        case Seq(cb, cu, uni, tot) => build(RefLm(cb, cu, uni, tot))
-      }
+          .filter(col("source").isin(RefLmSources: _*)))
+      val refTok = ep.checkpoint(docs.filter(col("source").isin(RefLmSources: _*))
+        .select(explode(tokens).as("t")))
+      RefLm(
+        pins.checkpoint(ref.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))),
+        pins.checkpoint(ref.groupBy(col("w1")).agg(count(lit(1)).as("cu"))),
+        pins.checkpoint(refTok.groupBy(col("t")).agg(count(lit(1)).as("u"))
+          .withColumnRenamed("t", "w2")),
+        pins.checkpoint(refTok.agg(count(lit(1)).as("tt"),
+          countDistinct(col("t")).as("v"))))
     }
   }
 
@@ -342,7 +340,8 @@ object TextQueries {
         // (doc, tok) pairs and df = row count per tok.
         val cube = docTok.groupBy(col("lang"), col("doc_id"), col("tok"))
           .agg(count(lit(1)).as("c"))
-        Caching.withPersisted(cube) {
+        Caching.pinned { pins =>
+          pins.persist(cube)
           val nDf = Tables.documents(s, d).agg(count(lit(1)).as("n"))
           val df = cube.groupBy(col("tok").as("d_tok")).agg(count(lit(1)).as("df"))
           val tf = cube.groupBy(col("lang"), col("tok")).agg(sum(col("c")).as("tf"))
@@ -519,11 +518,11 @@ object TextQueries {
         val w = tokens
         val n = size(w)
         // the bigram explode feeds THREE fold consumers (uni, bgc,
-        // docbg) — LAZY on purpose (r19 measured): the redundant
-        // explodes overlap inside the one final job on idle cores, and
-        // an eager checkpoint pin regressed the full sweep 1.7→2.4 s
-        // (the x4t/withRefLm finding — eager pays only under re-USE,
-        // as in q52s's per-micro-batch scoring)
+        // docbg) — LAZY on purpose: the redundant explodes overlap
+        // inside the one final job on idle cores, and an eager
+        // checkpoint pin regressed the full sweep 1.7→2.4 s (the
+        // x4t/pinnedRefLm finding — eager pays only under re-USE, as in
+        // q52s's per-micro-batch scoring)
         val bg = docs.select(col("doc_id"),
           explode(zip_with(slice(w, lit(1), n - 1), slice(w, lit(2), n - 1),
             (a, b) => struct(a.as("w1"), b.as("w2")))).as("z"))
@@ -582,9 +581,9 @@ object TextQueries {
     // split is ~1% of the corpus, so training cost is a keyed shuffle
     // over that slice, and scoring is two hash joins per corpus bigram.
     Q("x4t_lm_filter",
-      // LAZY LM on purpose (r19 measured — see trainRefLm's scaladoc):
-      // the one-shot score job overlaps the redundant reference explodes
-      // on idle cores; the eager withRefLm form was 0.7 s slower here
+      // LAZY LM on purpose (see trainRefLm's scaladoc): the one-shot
+      // score job overlaps the redundant reference explodes on idle
+      // cores; the pinned pinnedRefLm form was 0.7 s slower here
       (s, d) => {
         val docs = Tables.documents(s, d)
         lmScore(docs, trainRefLm(docs))
@@ -790,7 +789,7 @@ object TextQueries {
     // lineage — one wrongly admitted doc, one shifted token — flips some
     // sequence's row at the hash gate.
     Q("x10c_tokenized_build",
-      (s, d) => {
+      (s, d) => Caching.pinned { pins =>
         val bucket = pmod(col("doc_id") * 2654435761L, lit(100L))
         val kept = withFunnelVerdict(
             Tables.documents(s, d).filter(bucket < 80))
@@ -800,21 +799,15 @@ object TextQueries {
         val admDocs = kept.join(admitted, Seq("dig", "doc_id"))
         val evalIdx = Tables.documents(s, d).filter(bucket >= 90)
           .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-        val (_, eBuckets, shEval, idxCaches) =
-          graft.ext.DedupQueries.indexArtifactsFrom(evalIdx)
-        try {
-          val (verdict, vCaches) =
-            graft.ext.DedupQueries.streamDecontamPlan(admDocs, eBuckets, shEval)
-          try {
-            val cleanDocs = admDocs
-              .join(verdict.filter(!col("contaminated")).select("doc_id"),
-                Seq("doc_id"))
-              .select(col("doc_id"), col("text"))
-            // packTokenSeqs is eager (returns its own seq-sized
-            // localCheckpoint), so the caches can release on return
-            packTokenSeqs(tokenStreamFrom(s, cleanDocs, d), 64L)
-          } finally vCaches.foreach(_.unpersist())
-        } finally idxCaches.foreach(_.unpersist())
+        val (_, eBuckets, shEval) = DedupQueries.indexArtifactsFrom(pins, evalIdx)
+        val verdict = DedupQueries.streamDecontamPlan(pins, admDocs, eBuckets, shEval)
+        val cleanDocs = admDocs
+          .join(verdict.filter(!col("contaminated")).select("doc_id"),
+            Seq("doc_id"))
+          .select(col("doc_id"), col("text"))
+        // packTokenSeqs is eager (returns its own seq-sized
+        // localCheckpoint), so the pins can release on return
+        packTokenSeqs(tokenStreamFrom(s, cleanDocs, d), 64L)
       },
       Some(tokenizedBuildOracle)),
 
@@ -874,7 +867,8 @@ object TextQueries {
         // corpus-sized token shuffle runs once (the vocab-sized frame is
         // the cheap thing to hold)
         val counts = toks.groupBy("word").agg(count(lit(1)).as("cnt"))
-        Caching.withPersisted(counts) {
+        Caching.pinned { pins =>
+          pins.persist(counts)
           val total = counts.agg(sum(col("cnt")).as("total"))
           val top = counts.orderBy(col("cnt").desc, col("word")).limit(50)
           val w = Window.orderBy(col("cnt").desc, col("word"))
@@ -921,7 +915,8 @@ object TextQueries {
         // three consumers (sketch, recount, total) — one gram scan each is
         // fine at scale, but pinning the exploded frame keeps the fixture
         // run honest about which pass costs what
-        Caching.withPersisted(grams) {
+        Caching.pinned { pins =>
+          pins.persist(grams)
           val cand = grams
             .agg(graft.functions.Aggregators.misra_gries(HhCapacity)(col("gram"))
               .as("sk"))
@@ -1245,91 +1240,82 @@ object TextQueries {
       candLimit: Int = BpeCandLimit,
       incremental: Boolean = true,
       ledger: Option[scala.collection.mutable.Buffer[(Int, Long, Long)]] = None)
-      : DataFrame = {
-    val pinned = scala.collection.mutable.Buffer.empty[DataFrame]
+      : DataFrame = Caching.pinned { pins =>
     val merges = scala.collection.mutable.Buffer.empty[(Int, String, String, Long)]
-    try {
-      var words = wordsInit.localCheckpoint()
-      pinned += words
-      // the vocab frame's ROW count is invariant across rounds (rewrites
-      // replace syms, never add or drop words) — one job, not one per
-      // ledgered round (r17: at depth-512 budgets the per-round count was
-      // a measurable slice of the round's job budget)
-      lazy val totalWords: Long = words.count()
-      val wordsParts = math.max(1, words.rdd.getNumPartitions)
-      var counts: DataFrame = null
-      if (incremental) {
-        counts = adjacentPairCounts(words).localCheckpoint()
-        pinned += counts
+    var words = pins.checkpoint(wordsInit)
+    // the vocab frame's ROW count is invariant across rounds (rewrites
+    // replace syms, never add or drop words) — one job, not one per
+    // ledgered round (at depth-512 budgets the per-round count was a
+    // measurable slice of the round's job budget)
+    lazy val totalWords: Long = words.count()
+    val wordsParts = math.max(1, words.rdd.getNumPartitions)
+    var counts: DataFrame = null
+    if (incremental) counts = pins.checkpoint(adjacentPairCounts(words))
+    for (round <- 1 to rounds) {
+      val candFrame = if (incremental) counts else adjacentPairCounts(words)
+      val cand = candFrame
+        .orderBy(col("c").desc, col("pair").asc)
+        .limit(candLimit).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+      val picks = disjointPicks(cand, picksPerRound)
+      merges ++= picks.zipWithIndex.map { case ((l, r, m, c), j) =>
+        ((round - 1) * picksPerRound + j + 1, s"$l $r", m, c)
       }
-      for (round <- 1 to rounds) {
-        val candFrame = if (incremental) counts else adjacentPairCounts(words)
-        val cand = candFrame
-          .orderBy(col("c").desc, col("pair").asc)
-          .limit(candLimit).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSeq
-        val picks = disjointPicks(cand, picksPerRound)
-        merges ++= picks.zipWithIndex.map { case ((l, r, m, c), j) =>
-          ((round - 1) * picksPerRound + j + 1, s"$l $r", m, c)
-        }
-        if (picks.nonEmpty) {
-          if (incremental) {
-            // syms are space-padded and single-space-delimited, so plain
-            // substring containment of " l r " is whole-symbol adjacency
-            val affPred = picks.map(p =>
-              col("sym").contains(s" ${p._1} ${p._2} ")).reduce(_ || _)
-            // ONE fused checkpoint carrying both the affected rows and
-            // their rewrites (r19, VERDICT r18 #7 job-count cut): the
-            // r18 shape materialized `aff` and then `newAff` as two
-            // eager jobs per round; the delta's before-side reads
-            // (sym, cnt), the after-side and the vocab update read
-            // (nsym → sym, cnt) — both are projections of this one frame
-            val aff2 = words.filter(affPred)
-              .select(col("sym"), graft.functions.Kernels.bpe_apply(
-                  col("sym"), picks.map(p => (p._1, p._2)),
-                  fromChars = false).as("nsym"),
-                col("cnt")).localCheckpoint()
-            pinned += aff2
-            val aff = aff2.select(col("sym"), col("cnt"))
-            val newAff = aff2.select(col("nsym").as("sym"), col("cnt"))
-            ledger.foreach(_ += ((round, newAff.count(), totalWords)))
-            val delta = adjacentPairCounts(newAff).withColumnRenamed("c", "ca")
-              .join(adjacentPairCounts(aff).withColumnRenamed("c", "cb"),
-                Seq("pair"), "full_outer")
-              .select(col("pair"), (coalesce(col("ca"), lit(0L)) -
-                coalesce(col("cb"), lit(0L))).as("d"))
-              .filter(col("d") =!= 0L)
-            counts = counts.join(delta, Seq("pair"), "full_outer")
-              .select(col("pair"), (coalesce(col("c"), lit(0L)) +
-                coalesce(col("d"), lit(0L))).as("c"))
-              .filter(col("c") > 0L)
-              .localCheckpoint()
-            pinned += counts
-            // coalesce back to the input width: union SUMS its sides'
-            // partition counts and localCheckpoint preserves them, so
-            // without this the vocab frame gains +width partitions EVERY
-            // round — at a 512-merge budget the round cost grows linearly
-            // in round number (measured: ~40 s/round by round 20, all of
-            // it tiny-task shuffle-file commits) instead of staying flat
-            words = words.filter(!affPred).unionByName(newAff)
-              .coalesce(wordsParts).localCheckpoint()
-            pinned += words
-          } else {
-            words = words.select(graft.functions.Kernels.bpe_apply(col("sym"),
-                picks.map(p => (p._1, p._2)), fromChars = false).as("sym"),
-              col("cnt")).localCheckpoint()
-            pinned += words
-          }
+      if (picks.nonEmpty) {
+        if (incremental) {
+          // syms are space-padded and single-space-delimited, so plain
+          // substring containment of " l r " is whole-symbol adjacency
+          val affPred = picks.map(p =>
+            col("sym").contains(s" ${p._1} ${p._2} ")).reduce(_ || _)
+          // ONE fused checkpoint carrying both the affected rows and
+          // their rewrites — one eager job per round where two
+          // checkpoints (`aff`, then `newAff`) would take two; the
+          // delta's before-side reads (sym, cnt), the after-side and the
+          // vocab update read (nsym → sym, cnt) — both are projections
+          // of this one frame
+          val aff2 = pins.checkpoint(words.filter(affPred)
+            .select(col("sym"), graft.functions.Kernels.bpe_apply(
+                col("sym"), picks.map(p => (p._1, p._2)),
+                fromChars = false).as("nsym"),
+              col("cnt")))
+          val aff = aff2.select(col("sym"), col("cnt"))
+          val newAff = aff2.select(col("nsym").as("sym"), col("cnt"))
+          ledger.foreach(_ += ((round, newAff.count(), totalWords)))
+          val delta = adjacentPairCounts(newAff).withColumnRenamed("c", "ca")
+            .join(adjacentPairCounts(aff).withColumnRenamed("c", "cb"),
+              Seq("pair"), "full_outer")
+            .select(col("pair"), (coalesce(col("ca"), lit(0L)) -
+              coalesce(col("cb"), lit(0L))).as("d"))
+            .filter(col("d") =!= 0L)
+          val nextCounts = pins.checkpoint(counts.join(delta, Seq("pair"), "full_outer")
+            .select(col("pair"), (coalesce(col("c"), lit(0L)) +
+              coalesce(col("d"), lit(0L))).as("c"))
+            .filter(col("c") > 0L))
+          pins.release(counts)
+          counts = nextCounts
+          // coalesce back to the input width: union SUMS its sides'
+          // partition counts and localCheckpoint preserves them, so
+          // without this the vocab frame gains +width partitions EVERY
+          // round — at a 512-merge budget the round cost grows linearly
+          // in round number (measured: ~40 s/round by round 20, all of
+          // it tiny-task shuffle-file commits) instead of staying flat
+          val nextWords = pins.checkpoint(words.filter(!affPred)
+            .unionByName(newAff).coalesce(wordsParts))
+          pins.release(aff2)
+          pins.release(words)
+          words = nextWords
+        } else {
+          val nextWords = pins.checkpoint(words.select(
+            graft.functions.Kernels.bpe_apply(col("sym"),
+              picks.map(p => (p._1, p._2)), fromChars = false).as("sym"),
+            col("cnt")))
+          pins.release(words)
+          words = nextWords
         }
       }
-      import s.implicits._
-      merges.toSeq.toDF("step", "pair", "merged", "cnt")
-    } finally pinned.foreach(df =>
-      // Dataset.unpersist is a no-op for localCheckpoint storage (no
-      // CacheManager entry) — release the backing RDD blocks directly,
-      // the Caching.withLocalCheckpointed discipline
-      org.apache.spark.sql.graftshim.Shim.backingRdds(df)
-        .foreach(_.unpersist(blocking = false)))
+    }
+    import s.implicits._
+    merges.toSeq.toDF("step", "pair", "merged", "cnt")
   }
 
   /** x4k's persisted-artifact path, keyed on the data dir so a session
@@ -1738,12 +1724,12 @@ object TextQueries {
     // the token stream feeds TWO consumers — the per-doc counts for the
     // prefix sum, and the window-indexed stream itself — and each would
     // otherwise re-run the tokenize explode + per-word bpe_apply kernel
-    // chain, the composed pipeline's most expensive stage (r19 profile:
-    // two ~0.5–0.9 s / 14–22 s-task-time executions per x10c run). Pin it
+    // chain, the composed pipeline's most expensive stage (profiled: two
+    // ~0.5–0.9 s / 14–22 s-task-time executions per x10c run). Pin it
     // once; the returned frame is seq-count-sized (tokens/L rows) and
-    // eagerly checkpointed so the token-stream pin releases on return —
-    // the Caching.withLocalCheckpointed contract (guide §5).
-    Caching.withLocalCheckpointed(toks) { case Seq(tk) =>
+    // eagerly checkpointed so the token-stream pin releases on return.
+    Caching.pinned { pins =>
+      val tk = pins.checkpoint(toks)
       val wDoc = Window.partitionBy(col("doc_id"))
         .orderBy(col("word_pos"), col("sub_pos"))
       val wi = tk.withColumn("widx",
@@ -1752,7 +1738,7 @@ object TextQueries {
       // spark_partition_id (r14 review finding — see [[RangeBuckets]]):
       // `counts` feeds two consumers, and sampled boundaries could diverge
       // between them if the shuffle ever evaluated twice
-      val counts = RangeBuckets.longKey(
+      val counts = RangeBuckets.longKey(pins,
         tk.groupBy("doc_id").agg(count(lit(1)).as("n_tok")), "doc_id", 8)
       val wOff = Window.orderBy(col("pid"))
         .rowsBetween(Window.unboundedPreceding, -1)

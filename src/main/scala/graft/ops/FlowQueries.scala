@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
+import graft.ext.Caching
 import graft.functions.{Aggregators, IpFunctions}
 
 /** Flows-domain queries over a deterministic synthesized flow table with the
@@ -119,30 +120,17 @@ object FlowQueries {
   private val RankScale = 1000000000L
 
   /** The checkpointed flow graph both PageRank modes iterate over — ONE
-    * definition so the single-scan discipline cannot drift between them
-    * (r16 review). Building it runs the flows scan exactly once (edges is
+    * definition so the single-scan discipline cannot drift between them.
+    * Building it runs the flows scan exactly once (edges is
     * the scan's only consumer; outW/nodes derive from the checkpointed
-    * edges). `release()` frees the graph's pinned RDD blocks once a mode
-    * has materialized its answer — the bpeTrain hygiene; without it every
-    * invocation leaks three graph-sized block sets for the session's
-    * lifetime.
+    * edges). The graph's pins live in a scope of their own that closes
+    * when a mode returns its ranks — without that every invocation leaks
+    * three graph-sized block sets for the session's lifetime.
     */
   private final case class FlowGraph(edges: DataFrame, outW: DataFrame,
-      nodes: DataFrame, nCnt: DataFrame) {
-    def release(): Unit =
-      Seq(edges, outW, nodes).foreach(releaseBacking)
-  }
+      nodes: DataFrame, nCnt: DataFrame)
 
-  /** Unpersist a checkpoint-rooted frame's backing RDD blocks. Callers
-    * must pass frames whose analyzed plan IS their own checkpoint (the
-    * pageRankStep outputs and the graph members) — a derived frame would
-    * surrender its PARENT's blocks.
-    */
-  private def releaseBacking(df: DataFrame): Unit =
-    org.apache.spark.sql.graftshim.Shim.backingRdds(df)
-      .foreach(_.unpersist(blocking = false))
-
-  private def buildGraph(f: DataFrame): FlowGraph = {
+  private def buildGraph(pins: Caching.Pins, f: DataFrame): FlowGraph = {
     // NOT checkpoint-co-partitioned on the iteration key (r19 measured:
     // pinning edges/outW/nodes hash-partitioned + sorted on u/addr to
     // make the per-round joins exchange-free REGRESSED qf13 3.97→4.72 s
@@ -152,68 +140,57 @@ object FlowQueries {
     // dominates a profile at real scale)
     val sc = f.sparkSession.sparkContext
     sc.setJobDescription("pagerank: edges build") // §1.5 job labels
-    val edges = f.groupBy(col("src_addr").as("u"), col("dst_addr").as("v"))
-      .agg(count(lit(1)).as("w")).localCheckpoint()
+    val edges = pins.checkpoint(f.groupBy(col("src_addr").as("u"),
+      col("dst_addr").as("v")).agg(count(lit(1)).as("w")))
     sc.setJobDescription("pagerank: out-weights")
-    val outW = edges.groupBy(col("u")).agg(sum(col("w")).as("wu"))
-      .localCheckpoint()
+    val outW = pins.checkpoint(edges.groupBy(col("u")).agg(sum(col("w")).as("wu")))
     sc.setJobDescription("pagerank: nodes")
-    val nodes = edges.select(col("u").as("addr"))
-      .union(edges.select(col("v").as("addr"))).distinct()
-      .localCheckpoint()
+    val nodes = pins.checkpoint(edges.select(col("u").as("addr"))
+      .union(edges.select(col("v").as("addr"))).distinct())
     sc.setJobDescription(null)
     FlowGraph(edges, outW, nodes, nodes.agg(count(lit(1)).as("n")))
   }
 
-  private def initRanks(g: FlowGraph): DataFrame =
-    g.nodes.crossJoin(broadcast(g.nCnt))
-      .select(col("addr"), expr(s"${RankScale}L div n").as("r"))
-      .localCheckpoint()
+  private def initRanks(pins: Caching.Pins, g: FlowGraph): DataFrame =
+    pins.checkpoint(g.nodes.crossJoin(broadcast(g.nCnt))
+      .select(col("addr"), expr(s"${RankScale}L div n").as("r")))
 
-  private[graft] def pageRank(f: DataFrame, iters: Int): DataFrame = {
-    val g = buildGraph(f)
+  /** Unrolled PageRank. The returned ranks are a pin of `pins`; each
+    * round's predecessor is released as soon as the next round is
+    * materialized, and the graph's pins when the ranks are returned.
+    */
+  private[graft] def pageRank(pins: Caching.Pins, f: DataFrame,
+      iters: Int): DataFrame = Caching.pinned { gp =>
+    val g = buildGraph(gp, f)
     val sc = f.sparkSession.sparkContext
-    try {
-      var r = initRanks(g)
-      for (i <- 1 to iters) {
-        sc.setJobDescription(s"pagerank: round $i")
-        val next = pageRankStep(r, g)
-        releaseBacking(r) // next is eager — the previous round's blocks can go
-        r = next
-      }
-      sc.setJobDescription(null)
-      r
-    } finally g.release()
+    var r = initRanks(pins, g)
+    for (i <- 1 to iters) {
+      sc.setJobDescription(s"pagerank: round $i")
+      val next = pageRankStep(pins, r, g)
+      pins.release(r) // next is materialized — the previous round can go
+      r = next
+    }
+    sc.setJobDescription(null)
+    r
   }
 
-  /** Release a ranks frame returned by [[pageRank]] /
-    * [[pageRankFixedPoint]] once the caller has materialized its answer
-    * (ADVICE r16: the per-round release work freed the graph and
-    * intermediate rounds, but the RETURNED frame's node-sized block set
-    * was never freed by any caller — one leaked set per invocation for
-    * the session's lifetime).
-    */
-  private[graft] def releaseRanks(r: DataFrame): Unit = releaseBacking(r)
-
   /** The qf13 serving shape: run the unrolled iteration, TakeOrdered the
-    * top-k (k-row result), eagerly pin THAT, and release the node-sized
-    * ranks — the bpeTrain hygiene applied to this family's caller side.
+    * top-k (k-row result), eagerly pin THAT, and free the node-sized
+    * ranks with the scope.
     */
   private[graft] def pageRankTopK(f: DataFrame, iters: Int,
-      k: Int): DataFrame = {
-    val r = pageRank(f, iters)
-    val top = r.orderBy(col("r").desc, col("addr")).limit(k)
+      k: Int): DataFrame = Caching.pinned { pins =>
+    pageRank(pins, f, iters).orderBy(col("r").desc, col("addr")).limit(k)
       .select(col("addr"), col("r").as("rank_nano"))
       .localCheckpoint() // eager; ≤ k rows, so the pinned set is trivial
-    releaseBacking(r)
-    top
   }
 
   /** One PageRank round: contributions shuffled per dst with map-side
     * combine, dangling mass as a 1-row broadcast certificate, eager
     * lineage truncation on the result (node-sized).
     */
-  private def pageRankStep(r: DataFrame, g: FlowGraph): DataFrame = {
+  private def pageRankStep(pins: Caching.Pins, r: DataFrame,
+      g: FlowGraph): DataFrame = {
     val contrib = g.edges.join(g.outW, Seq("u"))
       .join(r.select(col("addr").as("u"), col("r").as("ru")), Seq("u"))
       .select(col("v").as("addr"),
@@ -221,13 +198,12 @@ object FlowQueries {
       .groupBy(col("addr")).agg(sum(col("c")).as("cin"))
     val dangle = r.join(g.outW.select(col("u").as("addr")), Seq("addr"), "left_anti")
       .agg(coalesce(sum(col("r")), lit(0L)).as("dg"))
-    g.nodes.crossJoin(broadcast(g.nCnt)).crossJoin(broadcast(dangle))
+    pins.checkpoint(g.nodes.crossJoin(broadcast(g.nCnt)).crossJoin(broadcast(dangle))
       .join(contrib, Seq("addr"), "left")
       .select(col("addr"),
         (expr(s"${RankScale * 15}L div (100 * n)") +
           expr("(dg * 85) div (100 * n)") +
-          coalesce(col("cin"), lit(0L))).as("r"))
-      .localCheckpoint()
+          coalesce(col("cin"), lit(0L))).as("r")))
   }
 
   /** Detected-fixed-point PageRank (the x2d fixed-point device, r16):
@@ -251,31 +227,30 @@ object FlowQueries {
     * preserves the exact-only semantics PageRankSpec pins on the
     * sf0.001 graph, where the map genuinely reaches delta 0.
     */
-  private[graft] def pageRankFixedPoint(f: DataFrame,
-      maxIters: Int = 50, stallRounds: Int = 0): (DataFrame, Int, Long) = {
-    val g = buildGraph(f)
-    try {
-      var r = initRanks(g)
+  private[graft] def pageRankFixedPoint(pins: Caching.Pins, f: DataFrame,
+      maxIters: Int = 50, stallRounds: Int = 0): (DataFrame, Int, Long) =
+    Caching.pinned { gp =>
+      val g = buildGraph(gp, f)
+      var r = initRanks(pins, g)
       var it = 0
       var lastDelta = Long.MaxValue
       var bestDelta = Long.MaxValue
       var stall = 0
       var converged = false
       while (!converged && it < maxIters) {
-        val next = pageRankStep(r, g)
+        val next = pageRankStep(pins, r, g)
         val delta = next.join(r.withColumnRenamed("r", "rp"), Seq("addr"))
           .agg(max(abs(col("r") - col("rp"))).as("d")).head().getLong(0)
         if (delta < bestDelta) { bestDelta = delta; stall = 0 }
         else stall += 1
         converged = delta == 0L || (stallRounds > 0 && stall >= stallRounds)
         lastDelta = delta
-        releaseBacking(r) // the delta action above was r's last consumer
+        pins.release(r) // the delta action above was r's last consumer
         r = next
         it += 1
       }
       (r, it, lastDelta)
-    } finally g.release()
-  }
+    }
 
   def defs: Seq[Q] = Seq(
     // Q54: the R3 projection UDF chain under oracle test — every rendered

@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import org.apache.spark.sql.types._
 
 import graft.{Q, Tables}
+import graft.ext.Caching
 import graft.streaming.Streams
 
 /** SURVEY §2.2 Q45–Q53: the Structured Streaming surface, drained with
@@ -306,25 +307,23 @@ object StreamQueries {
     // verdict join, dig mapping) read ONE materialization instead of
     // running the state operator four times per batch (measured A/B at
     // sf0.1: q52x warm 13.4 s → 11.0 s); released before return
-    val b = batch.persist()
-    try {
+    Caching.pinned { pins =>
+      val b = pins.persist(batch)
       // ProcessingTime TTL maintenance schedules EMPTY batches forever
       // (see [[drainUntilQuiescent]]) — skip them, or the store fills
       // with empty batch=<id> dirs and every maintenance tick pays a
       // decontam plan
-      if (b.isEmpty) return
-      val (verdict, caches) =
-        graft.ext.DedupQueries.streamDecontamPlan(b, eBuckets, shEval)
-      try {
-        val clean = verdict.filter(!col("contaminated"))
+      if (!b.isEmpty) {
+        val clean = graft.ext.DedupQueries.streamDecontamPlan(pins, b, eBuckets, shEval)
+          .filter(!col("contaminated"))
           .select(col("doc_id").as("vec_id"))
         // `clean` leads: a join plans in its left side's session, and
         // this write must plan in the batch's (the stream's clone, with
         // its LocalFs keys and state parallelism), not in `emb`'s
         val vecs = broadcast(clean).join(emb, Seq("vec_id"))
-        // TOKENIZE stage (r14): per-doc subword count against the frozen
-        // vocab, folded within the row — q52z's form by construction
-        // (one shared definition, TextQueries.subwordCountCol)
+        // TOKENIZE stage: per-doc subword count against the frozen vocab,
+        // folded within the row — q52z's form by construction (one
+        // shared definition, TextQueries.subwordCountCol)
         val toked = b.select(col("doc_id").as("vec_id"), col("dig"),
           graft.ext.TextQueries.subwordCountCol(merges).as("n_subword"))
         graft.ext.SimilarityQueries.pqEncode(vecs, cb)
@@ -332,16 +331,15 @@ object StreamQueries {
           .join(broadcast(toked), Seq("vec_id"))
           .write.mode("overwrite").parquet(s"$out/frag/batch=$id")
         // q52y's tiered generational maintenance, IN the flagship loop at
-        // cadence K = `every` (r14, VERDICT r13 #5: K was hard-coded to 1
-        // — the registered query now runs K = 2 over a two-data-batch
-        // staged arrival, and PipelineRestartSpec pins K = 1 ≡ 2 ≡ 3
-        // readback invariance, which the one-cycle expiry grace
-        // guarantees by construction); empty TTL ticks return above, so
-        // maintenance never churns generations on an idle stream
+        // cadence K = `every` (the registered query runs K = 2 over a
+        // two-data-batch staged arrival, and PipelineRestartSpec pins
+        // K = 1 ≡ 2 ≡ 3 readback invariance, which the one-cycle expiry
+        // grace guarantees by construction); empty TTL ticks skip this,
+        // so maintenance never churns generations on an idle stream
         if ((id + 1) % every == 0)
           graft.ext.SimilarityQueries.maintainPqStore(b.sparkSession, out, id)
-      } finally caches.foreach(_.unpersist())
-    } finally b.unpersist()
+      }
+    }
   }
 
   /** The q52y per-batch body: q52g's frozen-codebook PQ encode into the
@@ -557,8 +555,8 @@ object StreamQueries {
         else { jobs += 1; read }
       // with the cadence on, the batch has two consumers (rows sink +
       // sketch agg) — persist so each doesn't re-run the micro-batch plan
-      val b = if (rowsDir != null) batch.persist() else batch
-      try {
+      Caching.pinned { pins =>
+        val b = if (rowsDir != null) pins.persist(batch) else batch
         if (rowsDir != null) {
           b.write.mode("overwrite").parquet(s"$rowsDir/batch=$id")
           jobs += 1
@@ -632,10 +630,12 @@ object StreamQueries {
               val sc = sumsFor(survivors) {
                 sumsOf(dom.rowSums(semi(rows(window), survivors)))
               }
-              // the glob includes the just-written batch dir
+              // every batch dir, the just-written one included — listed,
+              // not globbed: a glob path fails the parquet reader's
+              // metadata-dir probe with a logged stack trace per read
               val cu = sumsFor(entrants) {
                 sumsOf(dom.rowSums(semi(
-                  dom.keyed(s.read.parquet(s"$rowsDir/batch=*")), entrants)))
+                  rows(batchDirs(s, rowsDir).map(_._1)), entrants)))
               }
               (sc, cu)
             } else {
@@ -714,7 +714,7 @@ object StreamQueries {
         st.sketch = merged; st.totals = totals
         st.cum = newCum; st.cumGenId = newGenId
         st.lastId = id
-      } finally if (rowsDir != null) b.unpersist()
+      }
     }
   }
 
@@ -790,15 +790,25 @@ object StreamQueries {
     */
   private[graft] def latestSketchGen(s: SparkSession, skDir: String,
       below: Long): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(skDir)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return None
-    fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
-      .map(st => (st.getPath.getName.stripPrefix("batch=").toLong, st.getPath))
+    val fs = new org.apache.hadoop.fs.Path(skDir)
+      .getFileSystem(s.sessionState.newHadoopConf())
+    batchDirs(s, skDir)
       .filter { case (i, pp) => i < below &&
         fs.exists(new org.apache.hadoop.fs.Path(pp, "_SUCCESS")) }
       .sortBy(_._1).lastOption.map(_._2.toString)
+  }
+
+  /** The `batch=<id>` directories under `dir` as (id, path) — the set
+    * the glob `dir/batch=*` names; empty when `dir` does not exist.
+    */
+  private def batchDirs(s: SparkSession,
+      dir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch="))
+      .map(st => (st.getPath.getName.stripPrefix("batch=").toLong, st.getPath))
   }
 
   /** Q52X (r13, VERDICT r12 #1): the four ingest shapes COMPOSED into one
@@ -869,65 +879,65 @@ object StreamQueries {
     val bucket = pmod(col("doc_id") * 2654435761L, lit(100L))
     // static assets, computed once OUTSIDE the stream — the production
     // deployment: the eval index and the codebook are on-disk artifacts
-    val evalIdx = Tables.documents(s, d).filter(bucket >= 90)
-      .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-    val (_, eBucketsL, shEvalL, idxCaches) =
-      graft.ext.DedupQueries.indexArtifactsFrom(evalIdx)
-    val emb = graft.ext.SimilarityQueries.quantFrame(s, d)
-    val cb = graft.ext.SimilarityQueries.pqBuildFrom(emb)._3
-      .localCheckpoint() // 128 rows
-    // the frozen tokenizer artifact (r14): merges loaded OUTSIDE the
-    // stream like the codebook — ingest never retrains
-    val merges = graft.ext.TextQueries.loadOrTrainMerges(s, d)
-    // eval artifacts localCheckpoint-PINNED for the stream's lifetime
-    // (scoped release): every DATA batch's decontam plan reads the
-    // materialized bucket/shingle frames instead of re-deriving
-    // shingles → signatures → buckets from the eval split — on a
-    // long-running stream that recompute would be paid per batch; in
-    // production these are the on-disk artifacts of the x2h story and
-    // the pin is their in-memory equivalent
-    try graft.ext.Caching.withLocalCheckpointed(eBucketsL, shEvalL) {
-      case Seq(eBuckets, shEval) =>
-        val spark = s
-        import spark.implicits._
-        // TWO data batches at any fixture scale (maxFilesPerTrigger =
-        // half the staged file count): batch ids 0 and 1, so the K = 2
-        // cadence fires maintenance exactly once INSIDE the running
-        // stream — the flagship drives the maintained-store readback
-        // without the per-batch fold cost cadence 1 paid (r14)
-        val (srcDir, schemaPath) = stageFixture(d, "documents")
-        val nFiles = Option(srcDir.toFile.listFiles())
-          .getOrElse(Array.empty[java.io.File])
-          .count(_.getName.endsWith(".parquet"))
-        val docs = s.readStream
-          .schema(s.read.parquet(schemaPath.toString).schema)
-          .option("maxFilesPerTrigger", math.max(1, (nFiles + 1) / 2))
-          .parquet(srcDir.toString)
-        val admitted = graft.ext.TextQueries.withFunnelVerdict(
-            docs.filter(bucket < 80))
-          .filter(col("drop_rule") === "kept")
-          .select(md5(col("text")).as("dig"), col("doc_id"), col("text"))
-          .as[(String, Long, String)]
-          .groupByKey(_._1)
-          .transformWithState(
-            new graft.streaming.AdmitFirstProcessor(
-              TTLConfig(java.time.Duration.ofMillis(7L * 24 * 3600 * 1000))),
-            TimeMode.ProcessingTime(),
-            OutputMode.Update())
-          .toDF("dig", "doc_id", "text")
-        val q = Streams.start(admitted, cp, StatePartitions +: Streams.RocksDbState: _*)(
-          _.outputMode("update")
-            // 50 ms, like drainUntilQuiescent (VERDICT r16 #6): trigger
-            // boundaries + the two-empty-batch quiescence window are pure
-            // idle wall-clock on finite input, and the pipeline's
-            // admission + per-batch-overwrite tail are split-invariant by
-            // design (the hash gate proves it), so a tight trigger
-            // cannot change the answer
-            .trigger(Trigger.ProcessingTime("50 milliseconds"))
-            .foreachBatch(
-              pipelineBatchWriter(eBuckets, shEval, emb, cb, merges, out) _))
-        awaitQuiescence(q, "q52x")
-    } finally idxCaches.foreach(_.unpersist())
+    Caching.pinned { pins =>
+      val evalIdx = Tables.documents(s, d).filter(bucket >= 90)
+        .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
+      val (_, eBucketsL, shEvalL) =
+        graft.ext.DedupQueries.indexArtifactsFrom(pins, evalIdx)
+      val emb = graft.ext.SimilarityQueries.quantFrame(s, d)
+      val cb = pins.checkpoint(graft.ext.SimilarityQueries.pqBuildFrom(emb)._3) // 128 rows
+      // the frozen tokenizer artifact: merges loaded OUTSIDE the stream
+      // like the codebook — ingest never retrains
+      val merges = graft.ext.TextQueries.loadOrTrainMerges(s, d)
+      // eval artifacts checkpoint-PINNED for the stream's lifetime: every
+      // DATA batch's decontam plan reads the materialized bucket/shingle
+      // frames instead of re-deriving shingles → signatures → buckets
+      // from the eval split — on a long-running stream that recompute
+      // would be paid per batch; in production these are the on-disk
+      // artifacts of the x2h story and the pin is their in-memory
+      // equivalent
+      val eBuckets = pins.checkpoint(eBucketsL)
+      val shEval = pins.checkpoint(shEvalL)
+      val spark = s
+      import spark.implicits._
+      // TWO data batches at any fixture scale (maxFilesPerTrigger =
+      // half the staged file count): batch ids 0 and 1, so the K = 2
+      // cadence fires maintenance exactly once INSIDE the running
+      // stream — the flagship drives the maintained-store readback
+      // without the per-batch fold cost cadence 1 paid
+      val (srcDir, schemaPath) = stageFixture(d, "documents")
+      val nFiles = Option(srcDir.toFile.listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .count(_.getName.endsWith(".parquet"))
+      val docs = s.readStream
+        .schema(s.read.parquet(schemaPath.toString).schema)
+        .option("maxFilesPerTrigger", math.max(1, (nFiles + 1) / 2))
+        .parquet(srcDir.toString)
+      val admitted = graft.ext.TextQueries.withFunnelVerdict(
+          docs.filter(bucket < 80))
+        .filter(col("drop_rule") === "kept")
+        .select(md5(col("text")).as("dig"), col("doc_id"), col("text"))
+        .as[(String, Long, String)]
+        .groupByKey(_._1)
+        .transformWithState(
+          new graft.streaming.AdmitFirstProcessor(
+            TTLConfig(java.time.Duration.ofMillis(7L * 24 * 3600 * 1000))),
+          TimeMode.ProcessingTime(),
+          OutputMode.Update())
+        .toDF("dig", "doc_id", "text")
+      val q = Streams.start(admitted, cp, StatePartitions +: Streams.RocksDbState: _*)(
+        _.outputMode("update")
+          // 50 ms, like drainUntilQuiescent: trigger
+          // boundaries + the two-empty-batch quiescence window are pure
+          // idle wall-clock on finite input, and the pipeline's
+          // admission + per-batch-overwrite tail are split-invariant by
+          // design (the hash gate proves it), so a tight trigger
+          // cannot change the answer
+          .trigger(Trigger.ProcessingTime("50 milliseconds"))
+          .foreachBatch(
+            pipelineBatchWriter(eBuckets, shEval, emb, cb, merges, out) _))
+      awaitQuiescence(q, "q52x")
+    }
     val st = graft.ext.SimilarityQueries.readPqStore(s, out)
       .select("dig", "vec_id", "n_subword", "s", "code")
     val minPerDig = st.groupBy("dig").agg(min(col("vec_id")).as("vec_id"))
@@ -1778,19 +1788,21 @@ object StreamQueries {
         val cp = s"$base/cp"
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-        val cb = graft.ext.SimilarityQueries
-          .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3
-          .localCheckpoint() // 128 rows, computed once outside the stream
-        Streams.start(fixtureStream(s, d, "embeddings"), cp)(
-          _.trigger(Trigger.AvailableNow())
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              val qb = batch.select(col("vec_id"),
-                graft.functions.Kernels.float_vec_quant(col("embedding")).as("qe"),
-                col("label"))
-              graft.ext.SimilarityQueries.pqEncode(qb, cb)
-                .select(col("vec_id"), col("s"), col("code"))
-                .write.mode("overwrite").parquet(s"$out/batch=$id")
-            }).awaitTermination()
+        Caching.pinned { pins =>
+          // 128 rows, computed once outside the stream
+          val cb = pins.checkpoint(graft.ext.SimilarityQueries
+            .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3)
+          Streams.start(fixtureStream(s, d, "embeddings"), cp)(
+            _.trigger(Trigger.AvailableNow())
+              .foreachBatch { (batch: DataFrame, id: Long) =>
+                val qb = batch.select(col("vec_id"),
+                  graft.functions.Kernels.float_vec_quant(col("embedding")).as("qe"),
+                  col("label"))
+                graft.ext.SimilarityQueries.pqEncode(qb, cb)
+                  .select(col("vec_id"), col("s"), col("code"))
+                  .write.mode("overwrite").parquet(s"$out/batch=$id")
+              }).awaitTermination()
+        }
         // partition discovery surfaces `batch` as a column; project it away
         s.read.parquet(out).select("vec_id", "s", "code")
       },
@@ -1833,13 +1845,15 @@ object StreamQueries {
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
         val emb = Tables.embeddings(s, d)
         emb.repartition(6).write.options(Streams.LocalFsKeys.toMap).mode("overwrite").parquet(src)
-        val cb = graft.ext.SimilarityQueries
-          .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3
-          .localCheckpoint() // 128 rows, frozen outside the stream
-        val arrivals = s.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(src)
-        Streams.start(arrivals, cp)(_.trigger(Trigger.AvailableNow())
-          .foreachBatch(annMaintainBatchWriter(cb, store, 2) _)).awaitTermination()
+        Caching.pinned { pins =>
+          // 128 rows, frozen outside the stream
+          val cb = pins.checkpoint(graft.ext.SimilarityQueries
+            .pqBuildFrom(graft.ext.SimilarityQueries.quantFrame(s, d))._3)
+          val arrivals = s.readStream.schema(emb.schema)
+            .option("maxFilesPerTrigger", 1).parquet(src)
+          Streams.start(arrivals, cp)(_.trigger(Trigger.AvailableNow())
+            .foreachBatch(annMaintainBatchWriter(cb, store, 2) _)).awaitTermination()
+        }
         graft.ext.SimilarityQueries.readPqStore(s, store)
           .select("vec_id", "s", "code")
       },
@@ -1948,24 +1962,25 @@ object StreamQueries {
         val cp = s"$tmpRoot/cp/q52v_sink"
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-        graft.ext.Caching.withLocalCheckpointed(hotL) { case Seq(hot) =>
+        Caching.pinned { pins =>
+          val hot = pins.checkpoint(hotL)
           val docs = fixtureStream(s, d, "documents")
             .select(col("doc_id"), split(col("text"), " ").as("tok"))
           Streams.start(docs, cp)(_.trigger(Trigger.AvailableNow())
             .foreachBatch { (batch: DataFrame, id: Long) =>
-              // persist: the scrub consumes the batch twice (window
-              // explode + rebuild join) and each action would re-run the
-              // micro-batch plan (see pipelineBatchWriter)
-              val b = batch.persist()
-              try {
+              Caching.pinned { bp =>
+                // persist: the scrub consumes the batch twice (window
+                // explode + rebuild join) and each action would re-run
+                // the micro-batch plan (see pipelineBatchWriter)
+                val b = bp.persist(batch)
                 val wins = graft.ext.DedupQueries.scrubWindows(b,
                   b.sparkSession.sparkContext.defaultParallelism)
                 // per-batch OVERWRITE dir (q52g's effectively-once
-                // device, r14 review finding): a replayed batch rewrites
-                // its own dir instead of appending duplicate rows
+                // device): a replayed batch rewrites its own dir instead
+                // of appending duplicate rows
                 graft.ext.DedupQueries.scrubAgainst(b, wins, hot)
                   .write.mode("overwrite").parquet(s"$out/batch=$id")
-              } finally b.unpersist()
+              }
             }).awaitTermination()
         }
         s.read.parquet(out)
@@ -2087,21 +2102,21 @@ object StreamQueries {
         val cp = s"$tmpRoot/cp/q52s_sink"
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(cp).toFile)
-        // withRefLm pins the LM tables for the stream's lifetime and
-        // releases them once the read-back below is checkpointed (r19 —
-        // training no longer re-runs the reference explodes per LM table)
-        graft.ext.TextQueries.withRefLm(Tables.documents(s, d)) {
-          pinned =>
-            val docs = fixtureStream(s, d, "documents")
-              .select(col("doc_id"), col("text"))
-            Streams.start(docs, cp)(_.trigger(Trigger.AvailableNow())
-              .foreachBatch { (batch: DataFrame, id: Long) =>
-                graft.ext.TextQueries.lmScore(batch, pinned)
-                  .write.mode("overwrite").parquet(s"$out/batch=$id")
-              }).awaitTermination()
-            s.read.parquet(out)
-              .select("doc_id", "n_bigrams", "bits_e4", "keep")
-              .localCheckpoint()
+        // the LM tables are pinned for the stream's lifetime and released
+        // once the read-back below is checkpointed (training no longer
+        // re-runs the reference explodes per LM table)
+        Caching.pinned { pins =>
+          val lm = graft.ext.TextQueries.pinnedRefLm(pins, Tables.documents(s, d))
+          val docs = fixtureStream(s, d, "documents")
+            .select(col("doc_id"), col("text"))
+          Streams.start(docs, cp)(_.trigger(Trigger.AvailableNow())
+            .foreachBatch { (batch: DataFrame, id: Long) =>
+              graft.ext.TextQueries.lmScore(batch, lm)
+                .write.mode("overwrite").parquet(s"$out/batch=$id")
+            }).awaitTermination()
+          s.read.parquet(out)
+            .select("doc_id", "n_bigrams", "bits_e4", "keep")
+            .localCheckpoint()
         }
       },
       Some(graft.ext.TextQueries.LmFilterOracle)),
@@ -2153,7 +2168,8 @@ object StreamQueries {
         // ONE-task jobs on the one-split fixture scan, guide §2.5)
         val grams = graft.ext.TextQueries.heavyHitterGrams(
           Tables.fanOut(Tables.documents(s, d), col("doc_id")))
-        graft.ext.Caching.withPersisted(grams) {
+        Caching.pinned { pins =>
+          pins.persist(grams)
           graft.ext.TextQueries.heavyHitterRecount(grams, cand)
             .localCheckpoint() // ≤ 1/θ rows; eager so the cache can go
         }
@@ -2233,9 +2249,10 @@ object StreamQueries {
         // recount's two consumers (per-talker sums + total), q52t's
         // discipline; the tail is topTalkerRecount, the one definition
         // the mid-stream cadence artifacts also go through
-        val ingested = s.read.parquet(s"$out/batch=*")
+        val ingested = s.read.parquet(batchDirs(s, out).map(_._2.toString): _*)
           .select(col("src_addr"), col("bytes"))
-        graft.ext.Caching.withPersisted(ingested) {
+        Caching.pinned { pins =>
+          pins.persist(ingested)
           topTalkerRecount(ingested, cand)
             .localCheckpoint() // ≤ θ⁻¹ rows; eager so the cache can go
         }
@@ -2270,8 +2287,6 @@ object StreamQueries {
         val bucket = pmod(col("doc_id") * 2654435761L, lit(100L))
         val evalIdx = Tables.documents(s, d).filter(bucket >= 90)
           .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-        val (_, eBuckets, shEval, idxCaches) =
-          graft.ext.DedupQueries.indexArtifactsFrom(evalIdx)
         val out = s"$tmpRoot/q52e_out"
         val cp = s"$tmpRoot/cp/q52e_sink"
         org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(out).toFile)
@@ -2279,24 +2294,24 @@ object StreamQueries {
         val train = fixtureStream(s, d, "documents")
           .filter(bucket < 80)
           .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-        val q = Streams.start(train, cp)(_.trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // persist: the decontam plan consumes the batch twice (group
-            // + verdict join) and each action would re-run the micro-
-            // batch plan (see pipelineBatchWriter)
-            val b = batch.persist()
-            try {
-              val (v, caches) =
-                graft.ext.DedupQueries.streamDecontamPlan(b, eBuckets, shEval)
-              // per-batch OVERWRITE dir (q52g's effectively-once device,
-              // r14 review finding): a replayed batch rewrites its own
-              // dir instead of appending duplicate verdicts
-              try v.write.mode("overwrite").parquet(s"$out/batch=$id")
-              finally caches.foreach(_.unpersist())
-            } finally b.unpersist()
-          })
-        try q.awaitTermination()
-        finally idxCaches.foreach(_.unpersist())
+        Caching.pinned { pins =>
+          val (_, eBuckets, shEval) =
+            graft.ext.DedupQueries.indexArtifactsFrom(pins, evalIdx)
+          Streams.start(train, cp)(_.trigger(Trigger.AvailableNow())
+            .foreachBatch { (batch: DataFrame, id: Long) =>
+              Caching.pinned { bp =>
+                // persist: the decontam plan consumes the batch twice
+                // (group + verdict join) and each action would re-run the
+                // micro-batch plan (see pipelineBatchWriter)
+                val b = bp.persist(batch)
+                // per-batch OVERWRITE dir (q52g's effectively-once
+                // device): a replayed batch rewrites its own dir instead
+                // of appending duplicate verdicts
+                graft.ext.DedupQueries.streamDecontamPlan(bp, b, eBuckets, shEval)
+                  .write.mode("overwrite").parquet(s"$out/batch=$id")
+              }
+            }).awaitTermination()
+        }
         s.read.parquet(out).select("doc_id", "contaminated")
       },
       Some("""WITH t AS (SELECT doc_id, string_split(text,' ') w, text,

@@ -235,33 +235,33 @@ class PlanSpec extends SparkSpec {
       val plan = physical(Registry.queries(name)(spark, sf))
       assert(!plan.contains("CartesianProduct"), s"$name plans a cartesian:\n$plan")
     }
-    // r9: x2e registers an eagerly-checkpointed result (same cache-
-    // lifecycle hygiene as x2) — audit its LAZY plan via the package-
-    // private builder: LSH equi-joins only, no cartesian, no BNLJ (a BNLJ
-    // would mean an all-pairs candidate generator crept back in)
-    val (x2e, cachesE) = ext.SimilarityQueries.embedLshPairsPlan(spark, sf)
-    try {
-      val planE = physical(x2e)
+    // x2e registers an eagerly-checkpointed result (same pin hygiene as
+    // x2) — audit its LAZY plan via the package-private builder: LSH
+    // equi-joins only, no cartesian, no BNLJ (a BNLJ would mean an
+    // all-pairs candidate generator crept back in). Each builder pins
+    // into a scope that frees its frames once the audit is done.
+    ext.Caching.pinned { pins =>
+      val planE = physical(ext.SimilarityQueries.embedLshPairsPlan(pins, spark, sf))
       assert(!planE.contains("CartesianProduct"), s"x2e:\n$planE")
       assert(!planE.contains("BroadcastNestedLoopJoin"), s"x2e:\n$planE")
-      // r9: the membership expansion joins are pinned shuffle-hash — a
+      // the membership expansion joins are pinned shuffle-hash — a
       // sort-merge regression would re-sort the candidate-pair stream
       // with its array payloads (the 9.5 GB spill the 30× gate caught)
       assert(planE.contains("ShuffledHashJoin"), s"x2e expansion joins lost the shuffle-hash pin:\n$planE")
-    } finally cachesE.foreach(_.unpersist())
-    // x2 registers an eagerly-checkpointed result (cache-lifecycle
-    // hygiene), so audit its LAZY plan via the package-private builder
-    val (x2, caches2) = ext.DedupQueries.minhashPairsPlan(spark, sf)
-    try assert(!physical(x2).contains("CartesianProduct"), physical(x2))
-    finally caches2.foreach(_.unpersist())
+    }
+    // x2 registers an eagerly-checkpointed result (pin hygiene), so
+    // audit its LAZY plan via the package-private builder
+    ext.Caching.pinned { pins =>
+      val x2 = ext.DedupQueries.minhashPairsPlan(pins, spark, sf)
+      assert(!physical(x2).contains("CartesianProduct"), physical(x2))
+    }
     // x7c also checkpoints eagerly — audit its lazy plan: broadcast band
     // join, no cartesian
-    val (x7c, sh7c) = ext.DecontamQueries.fuzzyPairsPlan(spark, sf)
-    try {
-      val p = physical(x7c)
+    ext.Caching.pinned { pins =>
+      val p = physical(ext.DecontamQueries.fuzzyPairsPlan(pins, spark, sf))
       assert(!p.contains("CartesianProduct"), p)
       assert(p.contains("BroadcastHashJoin"), p)
-    } finally sh7c.unpersist()
+    }
     // x7d: the train side must pass through the codegen bloom probe before
     // the exact-confirm join (the whole point of the operator), and the
     // confirm join must not be a cartesian
@@ -269,25 +269,24 @@ class PlanSpec extends SparkSpec {
     val p7d = physical(x7d)
     assert(p7d.contains("might_contain"), p7d)
     assert(!p7d.contains("CartesianProduct"), p7d)
-    // r10: x10 composes dedup → decontam → quality → pack → shard in one
+    // x10 composes dedup → decontam → quality → pack → shard in one
     // lineage — audit its LAZY plan: the eval-gram probe and the
     // prefix-sum offset table must BROADCAST, and nothing may plan a
     // cartesian or BNLJ (the stages are all equi-joins by construction)
-    val (x10, caches10) = ext.PipelineQueries.pipelineE2ePlan(spark, sf)
-    try {
-      val p10 = physical(x10)
+    ext.Caching.pinned { pins =>
+      val p10 = physical(ext.PipelineQueries.pipelineE2ePlan(pins, spark, sf))
       assert(!p10.contains("CartesianProduct"), s"x10:\n$p10")
       assert(!p10.contains("BroadcastNestedLoopJoin"), s"x10:\n$p10")
       assert(p10.contains("BroadcastHashJoin"), s"x10 lost its broadcasts:\n$p10")
-    } finally caches10.foreach(_.unpersist())
-    val (x2b, sh2b) = ext.DedupQueries.simhashEqualityPlan(spark, sf)
+    }
     // the 1-row agg-result crossJoin at the root is declared; the LSH/brute
     // PAIR joins below it must not be cartesian
-    try {
-      val joinPart = physical(x2b).linesIterator
+    ext.Caching.pinned { pins =>
+      val x2b = physical(ext.DedupQueries.simhashEqualityPlan(pins, spark, sf))
+      val joinPart = x2b.linesIterator
         .filterNot(_.contains("BroadcastNestedLoopJoin")).mkString("\n")
-      assert(!joinPart.contains("CartesianProduct"), physical(x2b))
-    } finally sh2b.unpersist()
+      assert(!joinPart.contains("CartesianProduct"), x2b)
+    }
   }
 
   test("CidrPushdown rewrites agree with ip_in_cidr on non-canonical strings") {

@@ -33,6 +33,18 @@ class QueryLedgerSpec extends SparkSpec {
     assert(qf13 >= 46 && qf13 <= 48, qf13)
   }
 
+  test("warm job counts of the four lazily pinned dedup queries") {
+    // their shingle/vector frames are pinned LAZILY: filled by the first
+    // job that reads them, with no count() of their own in front — an
+    // eager `persist(); count()` put back on any of these pins shows up
+    // here as extra jobs
+    val counts = Seq("x2_dedup_minhash", "x2e_dedup_embed",
+      "x2h_incremental_dedup", "q52e_stream_decontam_ingest")
+      .map(n => n -> warmLedger(n).jobs.size)
+    assert(counts == Seq("x2_dedup_minhash" -> 21, "x2e_dedup_embed" -> 28,
+      "x2h_incremental_dedup" -> 31, "q52e_stream_decontam_ingest" -> 16), counts)
+  }
+
   test("on return every completed stage's tasks are in") {
     val l = warmLedger("qf6_salted_join")
     assert(l.tasks > 0)

@@ -65,20 +65,29 @@ class RegistrySpec extends SparkSpec {
 
   for (q <- Registry.all) {
     test(s"smoke: ${q.name} runs at sf0.001") {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
       val df = q.fn(spark, sf)
       assert(df.columns.nonEmpty)
       val n = df.count()
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows")
-      // cache-lifecycle invariant (VERDICT r08 #7, Caching.withPersisted):
-      // a registered query must release every intermediate it persisted
-      // before returning — in a long-lived session a leaked cache block
-      // degrades all later queries. Only localCheckpoint blocks (the
-      // eager results themselves, reclaimed by the ContextCleaner when
-      // the DataFrame is collected) may remain.
-      val leaked = spark.sparkContext.getPersistentRDDs.values
-        .filterNot(_.isCheckpointed).toSeq
+      // pin-lifecycle invariant (graft.ext.Caching.pinned): a registered
+      // query must free every intermediate it pinned before returning —
+      // in a long-lived session a leaked block set degrades all later
+      // queries. Only checkpoint blocks the returned frame itself reads
+      // (its own final localCheckpoint, reclaimed by the ContextCleaner
+      // when the DataFrame is collected) may remain.
+      val read = org.apache.spark.sql.graftshim.Shim.backingRdds(df)
+        .map(_.id).toSet
+      val live = sc.getPersistentRDDs.values.toSeq
+      val leaked = live.filterNot(_.isCheckpointed)
       assert(leaked.isEmpty,
         s"${q.name} leaked cached RDDs: ${leaked.map(r => (r.id, r.name))}")
+      val leakedPins = live.filter(r =>
+        r.isCheckpointed && !before(r.id) && !read(r.id))
+      assert(leakedPins.isEmpty,
+        s"${q.name} leaked checkpoint pins its result does not read: " +
+          s"${leakedPins.map(r => (r.id, r.count()))}")
     }
   }
 }

@@ -44,16 +44,18 @@ class KMeansSpec extends SparkSpec {
 
   test("train converges on the fixture and reports the round count") {
     val e = fixture.localCheckpoint()
-    val (cent, iters, converged) = KMeans.train(e, init(e, 8), dim, maxIters = 30)
-    assert(converged, s"did not converge in 30 rounds (ran $iters)")
-    assert(iters >= 1 && iters <= 30)
-    // converged means one more update is a fixed point
-    val again = KMeans.update(KMeans.assign(e, cent), dim)
-    val moved = cent.select(col("cid"), col("c").as("c_old"))
-      .join(again.select(col("cid"), col("c").as("c_new")), Seq("cid"), "full_outer")
-      .where(col("c_old").isNull || col("c_new").isNull || col("c_old") =!= col("c_new"))
-      .count()
-    assert(moved == 0)
+    Caching.pinned { pins =>
+      val (cent, iters, converged) = KMeans.train(pins, e, init(e, 8), dim, maxIters = 30)
+      assert(converged, s"did not converge in 30 rounds (ran $iters)")
+      assert(iters >= 1 && iters <= 30)
+      // converged means one more update is a fixed point
+      val again = KMeans.update(KMeans.assign(e, cent), dim)
+      val moved = cent.select(col("cid"), col("c").as("c_old"))
+        .join(again.select(col("cid"), col("c").as("c_new")), Seq("cid"), "full_outer")
+        .where(col("c_old").isNull || col("c_new").isNull || col("c_old") =!= col("c_new"))
+        .count()
+      assert(moved == 0)
+    }
   }
 
   test("inertia is non-increasing across training rounds") {
@@ -75,7 +77,8 @@ class KMeansSpec extends SparkSpec {
 
   test("maxIters caps the loop when convergence is not reached") {
     val e = fixture.localCheckpoint()
-    val (_, iters, _) = KMeans.train(e, init(e, 8), dim, maxIters = 1)
+    val (_, iters, _) =
+      Caching.pinned(pins => KMeans.train(pins, e, init(e, 8), dim, maxIters = 1))
     assert(iters == 1)
   }
 }

@@ -14,13 +14,11 @@ import graft.{SparkSpec, Tables}
 class LshAuditSpec extends SparkSpec {
 
   test("x2b pigeonhole LSH equals brute force at Hamming <= 3, non-vacuously") {
-    val (eq, sh) = DedupQueries.simhashEqualityPlan(spark, sf)
-    try {
-      val row = eq.head()
-      assert(row.getBoolean(0), "LSH pair set != brute-force pair set")
-      assert(row.getInt(1) == 3)
-      assert(row.getBoolean(2), "no pairs at Hamming <= 3 — equality is vacuous")
-    } finally sh.unpersist()
+    val row = Caching.pinned(pins =>
+      DedupQueries.simhashEqualityPlan(pins, spark, sf).head())
+    assert(row.getBoolean(0), "LSH pair set != brute-force pair set")
+    assert(row.getInt(1) == 3)
+    assert(row.getBoolean(2), "no pairs at Hamming <= 3 — equality is vacuous")
   }
 
   test("x2e LSH pairs are a subset of the brute-force truth set with non-trivial recall") {

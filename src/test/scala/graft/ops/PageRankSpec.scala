@@ -44,13 +44,14 @@ class PageRankSpec extends SparkSpec {
     now - before
   }
 
-  /** Run a throwaway pageRank and free its result — every invocation in
-    * this suite releases what it materializes (ADVICE r16: the returned
-    * frame's blocks were the one leak the r16 release work missed).
+  /** Run a throwaway pageRank inside a pin scope, which frees its
+    * result — every invocation in this suite releases what it
+    * materializes.
     */
   private def runAndRelease(iters: Int): Unit =
-    FlowQueries.releaseRanks(
-      FlowQueries.pageRank(FlowQueries.flows(spark, sf), iters))
+    graft.ext.Caching.pinned { pins =>
+      FlowQueries.pageRank(pins, FlowQueries.flows(spark, sf), iters); ()
+    }
 
   test("the flows scan executes exactly once regardless of iteration depth") {
     // warm once so listing/footer caches don't skew the depth-1 baseline
@@ -69,31 +70,32 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("fixed-point mode converges and agrees with the unrolled mode") {
-    val f = FlowQueries.flows(spark, sf)
-    val (rFix, it, d0) = FlowQueries.pageRankFixedPoint(f, maxIters = 50)
-    assert(it > 0 && it < 50, s"did not converge inside the cap (it=$it)")
-    assert(d0 == 0L, s"sf0.001 must reach the EXACT fixed point (delta=$d0)")
-    // independent certificate: one more unrolled round past the detected
-    // fixed point changes no rank by a single nano-unit
-    val again = FlowQueries.pageRank(f, iters = it + 1)
-    val diff = rFix.withColumnRenamed("r", "rf")
-      .join(again, Seq("addr"))
-      .filter(org.apache.spark.sql.functions.col("rf") =!=
-        org.apache.spark.sql.functions.col("r"))
-      .count()
-    assert(diff == 0L, s"$diff addrs moved after the detected fixed point")
-    // and the unrolled-3 registration is the same map iterated 3 times
-    val r3 = FlowQueries.pageRank(f, iters = 3)
-    val rFix3 = {
-      // re-run capped at 3 to compare the prefix
-      val (r, _, _) = FlowQueries.pageRankFixedPoint(f, maxIters = 3)
-      r
+    graft.ext.Caching.pinned { pins =>
+      val f = FlowQueries.flows(spark, sf)
+      val (rFix, it, d0) = FlowQueries.pageRankFixedPoint(pins, f, maxIters = 50)
+      assert(it > 0 && it < 50, s"did not converge inside the cap (it=$it)")
+      assert(d0 == 0L, s"sf0.001 must reach the EXACT fixed point (delta=$d0)")
+      // independent certificate: one more unrolled round past the detected
+      // fixed point changes no rank by a single nano-unit
+      val again = FlowQueries.pageRank(pins, f, iters = it + 1)
+      val diff = rFix.withColumnRenamed("r", "rf")
+        .join(again, Seq("addr"))
+        .filter(org.apache.spark.sql.functions.col("rf") =!=
+          org.apache.spark.sql.functions.col("r"))
+        .count()
+      assert(diff == 0L, s"$diff addrs moved after the detected fixed point")
+      // and the unrolled-3 registration is the same map iterated 3 times
+      val r3 = FlowQueries.pageRank(pins, f, iters = 3)
+      val rFix3 = {
+        // re-run capped at 3 to compare the prefix
+        val (r, _, _) = FlowQueries.pageRankFixedPoint(pins, f, maxIters = 3)
+        r
+      }
+      val prefDiff = r3.withColumnRenamed("r", "ra").join(rFix3, Seq("addr"))
+        .filter(org.apache.spark.sql.functions.col("ra") =!=
+          org.apache.spark.sql.functions.col("r"))
+        .count()
+      assert(prefDiff == 0L, "fixed-point prefix diverges from unrolled mode")
     }
-    val prefDiff = r3.withColumnRenamed("r", "ra").join(rFix3, Seq("addr"))
-      .filter(org.apache.spark.sql.functions.col("ra") =!=
-        org.apache.spark.sql.functions.col("r"))
-      .count()
-    assert(prefDiff == 0L, "fixed-point prefix diverges from unrolled mode")
-    Seq(rFix, again, r3, rFix3).foreach(FlowQueries.releaseRanks)
   }
 }

@@ -50,11 +50,11 @@ class PipelineRestartSpec extends SparkSpec {
       // the q52x static assets, from the sf0.001 fixtures
       val evalIdx = graft.Tables.documents(spark, sf).filter(bucket >= 90)
         .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-      val (_, eBuckets, shEval, idxCaches) =
-        graft.ext.DedupQueries.indexArtifactsFrom(evalIdx)
       val emb = graft.ext.SimilarityQueries.quantFrame(spark, sf)
-      val cb = graft.ext.SimilarityQueries.pqBuildFrom(emb)._3.localCheckpoint()
-      try {
+      graft.ext.Caching.pinned { pins =>
+        val (_, eBuckets, shEval) =
+          graft.ext.DedupQueries.indexArtifactsFrom(pins, evalIdx)
+        val cb = pins.checkpoint(graft.ext.SimilarityQueries.pqBuildFrom(emb)._3)
         // stream the train docs in two halves; the second half also
         // RE-SENDS the first half's rows (cross-batch duplicates whose
         // suppression must survive the crash-replay of the state)
@@ -127,16 +127,16 @@ class PipelineRestartSpec extends SparkSpec {
           .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
         val adm = kept.groupBy("dig").agg(min(col("doc_id")).as("doc_id"))
           .join(kept, Seq("dig", "doc_id"))
-        val (verdict, caches) =
-          graft.ext.DedupQueries.streamDecontamPlan(adm, eBuckets, shEval)
-        val expected = try {
-          val clean = verdict.filter(!col("contaminated"))
+        val expected = graft.ext.Caching.pinned { vp =>
+          val clean = graft.ext.DedupQueries
+            .streamDecontamPlan(vp, adm, eBuckets, shEval)
+            .filter(!col("contaminated"))
             .select(col("doc_id").as("vec_id"))
           graft.ext.SimilarityQueries
             .pqEncode(emb.join(broadcast(clean), Seq("vec_id")), cb)
             .select(col("vec_id"), col("s"), col("code"))
             .collect().map(_.toString).sorted.toSeq
-        } finally caches.foreach(_.unpersist())
+        }
 
         val st = graft.ext.SimilarityQueries.readPqStore(spark, out)
           .select("dig", "vec_id", "s", "code")
@@ -149,7 +149,7 @@ class PipelineRestartSpec extends SparkSpec {
         assert(got == expected,
           s"composed pipeline end state diverged after crash-replay: " +
             s"got ${got.size} rows, expected ${expected.size}")
-      } finally idxCaches.foreach(_.unpersist())
+      }
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
@@ -168,11 +168,11 @@ class PipelineRestartSpec extends SparkSpec {
       val bucket = pmod(col("doc_id") * 2654435761L, lit(100L))
       val evalIdx = graft.Tables.documents(spark, sf).filter(bucket >= 90)
         .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-      val (_, eBuckets, shEval, idxCaches) =
-        graft.ext.DedupQueries.indexArtifactsFrom(evalIdx)
       val emb = graft.ext.SimilarityQueries.quantFrame(spark, sf)
-      val cb = graft.ext.SimilarityQueries.pqBuildFrom(emb)._3.localCheckpoint()
-      try {
+      graft.ext.Caching.pinned { pins =>
+        val (_, eBuckets, shEval) =
+          graft.ext.DedupQueries.indexArtifactsFrom(pins, evalIdx)
+        val cb = pins.checkpoint(graft.ext.SimilarityQueries.pqBuildFrom(emb)._3)
         val train = graft.Tables.documents(spark, sf).filter(bucket < 80)
           .select(col("doc_id"), col("text"), col("lang"), col("n_chars"))
           .collect()
@@ -217,7 +217,7 @@ class PipelineRestartSpec extends SparkSpec {
         assert(at1.nonEmpty, "vacuous cadence comparison")
         assert(at1 == at2, s"K=1 (${at1.size} rows) != K=2 (${at2.size} rows)")
         assert(at1 == at3, s"K=1 (${at1.size} rows) != K=3 (${at3.size} rows)")
-      } finally idxCaches.foreach(_.unpersist())
+      }
     } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 }
