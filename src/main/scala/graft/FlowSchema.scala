@@ -78,6 +78,12 @@ object FlowSchema {
   require(chTypes.map(_._1) == schema.fieldNames.toSeq,
     "chTypes must list exactly the schema fields in order")
 
+  /** The per-flow endpoint columns. Nearly every flow brings a new pair,
+    * so a Parquet dictionary over them rarely pays for itself in a
+    * micro-batch file; [[graft.sources.ParquetSink]] writes them plain.
+    */
+  val endpointColumns: Seq[String] = Seq("src_addr", "dst_addr")
+
   /** Raw in-flight shape before the R3 projection: addresses still as
     * network-order bytes, exactly what a goflow decoder emits
     * (`FlowMessage` protobuf, `main.go:21`).

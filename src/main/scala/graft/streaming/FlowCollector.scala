@@ -91,7 +91,8 @@ object FlowCollector {
             s"ambiguous IPv6 host in '$u' — bracket it: $scheme://[${rest.substring(0, c)}]:${rest.substring(c + 1)}")
           (rest.substring(0, c), rest.substring(c + 1))
         }
-      val port = portStr.toInt
+      val port = portStr.toIntOption.getOrElse(-1)
+      require(port >= 0 && port <= 65535, s"port '$portStr' in '$u' is not a number in 0-65535")
       ListenUrl(scheme, if (host.isEmpty) "127.0.0.1" else host, port)
     }
   }

@@ -116,7 +116,12 @@ object FlowPipeline {
     * partitions keeps them). The write is planned inside each micro-batch,
     * with no second query per batch, and its Hadoop conf is prepared and
     * broadcast once per query rather than serialized into every task of
-    * every batch. Commits are replay-idempotent: a replayed epoch
+    * every batch. The files are those of Spark's batch parquet writer
+    * except that the endpoint address columns
+    * ([[graft.FlowSchema.endpointColumns]]) are written without a
+    * dictionary: in one-file-per-core micro-batch files a dictionary over
+    * near-unique addresses costs CPU and saves no bytes after snappy.
+    * Commits are replay-idempotent: a replayed epoch
     * overwrites the files of its first attempt. A reader listing
     * `outDir` during a commit can see part of that batch, as during a
     * `FileOutputCommitter` v1 job commit; `spark.sql.files

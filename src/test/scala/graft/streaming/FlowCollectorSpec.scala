@@ -148,6 +148,13 @@ class FlowCollectorSpec extends SparkSpec {
     intercept[IllegalArgumentException](parseListen("udp://:99"))
     intercept[IllegalArgumentException](parseListen("sflow://"))
     intercept[IllegalArgumentException](parseListen("garbage"))
+    // a port outside 0-65535 or not a number fails here, naming the URL,
+    // not later on the query thread at bind
+    for (bad <- Seq("nfl://:70000", "sflow://:-1", "netflow://:20x55", "sflow://[::1]:65536")) {
+      val e = intercept[IllegalArgumentException](parseListen(s"nfl://:2055,$bad"))
+      assert(e.getMessage.contains(bad), e.getMessage)
+    }
+    assert(parseListen("nfl://:65535,nfl://:0").map(_.port) == Seq(65535, 0))
     // IPv6: bracketed form accepted with brackets stripped (url.Parse
     // parity); an unbracketed multi-colon host would mis-split on the
     // last ':' and must fail at parse time, not at bind (ADVICE r08)
