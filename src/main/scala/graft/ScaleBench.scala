@@ -624,23 +624,22 @@ object ScaleBench {
     // artifacts once, then time increments that merely LOAD them — and
     // assert the precomputed path emits the IDENTICAL verdict row set, so
     // the speedup is measured on a proven-equivalent plan.
-    def timedIncrement(batch: DataFrame, art: String): (Double, DataFrame) =
-      Caching.pinned { pins =>
-        val out = ext.DedupQueries.incrementVerdictPlan(pins,
-          batch,
-          spark.read.parquet(s"$art/digs.parquet"),
-          spark.read.parquet(s"$art/buckets.parquet"),
-          spark.read.parquet(s"$art/shingles.parquet"))
-        val t0 = System.nanoTime()
-        val ckpt = out.localCheckpoint()
-        ((System.nanoTime() - t0) / 1e9, ckpt)
-      }
+    def timedIncrement(batch: DataFrame, art: String): (Double, DataFrame) = {
+      val out = ext.DedupQueries.incrementVerdictPlan(batch,
+        spark.read.parquet(s"$art/digs.parquet"),
+        spark.read.parquet(s"$art/buckets.parquet"),
+        spark.read.parquet(s"$art/shingles.parquet"))
+      val t0 = System.nanoTime()
+      val ckpt = out.localCheckpoint()
+      ((System.nanoTime() - t0) / 1e9, ckpt)
+    }
 
     val (incrSec, incrFullSec, incrEqual) = {
       val dir = fixture(tiers.head._1)
       val art = materializedArtifacts(s"$SfGen/x2h_idx30p",
         fixtureFingerprint(s"$dir/documents.parquet")) {
-        pins => ext.DedupQueries.x2hIndexArtifacts(pins, spark, dir)
+        pins => ext.DedupQueries.indexArtifactsFrom(pins,
+          ext.DedupQueries.x2hIndex(spark, dir))
       }
       def increment() = timedIncrement(ext.DedupQueries.x2hBatch(spark, dir), art)
       val (tA, outA) = increment()
@@ -1165,6 +1164,16 @@ object ScaleBench {
     // across batches, the steady state a real stream reaches. Plus
     // serve parity: the final firing's artifact equals a sketch-free
     // exact θ-recount over everything staged.
+    // sketch-free exact θ-heavy (gram, cnt, ppm) set over `docs`; the
+    // total is summed off the counts so the gram explode runs once
+    def hhTruth(docs: DataFrame): Set[(String, Long, Long)] = {
+      val cnt = ext.TextQueries.heavyHitterGrams(docs)
+        .groupBy("gram").agg(count(lit(1)).as("cnt"))
+      cnt.crossJoin(broadcast(cnt.agg(sum(col("cnt")).as("total"))))
+        .filter(col("cnt") * ext.TextQueries.HhThetaInv >= col("total"))
+        .select(col("gram"), col("cnt"), expr("cnt * 1000000 DIV total").as("ppm"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    }
     val (hhCadLedger, hhCadParity, hhCadOk) = {
       val dir = fixture(tiers.head._1)
       val base = graft.Tmp.sessionDir(spark, "hh_cadence")
@@ -1193,17 +1202,7 @@ object ScaleBench {
       }
       val served = spark.read.parquet(s"$base/hh/batch=${nB - 1}").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val grams = ext.TextQueries.heavyHitterGrams(docs)
-      val truth = Caching.pinned { pins =>
-        pins.persist(grams)
-        val cnt = grams.groupBy("gram").agg(count(lit(1)).as("cnt"))
-        val tot = grams.agg(count(lit(1)).as("total"))
-        cnt.crossJoin(broadcast(tot))
-          .filter(col("cnt") * ext.TextQueries.HhThetaInv >= col("total"))
-          .select(col("gram"), col("cnt"),
-            expr("cnt * 1000000 DIV total").as("ppm"))
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      }
+      val truth = hhTruth(docs)
       val parity = truth.nonEmpty && served == truth
       val rowsL = ledger.rows.toSeq
       val tail = rowsL.drop(8) // every text seen w.p. ~1 − (0.6)^30 by batch 8
@@ -1300,18 +1299,7 @@ object ScaleBench {
       val rawAt = firings.map(r => batchBytes.take(r.batchId.toInt + 1).sum)
       val served = spark.read.parquet(s"$base/hh/batch=${nB - 1}").collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val grams = ext.TextQueries.heavyHitterGrams(
-        churned.select("doc_id", "text"))
-      val truth = Caching.pinned { pins =>
-        pins.persist(grams)
-        val cnt = grams.groupBy("gram").agg(count(lit(1)).as("cnt"))
-        val tot = grams.agg(count(lit(1)).as("total"))
-        cnt.crossJoin(broadcast(tot))
-          .filter(col("cnt") * ext.TextQueries.HhThetaInv >= col("total"))
-          .select(col("gram"), col("cnt"),
-            expr("cnt * 1000000 DIV total").as("ppm"))
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      }
+      val truth = hhTruth(churned.select("doc_id", "text"))
       val parity = truth.nonEmpty && served == truth
       val cb = firings.map(_.catchupBytes)
       // churn precondition: entrants at EVERY firing, and the tier keeps
@@ -1461,20 +1449,21 @@ object ScaleBench {
     val (x2lStats, x2lOk) = {
       val dir = fixture(tiers.head._1)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      val st = ext.DedupQueries.containmentStages(docs)
+      val dq = ext.DedupQueries
       // five actions over the shared chain — pin the two frames every
       // later count re-derives, or the window build runs ~5x and the
-      // index join ~3x (r16 review)
+      // index join ~3x
       val (reps, windows, prefWindows, candPairs, verified) =
         Caching.pinned { pins =>
-          pins.persist(st.sets)
-          pins.persist(st.cand)
+          val sets = pins.checkpoint(dq.containmentSets(docs))
+          val cand = pins.checkpoint(dq.containmentCandidates(sets))
           // coalesce: sum over an EMPTY sets frame is NULL — a degenerate
           // fixture must fail the gate cleanly (ok=false), not crash the
           // whole ScaleBench run on getLong
-          (st.sets.count(),
-            st.sets.agg(coalesce(sum(col("na")), lit(0L))).head().getLong(0),
-            st.pref.count(), st.cand.count(), st.pairs.count())
+          (pins.rows(sets),
+            sets.agg(coalesce(sum(col("na")), lit(0L))).head().getLong(0),
+            dq.containmentPrefix(sets).count(), pins.rows(cand),
+            dq.containmentVerified(sets, cand).count())
         }
       val brute = reps * (reps - 1) / 2
       val ok = windows > 0 && prefWindows * 4 <= windows &&

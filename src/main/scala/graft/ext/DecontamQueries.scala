@@ -25,11 +25,11 @@ object DecontamQueries {
     * (broadcast band join, no cartesian), same pattern as
     * [[DedupQueries.minhashPairsPlan]]. sigsOf passes bucket through (the
     * signature kernel is per-row ⇒ a pure select), so the broadcast band
-    * join is the plan's first exchange after the persisted shingling.
+    * join is the plan's first exchange after the pinned shingling.
     */
   private[graft] def fuzzyPairsPlan(pins: Caching.Pins,
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val sh = pins.persist(Tables.documents(s, d)
+    val sh = pins.checkpoint(Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
       // tokens aliased in their own projection so the shingle lambda
       // references an attribute, not an embedded re-evaluated split —
@@ -211,7 +211,7 @@ object DecontamQueries {
     // join; nothing quadratic in the corpus. Signatures come from the
     // per-row minhash_sig kernel (no signature shuffle at all).
     Q("x7c_decontam_fuzzy",
-      // tiny result; eager so the shingle cache is released on return
+      // tiny result; eager so the shingle pin is released on return
       (s, d) => Caching.pinned(pins => fuzzyPairsPlan(pins, s, d).localCheckpoint()),
       Some("""WITH t AS (SELECT doc_id, string_split(text,' ') w, text FROM documents),
         sets AS (SELECT doc_id, CASE WHEN len(w) >= 3

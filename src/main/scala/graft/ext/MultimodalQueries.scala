@@ -864,11 +864,11 @@ object Multimodal {
       maxHamming: Int = 3): DataFrame = Caching.pinned { pins =>
     val withDig = media.select(col("doc_id"), col("payload"),
       md5(col("payload")).as("dig"))
-    val membership = pins.persist(withDig.select(col("dig"), col("doc_id")))
+    val membership = pins.checkpoint(withDig.select(col("dig"), col("doc_id")))
     val repOf = membership.groupBy("dig").agg(min(col("doc_id")).as("rep"))
     val reps = withDig.join(repOf, withDig("doc_id") === repOf("rep"))
       .select(col("rep").as("doc_id"), col("payload"))
-    val repPairs = phashPairs(pins.persist(aHashBands(reps)), maxHamming)
+    val repPairs = phashPairs(pins.checkpoint(aHashBands(reps)), maxHamming)
     // within-group cliques: identical payload ⇒ Hamming 0
     val internal = membership.as("x").join(membership.as("y"), "dig")
       .where(col("x.doc_id") < col("y.doc_id"))

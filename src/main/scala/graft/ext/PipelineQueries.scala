@@ -689,7 +689,7 @@ object PipelineQueries {
     // brute-force jaccard from scratch, so both stages AND their
     // composition are hash-gated.
     Q("x10b_incremental_rebuild",
-      (s, d) => Caching.pinned { pins =>
+      (s, d) => {
         val docs = Tables.documents(s, d)
           .repartition(s.sparkContext.defaultParallelism)
         val newS = docs.select(col("doc_id"), col("text"),
@@ -698,9 +698,8 @@ object PipelineQueries {
           .select(col("doc_id"),
             md5(when(pmod(col("doc_id"), lit(10)) === 7,
               substring(col("text"), 1, 40)).otherwise(col("text"))).as("old_dg"))
-        // NOT cached (r19 measured: an eager pin here made the query
-        // ~1.3 s SLOWER — the diff join is cheap to recompute, and the
-        // pin serialized the downstream consumers behind one populate)
+        // not pinned: the diff join is cheap to recompute, and a pin
+        // serialized the downstream consumers behind one materialization
         val classified = newS.join(oldS, Seq("doc_id"), "left")
           .select(col("doc_id"), col("text"), col("dig"),
             when(col("old_dg").isNull, "added")
@@ -709,14 +708,13 @@ object PipelineQueries {
         val batch = classified.filter(col("change_type") =!= "unchanged")
           .select("doc_id", "text", "dig")
         val (indexDigs, iBuckets, shIdx) =
-          DedupQueries.indexArtifactsFrom(pins,
+          DedupQueries.indexArtifacts(
             classified.filter(col("change_type") === "unchanged")
               .select("doc_id", "text", "dig"))
-        DedupQueries.incrementVerdictPlan(pins, batch, indexDigs, iBuckets, shIdx)
+        DedupQueries.incrementVerdictPlan(batch, indexDigs, iBuckets, shIdx)
           .join(classified.select("doc_id", "change_type"), "doc_id")
           .select(col("doc_id"), col("change_type"),
             col("dup_of_index"), col("dup_in_batch"), col("verdict"))
-          .localCheckpoint()
       },
       Some("""WITH t AS (SELECT doc_id, text, md5(text) AS dig,
             string_split(text, ' ') AS w FROM documents),
@@ -794,7 +792,7 @@ object PipelineQueries {
           .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"),
             col("r.n_chars").as("n_chars"))
         // read by grams AND the clean-side anti-join
-        val surv = pins.persist(reps
+        val surv = pins.checkpoint(reps
           .withColumn("bucket", splitBucket)
           .withColumn("w", split(col("text"), " "))
           .select(col("doc_id"), col("bucket"), col("w"),
@@ -802,7 +800,7 @@ object PipelineQueries {
         // gram identity = window_md5 digest, the x7 design (distinct
         // strings => distinct digests; only membership leaves the stage)
         // (read by the eval side AND the train probe)
-        val grams = pins.persist(surv.where(size(col("w")) >= 8)
+        val grams = pins.checkpoint(surv.where(size(col("w")) >= 8)
           .select(col("doc_id"), col("bucket"),
             explode(graft.functions.Kernels.window_md5(col("w"), 8)).as("gram")))
         val evalG = grams.where(col("bucket") >= 90).select("gram").distinct()

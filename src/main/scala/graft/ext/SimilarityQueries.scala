@@ -247,8 +247,8 @@ object SimilarityQueries {
     // (not xxhash64) for the same birthday-collision bound as x2/x1.
     val keyed = e.select(col("vec_id"), col("qe"),
       md5(col("qe").cast("string")).as("vkey"))
-    val membership = pins.persist(keyed.select(col("vkey"), col("vec_id")))
-    val vecs = pins.persist(keyed.groupBy(col("vkey"))
+    val membership = pins.checkpoint(keyed.select(col("vkey"), col("vec_id")))
+    val vecs = pins.checkpoint(keyed.groupBy(col("vkey"))
       .agg(min(struct(col("vec_id"), col("qe"))).as("r"))
       .select(col("vkey"), col("r.qe").as("qe"))
       .select(col("vkey"), col("qe"), lshSigStruct(col("qe")).as("sig")))
@@ -826,20 +826,20 @@ object SimilarityQueries {
       trainRounds: Int): DataFrame = Caching.pinned { pins =>
     val tau = 0.4
     val e = quantFrame(s, d)
-    val reps = pins.persist(e.groupBy(col("qe")).agg(min(col("vec_id")).as("rep_id")))
+    val reps = pins.checkpoint(e.groupBy(col("qe")).agg(min(col("vec_id")).as("rep_id")))
     // k GROWS WITH THE CORPUS — the SemDeDup device that keeps the
     // within-cluster quadratic bounded: k = max(8, ⌈distinct/256⌉)
     // caps the mean cluster at ~256 reps, so the pair stage reads
     // O(distinct · 256), linear in the corpus, not distinct². The
     // distinct count is a driver-side O(1) scalar certificate (the
-    // bucketedPair/fixed-point pattern) read off the PERSISTED rep
+    // bucketedPair/fixed-point pattern) read off the PINNED rep
     // frame — one corpus shuffle on qe serves both the count and the
     // assignment below. The oracle replays the SAME rule over
     // count(DISTINCT qe). Measured at the 30× gate: fixed
     // k=8 over the 60k-distinct scaled corpus ran 225M pairs in 9.7 s
     // (ratio 14.5); the rule picks k=236 there and holds the pair set
     // at ~5M.
-    val k = math.max(8L, (reps.count() + 255L) / 256L)
+    val k = math.max(8L, (pins.rows(reps) + 255L) / 256L)
     val init = e.filter(col("vec_id") < k)
       .select(col("vec_id").cast(IntegerType).as("cid"), col("qe").as("c"))
     // TRAINED coarse centroids — `trainRounds`
@@ -859,10 +859,10 @@ object SimilarityQueries {
     // the strip-vector-then-rejoin device — see its scaladoc for why
     // the 512-byte vector must not ride the min(struct) SortAggregate:
     // the 6.5 GB spill this query hit at its 30× gate)
-    val asg = pins.persist(KMeans.assign(
+    val asg = KMeans.assign(
         reps.select(col("rep_id").as("vec_id"), col("qe")), cent)
       .select(col("vec_id").as("rep_id"), col("qe"),
-        col("cluster"), col("d2")))
+        col("cluster"), col("d2"))
     val o = asg.select(col("rep_id").as("o_id"), col("qe").as("o_qe"),
       col("cluster").as("o_cl"), col("d2").as("o_d2"))
     // τ-neighbor with better centroid priority ⇒ pruned (semi: the
@@ -884,7 +884,7 @@ object SimilarityQueries {
         when(col("vec_id") =!= col("rep_id"), "exact_dup")
           .when(col("is_pruned"), "semantic_dup")
           .otherwise("kept").as("reason"))
-      .localCheckpoint() // corpus-sized result; release the rep cache
+      .localCheckpoint() // corpus-sized result; release the rep pins
   }
 
   private def pqApproxScored(s: SparkSession, d: String): DataFrame = {
@@ -1291,24 +1291,21 @@ object SimilarityQueries {
           .select(col("q_id"), col("c_id"), col("label"),
             qcos(col("q_emb"), col("c_emb")).as("cos"))
         val wk = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        // persisted: consumed twice below (n_results + the recall audit);
-        // without it the whole probe/scan subplan runs twice (r01 bench)
-        val ivfTop = cand.withColumn("rank", row_number().over(wk)).filter(col("rank") <= 10)
-          .select(col("q_id"), col("c_id"))
-        Caching.pinned { pins =>
-          pins.persist(ivfTop)
-          val exactAll = bruteKnn(s, d, 8, 10).select(col("q_id"), col("c_id"))
-          // fully lazy: recall computed in-plan (no driver-side action at
-          // query-build time)
-          val hits = ivfTop.join(exactAll, Seq("q_id", "c_id"), "left_semi")
-            .agg(count(lit(1)).as("n_hits"))
-          ivfTop.agg(count(lit(1)).as("n_results"))
-            .crossJoin(hits)
-            .select(col("n_results"),
-              (col("n_hits").cast(DoubleType) / 80.0 >= 0.15).as("recall_floor_ok"),
-              lit(3).as("nprobe"), lit(10).as("centroids"))
-            .localCheckpoint() // 1 row; release the probe-scan cache below
-        }
+        // read twice below (n_results + the recall audit) in one plan,
+        // whose two branches share the window's exchange, so the probe
+        // scan runs once unpinned
+        val ivfTop = cand.withColumn("rank", row_number().over(wk))
+          .filter(col("rank") <= 10).select(col("q_id"), col("c_id"))
+        val exactAll = bruteKnn(s, d, 8, 10).select(col("q_id"), col("c_id"))
+        // fully lazy: recall computed in-plan (no driver-side action at
+        // query-build time)
+        val hits = ivfTop.join(exactAll, Seq("q_id", "c_id"), "left_semi")
+          .agg(count(lit(1)).as("n_hits"))
+        ivfTop.agg(count(lit(1)).as("n_results"))
+          .crossJoin(hits)
+          .select(col("n_results"),
+            (col("n_hits").cast(DoubleType) / 80.0 >= 0.15).as("recall_floor_ok"),
+            lit(3).as("nprobe"), lit(10).as("centroids"))
       },
       Some("SELECT 80 AS n_results, true AS recall_floor_ok, 3 AS nprobe, 10 AS centroids")),
 

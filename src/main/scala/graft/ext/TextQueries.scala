@@ -338,10 +338,10 @@ object TextQueries {
         // shuffle) — at corpus scale that is three passes over every token.
         // A doc has exactly one lang, so cube rows ARE the distinct
         // (doc, tok) pairs and df = row count per tok.
-        val cube = docTok.groupBy(col("lang"), col("doc_id"), col("tok"))
-          .agg(count(lit(1)).as("c"))
         Caching.pinned { pins =>
-          pins.persist(cube)
+          val cube = pins.checkpoint(docTok
+            .groupBy(col("lang"), col("doc_id"), col("tok"))
+            .agg(count(lit(1)).as("c")))
           val nDf = Tables.documents(s, d).agg(count(lit(1)).as("n"))
           val df = cube.groupBy(col("tok").as("d_tok")).agg(count(lit(1)).as("df"))
           val tf = cube.groupBy(col("lang"), col("tok")).agg(sum(col("c")).as("tf"))
@@ -353,7 +353,7 @@ object TextQueries {
           val w = Window.partitionBy(col("lang")).orderBy(col("tfidf_rat").desc, col("tok"))
           scored.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
             .select(col("lang"), col("rn"), col("tok"), col("tf"), col("df"), col("tfidf_rat"))
-            .localCheckpoint() // 3 rows per lang; eager so the cache can go
+            .localCheckpoint() // 3 rows per lang; eager so the pin can go
         }
       },
       Some("""WITH dt AS (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents),
@@ -799,7 +799,7 @@ object TextQueries {
         val admDocs = kept.join(admitted, Seq("dig", "doc_id"))
         val evalIdx = Tables.documents(s, d).filter(bucket >= 90)
           .select(col("doc_id"), col("text"), md5(col("text")).as("dig"))
-        val (_, eBuckets, shEval) = DedupQueries.indexArtifactsFrom(pins, evalIdx)
+        val (_, eBuckets, shEval) = DedupQueries.indexArtifacts(evalIdx)
         val verdict = DedupQueries.streamDecontamPlan(pins, admDocs, eBuckets, shEval)
         val cleanDocs = admDocs
           .join(verdict.filter(!col("contaminated")).select("doc_id"),
@@ -863,22 +863,17 @@ object TextQueries {
         val toks = Tables.documents(s, d)
           .select(explode(split(col("text"), " ")).as("word"))
           .filter(length(col("word")) > 0)
-        // counts feeds two consumers (total + top-50) — pinned so the
-        // corpus-sized token shuffle runs once (the vocab-sized frame is
-        // the cheap thing to hold)
+        // counts feeds two consumers (total + top-50) of one plan; both
+        // read the token shuffle's one exchange, so it runs once unpinned
         val counts = toks.groupBy("word").agg(count(lit(1)).as("cnt"))
-        Caching.pinned { pins =>
-          pins.persist(counts)
-          val total = counts.agg(sum(col("cnt")).as("total"))
-          val top = counts.orderBy(col("cnt").desc, col("word")).limit(50)
-          val w = Window.orderBy(col("cnt").desc, col("word"))
-          top.crossJoin(broadcast(total))
-            .withColumn("rank", row_number().over(w).cast(LongType))
-            .withColumn("cum_ppm",
-              expr("sum(cnt) OVER (ORDER BY cnt DESC, word) * 1000000 DIV total"))
-            .select(col("rank"), col("word"), col("cnt"), col("cum_ppm"))
-            .localCheckpoint() // ≤50 rows; eager so the cache can go
-        }
+        val total = counts.agg(sum(col("cnt")).as("total"))
+        val top = counts.orderBy(col("cnt").desc, col("word")).limit(50)
+        val w = Window.orderBy(col("cnt").desc, col("word"))
+        top.crossJoin(broadcast(total))
+          .withColumn("rank", row_number().over(w).cast(LongType))
+          .withColumn("cum_ppm",
+            expr("sum(cnt) OVER (ORDER BY cnt DESC, word) * 1000000 DIV total"))
+          .select(col("rank"), col("word"), col("cnt"), col("cum_ppm"))
       },
       Some("""WITH c AS (SELECT word, CAST(count(*) AS BIGINT) AS cnt
             FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -910,19 +905,18 @@ object TextQueries {
     // the everything-fits degenerate case).
     Q("x4s_heavy_hitters",
       (s, d) => {
-        val grams = heavyHitterGrams(
-          Tables.fanOut(Tables.documents(s, d), col("doc_id"))) // §2.5
         // three consumers (sketch, recount, total) — one gram scan each is
         // fine at scale, but pinning the exploded frame keeps the fixture
         // run honest about which pass costs what
         Caching.pinned { pins =>
-          pins.persist(grams)
+          val grams = pins.checkpoint(heavyHitterGrams(
+            Tables.fanOut(Tables.documents(s, d), col("doc_id")))) // §2.5
           val cand = grams
             .agg(graft.functions.Aggregators.misra_gries(HhCapacity)(col("gram"))
               .as("sk"))
             .select(explode(map_keys(col("sk"))).as("gram"))
           heavyHitterRecount(grams, cand)
-            .localCheckpoint() // ≤ 1/θ rows; eager so the gram cache can go
+            .localCheckpoint() // ≤ 1/θ rows; eager so the gram pin can go
         }
       },
       Some(HeavyHittersOracle)),

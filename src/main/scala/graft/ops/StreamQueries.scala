@@ -302,18 +302,16 @@ object StreamQueries {
       out: String, every: Int = 2)(
       batch: DataFrame, id: Long): Unit = {
     // a foreachBatch frame RE-EXECUTES its whole micro-batch plan (file
-    // read → funnel → RocksDB state operator) on EVERY action — persist
-    // it so the four consumers below (emptiness probe, decontam group,
-    // verdict join, dig mapping) read ONE materialization instead of
-    // running the state operator four times per batch (measured A/B at
-    // sf0.1: q52x warm 13.4 s → 11.0 s); released before return
+    // read → funnel → RocksDB state operator) on EVERY action — pin it
+    // so the state operator runs once per batch for its consumers (the
+    // emptiness test, decontam group, verdict join, dig mapping)
     Caching.pinned { pins =>
-      val b = pins.persist(batch)
+      val b = pins.checkpoint(batch)
       // ProcessingTime TTL maintenance schedules EMPTY batches forever
       // (see [[drainUntilQuiescent]]) — skip them, or the store fills
       // with empty batch=<id> dirs and every maintenance tick pays a
       // decontam plan
-      if (!b.isEmpty) {
+      if (pins.rows(b) > 0) {
         val clean = graft.ext.DedupQueries.streamDecontamPlan(pins, b, eBuckets, shEval)
           .filter(!col("contaminated"))
           .select(col("doc_id").as("vec_id"))
@@ -553,168 +551,167 @@ object StreamQueries {
       def sumsFor(keys: Set[String])(read: => Map[String, Vector[Long]]) =
         if (keys.isEmpty) Map.empty[String, Vector[Long]]
         else { jobs += 1; read }
-      // with the cadence on, the batch has two consumers (rows sink +
-      // sketch agg) — persist so each doesn't re-run the micro-batch plan
-      Caching.pinned { pins =>
-        val b = if (rowsDir != null) pins.persist(batch) else batch
-        if (rowsDir != null) {
-          b.write.mode("overwrite").parquet(s"$rowsDir/batch=$id")
-          jobs += 1
-        }
-        val hit = st.lastId == id - 1
-        // prev sketch: cache on the happy path; the per-batch generation
-        // strictly below id on restart/replay — identical by construction
-        val prev: Map[String, Long] =
-          if (hit) st.sketch
-          else latestSketchGen(s, skDir, below = id)
+      // with the cadence on, the batch lands in its rows dir first and
+      // the sketch aggregation reads that dir back, so the micro-batch
+      // plan runs once
+      if (rowsDir != null) {
+        batch.write.mode("overwrite").parquet(s"$rowsDir/batch=$id")
+        jobs += 1
+      }
+      val hit = st.lastId == id - 1
+      // prev sketch: cache on the happy path; the per-batch generation
+      // strictly below id on restart/replay — identical by construction
+      val prev: Map[String, Long] =
+        if (hit) st.sketch
+        else latestSketchGen(s, skDir, below = id)
+          .map { p =>
+            jobs += 1
+            s.read.parquet(p).as[(String, Long)].collect().toMap
+          }.getOrElse(Map.empty[String, Long])
+      // prev cum + exact totals through id − 1: cached, or rebuilt from
+      // the newest durable cum generation plus a recount over the ≤
+      // recountEvery rows dirs above it (bounded; crash-path only)
+      val (prevCum, prevTotals, prevGenId) =
+        if (recountEvery <= 0) (Map.empty[String, Vector[Long]], zero, -1L)
+        else if (hit) (st.cum, st.totals, st.cumGenId)
+        else {
+          val (cumJ, totJ, j) = latestSketchGen(s, cumDir, below = id)
             .map { p =>
               jobs += 1
-              s.read.parquet(p).as[(String, Long)].collect().toMap
-            }.getOrElse(Map.empty[String, Long])
-        // prev cum + exact totals through id − 1: cached, or rebuilt from
-        // the newest durable cum generation plus a recount over the ≤
-        // recountEvery rows dirs above it (bounded; crash-path only)
-        val (prevCum, prevTotals, prevGenId) =
-          if (recountEvery <= 0) (Map.empty[String, Vector[Long]], zero, -1L)
-          else if (hit) (st.cum, st.totals, st.cumGenId)
+              val m = sumsOf(s.read.parquet(p))
+              (m - CumTotalKey, m.getOrElse(CumTotalKey, zero), genIdOf(p))
+            }.getOrElse((Map.empty[String, Vector[Long]], zero, -1L))
+          val mid = (j + 1) until id
+          if (mid.isEmpty) (cumJ, totJ, j)
           else {
-            val (cumJ, totJ, j) = latestSketchGen(s, cumDir, below = id)
-              .map { p =>
-                jobs += 1
-                val m = sumsOf(s.read.parquet(p))
-                (m - CumTotalKey, m.getOrElse(CumTotalKey, zero), genIdOf(p))
-              }.getOrElse((Map.empty[String, Vector[Long]], zero, -1L))
-            val mid = (j + 1) until id
-            if (mid.isEmpty) (cumJ, totJ, j)
-            else {
-              jobs += 1
-              val r = rows(mid).agg(dom.totalCols.head, dom.totalCols.tail: _*)
-                .head()
-              (cumJ, add(totJ, Vector.tabulate(arity)(r.getLong)), j)
-            }
-          }
-        // ONE fused aggregation job yields sketch + batch totals (the
-        // writer is job-count-bound: tiny jobs per micro-batch dominate at
-        // fixture scale, so every fused/skipped job counts)
-        val skRow = dom.keyed(b)
-          .agg(graft.functions.Aggregators.weighted_misra_gries(dom.capacity)(
-            col(key), dom.weight).as("sk"), dom.totalCols: _*)
-          .head()
-        jobs += 1
-        val merged = agg.merge(prev, skRow.getMap[String, Long](0).toMap)
-        val totals = add(prevTotals,
-          Vector.tabulate(arity)(i => skRow.getLong(i + 1)))
-        val w = totals.head
-        DriverParquet.overwriteKV(s, s"$skDir/batch=$id", key, dom.sketchCol,
-          merged.toSeq)
-        var newCum = prevCum
-        var newGenId = prevGenId
-        var entrantsN = 0L
-        var histRead = 0L
-        var windowRead = 0L
-        var catchupBytes = -1L
-        val fired = recountEvery > 0 && (id + 1) % recountEvery == 0
-        if (fired) {
-          val cap1 = dom.capacity + 1L
-          val floorThresh =
-            math.max(0L, w / dom.thetaInv - (w + cap1 - 1L) / cap1)
-          val pruned = merged.filter { case (_, c) => c >= floorThresh }
-          val entrants = pruned.keySet -- prevCum.keySet
-          val survivors = pruned.keySet & prevCum.keySet
-          val window = (prevGenId + 1) to id
-          val (survSums, catchup) =
-            if (tierDir == null) {
-              // 0 when no window job runs (entrant-only firing): the
-              // ledger records READS performed, not dirs in scope
-              windowRead = if (survivors.isEmpty) 0 else window.size
-              val sc = sumsFor(survivors) {
-                sumsOf(dom.rowSums(semi(rows(window), survivors)))
-              }
-              // every batch dir, the just-written one included — listed,
-              // not globbed: a glob path fails the parquet reader's
-              // metadata-dir probe with a logged stack trace per read
-              val cu = sumsFor(entrants) {
-                sumsOf(dom.rowSums(semi(
-                  rows(batchDirs(s, rowsDir).map(_._1)), entrants)))
-              }
-              (sc, cu)
-            } else {
-              sweepOrphanFragments(s, tierDir, prevGenId, id)
-              // the window's FULL per-key sums become a summary fragment —
-              // key-sorted single shard, so later isin probes prune row
-              // groups on min/max stats
-              val frag = s"$tierDir/frag/batch=$id"
-              jobs += 1
-              windowRead = window.size
-              dom.rowSums(rows(window))
-                .coalesce(1).sortWithinPartitions(key)
-                .write.mode("overwrite").parquet(frag)
-              val sc = sumsFor(survivors) {
-                sumsOf(s.read.parquet(frag)
-                  .filter(col(key).isin(survivors.toSeq: _*)))
-              }
-              // live gens + unfolded fragments tile batches 0..id exactly
-              // and sums are additive across tiles
-              val cu = sumsFor(entrants) {
-                val (m, cost) = graft.QueryLedger.during(s) {
-                  sumsOf(dom.storeSums(
-                    graft.ext.SimilarityQueries.readPqStore(s, tierDir)
-                      .filter(col(key).isin(entrants.toSeq: _*))))
-                }
-                catchupBytes = cost.inputBytes
-                m
-              }
-              (sc, cu)
-            }
-          newCum = pruned.keysIterator.map { k =>
-            k -> (if (entrants(k)) catchup.getOrElse(k, zero)
-                  else add(prevCum(k), survSums.getOrElse(k, zero)))
-          }.toMap
-          newGenId = id
-          entrantsN = entrants.size
-          // raw history dirs read — the statistic the tier eliminates
-          histRead = if (entrants.isEmpty || tierDir != null) 0L else id + 1
-          DriverParquet.overwrite(s, s"$cumDir/batch=$id", key, dom.sumCols,
-            newCum.toSeq :+ (CumTotalKey -> totals))
-          DriverParquet.overwrite(s, s"$hhDir/batch=$id", key,
-            dom.sumCols :+ "ppm",
-            newCum.toSeq
-              .filter { case (_, v) => v.head * dom.thetaInv >= w }
-              .map { case (k, v) => (k, v :+ v.head * 1000000L / w) })
-          // tier maintenance LAST — the cum gen is durable, so a crash in
-          // here leaves no orphan fragment, and maintain's own replay
-          // contract covers torn gens/expiry
-          if (tierDir != null) {
-            val stats = graft.ext.SimilarityQueries.maintainPqStore(
-              s, tierDir, id,
-              foldWith = Some((df: DataFrame, n: Int) =>
-                dom.storeSums(df).repartitionByRange(n, col(key))
-                  .sortWithinPartitions(key)))
-            jobs += 1 + stats.mergesFired
-          }
-          if (entrants.nonEmpty) st.consecEntrantFirings += 1
-          else st.consecEntrantFirings = 0
-          if (st.consecEntrantFirings >= ChurnAlertFirings && !st.churnWarned) {
-            st.churnWarned = true
-            cadenceChurnAlerts.increment()
-            System.err.println(s"[cadence] $hhDir: entrants on " +
-              s"${st.consecEntrantFirings} consecutive firings — $key " +
-              s"churn above the prune floor keeps re-reading " +
-              (if (tierDir == null) s"$rowsDir/batch=*; set tierDir to " +
-                "fold the generational summary store instead if the key " +
-                "space genuinely grows without bound"
-               else s"the $tierDir summary store (bounded, but nonzero " +
-                "per firing)"))
+            jobs += 1
+            val r = rows(mid).agg(dom.totalCols.head, dom.totalCols.tail: _*)
+              .head()
+            (cumJ, add(totJ, Vector.tabulate(arity)(r.getLong)), j)
           }
         }
-        if (ledger != null)
-          ledger.rows += CumLedgerRow(id, entrantsN, histRead, fired,
-            windowBatchesRead = windowRead, jobs = jobs,
-            catchupBytes = catchupBytes)
-        st.sketch = merged; st.totals = totals
-        st.cum = newCum; st.cumGenId = newGenId
-        st.lastId = id
+      // ONE fused aggregation job yields sketch + batch totals (the
+      // writer is job-count-bound: tiny jobs per micro-batch dominate at
+      // fixture scale, so every fused/skipped job counts)
+      val skRow = dom.keyed(if (rowsDir == null) batch
+          else s.read.schema(batch.schema).parquet(s"$rowsDir/batch=$id"))
+        .agg(graft.functions.Aggregators.weighted_misra_gries(dom.capacity)(
+          col(key), dom.weight).as("sk"), dom.totalCols: _*)
+        .head()
+      jobs += 1
+      val merged = agg.merge(prev, skRow.getMap[String, Long](0).toMap)
+      val totals = add(prevTotals,
+        Vector.tabulate(arity)(i => skRow.getLong(i + 1)))
+      val w = totals.head
+      DriverParquet.overwriteKV(s, s"$skDir/batch=$id", key, dom.sketchCol,
+        merged.toSeq)
+      var newCum = prevCum
+      var newGenId = prevGenId
+      var entrantsN = 0L
+      var histRead = 0L
+      var windowRead = 0L
+      var catchupBytes = -1L
+      val fired = recountEvery > 0 && (id + 1) % recountEvery == 0
+      if (fired) {
+        val cap1 = dom.capacity + 1L
+        val floorThresh =
+          math.max(0L, w / dom.thetaInv - (w + cap1 - 1L) / cap1)
+        val pruned = merged.filter { case (_, c) => c >= floorThresh }
+        val entrants = pruned.keySet -- prevCum.keySet
+        val survivors = pruned.keySet & prevCum.keySet
+        val window = (prevGenId + 1) to id
+        val (survSums, catchup) =
+          if (tierDir == null) {
+            // 0 when no window job runs (entrant-only firing): the
+            // ledger records READS performed, not dirs in scope
+            windowRead = if (survivors.isEmpty) 0 else window.size
+            val sc = sumsFor(survivors) {
+              sumsOf(dom.rowSums(semi(rows(window), survivors)))
+            }
+            // every batch dir, the just-written one included — listed,
+            // not globbed: a glob path fails the parquet reader's
+            // metadata-dir probe with a logged stack trace per read
+            val cu = sumsFor(entrants) {
+              sumsOf(dom.rowSums(semi(
+                rows(batchDirs(s, rowsDir).map(_._1)), entrants)))
+            }
+            (sc, cu)
+          } else {
+            sweepOrphanFragments(s, tierDir, prevGenId, id)
+            // the window's FULL per-key sums become a summary fragment —
+            // key-sorted single shard, so later isin probes prune row
+            // groups on min/max stats
+            val frag = s"$tierDir/frag/batch=$id"
+            jobs += 1
+            windowRead = window.size
+            dom.rowSums(rows(window))
+              .coalesce(1).sortWithinPartitions(key)
+              .write.mode("overwrite").parquet(frag)
+            val sc = sumsFor(survivors) {
+              sumsOf(s.read.parquet(frag)
+                .filter(col(key).isin(survivors.toSeq: _*)))
+            }
+            // live gens + unfolded fragments tile batches 0..id exactly
+            // and sums are additive across tiles
+            val cu = sumsFor(entrants) {
+              val (m, cost) = graft.QueryLedger.during(s) {
+                sumsOf(dom.storeSums(
+                  graft.ext.SimilarityQueries.readPqStore(s, tierDir)
+                    .filter(col(key).isin(entrants.toSeq: _*))))
+              }
+              catchupBytes = cost.inputBytes
+              m
+            }
+            (sc, cu)
+          }
+        newCum = pruned.keysIterator.map { k =>
+          k -> (if (entrants(k)) catchup.getOrElse(k, zero)
+                else add(prevCum(k), survSums.getOrElse(k, zero)))
+        }.toMap
+        newGenId = id
+        entrantsN = entrants.size
+        // raw history dirs read — the statistic the tier eliminates
+        histRead = if (entrants.isEmpty || tierDir != null) 0L else id + 1
+        DriverParquet.overwrite(s, s"$cumDir/batch=$id", key, dom.sumCols,
+          newCum.toSeq :+ (CumTotalKey -> totals))
+        DriverParquet.overwrite(s, s"$hhDir/batch=$id", key,
+          dom.sumCols :+ "ppm",
+          newCum.toSeq
+            .filter { case (_, v) => v.head * dom.thetaInv >= w }
+            .map { case (k, v) => (k, v :+ v.head * 1000000L / w) })
+        // tier maintenance LAST — the cum gen is durable, so a crash in
+        // here leaves no orphan fragment, and maintain's own replay
+        // contract covers torn gens/expiry
+        if (tierDir != null) {
+          val stats = graft.ext.SimilarityQueries.maintainPqStore(
+            s, tierDir, id,
+            foldWith = Some((df: DataFrame, n: Int) =>
+              dom.storeSums(df).repartitionByRange(n, col(key))
+                .sortWithinPartitions(key)))
+          jobs += 1 + stats.mergesFired
+        }
+        if (entrants.nonEmpty) st.consecEntrantFirings += 1
+        else st.consecEntrantFirings = 0
+        if (st.consecEntrantFirings >= ChurnAlertFirings && !st.churnWarned) {
+          st.churnWarned = true
+          cadenceChurnAlerts.increment()
+          System.err.println(s"[cadence] $hhDir: entrants on " +
+            s"${st.consecEntrantFirings} consecutive firings — $key " +
+            s"churn above the prune floor keeps re-reading " +
+            (if (tierDir == null) s"$rowsDir/batch=*; set tierDir to " +
+              "fold the generational summary store instead if the key " +
+              "space genuinely grows without bound"
+             else s"the $tierDir summary store (bounded, but nonzero " +
+              "per firing)"))
+        }
       }
+      if (ledger != null)
+        ledger.rows += CumLedgerRow(id, entrantsN, histRead, fired,
+          windowBatchesRead = windowRead, jobs = jobs,
+          catchupBytes = catchupBytes)
+      st.sketch = merged; st.totals = totals
+      st.cum = newCum; st.cumGenId = newGenId
+      st.lastId = id
     }
   }
 
@@ -1969,10 +1966,10 @@ object StreamQueries {
           Streams.start(docs, cp)(_.trigger(Trigger.AvailableNow())
             .foreachBatch { (batch: DataFrame, id: Long) =>
               Caching.pinned { bp =>
-                // persist: the scrub consumes the batch twice (window
-                // explode + rebuild join) and each action would re-run
+                // pinned: the scrub consumes the batch twice (window
+                // explode + rebuild join) and each read would re-run
                 // the micro-batch plan (see pipelineBatchWriter)
-                val b = bp.persist(batch)
+                val b = bp.checkpoint(batch)
                 val wins = graft.ext.DedupQueries.scrubWindows(b,
                   b.sparkSession.sparkContext.defaultParallelism)
                 // per-batch OVERWRITE dir (q52g's effectively-once
@@ -2163,15 +2160,14 @@ object StreamQueries {
         val cand = s.read.parquet(fin).select(col("gram"))
         // pin the gram frame across the recount's two consumers (counts +
         // total) like x4s does — without it each consumer re-runs the
-        // corpus-sized trigram explode (r14 review finding); fanOut like
-        // x4s too (r19 — profiled: the recount ran as two ~370 ms
-        // ONE-task jobs on the one-split fixture scan, guide §2.5)
-        val grams = graft.ext.TextQueries.heavyHitterGrams(
-          Tables.fanOut(Tables.documents(s, d), col("doc_id")))
+        // corpus-sized trigram explode; fanOut like x4s too (the recount
+        // ran as two ONE-task jobs on the one-split fixture scan, guide
+        // §2.5)
         Caching.pinned { pins =>
-          pins.persist(grams)
+          val grams = pins.checkpoint(graft.ext.TextQueries.heavyHitterGrams(
+            Tables.fanOut(Tables.documents(s, d), col("doc_id"))))
           graft.ext.TextQueries.heavyHitterRecount(grams, cand)
-            .localCheckpoint() // ≤ 1/θ rows; eager so the cache can go
+            .localCheckpoint() // ≤ 1/θ rows; eager so the pin can go
         }
       },
       Some(graft.ext.TextQueries.HeavyHittersOracle)),
@@ -2245,17 +2241,12 @@ object StreamQueries {
         val fin = latestSketchGen(s, skDir, below = Long.MaxValue)
           .getOrElse(sys.error(s"no sketch generation at $skDir"))
         val cand = s.read.parquet(fin).select(col("src_addr"))
-        // the ingested rows ARE the corpus — pin them across the
-        // recount's two consumers (per-talker sums + total), q52t's
-        // discipline; the tail is topTalkerRecount, the one definition
-        // the mid-stream cadence artifacts also go through
-        val ingested = s.read.parquet(batchDirs(s, out).map(_._2.toString): _*)
-          .select(col("src_addr"), col("bytes"))
-        Caching.pinned { pins =>
-          pins.persist(ingested)
-          topTalkerRecount(ingested, cand)
-            .localCheckpoint() // ≤ θ⁻¹ rows; eager so the cache can go
-        }
+        // the ingested rows ARE the corpus; the recount's two consumers
+        // (per-talker sums + total) re-read those small parquet files
+        // rather than pin them. The tail is topTalkerRecount, the one
+        // definition the mid-stream cadence artifacts also go through
+        topTalkerRecount(s.read.parquet(batchDirs(s, out).map(_._2.toString): _*)
+          .select(col("src_addr"), col("bytes")), cand)
       },
       Some(s"""WITH gen AS (SELECT unnest(generate_series(0, 499)) AS i),
         f AS (SELECT CASE WHEN i % 10 < 3 THEN '10.0.0.1'
@@ -2300,10 +2291,10 @@ object StreamQueries {
           Streams.start(train, cp)(_.trigger(Trigger.AvailableNow())
             .foreachBatch { (batch: DataFrame, id: Long) =>
               Caching.pinned { bp =>
-                // persist: the decontam plan consumes the batch twice
-                // (group + verdict join) and each action would re-run the
+                // pinned: the decontam plan consumes the batch twice
+                // (group + verdict join) and each read would re-run the
                 // micro-batch plan (see pipelineBatchWriter)
-                val b = bp.persist(batch)
+                val b = bp.checkpoint(batch)
                 // per-batch OVERWRITE dir (q52g's effectively-once
                 // device): a replayed batch rewrites its own dir instead
                 // of appending duplicate verdicts

@@ -64,8 +64,10 @@ import graft.FlowSchema
   *     has fewer partitions than the crashed attempt (a restart on fewer
   *     cores, say).
   *   - *Visibility.* The renames are not atomic as a set: a reader that
-  *     lists the directory during a commit can see part of an epoch, as it
-  *     can during a `FileOutputCommitter` v1 job commit.
+  *     lists the directory while an epoch's commit runs can see part of
+  *     that epoch (or, on a replay's first commit, none of it), as during
+  *     a `FileOutputCommitter` v1 job commit. A reader that needs whole
+  *     epochs lists after the stream has committed them.
   *   - `spark.sql.files.maxRecordsPerFile` is not applied: one file per
   *     partition per epoch.
   *   - The broadcast lives as long as the query's plan: Spark's

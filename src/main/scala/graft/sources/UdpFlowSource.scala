@@ -173,36 +173,49 @@ object UdpFlowSource {
   /** Template misses, summed over listeners. */
   def templateMisses: Long = listenerStats.map(_._2.templateMisses.sum()).sum
 
+  /** Entries an sFlow counter registry holds before it evicts. */
+  private[graft] val RegistryCap = 65536
+
+  /** Each sFlow counter registry for `/metrics`: its `registry` label,
+    * the map, and the count of entries its cap has evicted.
+    */
+  private[graft] val counterRegistries =
+    ArrayBuffer.empty[(String, java.util.Map[_, _], LongAdder)]
+
   /** Latest generic interface counters per (agent, ifIndex), parsed from
     * sFlow COUNTER samples on the receiver thread (flows rows never carry
     * them; Prometheus gauges do — [[graft.streaming.MetricsServer]]).
     * Bounded LRU: a collector fleet sees thousands of interfaces, not
     * unbounded ones, and stale interfaces age out.
     */
-  private def boundedLru[K, V](): java.util.Map[K, V] =
-    java.util.Collections.synchronizedMap(
+  private def boundedLru[K, V](name: String): java.util.Map[K, V] = {
+    val evicted = new LongAdder
+    val m = java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
         override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
-          size() > 65536
+          size() > RegistryCap && { evicted.increment(); true }
       })
+    counterRegistries += ((name, m, evicted))
+    m
+  }
 
   val ifCounters: java.util.Map[(String, Long), SFlowV5.IfCounters] =
-    boundedLru()
+    boundedLru("if")
 
   /** Ethernet dot3Stats per (agent, source index) — counter record format
     * 2; attributed by the SAMPLE's source because the record itself
     * carries no ifIndex (goflow v3.4.5 decodes the same struct).
     */
   val ethCounters: java.util.Map[(String, Long), SFlowV5.EthernetCounters] =
-    boundedLru()
+    boundedLru("eth")
 
   /** Per-VLAN tallies per (agent, vlanId) — counter record format 5. */
   val vlanCounters: java.util.Map[(String, Long), SFlowV5.VlanCounters] =
-    boundedLru()
+    boundedLru("vlan")
 
   /** Agent CPU/memory per agent — counter record format 1001. */
   val procCounters: java.util.Map[String, SFlowV5.ProcessorCounters] =
-    boundedLru()
+    boundedLru("proc")
 }
 
 final class UdpFlowTable(extended: Boolean = false) extends Table with SupportsRead {

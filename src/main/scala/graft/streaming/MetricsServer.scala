@@ -43,7 +43,7 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
        |# HELP graft_flows_max_batch_rows Largest single micro-batch admitted (R4 invariant).
        |# TYPE graft_flows_max_batch_rows gauge
        |graft_flows_max_batch_rows ${listener.maxBatchRows}
-       |$phaseBody$listenerBody$ifCounterBody$ethVlanProcBody""".stripMargin
+       |$phaseBody$listenerBody$registryBody$ifCounterBody$ethVlanProcBody""".stripMargin
 
   /** Batch time per `durationMs` phase, summed over progress events: an
     * operator sees the commit share (`walCommit` + `commitOffsets`) next to
@@ -86,6 +86,19 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
     }
   }
 
+  /** Size and cap evictions of each sFlow counter registry: a fleet
+    * that outgrows the cap shows as a rising eviction count.
+    */
+  private def registryBody: String = {
+    type R = (String, java.util.Map[_, _], java.util.concurrent.atomic.LongAdder)
+    val regs = graft.sources.UdpFlowSource.counterRegistries.map(r => r._1 -> r).toVector
+    val label = (r: String) => s"""registry="$r""""
+    gaugeSection(regs, Seq[(String, String, R => Long)](("graft_sflow_registry_entries",
+      "Entries held in each sFlow counter registry.", _._2.size.toLong)), label) +
+    gaugeSection(regs, Seq[(String, String, R => Long)](("graft_sflow_registry_evictions_total",
+      "Entries each sFlow counter registry evicted at its cap.", _._3.sum())), label, "counter")
+  }
+
   /** sFlow generic interface counters (the non-flow half of sFlow),
     * labeled by agent and ifIndex — what an operator points Grafana at
     * next to the flows themselves.
@@ -112,11 +125,11 @@ final class MetricsServer(listener: FlowPipeline.MetricsListener, port: Int = 0)
       .sortBy(_._1)
   }
 
-  private def gaugeSection[K, V](entries: Vector[(K, V)],
-      gauges: Seq[(String, String, V => Long)], label: K => String): String =
+  private def gaugeSection[K, V](entries: Vector[(K, V)], gauges: Seq[(String, String, V => Long)],
+      label: K => String, kind: String = "gauge"): String =
     if (entries.isEmpty) ""
     else gauges.map { case (name, help, get) =>
-      s"# HELP $name $help\n# TYPE $name gauge\n" +
+      s"# HELP $name $help\n# TYPE $name $kind\n" +
         entries.map { case (k, v) => s"$name{${label(k)}} ${get(v)}" }
           .mkString("", "\n", "\n")
     }.mkString

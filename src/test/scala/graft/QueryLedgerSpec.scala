@@ -33,16 +33,20 @@ class QueryLedgerSpec extends SparkSpec {
     assert(qf13 >= 46 && qf13 <= 48, qf13)
   }
 
-  test("warm job counts of the four lazily pinned dedup queries") {
-    // their shingle/vector frames are pinned LAZILY: filled by the first
-    // job that reads them, with no count() of their own in front — an
-    // eager `persist(); count()` put back on any of these pins shows up
-    // here as extra jobs
-    val counts = Seq("x2_dedup_minhash", "x2e_dedup_embed",
-      "x2h_incremental_dedup", "q52e_stream_decontam_ingest")
-      .map(n => n -> warmLedger(n).jobs.size)
-    assert(counts == Seq("x2_dedup_minhash" -> 21, "x2e_dedup_embed" -> 28,
-      "x2h_incremental_dedup" -> 31, "q52e_stream_decontam_ingest" -> 16), counts)
+  test("warm job counts of the dedup queries under one pin kind") {
+    // every intermediate these queries hold is a checkpoint pin, computed
+    // once and read as plain blocks, and a frame that one action reads is
+    // not pinned. A lazy cache put back on one of their frames plans one
+    // table-cache job per reference to it, and an eager count in front of
+    // a pin adds a job; either shows up here as extra jobs. x10b's count
+    // varies: 22 or 23 over five test JVMs
+    val exact = Seq("x2_dedup_minhash" -> 14, "x2b_dedup_simhash" -> 21,
+      "x2d_dedup_components" -> 29, "x2e_dedup_embed" -> 16,
+      "x2h_incremental_dedup" -> 20, "x2j_semantic_dedup" -> 33,
+      "q52e_stream_decontam_ingest" -> 13)
+    assert(exact.map { case (n, _) => n -> warmLedger(n).jobs.size } == exact)
+    val x10b = warmLedger("x10b_incremental_rebuild").jobs.size
+    assert(x10b >= 22 && x10b <= 23, x10b)
   }
 
   test("on return every completed stage's tasks are in") {

@@ -8,7 +8,8 @@ import graft.SparkSpec
 /** [[Caching.pinned]] frees every pin on every exit path: a body that
   * throws after pinning, a plan builder that throws halfway, a
   * checkpoint whose own materializing job fails, and a loop that
-  * releases each round's predecessor early.
+  * releases each round's predecessor early. A pin computes its frame
+  * once, however many actions read it.
   *
   * The check is on `SparkContext.getPersistentRDDs`: nothing created
   * inside the scope may still be registered after it. (The map holds
@@ -33,11 +34,11 @@ class CachingSpec extends SparkSpec {
     v
   })
 
-  test("a body that throws after pinning frees its persist and checkpoint pins") {
+  test("a body that throws after pinning frees its checkpoint pins") {
     val left = leftAfter {
       val e = intercept[IllegalStateException] {
         Caching.pinned { pins =>
-          pins.persist(frame(100)).count()
+          pins.checkpoint(frame(100)).count()
           pins.checkpoint(frame(50))
           assert(ids.size >= 2)
           throw new IllegalStateException("body failed")
@@ -51,7 +52,7 @@ class CachingSpec extends SparkSpec {
   test("a builder that throws after its first pin leaks nothing") {
     def builder(pins: Caching.Pins): DataFrame = {
       val a = pins.checkpoint(frame(40))
-      pins.persist(a.select((col("v") + 1).as("v"))).count()
+      pins.checkpoint(a.select((col("v") + 1).as("v"))).count()
       throw new IllegalStateException("builder failed")
     }
     val left = leftAfter {
@@ -60,6 +61,20 @@ class CachingSpec extends SparkSpec {
       }
     }
     assert(left.isEmpty, s"leaked RDDs $left")
+  }
+
+  test("a checkpoint pin computes its frame once however many actions read it") {
+    val computed = spark.sparkContext.longAccumulator("computed")
+    val seen = udf((v: Long) => { computed.add(1L); v })
+    val n = 64
+    Caching.pinned { pins =>
+      val p = pins.checkpoint(frame(n).select(seen(col("v")).as("v")))
+      assert(pins.rows(p) == n)
+      assert(p.count() == n)
+      assert(p.agg(sum(col("v"))).head().getLong(0) == (0 until n).map(_ * 7L).sum)
+      assert(p.where(col("v") % 2 === 0).collect().length == n / 2)
+      assert(computed.value == n)
+    }
   }
 
   test("a checkpoint whose job fails frees it and the pins before it") {

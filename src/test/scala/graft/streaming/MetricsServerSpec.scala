@@ -108,6 +108,25 @@ class MetricsServerSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("an sFlow counter registry counts what its cap evicts") {
+    import graft.sources.{SFlowV5 => SF, UdpFlowSource => U}
+    val server = new MetricsServer(new FlowPipeline.MetricsListener)
+    def read(m: Map[String, Double], name: String) = m(s"""$name{registry="vlan"}""")
+    try {
+      U.vlanCounters.clear()
+      val before = read(scrape(server.boundPort), "graft_sflow_registry_evictions_total")
+      (0 until U.RegistryCap + 10).foreach(i =>
+        U.vlanCounters.put(("10.0.0.7", i.toLong), SF.VlanCounters(i, 1L, 1, 0, 0, 0)))
+      val m = scrape(server.boundPort)
+      assert(read(m, "graft_sflow_registry_evictions_total") - before == 10.0)
+      assert(read(m, "graft_sflow_registry_entries") == 65536.0)
+      assert(m("""graft_sflow_registry_entries{registry="if"}""") >= 0.0)
+      // the ten oldest went: LRU order is insertion order here
+      assert(!U.vlanCounters.containsKey(("10.0.0.7", 9L)))
+      assert(U.vlanCounters.containsKey(("10.0.0.7", 10L)))
+    } finally { U.vlanCounters.clear(); server.stop() }
+  }
+
   test("cadence churn alert increments the scraped counter (VERDICT r17 #6)") {
     import spark.implicits._
     // the HhRecountCadenceSpec churn geometry, tuned so the alert MUST
