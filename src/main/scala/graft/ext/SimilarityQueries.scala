@@ -323,23 +323,104 @@ object SimilarityQueries {
     Tables.embeddings(s, d).select(col("vec_id"),
       quant(col("embedding")).as("qe"), col("label"))
 
-  /** Exact top-k quantized-cosine neighbors for query vectors
-    * (vec_id < nQueries) over an arbitrary quantized frame; query side
-    * broadcast, corpus streams once.
-    */
-  private def bruteKnnFrom(e: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val q = e.filter(col("vec_id") < nQueries)
+  // ---- the ANN serve path: candidate generator → shortlist → refine ----
+  //
+  // Every x3 ranker is one filter-and-refine pipeline. A candidate
+  // generator scores (q_id, c_id) pairs cheaply — ADC over PQ codes (x3f,
+  // x3h, x3j–x3r, IVF-pruned in x3i/x3q), SQ8 dequantized vectors (x3g),
+  // sketches (x3s/x3t) — and the pieces below, each written once, turn
+  // that into served rows: [[shortlist]] keeps the best `depth` per
+  // query, [[exactRerank]] rescores the shortlist on full vectors, and
+  // [[top5Recall]] cuts to top-5 and annotates each row against the exact
+  // top-5 truth set. The queries are vec_id < 8 throughout.
+
+  /** The query side `(q_id, q_emb)`: vectors vec_id < nQueries of `e`. */
+  private def queryVecs(e: DataFrame, nQueries: Int): DataFrame =
+    e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-    val c = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"), col("label").as("c_label"))
-    val scored = c.join(broadcast(q), col("q_id") =!= col("c_id"))
-      .select(col("q_id"), col("c_id"), col("c_label"),
-        qcos(col("q_emb"), col("c_emb")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+
+  /** One rank-by-score window: per query, candidates ranked by `score`
+    * descending (ties by c_id) into `rankCol`; the first `depth` kept.
+    */
+  private def shortlist(scored: DataFrame, score: String, rankCol: String,
+      depth: Int): DataFrame =
+    scored.withColumn(rankCol, row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col(score).desc, col("c_id"))))
+      .filter(col(rankCol) <= depth)
+
+  /** Exact top-k quantized-cosine neighbors `(q_id, c_id, c_label, cos,
+    * rank)` of the queries vec_id < nQueries of `e` among `corpus`; query
+    * side broadcast, corpus streams once.
+    */
+  private def bruteKnnFrom(e: DataFrame, nQueries: Int, k: Int,
+      corpus: Option[DataFrame] = None): DataFrame = {
+    val scored = corpus.getOrElse(e)
+      .join(broadcast(queryVecs(e, nQueries)), col("q_id") =!= col("vec_id"))
+      .select(col("q_id"), col("vec_id").as("c_id"), col("label").as("c_label"),
+        qcos(col("q_emb"), col("qe")).as("cos"))
+    shortlist(scored, "cos", "rank", k)
   }
 
   private def bruteKnn(s: SparkSession, d: String, nQueries: Int, k: Int): DataFrame =
     bruteKnnFrom(quantFrame(s, d), nQueries, k)
+
+  /** The truth set `(q_id, c_id)` every recall annotation checks against:
+    * the exact top-5 of the 8 queries over `e` (or over `corpus`, for a
+    * filtered search). 40 rows by construction.
+    */
+  private def exactTop5(e: DataFrame, corpus: Option[DataFrame] = None): DataFrame =
+    bruteKnnFrom(e, nQueries = 8, k = 5, corpus).select(col("q_id"), col("c_id"))
+
+  /** Brute candidate scorer over a derived per-vector column `v` of
+    * `p(vec_id, v)`: `(q_id, c_id, approx_cos)` for every query and every
+    * other vector (x3g's dequantized SQ8 vectors, x3s/x3t's sketches).
+    * The 8-row query side broadcasts; the corpus streams once.
+    */
+  private def approxCos(p: DataFrame, v: String): DataFrame = {
+    val q = p.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("q_id"), col(v).as("q_v"))
+    p.join(broadcast(q), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("c_id"),
+        qcos(col("q_v"), col(v)).as("approx_cos"))
+  }
+
+  /** Exact rerank scoring: each shortlisted `(q_id, c_id, rankCol)` gets
+    * its exact quantized cosine `cos`. The query vectors broadcast onto
+    * the shortlist, and the shortlist broadcasts into the corpus scan:
+    * raw vectors stream past once and only shortlisted candidates survive
+    * the join — never a shuffle of the vector column.
+    */
+  private def exactRerank(e: DataFrame, short: DataFrame, rankCol: String,
+      nQueries: Int = 8): DataFrame = {
+    val shortQ = short.select(col("q_id"), col("c_id"), col(rankCol))
+      .join(broadcast(queryVecs(e, nQueries)), "q_id")
+    e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
+      .join(broadcast(shortQ), "c_id")
+      .select(col("q_id"), col("c_id"), col(rankCol),
+        qcos(col("q_emb"), col("c_emb")).as("cos"))
+  }
+
+  /** Top-5 by `score` per query, each row annotated `in_exact_top5`
+    * against `truth(q_id, c_id)` (broadcast: 40 rows). Columns: q_id,
+    * rank, c_id, `score`, `carry`…, in_exact_top5.
+    */
+  private def top5Recall(ranked: DataFrame, score: String, carry: Seq[String],
+      truth: DataFrame): DataFrame = {
+    val hits = truth.select(col("q_id"), col("c_id"), lit(true).as("hit"))
+    shortlist(ranked, score, "rank", 5)
+      .join(broadcast(hits), Seq("q_id", "c_id"), "left")
+      .select((Seq("q_id", "rank", "c_id", score) ++ carry).map(col) :+
+        coalesce(col("hit"), lit(false)).as("in_exact_top5"): _*)
+  }
+
+  /** The refine tail: exact rerank of a shortlist to top-5, recall
+    * annotated against `truth`. The rerank restores exact ORDERING within
+    * the shortlist (cos is the expression the brute-force truth uses), so
+    * recall loss comes only from the shortlist stage.
+    */
+  private def refine(e: DataFrame, short: DataFrame, rankCol: String,
+      truth: DataFrame): DataFrame =
+    top5Recall(exactRerank(e, short, rankCol), "cos", Seq(rankCol), truth)
 
   /** Shared oracle CTE: quantized corpus + scored brute-force pairs for
     * queries vec_id < 8.
@@ -351,19 +432,6 @@ object SimilarityQueries {
         ${sqlQcos("q.q_emb", "c.qe")} AS cos
         FROM q JOIN e c ON c.vec_id <> q.q_id)"""
 
-  /** The PQ/ADC approximate-cosine frame (q_id, c_id, approx_cos) shared
-    * by x3f (ADC-only top-k) and x3h (ADC shortlist + exact rerank): 64-d
-    * vectors split into M=8 subspaces of 8 dims, each subvector replaced
-    * by the nearest of K=16 codewords; queries score candidates from the
-    * broadcast per-query partial-dot tables without touching raw corpus
-    * vectors. See the x3f registration scaladoc for the full design.
-    */
-  /** The shared PQ index pieces: `codes(vec_id, label, s, code)` (labels
-    * ride along so the IVF composition x3i can prune partitions BEFORE
-    * scoring — functionally dependent on vec_id, so grouping on it changes
-    * nothing), `pd(q_id, s, k, pdot)` per-query ADC tables, and
-    * `norms(vec_id, n2)`.
-    */
   /** Code assignment against a codebook `cb(s, k, cv)`: argmin codeword
     * per (vector, subspace) — broadcast-argmin, map-side except the
     * (vec_id, s) regroup. Shared by the initial index build and the x3l
@@ -422,57 +490,132 @@ object SimilarityQueries {
       .join(broadcast(cb), "s")
       .select(col("q_id"), col("s"), col("k"), qdot(col("q_sv"), col("cv")).as("pdot"))
 
-  private def pqFrames(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val e = quantFrame(s, d)
-    val (codes, norms, cb) = pqBuildFrom(e)
-    (codes, pqQueryTables(e, cb), norms)
+  /** The ADC scorer: `approx_cos(q_id, c_id)` from PQ `codes(vec_id, s,
+    * code)` without touching a raw corpus vector. Each code row joins the
+    * broadcast per-query tables `pd(q_id, s, k, pdot)` (M×K rows per
+    * query), approx_dot = Σ_s pdot, and the exact norms scale it to a
+    * cosine. Code rows that already carry a `q_id` (IVF admission: a row
+    * fans out only to the queries that probed its partition) score only
+    * against that query's table. The one corpus-wide exchange is the
+    * (q_id, c_id) partial-sum regroup.
+    */
+  private def adcScore(codes: DataFrame, pd: DataFrame, norms: DataFrame): DataFrame = {
+    val probed = codes.columns.contains("q_id")
+    val on = codes("s") === pd("s") && codes("code") === pd("k")
+    codes.join(broadcast(pd), if (probed) on && codes("q_id") === pd("q_id") else on)
+      .groupBy(if (probed) codes("q_id") else col("q_id"), col("vec_id").as("c_id"))
+      .agg(sum(col("pdot")).as("adot"))
+      .filter(col("c_id") =!= col("q_id"))
+      .join(norms.select(col("vec_id").as("q_id"), col("n2").as("qn2")), "q_id")
+      .join(norms.select(col("vec_id").as("c_id"), col("n2").as("cn2")), "c_id")
+      .select(col("q_id"), col("c_id"),
+        (col("adot").cast(DoubleType) /
+          (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("cn2").cast(DoubleType))))
+          .as("approx_cos"))
   }
 
-  /** The serve path over arbitrary index frames: ADC scoring from codes
-    * (queries' tables computed against the codebook at serve time — the
-    * production order: queries arrive after the index exists), 20-deep
-    * shortlist, exact rerank to top-5, recall annotated against the exact
-    * top-5 over the SAME frame `e`. Shared by x3l's append registration
-    * and ScaleBench's append-equals-rebuild gate at 30×.
+  /** The ADC 20-deep shortlist `(q_id, c_id, adc_rank, …)` over index
+    * frames; the queries' tables are computed against the codebook at
+    * serve time (the production order: queries arrive after the index).
+    */
+  private def pqShortlist(codes: DataFrame, norms: DataFrame, cb: DataFrame,
+      e: DataFrame): DataFrame =
+    shortlist(adcScore(codes, pqQueryTables(e, cb), norms), "approx_cos",
+      "adc_rank", 20)
+
+  /** The PQ serve path over arbitrary index frames: ADC shortlist, exact
+    * rerank to top-5, recall annotated against the exact top-5 over the
+    * SAME frame `e`. x3h serves an in-memory index through it, x3k a
+    * loaded one, x3l/x3m/x3r an appended/deleted/updated one and x3n a
+    * compacted one; ScaleBench's append-equals-rebuild and compaction
+    * parity gates compare its row sets at 30×.
     */
   private[graft] def pqServe(codes: DataFrame, norms: DataFrame, cb: DataFrame,
-      e: DataFrame): DataFrame = {
-    val pd = pqQueryTables(e, cb)
-    val adots = codes.join(broadcast(pd),
-        codes("s") === pd("s") && codes("code") === pd("k"))
-      .groupBy(col("q_id"), col("vec_id").as("c_id"))
-      .agg(sum(col("pdot")).as("adot"))
-    val scored = adcCos(adots, norms)
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-    val short = scored.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= 20)
-      .select(col("q_id"), col("c_id"), col("adc_rank"))
-    val q = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-    val shortQ = short.join(broadcast(q), "q_id")
-    val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-      .join(broadcast(shortQ), "c_id")
-      .select(col("q_id"), col("c_id"), col("adc_rank"),
-        qcos(col("q_emb"), col("c_emb")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    val top = rr.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-    val exact = bruteKnnFrom(e, nQueries = 8, k = 5)
-      .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-    top.join(exact, Seq("q_id", "c_id"), "left")
-      .select(col("q_id"), col("rank"), col("c_id"), col("cos"),
-        col("adc_rank"), coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+      e: DataFrame): DataFrame =
+    refine(e, pqShortlist(codes, norms, cb, e), "adc_rank", exactTop5(e))
+
+  /** A session-scoped directory `<Tmp.root>/<tag>/<applicationId>`,
+    * emptied: two sessions running the registry never race on one
+    * directory, and a re-run within a session starts from nothing.
+    */
+  private def freshSessionDir(s: SparkSession, tag: String): String = {
+    val dir = graft.Tmp.sessionDir(s, tag)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    dir
   }
 
-  /** The x3n compaction pass: rewrite the fragment store's code/norm rows
-    * into byte-budgeted shards under `<idxDir>/compact/` — shard count =
-    * ⌈fragment bytes / budget⌉ from a driver-side file listing (an
-    * O(#files) walk: exactly the cost the compaction exists to bound),
-    * then ONE round-robin repartition + write per frame. The fragment
-    * generation stays in place (rollback; production reaps it after
-    * cutover). Returns (part files before, part files after) so
-    * ScaleBench can record the win. Shared by the registered x3n query
-    * and the 30× gate.
+  /** The persisted PQ index round trip: writes `(codes, norms, codebook)`
+    * as parquet under a fresh session directory `tag` and returns the
+    * three frames LOADED back, so everything downstream serves from disk
+    * (the build/serve split: a serving fleet reads the files an index
+    * build wrote). Parquet round-trips the nested array-of-long codebook
+    * bit-for-bit.
     */
+  private def persistedPqIndex(s: SparkSession, tag: String,
+      index: (DataFrame, DataFrame, DataFrame)): (DataFrame, DataFrame, DataFrame) = {
+    val dir = freshSessionDir(s, tag)
+    def roundTrip(f: DataFrame, name: String): DataFrame = {
+      f.write.parquet(s"$dir/$name.parquet")
+      s.read.parquet(s"$dir/$name.parquet")
+    }
+    val (codes, norms, cb) = index
+    (roundTrip(codes, "codes"), roundTrip(norms, "norms"), roundTrip(cb, "codebook"))
+  }
+
+  /** The ~20% of a corpus that x3m deletes and x3r re-embeds, by id hash.
+    * It spares the K=16 codebook seeds (vec_id < 16, the queries among
+    * them), so a rebuild over the changed corpus trains the identical
+    * codebook and the 40-row serve shape holds.
+    */
+  private def churned(corpus: DataFrame): DataFrame =
+    corpus.filter(col("vec_id") >= 16 &&
+      pmod(col("vec_id") * 2654435761L, lit(10)) < 2)
+
+  /** `f` minus the rows whose vec_id is in `ids` — a broadcast
+    * anti-join, so no raw vector of a surviving row is read.
+    */
+  private def without(f: DataFrame, ids: DataFrame): DataFrame =
+    f.join(broadcast(ids), Seq("vec_id"), "left_anti")
+
+  /** The label-centroid coarse quantizer: per-label mean vectors
+    * `(cl, c_emb)` via the elementwise vector-sum Aggregator (one array per
+    * row through the map-side combine — the same 64× shuffle-row cut as
+    * the x3e k-means update; round(sum/count) is bit-identical to the
+    * round(avg(v)) posexplode formulation, pinned in KMeansSpec) — then
+    * each query's `nprobe` nearest centroids by cosine `(q_id, q_emb,
+    * cl)`, ties by label. Shared by x3c, x3i and x3q.
+    */
+  private def labelProbes(e: DataFrame, nQueries: Int, nprobe: Int): DataFrame = {
+    val sc = graft.functions.Aggregators.elementwise_sum_count(64)
+    val cent = e.groupBy(col("label"))
+      .agg(sc(col("qe")).as("sc"))
+      .select(col("label").as("cl"),
+        transform(slice(col("sc"), 1, 64),
+          x => round(x.cast(DoubleType) /
+            element_at(col("sc"), 65).cast(DoubleType)).cast(LongType)).as("c_emb"))
+    val wq = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cl"))
+    queryVecs(e, nQueries).crossJoin(broadcast(cent))
+      .select(col("q_id"), col("q_emb"), col("cl"),
+        qcos(col("q_emb"), col("c_emb")).as("ccos"))
+      .withColumn("pr", row_number().over(wq)).filter(col("pr") <= nprobe)
+      .select(col("q_id"), col("q_emb"), col("cl"))
+  }
+
+  /** The IVF-PQ candidate generator: per query vec_id < nQueries, probe
+    * `nprobe` label partitions, ADC-score only the admitted code rows (a
+    * code row fans out only to the queries that probed its partition —
+    * the probe list broadcasts) and keep a `depth`-deep `adc_rank`
+    * shortlist. Per-query fan-out is bounded by nprobe BEFORE any scoring.
+    */
+  private def ivfPqShortlist(e: DataFrame, nQueries: Int, nprobe: Int,
+      depth: Int): DataFrame = {
+    val probes = labelProbes(e, nQueries, nprobe).select(col("q_id"), col("cl"))
+    val (codes, norms, cb) = pqBuildFrom(e)
+    val admitted = codes.join(broadcast(probes), col("label") === col("cl"))
+    shortlist(adcScore(admitted, pqQueryTables(e, cb), norms), "approx_cos",
+      "adc_rank", depth)
+  }
+
   /** The (FileSystem, Path) a store path resolves to. EVERY list / probe
     * / delete in the store layer goes through this (VERDICT r13 #4: the
     * `java.io.File` formulation it replaces was local-disk-only; the
@@ -502,6 +645,16 @@ object SimilarityQueries {
     out.toSeq
   }
 
+  /** The x3n compaction pass: rewrite the fragment store's code/norm rows
+    * into byte-budgeted shards under `<idxDir>/compact/` — shard count =
+    * ⌈fragment bytes / budget⌉ from a driver-side file listing (an
+    * O(#files) walk: exactly the cost the compaction exists to bound),
+    * then ONE round-robin repartition + write per frame. The fragment
+    * generation stays in place (rollback; production reaps it after
+    * cutover). Returns (part files before, part files after) so
+    * ScaleBench can record the win. Shared by the registered x3n query
+    * and the 30× gate.
+    */
   private[graft] def compactPqStore(s: SparkSession, idxDir: String,
       shardBudgetBytes: Long): (Int, Int) = {
     // shard count PER FRAME from that frame's own bytes — a combined
@@ -806,16 +959,6 @@ object SimilarityQueries {
     s.read.parquet(paths: _*)
   }
 
-  /** approx_cos from (adot, qn2, cn2) — the shared ADC tail. */
-  private def adcCos(adots: DataFrame, norms: DataFrame): DataFrame =
-    adots.filter(col("c_id") =!= col("q_id"))
-      .join(norms.select(col("vec_id").as("q_id"), col("n2").as("qn2")), "q_id")
-      .join(norms.select(col("vec_id").as("c_id"), col("n2").as("cn2")), "c_id")
-      .select(col("q_id"), col("c_id"),
-        (col("adot").cast(DoubleType) /
-          (sqrt(col("qn2").cast(DoubleType)) * sqrt(col("cn2").cast(DoubleType))))
-          .as("approx_cos"))
-
   /** The x2j SemDeDup plan, parameterized on the number of k-means rounds
     * used to train the coarse clusters (0 = raw seed centroids — kept so
     * ScaleBench can A/B the boundary-loss channel seed-vs-trained at 30×;
@@ -887,18 +1030,9 @@ object SimilarityQueries {
       .localCheckpoint() // corpus-sized result; release the rep pins
   }
 
-  private def pqApproxScored(s: SparkSession, d: String): DataFrame = {
-    val (codes, pd, norms) = pqFrames(s, d)
-    val adots = codes.join(broadcast(pd),
-        codes("s") === pd("s") && codes("code") === pd("k"))
-      .groupBy(col("q_id"), col("vec_id").as("c_id"))
-      .agg(sum(col("pdot")).as("adot"))
-    adcCos(adots, norms)
-  }
-
-  /** DuckDB replay of [[pqApproxScored]] — the shared CTE prefix of the
-    * x3f/x3h/x3i oracles, ending at `scored(q_id, c_id, approx_cos)`
-    * (the corpus CTE `e` stays visible to the suffix). Parametric in the
+  /** DuckDB replay of the PQ index build + [[adcScore]] — the shared CTE
+    * prefix of the x3f/x3h/x3i oracles, ending at `scored(q_id, c_id,
+    * approx_cos)` (the corpus CTE `e` stays visible to the suffix). Parametric in the
     * `e` CTE body so x3i can carry `label` through without duplicating
     * the PQ chain (the extra column is invisible to the chain itself).
     */
@@ -960,51 +1094,18 @@ object SimilarityQueries {
 
   /** x3i's IVF-PQ serving chain as a ranked list: per query `q_id <
     * nQueries`, coarse-probe `nprobe` of the label partitions, ADC-score
-    * only admitted code rows, shortlist `shortlist` deep, exact-rerank
+    * only admitted code rows, shortlist `depth` deep, exact-rerank
     * the shortlist, and return every shortlisted candidate with its
     * post-rerank rank `rv` (1-based, ties by c_id). This is the vector
     * ranker x3q's hybrid fusion composes over — the declared scale path
     * of x3p's brute arm: per-query fan-out is bounded by nprobe BEFORE
-    * any scoring, raw vectors move for `shortlist` rows per query.
+    * any scoring, raw vectors move for `depth` rows per query.
     */
   private[ext] def ivfPqTopK(s: SparkSession, d: String, nQueries: Int,
-      nprobe: Int = 8, shortlist: Int = 20): DataFrame = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"),
-      quant(col("embedding")).as("qe"), col("label"))
-    val sc = graft.functions.Aggregators.elementwise_sum_count(64)
-    val cent = e.groupBy(col("label"))
-      .agg(sc(col("qe")).as("sc"))
-      .select(col("label").as("cl"),
-        transform(slice(col("sc"), 1, 64),
-          x => round(x.cast(DoubleType) /
-            element_at(col("sc"), 65).cast(DoubleType)).cast(LongType)).as("c_emb"))
-    val q = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cl"))
-    val probes = q.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("cl"), qcos(col("q_emb"), col("c_emb")).as("ccos"))
-      .withColumn("pr", row_number().over(wq)).filter(col("pr") <= nprobe)
-      .select(col("q_id"), col("cl"))
-    val (codes, pd, norms) = pqFrames(s, d)
-    val adm = codes.join(broadcast(probes), col("label") === col("cl"))
-    val adots = adm.join(broadcast(pd),
-        adm("q_id") === pd("q_id") && adm("s") === pd("s") &&
-          adm("code") === pd("k"))
-      .groupBy(adm("q_id"), col("vec_id").as("c_id"))
-      .agg(sum(col("pdot")).as("adot"))
-    val scored = adcCos(adots, norms)
-    val wAdc = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_cos").desc, col("c_id"))
-    val short = scored.withColumn("adc_rank", row_number().over(wAdc))
-      .filter(col("adc_rank") <= shortlist)
-      .select(col("q_id"), col("c_id"))
-    val shortQ = short.join(broadcast(q), "q_id")
-    val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-      .join(broadcast(shortQ), "c_id")
-      .select(col("q_id"), col("c_id"),
-        qcos(col("q_emb"), col("c_emb")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    rr.withColumn("rv", row_number().over(w))
+      nprobe: Int = 8, depth: Int = 20): DataFrame = {
+    val e = quantFrame(s, d)
+    val short = ivfPqShortlist(e, nQueries, nprobe, depth)
+    shortlist(exactRerank(e, short, "adc_rank", nQueries), "cos", "rv", depth)
       .select(col("q_id"), col("c_id"), col("rv"))
   }
 
@@ -1034,46 +1135,18 @@ object SimilarityQueries {
       shortlist = RpShortlist, rankCol = "rp_rank")
   }
 
-  /** The shared sketch-shortlist + exact-rerank + recall-annotation
-    * scaffold behind x3s and x3t (the Spark-side mirror of
-    * [[pqRerankOracleFrom]], extracted per the r15 review — the two
-    * rankers are documented as directly comparable, so their serving
-    * scaffold must be ONE definition): `sketch` maps the quantized
-    * vector column to the per-vector sketch the shortlist stage scores
-    * (x3s: rp_project; x3t: a prefix slice); cosine over sketches
-    * proposes a `depth`-deep shortlist, full vectors join back for
-    * shortlisted rows only, exact quantized-cosine rerank to top-5,
-    * `in_exact_top5` annotated against the brute truth set.
+  /** The sketch candidate generator behind x3s and x3t (the two rankers
+    * are directly comparable, so they share one serving scaffold):
+    * `sketch` maps the quantized vector to the per-vector sketch the
+    * shortlist stage scores (x3s: rp_project; x3t: a prefix slice);
+    * cosine over sketches proposes a `depth`-deep shortlist, then the
+    * refine tail reranks it on full vectors.
     */
   private def sketchShortlistRerank(s: SparkSession, d: String,
       sketch: Column => Column, rankCol: String, depth: Int): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), quant(col("embedding")).as("qe"))
-    val p = e.select(col("vec_id"), sketch(col("qe")).as("sv"))
-    val q = p.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("sv").as("q_sv"))
-    val scored = p.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        qcos(col("q_sv"), col("sv")).as("approx_cos"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_cos").desc, col("c_id"))
-    val short = scored.withColumn(rankCol, row_number().over(wr))
-      .filter(col(rankCol) <= depth)
-      .select(col("q_id"), col("c_id"), col(rankCol))
-    val qe8 = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-    val shortQ = short.join(broadcast(qe8), "q_id")
-    val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-      .join(broadcast(shortQ), "c_id")
-      .select(col("q_id"), col("c_id"), col(rankCol),
-        qcos(col("q_emb"), col("c_emb")).as("cos"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    val top = rr.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-    val exact = bruteKnn(s, d, nQueries = 8, k = 5)
-      .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-    top.join(broadcast(exact), Seq("q_id", "c_id"), "left")
-      .select(col("q_id"), col("rank"), col("c_id"), col("cos"),
-        col(rankCol), coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+    val e = quantFrame(s, d)
+    val scored = approxCos(e.select(col("vec_id"), sketch(col("qe")).as("sv")), "sv")
+    refine(e, shortlist(scored, "approx_cos", rankCol, depth), rankCol, exactTop5(e))
   }
 
   /** x3t oracle: prefix-slice shortlist replayed with DuckDB list
@@ -1266,36 +1339,15 @@ object SimilarityQueries {
     // ≈ nprobe/centroids); it is measured and emitted as a bucketed floor.
     Q("x3c_knn_ivf",
       (s, d) => {
-        val e = Tables.embeddings(s, d).select(col("vec_id"), quant(col("embedding")).as("qe"),
-          col("label"))
-        // per-label centroids via the elementwise vector-sum Aggregator
-        // (one array per row through the map-side combine — the same 64×
-        // shuffle-row cut as the x3e k-means update; round(sum/count) is
-        // bit-identical to the round(avg(v)) posexplode formulation it
-        // replaced, pinned in KMeansSpec)
-        val sc = graft.functions.Aggregators.elementwise_sum_count(64)
-        val cent = e.groupBy(col("label"))
-          .agg(sc(col("qe")).as("sc"))
-          .select(col("label").as("cl"),
-            transform(slice(col("sc"), 1, 64),
-              x => round(x.cast(DoubleType) /
-                element_at(col("sc"), 65).cast(DoubleType)).cast(LongType)).as("c_emb"))
-        val q = e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-        val wq = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cl"))
-        val probes = q.crossJoin(broadcast(cent))
-          .select(col("q_id"), col("q_emb"), col("cl"), qcos(col("q_emb"), col("c_emb")).as("ccos"))
-          .withColumn("pr", row_number().over(wq)).filter(col("pr") <= 3)
-          .select(col("q_id"), col("q_emb"), col("cl"))
-        val cand = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"), col("label"))
-          .join(broadcast(probes), col("label") === col("cl") && col("c_id") =!= col("q_id"))
-          .select(col("q_id"), col("c_id"), col("label"),
-            qcos(col("q_emb"), col("c_emb")).as("cos"))
-        val wk = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
+        val e = quantFrame(s, d)
+        val cand = e.join(broadcast(labelProbes(e, nQueries = 8, nprobe = 3)),
+            col("label") === col("cl") && col("vec_id") =!= col("q_id"))
+          .select(col("q_id"), col("vec_id").as("c_id"),
+            qcos(col("q_emb"), col("qe")).as("cos"))
         // read twice below (n_results + the recall audit) in one plan,
         // whose two branches share the window's exchange, so the probe
         // scan runs once unpinned
-        val ivfTop = cand.withColumn("rank", row_number().over(wk))
-          .filter(col("rank") <= 10).select(col("q_id"), col("c_id"))
+        val ivfTop = shortlist(cand, "cos", "rank", 10).select(col("q_id"), col("c_id"))
         val exactAll = bruteKnn(s, d, 8, 10).select(col("q_id"), col("c_id"))
         // fully lazy: recall computed in-plan (no driver-side action at
         // query-build time)
@@ -1365,15 +1417,11 @@ object SimilarityQueries {
     // swapping in x3e's trained k-means centroids changes recall, not shape.
     Q("x3f_pq_adc",
       (s, d) => {
-        val scored = pqApproxScored(s, d)
-        val w = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-        val top = scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+        val e = quantFrame(s, d)
+        val (codes, norms, cb) = pqBuildFrom(e)
         // recall annotation: is the ADC pick in the EXACT top-5?
-        val exact = bruteKnn(s, d, nQueries = 8, k = 5)
-          .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-        top.join(exact, Seq("q_id", "c_id"), "left")
-          .select(col("q_id"), col("rank"), col("c_id"), col("approx_cos"),
-            coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+        top5Recall(adcScore(codes, pqQueryTables(e, cb), norms), "approx_cos",
+          Nil, exactTop5(e))
       },
       Some(s"""$PqScoredCte,
         top AS (SELECT * FROM (SELECT *, row_number() OVER
@@ -1403,39 +1451,19 @@ object SimilarityQueries {
     // shortlist stage — `in_exact_top5` annotates exactly that, per row.
     Q("x3h_pq_rerank",
       (s, d) => {
-        val wAdc = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-        val short = pqApproxScored(s, d)
-          .withColumn("adc_rank", row_number().over(wAdc))
-          .filter(col("adc_rank") <= 20)
-          .select(col("q_id"), col("c_id"), col("adc_rank"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), quant(col("embedding")).as("qe"))
-        // attach query vectors (8 rows, broadcast), then probe the corpus
-        // with the broadcast shortlist — raw vectors stream past ONCE and
-        // only shortlisted candidates survive the join
-        val q = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-        val shortQ = short.join(broadcast(q), "q_id")
-        val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-          .join(broadcast(shortQ), "c_id")
-          .select(col("q_id"), col("c_id"), col("adc_rank"),
-            qcos(col("q_emb"), col("c_emb")).as("cos"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val top = rr.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        val exact = bruteKnn(s, d, nQueries = 8, k = 5)
-          .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-        top.join(exact, Seq("q_id", "c_id"), "left")
-          .select(col("q_id"), col("rank"), col("c_id"), col("cos"),
-            col("adc_rank"), coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+        val e = quantFrame(s, d)
+        val (codes, norms, cb) = pqBuildFrom(e)
+        pqServe(codes, norms, cb, e)
       },
       Some(PqRerankOracleSql)),
 
-    // X3k (r11): index PERSISTENCE + serve — the build/serve split every
+    // X3k: index PERSISTENCE + serve — the build/serve split every
     // production ANN deployment has (FAISS writes an index file; a serving
-    // fleet mmaps it): the PQ artifacts (codes, per-query ADC tables,
-    // norms) are WRITTEN TO PARQUET and the whole scoring path reruns
-    // from the LOADED frames — x2h's "index is an on-disk asset" story
-    // for the ANN family. Result rows must equal x3h's (same oracle TEXT
+    // fleet mmaps it): the PQ index (codes, norms, codebook) is WRITTEN TO
+    // PARQUET and the whole serve path — per-query ADC tables against the
+    // loaded codebook, ADC scoring, shortlist, rerank — reruns from the
+    // LOADED frames ([[persistedPqIndex]]) — x2h's "index is an on-disk
+    // asset" story for the ANN family. Result rows must equal x3h's (same oracle TEXT
     // via PqRerankOracleSql, so the two registrations cannot drift):
     // parquet round-trips the nested array-of-long schema, ADC scoring
     // over loaded codes, the 20-deep shortlist, and the exact rerank all
@@ -1444,56 +1472,21 @@ object SimilarityQueries {
     // vectors are touched for the shortlist alone, exactly as in x3h.
     Q("x3k_pq_index_serve",
       (s, d) => {
-        // session-scoped path (ADVICE r11): Tmp.root + applicationId, so
-        // two concurrent sessions running the registry cannot race on one
-        // directory; re-runs within a session overwrite their own copy
-        val idxDir =
-          graft.Tmp.sessionDir(s, "x3k_idx")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
-        val (codes, pd, norms) = pqFrames(s, d)
-        codes.write.mode("overwrite").parquet(s"$idxDir/codes.parquet")
-        pd.write.mode("overwrite").parquet(s"$idxDir/qtables.parquet")
-        norms.write.mode("overwrite").parquet(s"$idxDir/norms.parquet")
+        val e = quantFrame(s, d)
         // serve from the loaded artifacts only
-        val lc = s.read.parquet(s"$idxDir/codes.parquet")
-        val lpd = s.read.parquet(s"$idxDir/qtables.parquet")
-        val ln = s.read.parquet(s"$idxDir/norms.parquet")
-        val adots = lc.join(broadcast(lpd),
-            lc("s") === lpd("s") && lc("code") === lpd("k"))
-          .groupBy(col("q_id"), col("vec_id").as("c_id"))
-          .agg(sum(col("pdot")).as("adot"))
-        val scored = adcCos(adots, ln)
-        val wAdc = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-        val short = scored.withColumn("adc_rank", row_number().over(wAdc))
-          .filter(col("adc_rank") <= 20)
-          .select(col("q_id"), col("c_id"), col("adc_rank"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), quant(col("embedding")).as("qe"))
-        val q = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-        val shortQ = short.join(broadcast(q), "q_id")
-        val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-          .join(broadcast(shortQ), "c_id")
-          .select(col("q_id"), col("c_id"), col("adc_rank"),
-            qcos(col("q_emb"), col("c_emb")).as("cos"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val top = rr.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        val exact = bruteKnn(s, d, nQueries = 8, k = 5)
-          .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-        top.join(exact, Seq("q_id", "c_id"), "left")
-          .select(col("q_id"), col("rank"), col("c_id"), col("cos"),
-            col("adc_rank"), coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+        val (codes, norms, cb) = persistedPqIndex(s, "x3k_idx", pqBuildFrom(e))
+        pqServe(codes, norms, cb, e)
       },
       Some(PqRerankOracleSql)),
 
-    // X3l (r12, VERDICT r11 #3): INCREMENTAL index append — the x2h story
+    // X3l: INCREMENTAL index append — the x2h story
     // for the ANN family: a persisted PQ index that must be fully rebuilt
     // for every new batch isn't a production index. The standing corpus's
     // artifacts (codes, norms, AND the codebook — the frozen training
-    // asset an append needs, which x3k didn't persist because serve-only
-    // never re-encodes) are written to parquet; a NEW BATCH of vectors
-    // (perturbed corpus copies under fresh ids — the arriving-crawl shape,
-    // synthesized by pure integer column arithmetic so DuckDB replays it)
+    // asset an append encodes against) are written to parquet; a NEW
+    // BATCH of vectors (perturbed corpus copies under fresh ids — the
+    // arriving-crawl shape, synthesized by pure integer column
+    // arithmetic so DuckDB replays it)
     // is then assigned to codewords against the LOADED codebook — ONLY
     // the batch pays encode work, the FAISS `add` contract — its code and
     // norm rows are unioned onto the loaded frames, and the standard
@@ -1512,23 +1505,14 @@ object SimilarityQueries {
     // 30× via pqServe row-set equality.
     Q("x3l_pq_index_append",
       (s, d) => {
-        // session-scoped on-disk index, same contract as x3k
-        val idxDir =
-          graft.Tmp.sessionDir(s, "x3l_idx")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
         val corpus = quantFrame(s, d)
-        val (codes, norms, cb) = pqBuildFrom(corpus)
-        codes.write.mode("overwrite").parquet(s"$idxDir/codes.parquet")
-        norms.write.mode("overwrite").parquet(s"$idxDir/norms.parquet")
-        cb.write.mode("overwrite").parquet(s"$idxDir/codebook.parquet")
+        val (codes, norms, cb) = persistedPqIndex(s, "x3l_idx", pqBuildFrom(corpus))
         val batch = corpus.select((col("vec_id") + 10000000L).as("vec_id"),
           transform(col("qe"), x => x + lit(3L)).as("qe"), col("label"))
         // append: encode ONLY the batch, against the LOADED codebook
-        val lcb = s.read.parquet(s"$idxDir/codebook.parquet")
-        val (bCodes, bNorms) = pqAppendArtifacts(batch, lcb)
-        val allCodes = s.read.parquet(s"$idxDir/codes.parquet").unionByName(bCodes)
-        val allNorms = s.read.parquet(s"$idxDir/norms.parquet").unionByName(bNorms)
-        pqServe(allCodes, allNorms, lcb, corpus.unionByName(batch))
+        val (bCodes, bNorms) = pqAppendArtifacts(batch, cb)
+        pqServe(codes.unionByName(bCodes), norms.unionByName(bNorms), cb,
+          corpus.unionByName(batch))
       },
       Some(pqRerankOracleFrom(pqScoredCteFrom(
         s"""SELECT vec_id, ${sqlQuant("embedding")} AS qe FROM embeddings
@@ -1536,7 +1520,7 @@ object SimilarityQueries {
             list_transform(${sqlQuant("embedding")}, x -> x + 3) AS qe
           FROM embeddings""")))),
 
-    // X3m (r12): index DELETE — the remaining CRUD face of the persisted
+    // X3m: index DELETE — the remaining CRUD face of the persisted
     // PQ index (build x3k / append x3l / delete here / filtered-serve
     // x3j): a tombstone set of vec_ids is removed from a LOADED index by
     // anti-joining the compact code and norm frames — the FAISS
@@ -1554,33 +1538,17 @@ object SimilarityQueries {
     // result keeps its 40-row shape.
     Q("x3m_pq_index_delete",
       (s, d) => {
-        // session-scoped on-disk index, same contract as x3k
-        val idxDir =
-          graft.Tmp.sessionDir(s, "x3m_idx")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
         val corpus = quantFrame(s, d)
-        val (codes, norms, cb) = pqBuildFrom(corpus)
-        codes.write.mode("overwrite").parquet(s"$idxDir/codes.parquet")
-        norms.write.mode("overwrite").parquet(s"$idxDir/norms.parquet")
-        cb.write.mode("overwrite").parquet(s"$idxDir/codebook.parquet")
-        // tombstones: ~20% of the corpus by id hash, sparing the codebook
-        // seeds (vec_id < 16; deletes never retrain) — ids only, no vectors
-        val del = corpus.filter(col("vec_id") >= 16 &&
-            pmod(col("vec_id") * 2654435761L, lit(10)) < 2)
-          .select(col("vec_id"))
-        val lcb = s.read.parquet(s"$idxDir/codebook.parquet")
-        val liveCodes = s.read.parquet(s"$idxDir/codes.parquet")
-          .join(broadcast(del), Seq("vec_id"), "left_anti")
-        val liveNorms = s.read.parquet(s"$idxDir/norms.parquet")
-          .join(broadcast(del), Seq("vec_id"), "left_anti")
-        val remaining = corpus.join(broadcast(del), Seq("vec_id"), "left_anti")
-        pqServe(liveCodes, liveNorms, lcb, remaining)
+        val (codes, norms, cb) = persistedPqIndex(s, "x3m_idx", pqBuildFrom(corpus))
+        // tombstones are ids only, no vectors
+        val del = churned(corpus).select(col("vec_id"))
+        pqServe(without(codes, del), without(norms, del), cb, without(corpus, del))
       },
       Some(pqRerankOracleFrom(pqScoredCteFrom(
         s"""SELECT vec_id, ${sqlQuant("embedding")} AS qe FROM embeddings
           WHERE NOT (vec_id >= 16 AND (vec_id * 2654435761) % 10 < 2)""")))),
 
-    // X3r (r14): index UPDATE — the U completing the persisted index's
+    // X3r: index UPDATE — the U completing the persisted index's
     // CRUD story (build x3k / append x3l / delete x3m / compact x3n):
     // ~20% of the corpus re-embeds (the production trigger: a new
     // encoder checkpoint re-embeds changed documents) and the LOADED
@@ -1600,33 +1568,18 @@ object SimilarityQueries {
     // the corpus answers move.
     Q("x3r_pq_index_update",
       (s, d) => {
-        val idxDir = graft.Tmp.sessionDir(s, "x3r_idx")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
         val corpus = quantFrame(s, d)
-        val (codes, norms, cb) = pqBuildFrom(corpus)
-        codes.write.mode("overwrite").parquet(s"$idxDir/codes.parquet")
-        norms.write.mode("overwrite").parquet(s"$idxDir/norms.parquet")
-        cb.write.mode("overwrite").parquet(s"$idxDir/codebook.parquet")
-        // the update batch: same id-hash subset as x3m's tombstones (so
-        // the two faces are directly comparable), new vector = +3 shift
-        // per dimension (x3l's batch transform)
-        val upd = corpus.filter(col("vec_id") >= 16 &&
-            pmod(col("vec_id") * 2654435761L, lit(10)) < 2)
-          .select(col("vec_id"),
-            transform(col("qe"), x => x + lit(3L)).as("qe"), col("label"))
+        val (codes, norms, cb) = persistedPqIndex(s, "x3r_idx", pqBuildFrom(corpus))
+        // the update batch: x3m's tombstone subset (so the two faces are
+        // directly comparable), new vector = +3 shift per dimension (x3l's
+        // batch transform)
+        val upd = churned(corpus).select(col("vec_id"),
+          transform(col("qe"), x => x + lit(3L)).as("qe"), col("label"))
         val updIds = upd.select(col("vec_id"))
-        val lcb = s.read.parquet(s"$idxDir/codebook.parquet")
-        val (uCodes, uNorms) = pqAppendArtifacts(upd, lcb)
-        val liveCodes = s.read.parquet(s"$idxDir/codes.parquet")
-          .join(broadcast(updIds), Seq("vec_id"), "left_anti")
-          .unionByName(uCodes)
-        val liveNorms = s.read.parquet(s"$idxDir/norms.parquet")
-          .join(broadcast(updIds), Seq("vec_id"), "left_anti")
-          .unionByName(uNorms)
-        val updatedCorpus = corpus
-          .join(broadcast(updIds), Seq("vec_id"), "left_anti")
-          .unionByName(upd)
-        pqServe(liveCodes, liveNorms, lcb, updatedCorpus)
+        val (uCodes, uNorms) = pqAppendArtifacts(upd, cb)
+        pqServe(without(codes, updIds).unionByName(uCodes),
+          without(norms, updIds).unionByName(uNorms), cb,
+          without(corpus, updIds).unionByName(upd))
       },
       Some(pqRerankOracleFrom(pqScoredCteFrom(
         s"""SELECT vec_id,
@@ -1634,7 +1587,7 @@ object SimilarityQueries {
             THEN list_transform(${sqlQuant("embedding")}, x -> x + 3)
             ELSE ${sqlQuant("embedding")} END AS qe FROM embeddings""")))),
 
-    // X3n (r13, VERDICT r12 #2): index COMPACTION — the maintenance face
+    // X3n: index COMPACTION — the maintenance face
     // the streaming writers made necessary: q52g/q52x land one parquet
     // directory PER MICRO-BATCH (the effectively-once overwrite device)
     // and x3l appends batch files into the store, so a 10 s-trigger
@@ -1661,8 +1614,7 @@ object SimilarityQueries {
     // parity at 30×.
     Q("x3n_pq_index_compact",
       (s, d) => {
-        val idxDir = graft.Tmp.sessionDir(s, "x3n_idx")
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(idxDir))
+        val idxDir = freshSessionDir(s, "x3n_idx")
         val corpus = quantFrame(s, d)
         val (codes, norms, cb) = pqBuildFrom(corpus)
         // the accumulated-store shape: 8 per-batch directories each
@@ -1670,19 +1622,18 @@ object SimilarityQueries {
         // q52g/x3l leave behind) — ONE partitionBy write per frame (the
         // identical batch=<b> dir layout in 2 jobs, not 16 filter+write
         // passes over the same rows)
-        codes.withColumn("batch", pmod(col("vec_id"), lit(8)))
-          .write.partitionBy("batch").mode("overwrite")
-          .parquet(s"$idxDir/frag/codes")
-        norms.withColumn("batch", pmod(col("vec_id"), lit(8)))
-          .write.partitionBy("batch").mode("overwrite")
-          .parquet(s"$idxDir/frag/norms")
+        Seq("codes" -> codes, "norms" -> norms).foreach { case (name, f) =>
+          f.withColumn("batch", pmod(col("vec_id"), lit(8)))
+            .write.partitionBy("batch").mode("overwrite")
+            .parquet(s"$idxDir/frag/$name")
+        }
         cb.write.mode("overwrite").parquet(s"$idxDir/codebook.parquet")
         compactPqStore(s, idxDir, shardBudgetBytes = 16L << 20)
         // serve ONLY from the compacted generation + the codebook
-        val lcb = s.read.parquet(s"$idxDir/codebook.parquet")
         pqServe(
           s.read.parquet(s"$idxDir/compact/codes"),
-          s.read.parquet(s"$idxDir/compact/norms"), lcb, corpus)
+          s.read.parquet(s"$idxDir/compact/norms"),
+          s.read.parquet(s"$idxDir/codebook.parquet"), corpus)
       },
       Some(PqRerankOracleSql)),
 
@@ -1693,7 +1644,7 @@ object SimilarityQueries {
     // partitions via broadcast ADC tables, and x3h's rerank fetches raw
     // vectors for the 20-deep shortlist alone. nprobe/shortlist are the
     // standard recall dials, tuned against the ScaleBench 30× recall@5
-    // gate (VERDICT r10 #2; floor 0.7) the production way — measured
+    // gate (floor 0.7) the production way — measured
     // curve on the 30× corpus: nprobe 3/shortlist 10 → 0.500;
     // 5/20 → 0.675; 7/20 → 0.675; 8/20 → 0.800 = x3h's no-IVF level, i.e.
     // pruning loss fully recovered, residual loss is PQ shortlist only.
@@ -1712,49 +1663,9 @@ object SimilarityQueries {
     // number a capacity-planning user actually needs.
     Q("x3i_ivf_pq",
       (s, d) => {
-        val e = Tables.embeddings(s, d).select(col("vec_id"),
-          quant(col("embedding")).as("qe"), col("label"))
-        // coarse quantizer: per-label centroids (x3c's aggregator shape)
-        val sc = graft.functions.Aggregators.elementwise_sum_count(64)
-        val cent = e.groupBy(col("label"))
-          .agg(sc(col("qe")).as("sc"))
-          .select(col("label").as("cl"),
-            transform(slice(col("sc"), 1, 64),
-              x => round(x.cast(DoubleType) /
-                element_at(col("sc"), 65).cast(DoubleType)).cast(LongType)).as("c_emb"))
-        val q = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-        val wq = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cl"))
-        val probes = q.crossJoin(broadcast(cent))
-          .select(col("q_id"), col("cl"), qcos(col("q_emb"), col("c_emb")).as("ccos"))
-          .withColumn("pr", row_number().over(wq)).filter(col("pr") <= 8)
-          .select(col("q_id"), col("cl"))
-        val (codes, pd, norms) = pqFrames(s, d)
-        // IVF pruning BEFORE scoring: a code row fans out only to queries
-        // that probed its partition (broadcast tiny probe list)
-        val adm = codes.join(broadcast(probes), col("label") === col("cl"))
-        val adots = adm.join(broadcast(pd),
-            adm("q_id") === pd("q_id") && adm("s") === pd("s") &&
-              adm("code") === pd("k"))
-          .groupBy(adm("q_id"), col("vec_id").as("c_id"))
-          .agg(sum(col("pdot")).as("adot"))
-        val scored = adcCos(adots, norms)
-        val wAdc = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-        val short = scored.withColumn("adc_rank", row_number().over(wAdc))
-          .filter(col("adc_rank") <= 20)
-          .select(col("q_id"), col("c_id"), col("adc_rank"))
-        val shortQ = short.join(broadcast(q), "q_id")
-        val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-          .join(broadcast(shortQ), "c_id")
-          .select(col("q_id"), col("c_id"), col("adc_rank"),
-            qcos(col("q_emb"), col("c_emb")).as("cos"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val top = rr.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        val exact = bruteKnn(s, d, nQueries = 8, k = 5)
-          .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-        top.join(exact, Seq("q_id", "c_id"), "left")
-          .select(col("q_id"), col("rank"), col("c_id"), col("cos"),
-            col("adc_rank"), coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+        val e = quantFrame(s, d)
+        refine(e, ivfPqShortlist(e, nQueries = 8, nprobe = 8, depth = 20),
+          "adc_rank", exactTop5(e))
       },
       Some(s"""${pqScoredCteFrom(
           s"SELECT vec_id, label, ${sqlQuant("embedding")} AS qe FROM embeddings")},
@@ -1790,7 +1701,7 @@ object SimilarityQueries {
           top.adc_rank, coalesce(ex.hit, false) AS in_exact_top5
         FROM top LEFT JOIN ex ON top.q_id = ex.q_id AND top.c_id = ex.c_id""".stripMargin)),
 
-    // X3j (r11): FILTERED vector search — the RAG-retrieval production
+    // X3j: FILTERED vector search — the RAG-retrieval production
     // shape ("top-k among documents matching a metadata predicate":
     // source/license/date filters in a training-data or retrieval
     // pipeline). The predicate (`vec_id % 7 < 3`, a stand-in for any
@@ -1805,42 +1716,13 @@ object SimilarityQueries {
     // shortlist + exact rerank is x3h's proven tail.
     Q("x3j_filtered_knn",
       (s, d) => {
-        val (codes, pd, norms) = pqFrames(s, d)
+        val e = quantFrame(s, d)
+        val (codes, norms, cb) = pqBuildFrom(e)
         // metadata predicate on the code rows, BEFORE scoring
-        val fcodes = codes.filter(pmod(col("vec_id"), lit(7)) < 3)
-        val adots = fcodes.join(broadcast(pd),
-            fcodes("s") === pd("s") && fcodes("code") === pd("k"))
-          .groupBy(col("q_id"), col("vec_id").as("c_id"))
-          .agg(sum(col("pdot")).as("adot"))
-        val scored = adcCos(adots, norms)
-        val wAdc = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-        val short = scored.withColumn("adc_rank", row_number().over(wAdc))
-          .filter(col("adc_rank") <= 20)
-          .select(col("q_id"), col("c_id"), col("adc_rank"))
-        val e = Tables.embeddings(s, d)
-          .select(col("vec_id"), quant(col("embedding")).as("qe"))
-        val q = e.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("qe").as("q_emb"))
-        val shortQ = short.join(broadcast(q), "q_id")
-        val rr = e.select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-          .join(broadcast(shortQ), "c_id")
-          .select(col("q_id"), col("c_id"), col("adc_rank"),
-            qcos(col("q_emb"), col("c_emb")).as("cos"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-        val top = rr.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
+        val matching = pmod(col("vec_id"), lit(7)) < 3
+        val short = pqShortlist(codes.filter(matching), norms, cb, e)
         // exact ground truth over the SAME filtered subset
-        val exact = e.filter(pmod(col("vec_id"), lit(7)) < 3)
-          .select(col("vec_id").as("c_id"), col("qe").as("c_emb"))
-          .join(broadcast(q), col("q_id") =!= col("c_id"))
-          .select(col("q_id"), col("c_id"),
-            qcos(col("q_emb"), col("c_emb")).as("ecos"))
-          .withColumn("erank", row_number().over(
-            Window.partitionBy(col("q_id")).orderBy(col("ecos").desc, col("c_id"))))
-          .filter(col("erank") <= 5)
-          .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-        top.join(exact, Seq("q_id", "c_id"), "left")
-          .select(col("q_id"), col("rank"), col("c_id"), col("cos"),
-            col("adc_rank"), coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+        refine(e, short, "adc_rank", exactTop5(e, Some(e.filter(matching))))
       },
       Some(s"""$PqScoredCte,
         fs AS (SELECT * FROM scored WHERE c_id % 7 < 3),
@@ -1874,12 +1756,11 @@ object SimilarityQueries {
     // (2^20/1024)-scale via an offset-then-downshift (the +2^48 offset
     // makes the dividend non-negative, where Spark's truncating DIV and
     // DuckDB's flooring // agree), keeping the 64-dim dot inside BIGINT.
-    // Input bound (ADVICE r07): the dividend is lo*255 + q8*(hi-lo) + 2^48
+    // Input bound: the dividend is lo*255 + q8*(hi-lo) + 2^48
     // with q8*(hi-lo) >= 0, so non-negativity needs lo >= -2^48/255, i.e.
     // raw component >= -2^48/(255*2^20) ~ -1.05e6 — any embedding whose
     // coordinates fit the 2^20 fixed-point quantizer satisfies it with six
-    // orders of magnitude to spare (the old 2^28 offset covered only
-    // >= -1.004, one wrong-by-one element per out-of-range coordinate).
+    // orders of magnitude to spare.
     Q("x3g_sq8",
       (s, d) => {
         // fanOut: quantize + per-dim explode + the 8-query scoring probe
@@ -1910,22 +1791,7 @@ object SimilarityQueries {
               ((element_at(lo_arr, i) * 255L
                 + element_at(q8, i) * (element_at(hi_arr, i) - element_at(lo_arr, i))
                 + 281474976710656L) DIV 1024L) - 274877906944L)""").as("c"))
-        val qs = deq.filter(col("vec_id") < 8)
-          .select(col("vec_id").as("q_id"), col("c").as("qc"))
-        val scored = deq.select(col("vec_id").as("c_id"), col("c").as("cc"))
-          .join(broadcast(qs), col("c_id") =!= col("q_id"))
-          .select(col("q_id"), col("c_id"),
-            (qdot(col("cc"), col("qc")).cast(DoubleType) /
-              (sqrt(qdot(col("cc"), col("cc")).cast(DoubleType)) *
-                sqrt(qdot(col("qc"), col("qc")).cast(DoubleType))))
-              .as("approx_cos"))
-        val w = Window.partitionBy(col("q_id")).orderBy(col("approx_cos").desc, col("c_id"))
-        val top = scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        val exact = bruteKnn(s, d, nQueries = 8, k = 5)
-          .select(col("q_id"), col("c_id"), lit(true).as("hit"))
-        top.join(exact, Seq("q_id", "c_id"), "left")
-          .select(col("q_id"), col("rank"), col("c_id"), col("approx_cos"),
-            coalesce(col("hit"), lit(false)).as("in_exact_top5"))
+        top5Recall(approxCos(deq, "c"), "approx_cos", Nil, exactTop5(quantFrame(s, d)))
       },
       Some(s"""WITH e AS (SELECT vec_id, ${sqlQuant("embedding")} AS qe FROM embeddings),
         dims AS (SELECT i, min(qe[i]) AS lo, max(qe[i]) AS hi
@@ -1956,7 +1822,7 @@ object SimilarityQueries {
           coalesce(ex.hit, false) AS in_exact_top5
         FROM top LEFT JOIN ex ON top.q_id = ex.q_id AND top.c_id = ex.c_id""".stripMargin)),
 
-    // X3s (r14): RANDOM-PROJECTION shortlist + exact rerank — the
+    // X3s: RANDOM-PROJECTION shortlist + exact rerank — the
     // Johnson–Lindenstrauss member of the approximate-ranker family
     // (complementing SQ8's per-element quantization, PQ's codebook
     // compression, and IVF's partition pruning): project every quantized
@@ -1978,7 +1844,7 @@ object SimilarityQueries {
         rankCol = "rp_rank", depth = RpShortlist),
       Some(rpShortlistOracleSql)),
 
-    // X3t (r15): MATRYOSHKA prefix-dimension shortlist + exact rerank —
+    // X3t: MATRYOSHKA prefix-dimension shortlist + exact rerank —
     // the zero-index-cost member of the approximate-ranker family (see
     // [[MrPrefixDim]]): score candidates on the first 16 of 64 stored
     // coordinates (a column SLICE, no projection pass, no derived table),

@@ -2230,8 +2230,13 @@ object StreamQueries {
           val port = UdpFlowSource.listeners(q).head.port
           val deadline = System.nanoTime() + 90_000_000_000L
           val addr = java.net.InetAddress.getByName("127.0.0.1")
-          def landed(): Long =
-            scala.util.Try(s.read.parquet(s"$out/batch=*").count()).getOrElse(0L)
+          // the batch dirs as listed, never a glob: a glob path fails the
+          // parquet reader's metadata-dir probe with a logged stack trace
+          // per poll. A dir the running batch has not finished reads as 0
+          def landed(): Long = batchDirs(s, out).map(_._2.toString) match {
+            case Seq() => 0L
+            case dirs => scala.util.Try(s.read.parquet(dirs: _*).count()).getOrElse(0L)
+          }
           while (landed() < 500 && System.nanoTime() < deadline) {
             packets.foreach(b =>
               sock.send(new java.net.DatagramPacket(b, b.length, addr, port)))

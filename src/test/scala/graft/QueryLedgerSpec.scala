@@ -49,6 +49,17 @@ class QueryLedgerSpec extends SparkSpec {
     assert(x10b >= 22 && x10b <= 23, x10b)
   }
 
+  test("warm job counts of the ANN serve paths") {
+    // the x3 family's one filter-and-refine scaffold: the truth set of
+    // the recall annotation broadcasts (40 rows), so it joins without a
+    // shuffle stage of its own; in-memory (x3h), IVF-pruned (x3i), loaded
+    // (x3k) and compacted (x3n) serves. Each read the same in five test
+    // JVMs
+    val exact = Seq("x3h_pq_rerank" -> 16, "x3i_ivf_pq" -> 20,
+      "x3k_pq_index_serve" -> 22, "x3n_pq_index_compact" -> 28)
+    assert(exact.map { case (n, _) => n -> warmLedger(n).jobs.size } == exact)
+  }
+
   test("on return every completed stage's tasks are in") {
     val l = warmLedger("qf6_salted_join")
     assert(l.tasks > 0)

@@ -10,11 +10,11 @@ import org.apache.logging.log4j.core.config.Property
 
 import graft.SparkSpec
 
-/** An untiered cadence catch-up reads the rows dirs it lists, so Spark's
-  * file-source metadata probe never sees a glob path: reading
-  * `rows/batch=*` made `FileStreamSink.hasMetadata` stat the literal
-  * glob, fail, and log a WARN with a full FileNotFoundException trace on
-  * every catch-up read.
+/** An untiered cadence catch-up, and q52u's drain poll, read the rows
+  * dirs they list, so Spark's file-source metadata probe never sees a
+  * glob path: reading `rows/batch=*` made `FileStreamSink.hasMetadata`
+  * stat the literal glob, fail, and log a WARN with a full
+  * FileNotFoundException trace on every read.
   */
 class CadenceCatchupLogSpec extends SparkSpec {
 
@@ -55,5 +55,12 @@ class CadenceCatchupLogSpec extends SparkSpec {
     assert(ledger.rows.exists(r => r.fired && r.entrants > 0),
       s"no firing with entrants — the catch-up path never ran: ${ledger.rows}")
     assert(warns == 0, s"$warns FileStreamSink WARNs during catch-up reads")
+  }
+
+  test("the q52u drain polls its rows dirs without a FileStreamSink WARN") {
+    val warns = sinkWarns {
+      graft.Registry.queries("q52u_stream_top_talkers")(spark, sf).collect()
+    }
+    assert(warns == 0, s"$warns FileStreamSink WARNs while q52u polled its rows")
   }
 }
